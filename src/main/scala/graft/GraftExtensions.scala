@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 import graft.functions.{FloatVectorDot, Md5PrefixLong}
-import graft.plans.AsOfJoinStrategy
 
 /** Session wiring for graft's Catalyst extensions:
   *
@@ -14,16 +13,17 @@ import graft.plans.AsOfJoinStrategy
   *   - `graft_changes(root, table, from, to)` — the change data feed
   *     as a table-valued function
   *     ([[graft.functions.GraftChangesTvf]]);
-  *   - [[graft.plans.AsOfJoinStrategy]] — plans the native as-of join
-  *     operator ([[graft.plans.AsOfJoinNode]]).
+  *   - SQL `UPDATE` / `MERGE INTO` on graft catalog tables
+  *     ([[graft.plans.GraftDmlRule]]).
   *
   * Two registration paths:
   *
-  *   1. Config-based (cluster-wide, no code):
-  *      `spark.sql.extensions=graft.GraftExtensions`
+  *   1. Config-based (cluster-wide, no code), which installs all of the
+  *      above: `spark.sql.extensions=graft.GraftExtensions`
   *   2. Programmatic, on an already-built session:
-  *      `GraftExtensions.ensureRegistered(spark)` — idempotent; called
-  *      automatically by the graft entry points that need it.
+  *      `GraftExtensions.ensureRegistered(spark)` — idempotent; installs
+  *      the two scalar functions only (the table function and the
+  *      analyzer rule can only attach when the session is built).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -31,7 +31,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((id, info, builder))
     val (hid, hinfo, hbuilder) = Md5PrefixLong.descriptor
     e.injectFunction((hid, hinfo, hbuilder))
-    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     // graft_changes(root, table, from, to): the change feed as a SQL
     // table-valued function resolving to the store's own plan
     e.injectTableFunction(graft.functions.GraftChangesTvf.descriptor)
@@ -44,14 +43,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** Register the strategy + SQL functions on a live session. Safe to
-    * call repeatedly (`extraStrategies` is deduplicated, the function
-    * registry write is replace-on-conflict).
+  /** Register the scalar SQL functions on a live session. Safe to call
+    * repeatedly (the function registry write is replace-on-conflict).
     */
   def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val (id, info, builder) = FloatVectorDot.descriptor
     org.apache.spark.sql.graftbridge.bridge.registerFunction(spark, id, info, builder)
     val (hid, hinfo, hbuilder) = Md5PrefixLong.descriptor

@@ -423,29 +423,6 @@ object NorthStar {
           WindowFeatures.WindowAgg("n_events_7d", "rows")))
         .orderBy("entity_id", "timestamp")
     }),
-    // skew-aware strategy of the same operator: prefix/suffix bucket
-    // decomposition (hot entity's windows spread across its time range);
-    // same semantics, oracled by the same range-join SQL
-    "window_agg_bucketed" -> ((s, dir) => {
-      val ev = SparkEntry.eventsForNorthStar(s, dir)
-      val feat = ev.select(
-        col("user_id").as("entity_id"),
-        col("ts").as("timestamp"),
-        col("event_id"),
-        round(col("value") * 100).cast("long").as("value_cents"))
-      val spine = ev
-        .filter(col("event_id") % 13 === 0)
-        .select(
-          col("user_id").as("entity_id"),
-          (col("ts") + expr("INTERVAL 1 HOUR")).as("timestamp"))
-      WindowFeatures
-        .windowAggJoinBucketed(spine, feat, windowSeconds = 7L * 86400, Seq(
-          WindowFeatures.WindowAgg("n_events_7d", "rows"),
-          WindowFeatures.WindowAgg("sum_value_cents_7d", "sum", "value_cents"),
-          WindowFeatures.WindowAgg("max_value_cents_7d", "max", "value_cents"),
-          WindowFeatures.WindowAgg("min_event_id_7d", "min", "event_id")))
-        .orderBy("entity_id", "timestamp")
-    }),
     // batch sessionization: gap > 1h starts a new session; the
     // deterministic base for session-length / events-per-session features
     "sessionize_events" -> ((s, dir) =>
@@ -485,7 +462,7 @@ object NorthStar {
         .profile(SparkEntry.eventsForNorthStar(s, dir), Seq("event_id", "value"))
         .orderBy("col_name")),
     // join-key skew diagnostic: exact heavy hitters + per-mille share —
-    // the pre-shuffle measurement behind the skew-hybrid routing
+    // the pre-shuffle measurement of whether a key is hot
     "feature_skew" -> ((s, dir) =>
       Profiling
         .keySkew(SparkEntry.eventsForNorthStar(s, dir),
@@ -2238,24 +2215,6 @@ object NorthStar {
         |              FILTER (WHERE f.ts > s.t - INTERVAL 1 DAY)
         |            AS BIGINT) AS n_event_types_1d,
         |       CAST(count(f.event_type) AS BIGINT) AS n_events_7d
-        |FROM spine s LEFT JOIN events f
-        |  ON f.user_id = s.entity_id
-        | AND f.ts <= s.t AND f.ts > s.t - INTERVAL 7 DAY
-        |GROUP BY s.entity_id, s.t
-        |ORDER BY s.entity_id, s.t""".stripMargin,
-
-    "window_agg_bucketed" ->
-      """WITH spine AS (
-        |  SELECT user_id AS entity_id, ts + INTERVAL 1 HOUR AS t
-        |  FROM events WHERE event_id % 13 = 0
-        |)
-        |SELECT s.entity_id, s.t AS "timestamp",
-        |       CAST(count(f.event_id) AS BIGINT) AS n_events_7d,
-        |       CAST(sum(CAST(round(f.value * 100) AS BIGINT)) AS BIGINT)
-        |           AS sum_value_cents_7d,
-        |       CAST(max(CAST(round(f.value * 100) AS BIGINT)) AS BIGINT)
-        |           AS max_value_cents_7d,
-        |       min(f.event_id) AS min_event_id_7d
         |FROM spine s LEFT JOIN events f
         |  ON f.user_id = s.entity_id
         | AND f.ts <= s.t AND f.ts > s.t - INTERVAL 7 DAY

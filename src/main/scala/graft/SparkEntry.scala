@@ -973,37 +973,6 @@ object SparkEntry {
         .orderBy("entity_id", "timestamp", "o_orderkey")
     }),
 
-    // O8 alternate physical strategy: distinct-probe equi-join + max_by
-    // (wins when the spine is tiny and broadcastable; same semantics,
-    // same oracle as the merge formulation)
-    "asof_join_via_join" -> ((s, dir) => {
-      val feat = ordersFeatures(s, dir)
-      val spine = read(s, dir, "orders")
-        .filter(col("o_orderkey") % 7 === 0)
-        .select(
-          col("o_custkey").as("entity_id"),
-          (col("o_orderdate") + expr("INTERVAL 30 DAYS")).as("timestamp"))
-      PointInTime
-        .asOfJoinViaJoin(spine, feat, tieBreakCols = Seq("o_orderkey"))
-        .orderBy("entity_id", "timestamp", "o_orderkey")
-    }),
-
-    // O8 skew-aware strategy: two-pass prefix scan over 90-day buckets
-    // (same semantics and oracle; hot entities spread across tasks)
-    "asof_join_bucketed" -> ((s, dir) => {
-      val feat = ordersFeatures(s, dir)
-      val spine = read(s, dir, "orders")
-        .filter(col("o_orderkey") % 7 === 0)
-        .select(
-          col("o_custkey").as("entity_id"),
-          (col("o_orderdate") + expr("INTERVAL 30 DAYS")).as("timestamp"))
-      PointInTime
-        .asOfJoinBucketed(
-          spine, feat, bucketSeconds = 90L * 86400,
-          tieBreakCols = Seq("o_orderkey"))
-        .orderBy("entity_id", "timestamp", "o_orderkey")
-    }),
-
     // SCD2 validity intervals over the event stream: each feature row
     // with its [timestamp, valid_to) window; the open current row's
     // bound is a far-future sentinel so the oracle compare never sees
@@ -1014,58 +983,6 @@ object SparkEntry {
         .withColumn("valid_to",
           coalesce(col("valid_to"), lit(utcTs("2100-01-01 00:00:00"))))
         .orderBy("entity_id", "timestamp", "event_id")),
-
-    // O8 as interval containment over the SCD2 view: equi-join on
-    // entity + range filter, each probe matching exactly one interval —
-    // no post-join dedup window; same semantics and oracle as every
-    // other as-of strategy
-    "asof_join_via_scd2" -> ((s, dir) => {
-      val feat = ordersFeatures(s, dir)
-      val spine = read(s, dir, "orders")
-        .filter(col("o_orderkey") % 7 === 0)
-        .select(
-          col("o_custkey").as("entity_id"),
-          (col("o_orderdate") + expr("INTERVAL 30 DAYS")).as("timestamp"))
-      PointInTime
-        .asOfJoinViaScd2(spine, feat, tieBreakCols = Seq("o_orderkey"))
-        .orderBy("entity_id", "timestamp", "o_orderkey")
-    }),
-
-    // O8 skew-routing strategy: entities with feature rows at or above
-    // the hot threshold take the bucketed two-pass path, the long tail
-    // takes the plain window merge — same semantics and oracle as every
-    // other as-of strategy (threshold chosen so both routes carry rows
-    // at every test scale factor)
-    "asof_join_skewhybrid" -> ((s, dir) => {
-      val feat = ordersFeatures(s, dir)
-      val spine = read(s, dir, "orders")
-        .filter(col("o_orderkey") % 7 === 0)
-        .select(
-          col("o_custkey").as("entity_id"),
-          (col("o_orderdate") + expr("INTERVAL 30 DAYS")).as("timestamp"))
-      PointInTime
-        .asOfJoinSkewHybrid(
-          spine, feat, bucketSeconds = 90L * 86400,
-          hotRowThreshold = 16L,
-          tieBreakCols = Seq("o_orderkey"))
-        .orderBy("entity_id", "timestamp", "o_orderkey")
-    }),
-
-    // O8 as a first-class Catalyst operator: custom LogicalPlan +
-    // Strategy + merge-join SparkPlan (graft.plans.AsOfJoinExec),
-    // registered via SparkSessionExtensions; same semantics and oracle
-    // as the other three strategies
-    "asof_join_native" -> ((s, dir) => {
-      val feat = ordersFeatures(s, dir)
-      val spine = read(s, dir, "orders")
-        .filter(col("o_orderkey") % 7 === 0)
-        .select(
-          col("o_custkey").as("entity_id"),
-          (col("o_orderdate") + expr("INTERVAL 30 DAYS")).as("timestamp"))
-      PointInTime
-        .asOfJoinNative(spine, feat, tieBreakCols = Seq("o_orderkey"))
-        .orderBy("entity_id", "timestamp", "o_orderkey")
-    }),
 
     // O8 on the event stream: probe each sampled event 1h after it happened
     "asof_join_events" -> ((s, dir) => {
@@ -1640,9 +1557,9 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] = parityOracleSql ++ NorthStar.oracleSql
 
-  /** One oracle for all three as-of physical strategies — same
-    * semantics by contract, so any oracle change applies to every
-    * strategy at once.
+  /** The as-of oracle of `asof_join_orders`: latest order per customer
+    * at or before each spine probe, by row_number over the pairwise
+    * join — independent of the union + running-`last` plan it checks.
     */
   private val OrdersAsOfOracle: String =
     """WITH spine AS (
@@ -2070,14 +1987,6 @@ object SparkEntry {
 
     "asof_join_orders" -> OrdersAsOfOracle,
 
-    "asof_join_via_join" -> OrdersAsOfOracle,
-
-    "asof_join_bucketed" -> OrdersAsOfOracle,
-
-    "asof_join_skewhybrid" -> OrdersAsOfOracle,
-
-    "asof_join_via_scd2" -> OrdersAsOfOracle,
-
     "scd2_intervals" ->
       """SELECT user_id AS entity_id, ts AS "timestamp", event_id, event_type,
         |       value, props,
@@ -2086,8 +1995,6 @@ object SparkEntry {
         |         TIMESTAMP '2100-01-01 00:00:00') AS valid_to
         |FROM events
         |ORDER BY entity_id, "timestamp", event_id""".stripMargin,
-
-    "asof_join_native" -> OrdersAsOfOracle,
 
     "asof_join_events" -> EventsAsOfOracle,
 

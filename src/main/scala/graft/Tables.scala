@@ -49,22 +49,18 @@ object Tables {
     * re-lists and re-reads the footer. The session argument only keeps
     * call sites explicit about which session triggered the rewrite.
     *
-    * Also drops [[graft.store.SkewStats]]' memoized hot-entity
-    * classifications: an in-place rewrite is the one case where a
-    * re-read plan can hash equal to the pre-rewrite plan while the DATA
-    * changed — the skew memo would route on stale counts (a perf-only
-    * hazard by SkewStats' contract, but this call site is precisely
-    * where it arises, so it is closed here). Store-API writes never
+    * Also drops the memos keyed by a path's plan: an in-place rewrite
+    * is the one case where a re-read plan can hash equal to the
+    * pre-rewrite plan while the DATA changed. Store-API writes never
     * need this: a new version is a new path, which hashes fresh.
     */
   def invalidate(s: SparkSession, path: String): Unit = {
     cache.synchronized {
       cache.values.forEach(m => if (m != null) { m.remove(path); () })
     }
-    graft.store.SkewStats.invalidate()
-    // the similarity routers' memoized corpus envelope has the same
-    // stale-on-in-place-rewrite hazard (and a sharper consequence: a
-    // grown corpus mis-routed into the broadcast kernel) — clear it here
+    // the similarity routers' memoized corpus envelope goes stale on an
+    // in-place rewrite (a grown corpus would be mis-routed into the
+    // broadcast kernel) — clear it here
     graft.ops.Similarity.invalidateCorpusStats()
     // same hazard class: a rewritten path whose memoized footer schema
     // would otherwise be served stale — precise (exact-or-child), not

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed [[Aggregator]] building a HyperLogLog register array in ONE
-  * aggregation pass — the third kind of extension point the engine uses
-  * (scalar [[FloatVectorDot]] `Expression`, whole-operator
-  * `graft.plans.AsOfJoinExec`, and this custom aggregation state).
+  * aggregation pass — one of the engine's extension points (scalar
+  * [[FloatVectorDot]] `Expression`, the SQL DML analyzer rule, and this
+  * custom aggregation state).
   *
   * Input is the 60-bit portable hash ([[Hashing.md5Long60]]); the buffer
   * is the m-byte register array itself, so map-side partial aggregation

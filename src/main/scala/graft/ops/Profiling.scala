@@ -27,9 +27,9 @@ object Profiling {
 
   /** Join/groupBy-key skew diagnostic: the top-`k` heaviest values per
     * key column with exact counts and integer per-mille share of the
-    * table — the measurement that decides whether a key needs the
-    * salted/skew-hybrid plan ([[graft.store.PointInTime]]'s routing)
-    * BEFORE a 100 TB shuffle discovers it the hard way. One
+    * table — the measurement that shows whether a key is hot enough to
+    * need a salted or skew-routed plan BEFORE a 100 TB shuffle discovers
+    * it the hard way. One
     * partial-aggregated count per column + a distributed top-k
     * (`orderBy.limit`, never a single-partition window over all keys);
     * values surface as strings so one output schema fits every column

@@ -283,11 +283,11 @@ object Similarity extends Serializable {
   // cosineNearDupPairs / allPairsTopK collect the corpus to the driver
   // and broadcast it — the right plan while ids+norms+double-widened
   // vectors fit comfortably in memory, a driver OOM past it. The gate
-  // below applies the house classify-then-route pattern
-  // (PointInTime.asOfJoinSkewHybrid): ONE bounded classification
-  // aggregate (count + max vector width — two numbers through the
-  // shuffle), then route to the exact broadcast kernel under the budget
-  // or to a bucketed candidate generator + exact rescoring over it.
+  // below applies a classify-then-route pattern: ONE bounded
+  // classification aggregate (count + max vector width — two numbers
+  // through the shuffle), then route to the exact broadcast kernel
+  // under the budget or to a bucketed candidate generator + exact
+  // rescoring over it.
   // The routed paths never materialize an all-pairs set and never
   // collect the corpus: every join is a shuffle join keyed on a bucket
   // (LSH band signature / IVF list), so they survive corpora that are
@@ -326,25 +326,23 @@ object Similarity extends Serializable {
 
   /** The classification aggregate: (row count, max vector width) in one
     * partial-aggregated pass — MEMOIZED per (analyzed-plan semantic
-    * hash, vecCol), [[graft.store.SkewStats]]'s discipline: the corpus
-    * envelope is a property of the table version, not of the probe, so
-    * the measuring job runs once per corpus per JVM instead of once per
-    * router call (it ran on EVERY call before — one whole Spark job per
-    * Auto-routed query). Cleared by [[graft.Tables.invalidate]]
-    * alongside the skew memo: an in-place rewrite is the one case where
-    * a re-read plan hashes equal while the data changed, and a stale
-    * entry here could route a grown corpus INTO the broadcast kernel —
-    * so the escape hatch clears this cache too. Store-API writes never
-    * need it (new version = new path = fresh hash).
+    * hash, vecCol): the corpus envelope is a property of the table
+    * version, not of the probe, so the measuring job runs once per
+    * corpus per JVM instead of once per router call (it ran on EVERY
+    * call before — one whole Spark job per Auto-routed query). Cleared
+    * by [[graft.Tables.invalidate]]: an in-place rewrite is the one case
+    * where a re-read plan hashes equal while the data changed, and a
+    * stale entry here could route a grown corpus INTO the broadcast
+    * kernel — so the escape hatch clears this cache too. Store-API
+    * writes never need it (new version = new path = fresh hash).
     */
   /** Plan-keyed memo, COLLISION-PROOF: entries key on the canonicalized
     * analyzed plan's 32-bit hash but a hit additionally verifies full
-    * STRUCTURAL equality against the stored plan — unlike SkewStats
-    * (whose hot sets are routing-only, so a hash collision could only
-    * cost performance), the values memoized here are result-bearing
-    * (route choice flips between non-identical kernels; IVF centroids
-    * surface in outputs), so a 2^-32 hash collision must fall through
-    * to a recompute, never serve another corpus's value.
+    * STRUCTURAL equality against the stored plan — the values memoized
+    * here are result-bearing (route choice flips between non-identical
+    * kernels; IVF centroids surface in outputs), so a 2^-32 hash
+    * collision must fall through to a recompute, never serve another
+    * corpus's value.
     */
   private val statsMemo = scala.collection.concurrent.TrieMap
     .empty[(Int, String), (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Any)]
@@ -358,7 +356,8 @@ object Similarity extends Serializable {
       case Some((p, v)) if p == plan => v.asInstanceOf[T]
       case _ =>
         val v = compute
-        // one critical section for evict+put (see SkewStats.memoize)
+        // one critical section for evict+put: a concurrent put cannot
+        // slip between the size check and the eviction
         statsMemo.synchronized {
           if (statsMemo.size >= StatsMemoMax)
             statsMemo.headOption.foreach { case (k, _) => statsMemo.remove(k) }
@@ -609,7 +608,7 @@ object Similarity extends Serializable {
       nProbe: Int = 4,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val cents = ivfCentroids(emb, numCentroids, idCol, vecCol)
+    val cents = seedCentroids(emb, numCentroids, idCol, vecCol)
     val fv = col(vecCol).cast("array<float>")
     // zero/null-norm rows have no cosine — and their NaN scores would
     // rank FIRST under Spark's desc sort (NaN greatest)
@@ -721,7 +720,7 @@ object Similarity extends Serializable {
       numCentroids: Int = 16,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val cents = ivfCentroids(emb, numCentroids, idCol, vecCol)
+    val cents = seedCentroids(emb, numCentroids, idCol, vecCol)
     val fv = col(vecCol).cast("array<float>")
     val assigned = emb.select(
       col(idCol).cast("long").as("vec_id"),
@@ -932,13 +931,25 @@ object Similarity extends Serializable {
   /** Deterministic IVF SEED centroids: the first `numCentroids` vectors
     * in id order, double-widened — the zero-iteration baseline and the
     * initialization of [[ivfCentroidsKMeans]] (which beats it on
-    * recall@k; measured in OpsSpec).
+    * recall@k; measured in OpsSpec). Each call returns its own copy of
+    * the memoized centroids, so a caller mutating it cannot corrupt the
+    * next call's index.
     */
   def ivfCentroids(
       emb: DataFrame,
       numCentroids: Int = 16,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Array[Array[Double]] =
+    seedCentroids(emb, numCentroids, idCol, vecCol).map(_.clone())
+
+  /** The memoized [[ivfCentroids]] array itself, for internal callers
+    * that only read it.
+    */
+  private def seedCentroids(
+      emb: DataFrame,
+      numCentroids: Int,
+      idCol: String,
+      vecCol: String): Array[Array[Double]] =
     // memoized per corpus plan (collision-proof, see [[memoizedOnPlan]]):
     // the seed is a deterministic function of the table version and was
     // re-collected as a full Spark job on every call — every IVF query
@@ -978,7 +989,8 @@ object Similarity extends Serializable {
     * pre-materialized assignment instead. Seeding from the first k
     * vectors (not a random sample) keeps runs reproducible; k-means||
     * style sampling would drop in here if seed diversity ever matters
-    * more than reproducibility.
+    * more than reproducibility. Like [[ivfCentroids]], each call returns
+    * its own copy of the memoized centroids.
     */
   def ivfCentroidsKMeans(
       emb: DataFrame,
@@ -987,8 +999,8 @@ object Similarity extends Serializable {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Array[Array[Double]] = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val seed = ivfCentroids(emb, numCentroids, idCol, vecCol)
-    if (seed.isEmpty) return seed
+    val seed = seedCentroids(emb, numCentroids, idCol, vecCol)
+    if (seed.isEmpty) return Array.empty
     // memoized per corpus plan like the seed: each Lloyd iteration is a
     // full aggregate job, re-run per call before — deterministic in
     // (plan, k, iters) by the exact-integer update, so the memo returns
@@ -1026,7 +1038,7 @@ object Similarity extends Serializable {
       cents = next
     }
     cents
-    }
+    }.map(_.clone())
   }
 
   /** Dot products of one vector against every centroid — the shared
@@ -1051,7 +1063,7 @@ object Similarity extends Serializable {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
     ivfTopKWith(
-      emb, ivfCentroids(emb, numCentroids, idCol, vecCol),
+      emb, seedCentroids(emb, numCentroids, idCol, vecCol),
       queryIds, k, nProbe, idCol, vecCol)
 
   /** [[ivfTopK]] against an explicit centroid set (seeded or learned —
@@ -1106,7 +1118,7 @@ object Similarity extends Serializable {
       numCentroids: Int = 16,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val cents = ivfCentroids(emb, numCentroids, idCol, vecCol)
+    val cents = seedCentroids(emb, numCentroids, idCol, vecCol)
     emb
       .withColumn("ivf_norm", sqrt(dotFast(col(vecCol), col(vecCol))))
       .withColumn("ivf_list", graft.functions.FloatVectorArgmaxDot(

@@ -3,10 +3,10 @@ package graft.store
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.bridge
 
-/** The two temporal kernels of the engine, as pure `DataFrame => DataFrame`
-  * transformations (no catalog state):
+/** The temporal kernels of the engine, as pure `DataFrame => DataFrame`
+  * transformations (no catalog state). There is one kernel per
+  * semantics:
   *
   *   - [[pitSnapshot]] — "latest row per entity at or before T"
   *     (reference: src/ml_feature_store/store.py:218-259, the
@@ -17,6 +17,9 @@ import org.apache.spark.sql.graftbridge.bridge
   *     (reference: store.py:261-334, an O(|spine|·|table|) nested loop
   *     there — replaced here by a single-sort merge formulated as a
   *     union + running `last(..., ignoreNulls)` window).
+  *   - [[asOfJoinLeft]] — the same plan with left semantics: every spine
+  *     row survives, null-extended where no feature row matches (the
+  *     feature-view link).
   *
   * Scale notes (100 TB design):
   *   - `pitSnapshot` / `latestPerEntity` use `max_by(struct(row), ord)` —
@@ -28,10 +31,10 @@ import org.apache.spark.sql.graftbridge.bridge
   *     ROWS-frame window: one shuffle + one sort, O((n+m) log(n+m))
   *     per entity, with NO pairwise blowup — unlike the naive
   *     equi-join + `ts <= t` filter plan whose intermediate size is the
-  *     number of (spine row, earlier feature row) pairs.
-  *     [[asOfJoinViaJoin]] keeps that naive plan for comparison; it can
-  *     win when the spine is tiny and broadcastable.
-  *   - Both kernels take explicit tie-break columns: the reference's
+  *     number of (spine row, earlier feature row) pairs. A hot entity
+  *     still lands in one window task; no skew route exists, because no
+  *     measured workload has an entity hot enough to need one.
+  *   - Every kernel takes explicit tie-break columns: the reference's
   *     winner among duplicate (entity, ts) rows is unspecified
   *     (pandas idxmax of an unstable sort), so a deterministic total
   *     order is this engine's documented divergence-by-design.
@@ -148,6 +151,16 @@ object PointInTime {
     * `last(featureRow, ignoreNulls)` with a ROWS frame — each spine probe
     * sees exactly the latest feature row at-or-before its ts (side=0
     * sorts before side=1 at equal ts ⇒ inclusive cutoff).
+    *
+    * @param columns       None = every non-internal table column; Some
+    *                      projects [entity, ts] ++ columns and prunes
+    *                      the feature-table scan to them.
+    * @param tieBreakCols  total order among duplicate (entity, ts) rows;
+    *                      the greatest wins.
+    * @param tableName     names the table in validation errors.
+    * @param maxAgeSeconds staleness bound: a match older than t - age is
+    *                      dropped (in the column's own units for a
+    *                      numeric ts).
     */
   def asOfJoin(
       spine: DataFrame,
@@ -157,17 +170,14 @@ object PointInTime {
       tsCol: String = TimestampColumn,
       tieBreakCols: Seq[String] = Nil,
       tableName: String = "<anonymous>",
-      maxAgeSeconds: Option[Long] = None,
-      // internal fast path for pre-validated splits (the skew hybrid's
-      // routing probes already proved non-emptiness)
-      checkEmpty: Boolean = true): DataFrame = {
+      maxAgeSeconds: Option[Long] = None): DataFrame = {
     maxAgeSeconds.foreach(a =>
       if (a < 0)
         throw new FeatureValidationError(
           s"maxAgeSeconds must be >= 0, got $a"))
     val (unioned, outCols) =
       taggedUnion(spine, table, columns, entityCol, tsCol, tieBreakCols,
-        tableName, checkEmpty)
+        tableName)
 
     val w = Window
       .partitionBy(col("_e"))
@@ -273,11 +283,10 @@ object PointInTime {
             featOut.map(c => col("_match").getField(c).as(prefix + c))): _*)
   }
 
-  /** Shared front half of the as-of formulations: validate, then union
-    * feature rows (side 0, full payload + tie-break ord) with spine
-    * probes (side 1, null payload). Side 0 sorting before side 1 at
-    * equal ts is what makes the cutoff inclusive — any change here
-    * affects every as-of strategy at once.
+  /** Front half of [[asOfJoin]]: validate, then union feature rows
+    * (side 0, full payload + tie-break ord) with spine probes (side 1,
+    * null payload). Side 0 sorting before side 1 at equal ts is what
+    * makes the cutoff inclusive.
     */
   private def taggedUnion(
       spine: DataFrame,
@@ -286,9 +295,8 @@ object PointInTime {
       entityCol: String,
       tsCol: String,
       tieBreakCols: Seq[String],
-      tableName: String,
-      checkEmpty: Boolean = true): (DataFrame, Seq[String]) = {
-    Validation.validateSpine(spine, entityCol, tsCol, checkEmpty)
+      tableName: String): (DataFrame, Seq[String]) = {
+    Validation.validateSpine(spine, entityCol, tsCol)
     columns.foreach(cs => Validation.validateColumns(
       cs, dropInternal(table.columns), tableName, Seq(entityCol, tsCol)))
 
@@ -308,9 +316,8 @@ object PointInTime {
 
     // a null-ts feature row has no as-of position: ASC NULLS FIRST
     // would sort it before every probe and make it the running match,
-    // while the join-based strategies (three-valued ts <= t) and the
-    // PIT snapshot all exclude it — drop it here so the whole strategy
-    // family stays value-identical
+    // while the PIT snapshot (three-valued ts <= t) excludes it — drop
+    // it here so both kernels agree
     val featSide = prunedTable
       .filter(col(tsCol).isNotNull)
       .select(
@@ -326,290 +333,6 @@ object PointInTime {
       lit(null).cast(payloadType).as("_p"),
       lit(null).cast(ordType).as("_o"))
     (featSide.unionByName(spineSide), outCols)
-  }
-
-  /** Skew-aware as-of join: identical semantics to [[asOfJoin]], but the
-    * per-entity window is split into (entity, time-bucket) windows plus a
-    * tiny per-entity carry scan — the classic two-pass prefix scan:
-    *
-    *   1. within each (entity, bucket): running `last` as usual;
-    *   2. per (entity, bucket): the bucket's final feature state, then a
-    *      window over *buckets* (rows = #buckets per entity, small by
-    *      construction) yields the state carried into each bucket;
-    *   3. a spine probe's match = coalesce(within-bucket running state,
-    *      carried-in state).
-    *
-    * A hot entity with billions of rows thus spreads across
-    * time-range/bucketSeconds tasks instead of serializing into one —
-    * the answer to window-partition skew that AQE cannot split.
-    */
-  def asOfJoinBucketed(
-      spine: DataFrame,
-      table: DataFrame,
-      bucketSeconds: Long,
-      columns: Option[Seq[String]] = None,
-      entityCol: String = EntityIdColumn,
-      tsCol: String = TimestampColumn,
-      tieBreakCols: Seq[String] = Nil,
-      tableName: String = "<anonymous>",
-      // internal fast path for pre-validated splits (see [[asOfJoin]])
-      checkEmpty: Boolean = true): DataFrame = {
-    if (bucketSeconds < 1)
-      throw new FeatureValidationError(
-        s"bucketSeconds must be >= 1, got $bucketSeconds")
-    val (unionedRaw, outCols) =
-      taggedUnion(spine, table, columns, entityCol, tsCol, tieBreakCols,
-        tableName, checkEmpty)
-    // bucket key by ts type: temporal types via unix_timestamp (epoch
-    // seconds), numeric ts columns (epoch longs, version counters)
-    // bucketed in their own units — asOfJoin accepts any orderable ts,
-    // so this strategy must not silently require TimestampType
-    import org.apache.spark.sql.types._
-    val seconds = table.schema(tsCol).dataType match {
-      case _: TimestampType | _: TimestampNTZType | _: DateType =>
-        unix_timestamp(col("_t"))
-      case _: NumericType => col("_t")
-      case other =>
-        throw new FeatureValidationError(
-          s"asOfJoinBucketed needs a temporal or numeric $tsCol, got $other")
-    }
-    // bucket key = the exact floor MULTIPLE (negative-safe): dividing
-    // Long/Long rounds through a double and loses low bits past 2^53
-    // for numeric ts columns in their own units; the multiple groups,
-    // orders and joins identically
-    val unioned = unionedRaw.withColumn("_b",
-      seconds - pmod(seconds, lit(bucketSeconds)))
-
-    val orderCols = Seq(col("_t").asc, col("_side").asc, col("_o").asc)
-    val wRun = Window
-      .partitionBy(col("_e"), col("_b"))
-      .orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRun = unioned
-      .withColumn("_run", last(col("_p"), ignoreNulls = true).over(wRun))
-
-    // bucket-final feature state per (entity, bucket) = the running state
-    // at the bucket's LAST row in window order, i.e. max_by(_run, the
-    // window's own (ts, side, tie-break) order — struct comparison puts
-    // nulls first, exactly like the window's ASC NULLS FIRST). Grouping
-    // the window output (already hash-partitioned by (entity, bucket))
-    // instead of re-aggregating the raw union means the union is scanned
-    // and shuffled ONCE for the whole operator: the aggregation reuses
-    // the window's partitioning exchange-free, and spine-only buckets
-    // still surface (null state → fall through to the carry). The window
-    // over buckets is tiny: rows per entity = #buckets.
-    val wCarry = Window
-      .partitionBy(col("_e"))
-      .orderBy(col("_b").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = withRun
-      .groupBy(col("_e"), col("_b"))
-      .agg(max_by(col("_run"), struct(col("_t"), col("_side"), col("_o"))).as("_bf"))
-      .withColumn("_carry", last(col("_bf"), ignoreNulls = true).over(wCarry))
-      .select(col("_e").as("_ce"), col("_b").as("_cb"), col("_carry"))
-
-    // Probes whose bucket already produced a running state need no
-    // carry at all — only the MISSES (no earlier feature row in their
-    // own bucket) join the carry relation. That split keeps the join
-    // input tiny whenever buckets are feature-dense (the common case:
-    // bucketSeconds is sized to hold many rows), so AQE sees a small
-    // build side and plans a broadcast hash join — the carry side then
-    // streams with NO exchange and NO sort. When buckets are sparse and
-    // the miss side grows, AQE falls back to the sort-merge join, which
-    // is exactly the pre-split plan — the split never loses.
-    //
-    // Join keys are null-safe: Window.partitionBy groups null entities
-    // (and null-ts buckets) together, so the join must too. The inner
-    // join drops no probe: carry has a row for EVERY (entity, bucket)
-    // group of the union, spine-only buckets included.
-    val probes = withRun.filter(col("_side") === 1)
-    val hits = probes
-      .filter(col("_run").isNotNull)
-      .select(outCols.map(c => col("_run").getField(c).as(c)): _*)
-    val misses = probes
-      .filter(col("_run").isNull)
-      .join(carry, col("_e") <=> col("_ce") && col("_b") <=> col("_cb"))
-      .filter(col("_carry").isNotNull)
-      .select(outCols.map(c => col("_carry").getField(c).as(c)): _*)
-
-    project(hits.unionByName(misses), columns, entityCol, tsCol)
-  }
-
-  /** Skew-HYBRID as-of join: the production form of skew handling.
-    *
-    * [[asOfJoinBucketed]] splits every entity's window into time
-    * buckets — right for a hot entity, wasteful for the long tail: when
-    * an entity has fewer rows than buckets, the carry relation degrades
-    * to ~one row per input row and the carry join dominates. This
-    * operator therefore classifies entities by their feature-row count
-    * (one map-side-combined aggregation) and routes ONLY entities above
-    * `hotRowThreshold` through the bucketed two-pass; everything else
-    * takes the plain window. As-of results are per-entity independent,
-    * so the disjoint union is exactly [[asOfJoin]]'s answer —
-    * property-tested equivalent.
-    *
-    * Committed evidence (examples/SkewDemo, 20M rows, one entity owning
-    * 50%, 32 cores — full numbers in PLANS.md "skew routing evidence"):
-    * the hot entity alone runs 25.5s under the indivisible window
-    * partition vs 4.4s bucketed (5.9x), and the hybrid wins the full
-    * workload 6.1s vs the window's 13.1s (2.2x) while all-bucketed
-    * LOSES at 16.3s — routing, not bucketing, is the win. Below the
-    * crossover (the same demo at 5M rows) the window wins outright,
-    * which is what the threshold encodes: with no hot entities the
-    * hybrid IS the plain window.
-    *
-    * The hot set is collected to the driver: it is bounded above by
-    * totalRows / hotRowThreshold (e.g. a 10^12-row table at the default
-    * 10M threshold has at most 10^5 hot entities), the same cardinality
-    * contract broadcast joins rely on.
-    */
-  def asOfJoinSkewHybrid(
-      spine: DataFrame,
-      table: DataFrame,
-      bucketSeconds: Long,
-      hotRowThreshold: Long = 10000000L,
-      columns: Option[Seq[String]] = None,
-      entityCol: String = EntityIdColumn,
-      tsCol: String = TimestampColumn,
-      tieBreakCols: Seq[String] = Nil,
-      tableName: String = "<anonymous>"): DataFrame = {
-    if (hotRowThreshold < 1)
-      throw new FeatureValidationError(
-        s"hotRowThreshold must be >= 1, got $hotRowThreshold")
-    // memoized per (table plan, entityCol, threshold) — the
-    // classification pass is a property of the table version, not of
-    // this particular probe (see [[SkewStats]]; any hot set routes
-    // correctly, so the cache can never corrupt the answer)
-    val hot = SkewStats.hotEntities(table, entityCol, hotRowThreshold)
-    // a STREAMING spine cannot be split-and-probed (the emptiness
-    // probes are batch actions) — the plain kernel is the shape
-    // Validation.validateSpine carved out for streaming frames
-    if (hot.isEmpty || spine.isStreaming)
-      asOfJoin(spine, table, columns, entityCol, tsCol, tieBreakCols, tableName)
-    else {
-      val missing = Seq(entityCol, tsCol).filterNot(spine.columns.contains)
-      if (missing.nonEmpty)
-        throw new FeatureValidationError(
-          s"entity_timestamps is missing required columns: ${missing.mkString(", ")}")
-      // null-safe split (shared: SkewStats.hotColdPredicates). The
-      // predicate is built per side because the SPINE side must be
-      // compared post-cast to the table's entity type — taggedUnion casts
-      // the spine entity before matching, so classifying the raw spine
-      // value would route a narrowing-cast probe to the wrong side and
-      // silently drop its match.
-      val (hotPredOn, coldPredOn) = SkewStats.hotColdPredicates(hot)
-      val spineEntity = col(entityCol).cast(table.schema(entityCol).dataType)
-      val hotSpine = spine.filter(hotPredOn(spineEntity))
-      val coldSpine = spine.filter(coldPredOn(spineEntity))
-      // Split-emptiness drives routing (an empty split would trip the
-      // sub-kernel's spine validation, and routing it away also drops
-      // the unprobed side of the TABLE — as-of matches are entity-equal,
-      // so features on the spine-less side can never reach a probe, and
-      // keeping them out of the window is the point). Emptiness is
-      // probed with limit-1 scans, not a full-spine aggregate: each
-      // probe terminates at the first matching row — on any spine that
-      // actually mixes hot and cold probes this reads a handful of rows
-      // where the aggregate read them all.
-      val nHot = if (hotSpine.isEmpty) 0 else 1
-      val nCold = if (coldSpine.isEmpty) 0 else 1
-      if (nHot + nCold == 0)
-        throw new FeatureValidationError("entity_timestamps must not be empty")
-      if (nHot == 0)
-        asOfJoin(spine, table.filter(coldPredOn(col(entityCol))),
-          columns, entityCol, tsCol, tieBreakCols, tableName,
-          checkEmpty = false)
-      else if (nCold == 0)
-        asOfJoinBucketed(spine, table.filter(hotPredOn(col(entityCol))), bucketSeconds,
-          columns, entityCol, tsCol, tieBreakCols, tableName,
-          checkEmpty = false)
-      else {
-        val hotPart = asOfJoinBucketed(
-          hotSpine, table.filter(hotPredOn(col(entityCol))), bucketSeconds,
-          columns, entityCol, tsCol, tieBreakCols, tableName,
-          checkEmpty = false)
-        val coldPart = asOfJoin(
-          coldSpine, table.filter(coldPredOn(col(entityCol))),
-          columns, entityCol, tsCol, tieBreakCols, tableName,
-          checkEmpty = false)
-        hotPart.unionByName(coldPart)
-      }
-    }
-  }
-
-  /** Native-operator as-of join: identical semantics and oracle to
-    * [[asOfJoin]], planned as graft's custom Catalyst operator
-    * ([[graft.plans.AsOfJoinNode]] → [[graft.plans.AsOfJoinExec]]) — a
-    * streaming merge over co-partitioned, co-sorted children with O(1)
-    * per-partition state. EnsureRequirements plans the exchanges/sorts,
-    * so a feature table already clustered by entity (graft's
-    * registration layout) joins with no feature-side shuffle.
-    */
-  def asOfJoinNative(
-      spine: DataFrame,
-      table: DataFrame,
-      columns: Option[Seq[String]] = None,
-      entityCol: String = EntityIdColumn,
-      tsCol: String = TimestampColumn,
-      tieBreakCols: Seq[String] = Nil,
-      tableName: String = "<anonymous>"): DataFrame = {
-    Validation.validateSpine(spine, entityCol, tsCol)
-    columns.foreach(cs => Validation.validateColumns(
-      cs, dropInternal(table.columns), tableName, Seq(entityCol, tsCol)))
-    val spark = table.sparkSession
-    graft.GraftExtensions.ensureRegistered(spark)
-    val prunedTable = pruneFor(table, columns, entityCol, tsCol, tieBreakCols)
-    val entityType = table.schema(entityCol).dataType
-    val tsType = table.schema(tsCol).dataType
-    val spineNorm = spine.select(
-      col(entityCol).cast(entityType).as(entityCol),
-      col(tsCol).cast(tsType).as(tsCol))
-    val lplan = bridge.analyzed(spineNorm)
-    val rplan = bridge.analyzed(prunedTable)
-    def rAttr(n: String) = rplan.output.find(_.name == n).getOrElse(
-      throw new FeatureValidationError(s"column '$n' not found in feature table"))
-    val node = graft.plans.AsOfJoinNode(
-      lplan, rplan,
-      lplan.output.head, lplan.output(1),
-      rAttr(entityCol), rAttr(tsCol), tieBreakCols.map(rAttr))
-    project(bridge.ofRows(spark, node), columns, entityCol, tsCol)
-  }
-
-  /** Naive as-of plan for comparison / tiny broadcastable spines:
-    * equi-join on entity + range filter + per-(spine row) argmax. The
-    * spine is first deduplicated so the pairwise intermediate is bounded
-    * by distinct probes, then re-expanded to preserve duplicate pairs.
-    */
-  def asOfJoinViaJoin(
-      spine: DataFrame,
-      table: DataFrame,
-      columns: Option[Seq[String]] = None,
-      entityCol: String = EntityIdColumn,
-      tsCol: String = TimestampColumn,
-      tieBreakCols: Seq[String] = Nil,
-      tableName: String = "<anonymous>"): DataFrame = {
-    columns.foreach(cs => Validation.validateColumns(
-      cs, dropInternal(table.columns), tableName, Seq(entityCol, tsCol)))
-    val pruned = pruneFor(table, columns, entityCol, tsCol, tieBreakCols)
-    val entityType = pruned.schema(entityCol).dataType
-    val tsType = pruned.schema(tsCol).dataType
-    val probes = spine
-      .select(col(entityCol).cast(entityType).as("_e"), col(tsCol).cast(tsType).as("_t"))
-      .distinct()
-    val payload = struct(pruned.columns.map(col): _*)
-    val ord = struct((tsCol +: tieBreakCols).map(col): _*)
-    // null-safe entity equality: the window formulations group null
-    // entities together, so this strategy must match them too (null-ts
-    // probes never match anywhere: ts <= null is null — same as the
-    // reference's NaT comparisons)
-    val best = probes
-      .join(pruned, probes("_e") <=> pruned(entityCol) && pruned(tsCol) <= probes("_t"))
-      .groupBy(col("_e"), col("_t"))
-      .agg(max_by(payload, ord).as("_match"))
-    val expanded = spine
-      .select(col(entityCol).cast(entityType).as("_se"), col(tsCol).cast(tsType).as("_st"))
-      .join(best, col("_se") <=> col("_e") && col("_st") <=> col("_t"))
-      .select(pruned.columns.map(c => col("_match").getField(c).as(c)): _*)
-    project(expanded, columns, entityCol, tsCol)
   }
 
   /** SCD2 (slowly-changing-dimension type 2) view of a feature table:
@@ -633,45 +356,6 @@ object PointInTime {
     val order = (tsCol +: tieBreakCols).map(c => col(c).asc)
     val w = Window.partitionBy(col(entityCol)).orderBy(order: _*)
     table.withColumn("valid_to", lead(col(tsCol), 1).over(w))
-  }
-
-  /** As-of join via [[scd2]] interval containment: each probe joins the
-    * ONE feature row whose validity interval contains it — so the plan
-    * is an equi-join on entity with a range filter and NO post-join
-    * dedup (the window/argmax step every other strategy needs after
-    * pairing). Intermediate size equals output size by construction.
-    *
-    * Scale shape: the scd2 window and the join share the entity
-    * partitioning (one exchange each side, reused); where the interval
-    * view is precomputed and stored, probing it costs a single join.
-    */
-  def asOfJoinViaScd2(
-      spine: DataFrame,
-      table: DataFrame,
-      columns: Option[Seq[String]] = None,
-      entityCol: String = EntityIdColumn,
-      tsCol: String = TimestampColumn,
-      tieBreakCols: Seq[String] = Nil,
-      tableName: String = "<anonymous>"): DataFrame = {
-    Validation.validateSpine(spine, entityCol, tsCol)
-    columns.foreach(cs => Validation.validateColumns(
-      cs, dropInternal(table.columns), tableName, Seq(entityCol, tsCol)))
-    val pruned = pruneFor(table, columns, entityCol, tsCol, tieBreakCols)
-    val entityType = pruned.schema(entityCol).dataType
-    val tsType = pruned.schema(tsCol).dataType
-    val intervals = scd2(pruned, entityCol, tsCol, tieBreakCols)
-    val probes = spine.select(
-      col(entityCol).cast(entityType).as("_e"),
-      col(tsCol).cast(tsType).as("_t"))
-    // null-safe entity equality for parity with the window strategies;
-    // null-ts probes never match (t < nothing), same as the reference
-    val joined = probes
-      .join(
-        intervals,
-        col("_e") <=> intervals(entityCol) && intervals(tsCol) <= col("_t") &&
-          (col("valid_to").isNull || col("_t") < col("valid_to")))
-      .select(pruned.columns.map(col): _*)
-    project(joined, columns, entityCol, tsCol)
   }
 
   /** π [entity, ts] ++ columns (reference: store.py:250-253, 303-306);

@@ -36,17 +36,14 @@ object Validation {
   def validateSpine(
       df: DataFrame,
       entityCol: String,
-      tsCol: String,
-      checkEmpty: Boolean = true): Unit = {
+      tsCol: String): Unit = {
     val missing = Seq(entityCol, tsCol).filterNot(df.columns.contains)
     if (missing.nonEmpty)
       throw new FeatureValidationError(
         s"entity_timestamps is missing required columns: ${missing.mkString(", ")}")
     // emptiness is a batch concept — probing it is an action, which is
-    // both illegal and meaningless on a streaming frame. Callers that
-    // already proved non-emptiness (the skew hybrid's routing probes)
-    // pass checkEmpty = false to skip the redundant job.
-    if (checkEmpty && !df.isStreaming &&
+    // both illegal and meaningless on a streaming frame
+    if (!df.isStreaming &&
       df.select(Seq(entityCol, tsCol).map(org.apache.spark.sql.functions.col): _*).isEmpty)
       throw new FeatureValidationError("entity_timestamps must not be empty")
   }

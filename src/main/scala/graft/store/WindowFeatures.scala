@@ -18,10 +18,9 @@ import org.apache.spark.sql.types._
   * event stream and evaluates every aggregate with a RANGE-frame window
   * over epoch-micros: ONE shuffle + one sort of (events + probes), no
   * pairwise intermediate, all aggregates computed in the same window
-  * pass. Skew note: a single hot entity still lands in one task — for
-  * that shape, pre-split by time bucket as in
-  * [[PointInTime.asOfJoinBucketed]] (sums/counts/min/max all decompose
-  * over buckets).
+  * pass. It is the one window-aggregate kernel: a single hot entity
+  * still lands in one task, and no skew route exists, because no
+  * measured workload has an entity hot enough to need one.
   */
 object WindowFeatures {
 
@@ -30,10 +29,8 @@ object WindowFeatures {
 
   /** Ordering value + frame width for a window/session kernel, in
     * matching units: temporal columns at microsecond precision, numeric
-    * ts columns in their own units. ONE dispatch site — three kernels
-    * previously carried identical copies, exactly the block a new
-    * ts-type support would have to be added to N times (intervalJoin's
-    * missed DateType branch was this drift realized).
+    * ts columns in their own units. ONE dispatch site for every
+    * windowed kernel, so a new ts type is supported in one place.
     */
   private def ordAndWidth(
       tsType: org.apache.spark.sql.types.DataType,
@@ -170,284 +167,6 @@ object WindowFeatures {
       .select(col("_e") +: col("_t") +: col("_side") +: aggCols: _*)
       .filter(col("_side") === 1)
       .select(col("_e").as(entityCol) +: col("_t").as(tsCol) +: aggs.map(a => col(a.out)): _*)
-  }
-
-  /** Skew-aware form of [[windowAggJoin]]: identical semantics, but the
-    * per-entity RANGE window is decomposed over (entity, time-bucket)
-    * tasks, with bucket width = the window length. A probe's window
-    * (t − w, t] then spans at most TWO buckets:
-    *
-    *   - a PREFIX of the probe's own bucket k = ⌊t/w⌋ (rows ≤ t), read
-    *     by a forward running aggregate with the probe placed at t;
-    *   - a SUFFIX of bucket k−1 (rows > t − w), read by a BACKWARD
-    *     running aggregate with a second probe copy placed at t − w
-    *     (which lands in bucket k−1 by construction).
-    *
-    * Halves recombine per distinct probe (sums/counts add, min/max
-    * fold, null iff both halves empty), then re-expand to duplicate
-    * spine rows — all five aggregate fns decompose this way. A hot
-    * entity's windows thus spread across its time range instead of
-    * serializing into one window partition (the skew AQE cannot split,
-    * same argument as [[PointInTime.asOfJoinBucketed]]). Costs two
-    * extra small shuffles (probe-half combine + duplicate re-expand),
-    * so the plain single-window form wins on long-tail data — route by
-    * entity heat, as [[PointInTime.asOfJoinSkewHybrid]] does for as-of.
-    *
-    * Per-aggregate `windowSeconds` overrides are rejected: the bucket
-    * grid is the window length, one horizon per pass.
-    */
-  def windowAggJoinBucketed(
-      spine: DataFrame,
-      table: DataFrame,
-      windowSeconds: Long,
-      aggs: Seq[WindowAgg],
-      entityCol: String = EntityIdColumn,
-      tsCol: String = TimestampColumn): DataFrame = {
-    if (aggs.exists(_.windowSeconds.isDefined))
-      throw new FeatureValidationError(
-        "windowAggJoinBucketed buckets by the join-level window; per-aggregate horizons need one pass each")
-    if (aggs.exists(_.fn == "distinct"))
-      throw new FeatureValidationError(
-        "windowAggJoinBucketed cannot compute 'distinct': |A ∪ B| does not " +
-          "decompose over the prefix/suffix halves — use windowAggJoin, or an " +
-          "HLL sketch column (register-max IS decomposable) for approximate counts")
-    if (windowSeconds < 1)
-      throw new FeatureValidationError(
-        s"windowSeconds must be >= 1, got $windowSeconds")
-    if (aggs.isEmpty)
-      throw new FeatureValidationError("windowAggJoin needs at least one aggregate")
-    aggs.find(a => !SupportedFns.contains(a.fn)).foreach(a =>
-      throw new FeatureValidationError(
-        s"unsupported window aggregate '${a.fn}' (supported: ${SupportedFns.toSeq.sorted.mkString(", ")})"))
-    Validation.validateSpine(spine, entityCol, tsCol)
-    val valueCols = aggs.collect { case a if a.fn != "rows" => a.input }.distinct
-    val missing = valueCols.filterNot(table.columns.contains)
-    if (missing.nonEmpty)
-      throw new FeatureValidationError(
-        s"windowAggJoin input columns not in table: ${missing.mkString(", ")}")
-    val dupOut = aggs.groupBy(_.out).collect { case (o, as) if as.size > 1 => o }
-    if (dupOut.nonEmpty)
-      throw new FeatureValidationError(
-        s"duplicate output names: ${dupOut.toSeq.sorted.mkString(", ")}")
-
-    val entityType = table.schema(entityCol).dataType
-    val tsType = table.schema(tsCol).dataType
-    val (ordOf, width) = ordAndWidth(tsType, windowSeconds, "windowAggJoinBucketed")
-
-    // distinct probes: halves recombine on (entity, t), so duplicates
-    // must collapse first and re-expand at the end (asOfJoinViaJoin's
-    // pattern) — pairing by a generated id would not survive task retry
-    val probes = spine
-      .select(col(entityCol).cast(entityType).as("_e"), col(tsCol).cast(tsType).as("_t"))
-      .distinct()
-      .withColumn("_us0", ordOf(col("_t")))
-    val featSide = table
-      .filter(col(tsCol).isNotNull)
-      .select(
-        col(entityCol).as("_e") +:
-          ordOf(col(tsCol)).as("_us") +:
-          lit(0).as("_side") +:
-          lit(null).cast(LongType).as("_us0") +:
-          valueCols.map(c => col(c).as(s"_v_$c")): _*)
-    def probeSide(side: Int, at: Column) = probes.select(
-      col("_e") +:
-        at.as("_us") +:
-        lit(side).as("_side") +:
-        col("_us0") +:
-        valueCols.map(c => lit(null).cast(table.schema(c).dataType).as(s"_v_$c")): _*)
-    val unioned = featSide
-      .unionByName(probeSide(1, col("_us0")))           // reads bucket-k prefix
-      .unionByName(probeSide(2, col("_us0") - width))   // reads bucket-(k-1) suffix
-      // bucket key = the exact floor MULTIPLE (x - pmod(x, w)),
-      // negative-safe and pure Long arithmetic: dividing would round
-      // through a double (Long/Long is DoubleType in Spark), losing
-      // low bits past 2^53 — the multiple groups and orders identically
-      .withColumn("_bk",
-        when(col("_us").isNull, lit(null).cast(LongType))
-          .otherwise(col("_us") - pmod(col("_us"), lit(width))))
-
-    // forward: features sort BEFORE probes at equal ts (inclusive upper
-    // bound); backward: the suffix probe sorts before equal-ts features
-    // in descending order (strictly-greater lower bound)
-    val wF = Window.partitionBy(col("_e"), col("_bk"))
-      .orderBy(col("_us").asc, col("_side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wB = Window.partitionBy(col("_e"), col("_bk"))
-      .orderBy(col("_us").desc, col("_side").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def featOnly(c: Column): Column = when(col("_side") === 0, c)
-    def runningAggs(w: org.apache.spark.sql.expressions.WindowSpec) = aggs.map { a =>
-      val c = a match {
-        case WindowAgg(_, "rows", _, _) => count(featOnly(lit(1))).over(w)
-        case WindowAgg(_, "count", in, _) => count(featOnly(col(s"_v_$in"))).over(w)
-        case WindowAgg(_, "sum", in, _) => sum(featOnly(col(s"_v_$in"))).over(w)
-        case WindowAgg(_, "min", in, _) => min(featOnly(col(s"_v_$in"))).over(w)
-        case WindowAgg(_, "max", in, _) => max(featOnly(col(s"_v_$in"))).over(w)
-        case WindowAgg(_, fn, _, _) =>
-          throw new FeatureValidationError(s"unsupported window aggregate '$fn'")
-      }
-      c.as(s"_r_${a.out}")
-    }
-    // both scans in one select: Catalyst plans ONE exchange on
-    // (_e, _bk) with an ascending and a descending sort over it
-    val scannedBoth = unioned.select(
-      (col("_e") +: col("_side") +: col("_us0") +:
-        (aggs.zip(runningAggs(wF)).map { case (a, c) => c.as(s"_f_${a.out}") } ++
-          aggs.zip(runningAggs(wB)).map { case (a, c) => c.as(s"_b_${a.out}") })): _*)
-    // recombine the two probe copies per (entity, probe-ts) with an
-    // aggregation, NOT a self-join — a join would evaluate the whole
-    // scan subtree twice. Each probe is distinct, so the side-1 row is
-    // the unique forward-half candidate and max() just picks it (and
-    // preserves a legitimately-null empty-half value).
-    val halfAggs =
-      aggs.map(a => max(when(col("_side") === 1, col(s"_f_${a.out}")))
-        .as(s"_p_${a.out}")) ++
-        aggs.map(a => max(when(col("_side") === 2, col(s"_b_${a.out}")))
-          .as(s"_s_${a.out}"))
-    val halves = scannedBoth
-      .filter(col("_side") =!= 0)
-      .groupBy(col("_e").as("_pe"), col("_us0").as("_pt"))
-      .agg(halfAggs.head, halfAggs.tail: _*)
-
-    def combined(a: WindowAgg): Column = {
-      val p = col(s"_p_${a.out}")
-      val s = col(s"_s_${a.out}")
-      a.fn match {
-        case "rows" | "count" => (p + s).as(a.out)
-        case "sum" =>
-          // null iff BOTH halves saw no rows (plain windowAggJoin's
-          // empty-window sum is null, a one-sided window's is not)
-          when(p.isNull && s.isNull, lit(null))
-            .otherwise(coalesce(p, lit(0)) + coalesce(s, lit(0)))
-            .as(a.out)
-        case "min" => least(p, s).as(a.out)
-        case "max" => greatest(p, s).as(a.out)
-      }
-    }
-    val perProbe = halves.select(
-      col("_pe") +: col("_pt") +: aggs.map(combined): _*)
-
-    // re-expand duplicate spine rows (null-safe equality, as elsewhere)
-    spine
-      .select(
-        col(entityCol).cast(entityType).as("_oe"),
-        col(tsCol).cast(tsType).as("_ot"))
-      .join(perProbe,
-        col("_oe") <=> col("_pe") && ordOf(col("_ot")) <=> col("_pt"))
-      .select(col("_oe").as(entityCol) +: col("_ot").as(tsCol) +:
-        aggs.map(a => col(a.out)): _*)
-  }
-
-  /** Heat-routed form of [[windowAggJoin]]: entities with at least
-    * `hotRowThreshold` feature rows take the bucketed prefix/suffix
-    * decomposition ([[windowAggJoinBucketed]]), the long tail takes the
-    * plain single-window plan — same routing argument as
-    * [[PointInTime.asOfJoinSkewHybrid]], including the cast-aware split
-    * (the spine entity is classified AFTER casting to the table's
-    * entity type, matching what the kernels compare) and the
-    * driver-side hot set bounded by totalRows / hotRowThreshold for
-    * the row rule and capped at [[SkewStats.maxWorkHotSet]] for the
-    * work rule (worst offenders first; the remainder routes plain).
-    *
-    * Threshold note (examples/WindowSkewDemo, 20M rows): the plain
-    * plan's hot-entity cost is probes × in-frame rows inside ONE
-    * indivisible task (Spark's sliding RANGE frame re-aggregates on
-    * frame change), measured 981s for a 10M-row entity with 1M probes
-    * and ~1800-row frames, vs 7.6s bucketed. The default threshold is
-    * row-count-based like the as-of hybrid's, but the window family
-    * degrades faster than as-of's sort-bound plain path — so the
-    * classification is additionally FRAME-AWARE: an entity whose
-    * estimated plain-plan work (rows × estimated in-frame rows, see
-    * [[SkewStats.hotEntitiesByWindowWork]]) reaches `hotWorkThreshold`
-    * routes bucketed even far below the row threshold. The default
-    * (1e8) is ~5 s of single-task frame re-aggregation at
-    * WindowSkewDemo's measured ~1.8e7 frame-rows/s — about where the
-    * plain plan's one indivisible hot task starts losing to the
-    * bucketed decomposition's two extra shuffles. Dense-burst entities
-    * (whole history inside one frame) hit it at √1e8 = 10k rows; an
-    * entity with ~1800-row frames at 75k rows; a sparse entity whose
-    * frames hold a handful of rows stays on the plain path at any
-    * count below `hotRowThreshold`.
-    */
-  def windowAggJoinHybrid(
-      spine: DataFrame,
-      table: DataFrame,
-      windowSeconds: Long,
-      aggs: Seq[WindowAgg],
-      hotRowThreshold: Long = 10000000L,
-      entityCol: String = EntityIdColumn,
-      tsCol: String = TimestampColumn,
-      hotWorkThreshold: Long = 100000000L): DataFrame = {
-    if (hotRowThreshold < 1)
-      throw new FeatureValidationError(
-        s"hotRowThreshold must be >= 1, got $hotRowThreshold")
-    if (hotWorkThreshold < 1)
-      throw new FeatureValidationError(
-        s"hotWorkThreshold must be >= 1, got $hotWorkThreshold")
-    // memoized per (table plan, entityCol, thresholds) — see [[SkewStats]].
-    // ordAndWidth validates the ts type up front (same error the kernels
-    // would raise), then the one classification pass reads count + ts
-    // span per entity and applies BOTH the row and the work rule.
-    val hot = {
-      // exact match first, then case-insensitive — Spark resolves
-      // columns case-insensitively by default, and a casing mismatch
-      // must not silently disable the work rule (the dense-burst shape
-      // it exists to catch would run the plain single-task path)
-      val tsTypeCls = table.schema.find(_.name == tsCol)
-        .orElse(table.schema.find(_.name.equalsIgnoreCase(tsCol)))
-        .map(_.dataType)
-      tsTypeCls match {
-        case Some(t) =>
-          val (ordOfCls, widthCls) =
-            ordAndWidth(t, windowSeconds, "windowAggJoinHybrid")
-          SkewStats.hotEntitiesByWindowWork(
-            table, entityCol, tsCol, ordOfCls, widthCls,
-            hotRowThreshold, hotWorkThreshold)
-        case None =>
-          // missing ts column: fall through to the plain kernel's
-          // canonical validation error instead of raising our own shape
-          SkewStats.hotEntities(table, entityCol, hotRowThreshold)
-      }
-    }
-    // a STREAMING spine cannot be split-and-probed (the emptiness
-    // probes are batch actions) — route it to the plain kernel, the
-    // shape Validation.validateSpine carved out for streaming frames
-    if (hot.isEmpty || spine.isStreaming)
-      return windowAggJoin(spine, table, windowSeconds, aggs, entityCol, tsCol)
-    val missing = Seq(entityCol, tsCol).filterNot(spine.columns.contains)
-    if (missing.nonEmpty)
-      throw new FeatureValidationError(
-        s"entity_timestamps is missing required columns: ${missing.mkString(", ")}")
-    // null-safe split — shared with the as-of hybrid
-    val (hotPredOn, coldPredOn) = SkewStats.hotColdPredicates(hot)
-    val spineEntity = col(entityCol).cast(table.schema(entityCol).dataType)
-    // limit-1 emptiness probes, not a full-spine aggregate — see the
-    // as-of hybrid ([[PointInTime.asOfJoinSkewHybrid]]) for the argument
-    val nHot = if (spine.filter(hotPredOn(spineEntity)).isEmpty) 0 else 1
-    val nCold = if (spine.filter(coldPredOn(spineEntity)).isEmpty) 0 else 1
-    if (nHot + nCold == 0)
-      throw new FeatureValidationError("entity_timestamps must not be empty")
-    // unlike the as-of hybrid, spine rows for the table-less side must
-    // KEEP their left-semantics zero rows — so the unprobed table side
-    // is filtered but the spine is never dropped, and an empty split
-    // simply runs the whole spine down one path
-    if (nHot == 0)
-      windowAggJoin(spine, table.filter(coldPredOn(col(entityCol))),
-        windowSeconds, aggs, entityCol, tsCol)
-    else if (nCold == 0)
-      windowAggJoinBucketed(spine, table.filter(hotPredOn(col(entityCol))),
-        windowSeconds, aggs, entityCol, tsCol)
-    else {
-      val hotPart = windowAggJoinBucketed(
-        spine.filter(hotPredOn(spineEntity)),
-        table.filter(hotPredOn(col(entityCol))),
-        windowSeconds, aggs, entityCol, tsCol)
-      val coldPart = windowAggJoin(
-        spine.filter(coldPredOn(spineEntity)),
-        table.filter(coldPredOn(col(entityCol))),
-        windowSeconds, aggs, entityCol, tsCol)
-      hotPart.unionByName(coldPart)
-    }
   }
 
   /** Interval (range) join: every (left, right) pair of the same entity

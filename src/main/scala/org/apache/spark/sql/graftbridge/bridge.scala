@@ -8,9 +8,10 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils,
 /** Minimal bridge into Spark's `private[sql]` plan-construction seams.
   *
   * Spark 4 split the public `Column`/`Dataset` API from the Catalyst
-  * `Expression`/`LogicalPlan` layer; libraries that contribute a custom
-  * logical operator (graft's native as-of join) or a custom scalar
-  * `Expression` (graft's vector kernels) still need these three hops:
+  * `Expression`/`LogicalPlan` layer; libraries that build plans from
+  * Catalyst nodes (graft's SQL DML rule and change-feed TVF) or
+  * contribute a custom scalar `Expression` (graft's vector kernels)
+  * still need these three hops:
   *
   *   - Expression -> Column and back ([[column]] / [[expression]])
   *   - LogicalPlan -> DataFrame ([[ofRows]])

@@ -22,7 +22,10 @@ class ContractRegistrySpec extends AnyFunSuite {
   }
 
   test("the oracle-verified surface only grows (169 as of round 13)") {
-    assert(SparkEntry.queries.size >= 169,
+    // 163: the six strategy-only queries asof_join_via_join,
+    // asof_join_bucketed, asof_join_skewhybrid, asof_join_via_scd2,
+    // asof_join_native and window_agg_bucketed went with their kernels
+    assert(SparkEntry.queries.size >= 163,
       s"contract shrank to ${SparkEntry.queries.size} queries — deliberate removals " +
         "must update this floor with a rationale")
   }

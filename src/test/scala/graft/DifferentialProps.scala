@@ -327,8 +327,7 @@ object DifferentialProps extends Properties("Differential") {
   // ---------------------------------------------------------------
 
   private case class AsOfCase(rows: List[F],
-      spine: List[(Long, Option[Long])], maxAge: Option[Long],
-      impl: String, bucket: Long)
+      spine: List[(Long, Option[Long])], maxAge: Option[Long])
 
   private val genAsOf: Gen[AsOfCase] = for {
     rows <- genFeatRows
@@ -336,35 +335,16 @@ object DifferentialProps extends Properties("Differential") {
     // ages landing exactly on hour gaps fuzz the inclusive floor
     maxAge <- Gen.option(Gen.oneOf(0L, 3600L, 2 * 3600L, 5 * 3600L,
       7 * 3600L, 3600L - 1, 24 * 3600L))
-    // every strategy variant must answer the same oracle (max_age is
-    // the native kernel's parameter only)
-    impl <- Gen.oneOf("native", "viaJoin", "viaScd2", "bucketed",
-      "skewHot", "skewCold")
-    bucket <- Gen.oneOf(3600L, 2 * 3600L, 5 * 3600L)
-  } yield AsOfCase(rows, spine, maxAge, impl, bucket)
+  } yield AsOfCase(rows, spine, maxAge)
 
   property("asOfJoin == DuckDB lateral argmax (dup spine pairs, max_age)") =
     differential(genAsOf) { c =>
       val sp = spineDF(c.spine)
       val tb = featDF(c.rows)
-      val tie = Seq("event_id")
-      val engine = c.impl match {
-        case "native" => PointInTime.asOfJoin(
-          sp, tb, tieBreakCols = tie, maxAgeSeconds = c.maxAge)
-        case "viaJoin" => PointInTime.asOfJoinViaJoin(
-          sp, tb, tieBreakCols = tie)
-        case "viaScd2" => PointInTime.asOfJoinViaScd2(
-          sp, tb, tieBreakCols = tie)
-        case "bucketed" => PointInTime.asOfJoinBucketed(
-          sp, tb, bucketSeconds = c.bucket, tieBreakCols = tie)
-        case "skewHot" => PointInTime.asOfJoinSkewHybrid(
-          sp, tb, bucketSeconds = c.bucket, hotRowThreshold = 1L,
-          tieBreakCols = tie)
-        case "skewCold" => PointInTime.asOfJoinSkewHybrid(
-          sp, tb, bucketSeconds = c.bucket, tieBreakCols = tie)
-      }
-      val out = engine.orderBy("entity_id", "timestamp", "event_id")
-      val agePred = c.maxAge.filter(_ => c.impl == "native")
+      val out = PointInTime
+        .asOfJoin(sp, tb, tieBreakCols = Seq("event_id"), maxAgeSeconds = c.maxAge)
+        .orderBy("entity_id", "timestamp", "event_id")
+      val agePred = c.maxAge
         .map(a => s"""AND f."timestamp" >= s."timestamp" - INTERVAL $a SECOND""")
         .getOrElse("")
       val sql =
@@ -388,56 +368,31 @@ object DifferentialProps extends Properties("Differential") {
   // NULLs inside sum/min/max/distinct, empty windows)
   // ---------------------------------------------------------------
 
-  private val genWindow: Gen[(List[F], List[(Long, Option[Long])], Long, String)] =
+  private val genWindow: Gen[(List[F], List[(Long, Option[Long])], Long)] =
     for {
       rows <- genFeatRows
       spineRaw <- genSpineRows
       w <- Gen.oneOf(3600L, 2 * 3600L, 5 * 3600L, 21 * 3600L)
-      // every window strategy answers the same oracle: the bucketed
-      // decomposition, and the skew hybrid in BOTH routings (threshold
-      // 1 = all entities hot, default = all cold → plain fallback)
-      variant <- Gen.oneOf("plain", "bucketed", "hybridHot", "hybridCold")
       // window probes need a timestamp; keep entity diversity, drop nulls
     } yield
-      (rows, spineRaw.collect { case (e, Some(t)) => (e, Option(t)) }, w, variant)
+      (rows, spineRaw.collect { case (e, Some(t)) => (e, Option(t)) }, w)
 
   property("windowAggJoin == DuckDB grouped left join (all six fns)") =
-    differential(genWindow.suchThat(_._2.nonEmpty)) { case (rows, spine, w, variant) =>
+    differential(genWindow.suchThat(_._2.nonEmpty)) { case (rows, spine, w) =>
       import WindowFeatures.WindowAgg
-      // the bucketed decomposition rejects per-agg horizons and
-      // 'distinct' by contract, and the skew hybrid routes its hot
-      // side through it — those arms fuzz the five decomposable fns
-      // (prefix/suffix halves across the bucket grid)
-      val bucketed = variant != "plain"
       val aggs = Seq(
         WindowAgg("n_rows", "rows", "", None),
         WindowAgg("n_vals", "count", "value", None),
         WindowAgg("v_sum", "sum", "value", None),
         WindowAgg("v_min", "min", "value", None),
-        WindowAgg("v_max", "max", "value", None)) ++
-        (if (bucketed) Nil else Seq(
-          WindowAgg("v_distinct", "distinct", "value", None),
-          WindowAgg("v_sum_wide", "sum", "value", Some(3 * w))))
-      val engine = variant match {
-        case "bucketed" => WindowFeatures.windowAggJoinBucketed(
-          spineDF(spine), featDF(rows), w, aggs)
-        case "hybridHot" => WindowFeatures.windowAggJoinHybrid(
-          spineDF(spine), featDF(rows), w, aggs, hotRowThreshold = 1L)
-        case "hybridCold" => WindowFeatures.windowAggJoinHybrid(
-          spineDF(spine), featDF(rows), w, aggs)
-        case _ => WindowFeatures.windowAggJoin(
-          spineDF(spine), featDF(rows), w, aggs)
-      }
-      val out = engine.orderBy("entity_id", "timestamp")
+        WindowAgg("v_max", "max", "value", None),
+        WindowAgg("v_distinct", "distinct", "value", None),
+        WindowAgg("v_sum_wide", "sum", "value", Some(3 * w)))
+      val out = WindowFeatures.windowAggJoin(spineDF(spine), featDF(rows), w, aggs)
+        .orderBy("entity_id", "timestamp")
       def inWin(age: Long) =
         s"""f."timestamp" > s."timestamp" - INTERVAL $age SECOND
            | AND f."timestamp" <= s."timestamp"""".stripMargin.replace("\n", "")
-      val extraSelect =
-        if (bucketed) ""
-        else
-          s""",
-             |  count(DISTINCT f.value) FILTER (WHERE ${inWin(w)}) AS v_distinct,
-             |  CAST(sum(f.value) FILTER (WHERE ${inWin(3 * w)}) AS BIGINT) AS v_sum_wide""".stripMargin
       val sql =
         s"""WITH ${featCte("feat", rows)},
            |${spineCte("spine", spine.map { case (e, t) => (e, t) })}
@@ -446,11 +401,13 @@ object DifferentialProps extends Properties("Differential") {
            |  count(f.value)    FILTER (WHERE ${inWin(w)}) AS n_vals,
            |  CAST(sum(f.value) FILTER (WHERE ${inWin(w)}) AS BIGINT) AS v_sum,
            |  min(f.value)      FILTER (WHERE ${inWin(w)}) AS v_min,
-           |  max(f.value)      FILTER (WHERE ${inWin(w)}) AS v_max$extraSelect
+           |  max(f.value)      FILTER (WHERE ${inWin(w)}) AS v_max,
+           |  count(DISTINCT f.value) FILTER (WHERE ${inWin(w)}) AS v_distinct,
+           |  CAST(sum(f.value) FILTER (WHERE ${inWin(3 * w)}) AS BIGINT) AS v_sum_wide
            |FROM spine s LEFT JOIN feat f ON f.entity_id = s.entity_id
            |GROUP BY s.spine_id, s.entity_id, s."timestamp"
            |ORDER BY s.entity_id, s."timestamp"""".stripMargin
-      Duck.compare(sql, dump(out, if (bucketed) "windowB" else "window"))
+      Duck.compare(sql, dump(out, "window"))
     }
 
   // ---------------------------------------------------------------

@@ -599,8 +599,8 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     // approximate path vs brute force on the 500-vector sf0.01
     // corpus, 50 queries. All paths are deterministic (hash-derived
     // planes, id-seeded centroids/codebooks, exact-integer k-means),
-    // so the measured values — graft.examples.RecallFloors, recorded
-    // in PLANS.md round-9 — are constants of (method, params, corpus);
+    // so the measured values — recorded in PLANS.md round-9 — are
+    // constants of (method, params, corpus);
     // floors sit 0.02 under them. A quality regression in ANY
     // bucketing, probing, quantization, or rescoring path fails here.
     val e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -650,6 +650,27 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     // exact-arithmetic update ⇒ training is reproducible bit-for-bit
     val again = Similarity.ivfCentroidsKMeans(e, numCentroids = 16, iters = 1)
     assert(learned.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
+  }
+
+  test("ivfCentroids and ivfCentroidsKMeans return copies of their memo") {
+    val e = embDF(
+      0L -> Seq(1f, 0f, 0f),
+      1L -> Seq(0f, 1f, 0f),
+      2L -> Seq(0.9f, 0.1f, 0f),
+      3L -> Seq(0.1f, 0.9f, 0f))
+    def snapshot(cs: Array[Array[Double]]) = cs.map(_.toSeq).toSeq
+    val seed = Similarity.ivfCentroids(e, numCentroids = 2)
+    val seedWant = snapshot(seed)
+    assert(seedWant == Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0)))
+    seed(0)(0) = 42.0
+    seed(1) = Array(7.0, 7.0, 7.0)
+    assert(snapshot(Similarity.ivfCentroids(e, numCentroids = 2)) == seedWant)
+
+    val learned = Similarity.ivfCentroidsKMeans(e, numCentroids = 2, iters = 1)
+    val learnedWant = snapshot(learned)
+    learned(0)(1) = -1.0
+    assert(snapshot(Similarity.ivfCentroidsKMeans(e, numCentroids = 2, iters = 1)) ==
+      learnedWant)
   }
 
   test("semanticDedup: min-id survivor within clusters, keepers unflagged") {

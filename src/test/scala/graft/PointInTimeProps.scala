@@ -147,80 +147,4 @@ object PointInTimeProps extends Properties("PointInTime") {
       .sorted
     got == want // every spine row present exactly once, matched or null
   }
-
-  property("asOfJoinBucketed (skew-aware) equals asOfJoin") = forAll(
-    genRows, genSpine, Gen.oneOf(3600L, 86400L, 86400L * 7)) { (rows, spine, bucketSec) =>
-    val s = spark
-    import s.implicits._
-    val spineDf = (if (spine.isEmpty) List(("z", 1)) else spine)
-      .map { case (e, d) => (e, ts(d)) }
-      .toDF("entity_id", "timestamp")
-    val df = toDF(rows)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getLong(2), r.getLong(3))
-    val a = PointInTime.asOfJoin(spineDf, df, tieBreakCols = Seq("seq"))
-      .collect().map(key).toList.sorted
-    val b = PointInTime
-      .asOfJoinBucketed(spineDf, df, bucketSec, tieBreakCols = Seq("seq"))
-      .collect().map(key).toList.sorted
-    a == b
-  }
-
-  property("asOfJoinSkewHybrid equals asOfJoin at any hot threshold") = forAll(
-    genRows, genSpine, Gen.oneOf(1L, 2L, 3L, 1000L)) { (rows, spine, hotThRaw) =>
-    // threshold 1 routes EVERY entity through the bucketed path,
-    // 1000 routes none, 2-3 split the population — all must agree.
-    // max(1) guards ScalaCheck shrinking, which explores values outside
-    // the generator domain (0 trips the operator's validation).
-    val hotTh = math.max(1L, hotThRaw)
-    val s = spark
-    import s.implicits._
-    val spineDf = (if (spine.isEmpty) List(("z", 1)) else spine)
-      .map { case (e, d) => (e, ts(d)) }
-      .toDF("entity_id", "timestamp")
-    val df = toDF(rows)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getLong(2), r.getLong(3))
-    val a = PointInTime.asOfJoin(spineDf, df, tieBreakCols = Seq("seq"))
-      .collect().map(key).toList.sorted
-    val b = PointInTime
-      .asOfJoinSkewHybrid(spineDf, df, 86400L, hotRowThreshold = hotTh,
-        tieBreakCols = Seq("seq"))
-      .collect().map(key).toList.sorted
-    a == b
-  }
-
-  property("asOfJoinNative (custom operator) equals asOfJoin") = forAll(
-    genRows, genSpine) { (rows, spine) =>
-    val s = spark
-    import s.implicits._
-    val spineDf = (if (spine.isEmpty) List(("z", 1)) else spine)
-      .map { case (e, d) => (e, ts(d)) }
-      .toDF("entity_id", "timestamp")
-    val df = toDF(rows)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getLong(2), r.getLong(3))
-    val a = PointInTime.asOfJoin(spineDf, df, tieBreakCols = Seq("seq"))
-      .collect().map(key).toList.sorted
-    val b = PointInTime.asOfJoinNative(spineDf, df, tieBreakCols = Seq("seq"))
-      .collect().map(key).toList.sorted
-    a == b
-  }
-
-  property("asOfJoin merge and join formulations agree") = forAll(
-    genRows, genSpine) { (rows, spine) =>
-    val s = spark
-    import s.implicits._
-    val spineDf = (if (spine.isEmpty) List(("z", 1)) else spine)
-      .map { case (e, d) => (e, ts(d)) }
-      .toDF("entity_id", "timestamp")
-    val df = toDF(rows)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getLong(2), r.getLong(3))
-    val a = PointInTime.asOfJoin(spineDf, df, tieBreakCols = Seq("seq"))
-      .collect().map(key).toList.sorted
-    val b = PointInTime.asOfJoinViaJoin(spineDf, df, tieBreakCols = Seq("seq"))
-      .collect().map(key).toList.sorted
-    a == b
-  }
 }

@@ -188,21 +188,6 @@ class PointInTimeSpec extends AnyFunSuite with SparkTestBase {
     assert(out.head.getAs[Double]("feature_a") == 2.0)
   }
 
-  test("naive join-based as-of plan agrees with merge plan") {
-    val s = spark
-    import s.implicits._
-    val spine = Seq(
-      ("user_1", ts("2024-01-20")),
-      ("user_1", ts("2024-01-20")), // duplicate preserved
-      ("user_2", ts("2024-01-15")),
-      ("ghost", ts("2024-06-01"))).toDF("entity_id", "timestamp")
-    val a = PointInTime.asOfJoin(spine, sampleFeatures)
-      .orderBy("entity_id", "timestamp").collect().toSeq
-    val b = PointInTime.asOfJoinViaJoin(spine, sampleFeatures)
-      .orderBy("entity_id", "timestamp").collect().toSeq
-    assert(a == b)
-  }
-
   test("scd2 assigns validity intervals; duplicates get empty intervals") {
     val s = spark
     import s.implicits._
@@ -219,25 +204,6 @@ class PointInTimeSpec extends AnyFunSuite with SparkTestBase {
     assert(out("next") == None)                     // current row, open interval
   }
 
-  test("interval-containment as-of plan agrees with merge plan") {
-    val s = spark
-    import s.implicits._
-    val spine = Seq(
-      ("user_1", ts("2024-01-20")),
-      ("user_1", ts("2024-01-20")), // duplicate preserved
-      ("user_2", ts("2024-01-15")), // exact boundary inclusive
-      ("ghost", ts("2024-06-01"))).toDF("entity_id", "timestamp")
-    val a = PointInTime.asOfJoin(spine, sampleFeatures)
-      .orderBy("entity_id", "timestamp").collect().toSeq
-    val b = PointInTime.asOfJoinViaScd2(spine, sampleFeatures)
-      .orderBy("entity_id", "timestamp").collect().toSeq
-    assert(a == b)
-    // projection contract matches too
-    val p = PointInTime.asOfJoinViaScd2(spine, sampleFeatures,
-      columns = Some(Seq("feature_a")))
-    assert(p.columns.toSeq == Seq("entity_id", "timestamp", "feature_a"))
-  }
-
   test("deterministic tie-break among duplicate (entity, ts) rows") {
     val s = spark
     import s.implicits._
@@ -252,44 +218,6 @@ class PointInTimeSpec extends AnyFunSuite with SparkTestBase {
     assert(joined.collect().head.getAs[String]("tag") == "second")
   }
 
-  test("native as-of operator: semantics + plans as AsOfJoinExec") {
-    val s = spark
-    import s.implicits._
-    val spine = Seq(
-      ("user_1", ts("2024-01-20")),
-      ("user_1", ts("2024-01-20")), // duplicate spine pair preserved
-      ("user_2", ts("2024-01-15")),
-      ("user_1", ts("2024-01-15")), // exact boundary inclusive
-      ("ghost", ts("2024-06-01"))) // unknown entity dropped
-      .toDF("entity_id", "timestamp")
-    val native = PointInTime.asOfJoinNative(spine, sampleFeatures)
-    val physical = native.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.executedPlan.toString
-    assert(physical.contains("AsOfJoin"), s"expected AsOfJoinExec in:\n$physical")
-    val a = native.orderBy("entity_id", "timestamp").collect().toSeq
-    val b = PointInTime.asOfJoin(spine, sampleFeatures)
-      .orderBy("entity_id", "timestamp").collect().toSeq
-    assert(a == b)
-    assert(a.length == 4)
-  }
-
-  test("native as-of operator: projection and tie-break") {
-    val s = spark
-    import s.implicits._
-    val spine = Seq(("user_1", ts("2024-01-20"))).toDF("entity_id", "timestamp")
-    val projected = PointInTime.asOfJoinNative(spine, sampleFeatures, Some(Seq("feature_b")))
-    assert(projected.columns.toSeq == Seq("entity_id", "timestamp", "feature_b"))
-    assert(projected.collect().head.getAs[Long]("feature_b") == 200L)
-
-    val dup = Seq(
-      ("u", ts("2024-01-01"), "first", 1L),
-      ("u", ts("2024-01-01"), "second", 2L)).toDF("entity_id", "timestamp", "tag", "seq")
-    val joined = PointInTime.asOfJoinNative(
-      Seq(("u", ts("2024-06-01"))).toDF("entity_id", "timestamp"),
-      dup, tieBreakCols = Seq("seq"))
-    assert(joined.collect().head.getAs[String]("tag") == "second")
-  }
-
   test("latestPerEntity on empty input returns empty with schema") {
     val empty = sampleFeatures.limit(0)
     val out = PointInTime.latestPerEntity(empty)
@@ -297,13 +225,11 @@ class PointInTimeSpec extends AnyFunSuite with SparkTestBase {
     assert(out.count() == 0)
   }
 
-  test("skew-hybrid classifies a spine needing an entity-type cast like asOfJoin") {
+  test("asOfJoin matches a spine entity after casting it to the table's type") {
     val s = spark
     import s.implicits._
     // table entities are LONG; the spine arrives as DOUBLE with a
-    // fractional id. taggedUnion casts 1.5 → 1L (match); the hybrid's
-    // hot/cold split must classify the CAST value the same way, or the
-    // probe routes to the side whose table filter stripped entity 1.
+    // fractional id. taggedUnion casts 1.5 → 1L, so both probes match.
     val feat = Seq((1L, ts("2024-01-01"), 10L), (1L, ts("2024-01-02"), 20L))
       .toDF("entity_id", "timestamp", "v")
     val spine = Seq((1.5d, ts("2024-01-03")), (1.0d, ts("2024-01-03")))
@@ -311,18 +237,13 @@ class PointInTimeSpec extends AnyFunSuite with SparkTestBase {
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(2))
     val plain = PointInTime.asOfJoin(spine, feat, tieBreakCols = Seq("v"))
       .collect().map(key).toList.sorted
-    val hybrid = PointInTime
-      .asOfJoinSkewHybrid(spine, feat, 86400L, hotRowThreshold = 1L,
-        tieBreakCols = Seq("v"))
-      .collect().map(key).toList.sorted
     assert(plain == List((1L, 20L), (1L, 20L)))
-    assert(hybrid == plain)
   }
 
   test("null-timestamp feature rows have no as-of position in ANY strategy") {
     // ASC NULLS FIRST would sort a null-ts row before every probe and
-    // make it the running match in the window family, while ts <= t is
-    // three-valued-false in the join family — the families must agree:
+    // make it the running match, while ts <= t is three-valued-false in
+    // the PIT snapshot — the as-of joins must agree with the snapshot:
     // a row with unknown time never reaches training output
     val s = spark
     import s.implicits._
@@ -339,8 +260,6 @@ class PointInTimeSpec extends AnyFunSuite with SparkTestBase {
         .map(r => (r.getString(0), r.getDouble(1))).toList.sorted
     val expected = List(("e1", 1.0)) // e2 has no timed history
     assert(fs(PointInTime.asOfJoin(spine, feat)) == expected)
-    assert(fs(PointInTime.asOfJoinBucketed(spine, feat, 86400L)) == expected)
-    assert(fs(PointInTime.asOfJoinViaJoin(spine, feat)) == expected)
     val left = PointInTime.asOfJoinLeft(spine, feat, prefix = "t_")
       .select(col("entity_id"), col("t_f")).collect()
       .map(r => (r.getString(0), Option(r.get(1)))).toMap

@@ -86,56 +86,6 @@ object WindowFeaturesProps extends Properties("WindowFeatures") {
     got == want
   }
 
-  property("windowAggJoinBucketed equals windowAggJoin") = forAll(
-    genRows, genSpine, Gen.choose(1, 10)) { (rows, spineRaw, wDays) =>
-    val spine = if (spineRaw.isEmpty) List(("a", 1)) else spineRaw
-    val s = spark
-    import s.implicits._
-    val spineDf = spine.map { case (e, d) => (e, ts(d)) }
-      .toDF("entity_id", "timestamp")
-    val aggSet = Seq(
-      WindowAgg("n", "rows"),
-      WindowAgg("sv", "sum", "v"),
-      WindowAgg("mn", "min", "v"),
-      WindowAgg("mx", "max", "v"))
-    def run(f: => org.apache.spark.sql.DataFrame) = f.collect()
-      .map(r => (r.getString(0), r.getTimestamp(1).toString, r.getLong(2),
-        Option(r.get(3)).map(_.asInstanceOf[Long]),
-        Option(r.get(4)).map(_.asInstanceOf[Long]),
-        Option(r.get(5)).map(_.asInstanceOf[Long])))
-      .toList.sorted
-    val plain = run(WindowFeatures
-      .windowAggJoin(spineDf, toDF(rows), wDays * 86400L, aggSet))
-    val bucketed = run(WindowFeatures
-      .windowAggJoinBucketed(spineDf, toDF(rows), wDays * 86400L, aggSet))
-    plain == bucketed
-  }
-
-  property("windowAggJoinHybrid equals windowAggJoin at any hot threshold") = forAll(
-    genRows, genSpine, Gen.choose(1, 10), Gen.oneOf(1L, 2L, 3L, 1000L),
-    // exercise the frame-aware work rule at every routing extreme:
-    // 1 = everything hot, MaxValue = row rule only, middle = mixed
-    Gen.oneOf(1L, 16L, 10000L, Long.MaxValue)) {
-    (rows, spineRaw, wDays, hotThRaw, workTh) =>
-      val hotTh = math.max(1L, hotThRaw)
-      val spine = if (spineRaw.isEmpty) List(("a", 1)) else spineRaw
-      val s = spark
-      import s.implicits._
-      val spineDf = spine.map { case (e, d) => (e, ts(d)) }
-        .toDF("entity_id", "timestamp")
-      val aggSet = Seq(WindowAgg("n", "rows"), WindowAgg("sv", "sum", "v"))
-      def run(f: => org.apache.spark.sql.DataFrame) = f.collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).toString, r.getLong(2),
-          Option(r.get(3)).map(_.asInstanceOf[Long])))
-        .toList.sorted
-      val plain = run(WindowFeatures
-        .windowAggJoin(spineDf, toDF(rows), wDays * 86400L, aggSet))
-      val hybrid = run(WindowFeatures
-        .windowAggJoinHybrid(spineDf, toDF(rows), wDays * 86400L, aggSet,
-          hotRowThreshold = hotTh, hotWorkThreshold = workTh))
-      plain == hybrid
-  }
-
   property("sessionize equals sequential-walk model") = forAll(
     genRows, Gen.choose(1, 6)) { (rows, gapDays) =>
     val got = WindowFeatures

@@ -26,7 +26,7 @@ class WindowFeaturesSpec extends AnyFunSuite with SparkTestBase {
     assert(out == List((14L, 1L, 1L), (20L, 2L, 6L)))
   }
 
-  test("windowAggJoin 'distinct' counts frame-distinct values; bucketed rejects it") {
+  test("windowAggJoin 'distinct' counts frame-distinct values") {
     val s = spark
     import s.implicits._
     val feat = Seq(("a", 10L, "x"), ("a", 15L, "y"), ("a", 20L, "x"), ("a", 2L, "z"))
@@ -39,11 +39,6 @@ class WindowFeaturesSpec extends AnyFunSuite with SparkTestBase {
       .collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(out == Map(("a", 20L) -> 2L, ("a", 3L) -> 1L, ("b", 20L) -> 0L))
-    // the prefix/suffix decomposition cannot express distinct — explicit error
-    val err = intercept[FeatureValidationError](
-      WindowFeatures.windowAggJoinBucketed(spine, feat, 12L,
-        Seq(WindowAgg("nd", "distinct", "kind"))))
-    assert(err.getMessage.contains("decompose"))
   }
 
   test("intervalJoin pairs rows inside the inclusive lookback only") {
@@ -139,24 +134,21 @@ class WindowFeaturesSpec extends AnyFunSuite with SparkTestBase {
     assert(WindowFeatures.intervalJoin(left, right, 86400L).count() == 2)
   }
 
-  test("bucketed window agg is exact for numeric timestamps past 2^53") {
-    // Long/Long division in Spark rounds through a double: two rows in
-    // one true bucket could land in different keys past 2^53 — the
-    // bucket key is now the exact floor multiple in Long arithmetic
+  test("window agg is exact for numeric timestamps past 2^53") {
+    // the RANGE frame orders numeric ts as Long: a detour through a
+    // double would merge neighbouring values past 2^53 and widen or
+    // shift the frame
     val s = spark
     import s.implicits._
     val base = (1L << 53) + 1L // not representable as double + 1
     val feat = Seq(
-      ("e1", base, 1L), ("e1", base + 2L, 10L), // same 5-unit bucket
-      ("e1", base - 4L, 100L)) // previous bucket
+      ("e1", base, 1L), ("e1", base + 2L, 10L), // inside the window
+      ("e1", base - 4L, 100L)) // outside it
       .toDF("entity_id", "timestamp", "v")
     val spine = Seq(("e1", base + 2L)).toDF("entity_id", "timestamp")
     val aggs = Seq(WindowAgg("sv", "sum", "v"))
     val exact = WindowFeatures
       .windowAggJoin(spine, feat, 3L, aggs).head().getAs[Long]("sv")
-    val bucketed = WindowFeatures
-      .windowAggJoinBucketed(spine, feat, 3L, aggs).head().getAs[Long]("sv")
     assert(exact == 11L, s"exact=$exact") // window [base-1, base+2]
-    assert(bucketed == exact)
   }
 }
