@@ -452,16 +452,17 @@ object Profiling {
         n: Long, sa: Option[BigInt], sb: Option[BigInt],
         pxy: Option[BigInt], pxx: Option[BigInt], pyy: Option[BigInt])
     // an ANSI overflow thrown inside a task surfaces from the driver
-    // action wrapped (SparkException → ... → SparkArithmeticException,
-    // which extends ArithmeticException) — walk the cause chain
-    def isOverflow(t: Throwable): Boolean = {
-      var c = t
-      while (c != null) {
-        if (c.isInstanceOf[ArithmeticException]) return true
-        c = c.getCause
+    // action wrapped (SparkException → ... → SparkArithmeticException)
+    // — walk the cause chain for the aggregate's own ARITHMETIC_OVERFLOW
+    // condition. Any other arithmetic error (a CAST_OVERFLOW on the
+    // long cast, a division by zero) fails the recompute identically,
+    // so it propagates from here instead of paying a second scan.
+    def isOverflow(t: Throwable): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists {
+        case st: org.apache.spark.SparkThrowable =>
+          st.getCondition == "ARITHMETIC_OVERFLOW"
+        case _ => false
       }
-      false
-    }
 
     // tier 1: flat global aggregate + per-column non-null counts
     val fullMask = (1 << valueCols.size) - 1

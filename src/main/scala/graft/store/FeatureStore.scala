@@ -1324,6 +1324,100 @@ final class FeatureStore(
       .toMap
   }
 
+  /** The change-set pass of a key-addressed mutation, which is also
+    * its classification: the candidate segments `segs` are read once,
+    * tagged by segment, and null-safe semi-joined with `keys`;
+    * `changeSet` shapes the matched rows into the change data of
+    * version `v`, and that write is the only execution that scans the
+    * candidates. Two `Observation`s ride it, one below the join and one
+    * above, counting rows per segment tag — per segment, (total rows,
+    * key-matched rows). A storage that records no change data gets the
+    * same plan run into a no-op sink, so the counts never depend on
+    * change-data support. Returns the counts and the recorded change
+    * row count (-1 = none recorded).
+    *
+    * Each scanned segment's observed total must equal the catalog's
+    * `segRows` record where one exists: a mismatch means the segment's
+    * files no longer hold what the catalog says, and a commit on top of
+    * them would record a wrong row count. The version (with its
+    * just-written change data) is scrapped and a [[FeatureStorageError]]
+    * names the segment and both counts.
+    *
+    * Trade-off: this pass reads every column of each stats-surviving
+    * candidate, where a key-column classification would read two. It
+    * reads less overall whenever stats pruning isolates the touched
+    * segments (candidates = affected: the separate classification then
+    * read each affected segment's keys, and the change set and rewrite
+    * read it in full twice more); it reads more when pruning cannot
+    * isolate them — many candidates, few of them affected.
+    */
+  private def writeChangeSet(
+      name: String,
+      meta: TableMeta,
+      v: Int,
+      segs: Seq[Int],
+      readCols: Seq[String],
+      readTypes: Map[String, String],
+      keys: DataFrame)(
+      changeSet: DataFrame => DataFrame): (Map[Int, (Long, Long)], Long) = {
+    val tag = FeatureStore.SegTagCol
+    def perTag = segs.map(s => count(when(col(tag) === s, 1)).as(s"_seg_$s"))
+    val id = java.util.UUID.randomUUID()
+    val totalObs = org.apache.spark.sql.Observation(s"graft_seg_rows_$id")
+    val hitObs = org.apache.spark.sql.Observation(s"graft_seg_hits_$id")
+    val tagged = segs.map { s =>
+      storage.readSegments(name, Seq(s), readCols, None, readTypes)
+        .withColumn(tag, lit(s))
+    }.reduce(_.unionByName(_))
+    val matched = joinKeysNullSafe(
+      tagged.observe(totalObs, perTag.head, perTag.tail: _*), keys, "left_semi")
+      .observe(hitObs, perTag.head, perTag.tail: _*)
+      .drop(tag)
+    val changes = changeSet(matched)
+    val cdfRows = storage.writeChangeData(name, v, changes)
+    if (cdfRows < 0) changes.write.format("noop").mode("overwrite").save()
+    val (totals, hits) = (totalObs.get, hitObs.get)
+    val counts = segs.map { s =>
+      s -> (totals(s"_seg_$s").asInstanceOf[Long],
+        hits(s"_seg_$s").asInstanceOf[Long])
+    }.toMap
+    segs.foreach { s =>
+      meta.segRows.get(s).filter(_ != counts(s)._1).foreach { recorded =>
+        try storage.deleteVersion(name, v) catch { case _: Exception => () }
+        throw new FeatureStorageError(
+          s"segment $s of table '$name' holds ${counts(s)._1} rows but the " +
+            s"catalog records $recorded — its files changed outside the " +
+            "store; no version was committed")
+      }
+    }
+    (counts, cdfRows)
+  }
+
+  /** An upsert's change set as ONE signed-count aggregate: each
+    * replaced row counts +1 and each delta row -1, grouped by `cols`; a
+    * group whose net is not 0 emits |net| copies, tagged `delete` when
+    * positive and `insert` when negative. That is exactly
+    * `replaced EXCEPT ALL delta` as deletes plus `delta EXCEPT ALL
+    * replaced` as inserts — nulls group as equal, floats normalize, a
+    * delta re-writing identical rows cancels out — with the replaced
+    * rows read once instead of twice.
+    */
+  private def netChanges(
+      replaced: DataFrame, delta: DataFrame, cols: Seq[String]): DataFrame = {
+    val net = col("_graft_net")
+    def signed(df: DataFrame, sign: Long) =
+      df.select(cols.map(col) :+ lit(sign).as("_graft_sign"): _*)
+    signed(replaced, 1L).unionByName(signed(delta, -1L))
+      .groupBy(cols.map(col): _*)
+      .agg(sum(col("_graft_sign")).as("_graft_net"))
+      .filter(net =!= 0L)
+      .select(cols.map(col) ++ Seq(
+        when(net > 0L, lit("delete")).otherwise(lit("insert"))
+          .as(FeatureStore.ChangeTypeCol),
+        explode(array_repeat(lit(0), abs(net).cast("int"))).as("_graft_copy")): _*)
+      .drop("_graft_copy")
+  }
+
   /** Row-level DELETE with copy-on-write rewrite — Delta Lake's
     * `DELETE FROM` shape on the manifest-chained layout. Rows where
     * `condition` is TRUE leave the table as a NEW version; history is
@@ -1482,16 +1576,20 @@ final class FeatureStore(
   /** Row-level DELETE by an explicit (entity, ts) KEY SET, fully
     * distributed — the form `deleteRows(condition)` cannot express
     * without materializing keys on the driver (CDC applies, GDPR
-    * key-list purges). Copy-on-write like the condition form: the key
-    * frame's (entity, ts) bounds prune stats-disjoint segments, a
-    * column-pruned join classification finds affected ones, their
-    * anti-join survivors rewrite (through the recorded cluster layout)
-    * as the new version's segment, untouched segments re-reference
-    * verbatim, and the change set records the deleted rows. Keys
-    * absent from the table are ignored — re-applying a delete is a
-    * natural no-op, which is what makes CDC replay idempotent.
-    * Returns None when nothing matched (no version minted); deleting
-    * every row is rejected.
+    * key-list purges). Copy-on-write in three Spark executions: one
+    * aggregate over the key frame gives its (entity, ts) bounds, which
+    * prune stats-disjoint segments; the change-set write
+    * ([[writeChangeSet]]) semi-joins the surviving candidates with the
+    * keys, records the matched rows as `delete` images and classifies
+    * every candidate on the same scan; the affected segments' anti-join
+    * survivors then rewrite (through the recorded cluster layout) as the
+    * new version's segment, and untouched segments re-reference
+    * verbatim. A segment whose rows all match is simply dropped from the
+    * manifest. Keys absent from the table are ignored — re-applying a
+    * delete is a natural no-op, which is what makes CDC replay
+    * idempotent. Returns None when nothing matched (no version minted,
+    * the just-written change data removed); deleting every row is
+    * rejected.
     */
   def deleteRowsByKeys(
       name: String, keyDf: DataFrame): Option[FeatureTableInfo] =
@@ -1512,58 +1610,56 @@ final class FeatureStore(
           s"table '$name' was deleted by another writer during deleteRowsByKeys")
       }
       val meta = completeClaim(name, v) {
+        // duplicate keys are harmless: every join below is a semi or
+        // anti join, and the bounds only need count > 0
         val keys = keyDf
           .select(col(EntityIdColumn),
             col(TimestampColumn).cast(TimestampType).as(TimestampColumn))
-          .distinct()
-        val boundsRow = keys.agg(
-          count(lit(1)),
-          min(col(EntityIdColumn)), max(col(EntityIdColumn)),
-          min(col(TimestampColumn)), max(col(TimestampColumn)),
-          count(when(col(EntityIdColumn).isNull, 1)),
-          count(when(col(TimestampColumn).isNull, 1))).head()
+        val boundsRow = keys.agg(keyBoundAggs.head, keyBoundAggs.tail: _*).head()
         if (boundsRow.getLong(0) == 0L) {
           storage.releaseVersion(name, v)
           return None
         }
         val segs = cur.segmentsOf(cur.version)
-        val resolvedBounds = (for {
-          loE <- Option(boundsRow.get(1)); hiE <- Option(boundsRow.get(2))
-          loT <- Option(boundsRow.get(3)); hiT <- Option(boundsRow.get(4))
-        } yield scala.util.Try(resolveCondition(name, cur,
-          keyRangeCondition(loE, hiE, loT, hiT,
-            boundsRow.getLong(5) > 0L, boundsRow.getLong(6) > 0L)))
-          .toOption.flatten)
-          .flatten
-        val (scanSegs, skipped) = pruneSegments(cur, segs, resolvedBounds)
-        val perSeg = (if (scanSegs.isEmpty) Map.empty[Int, (Long, Long)]
-          else classifySegments(name, cur, scanSegs,
-            Seq(EntityIdColumn, TimestampColumn))(df =>
-            (joinKeysHit(df, keys), col("_graft_hit")))) ++
-          skipped.map(s => s -> (cur.segRows(s), 0L))
+        val (scanSegs, skipped) =
+          pruneSegments(cur, segs, keyRangeOf(name, cur, boundsRow))
+        if (scanSegs.isEmpty) {
+          storage.releaseVersion(name, v)
+          return None
+        }
+        val (scanned, cdfRows) = writeChangeSet(
+          name, cur, v, scanSegs, cur.columns, cur.columnTypes, keys)(
+          _.withColumn(FeatureStore.ChangeTypeCol, lit("delete")))
+        val perSeg = scanned ++ skipped.map(s => s -> (cur.segRows(s), 0L))
         val total = perSeg.values.map(_._1).sum
         val hits = perSeg.values.map(_._2).sum
-        if (hits == 0L) { storage.releaseVersion(name, v); return None }
-        if (hits == total)
+        if (hits == 0L || hits == total) {
+          // no version: take the change data just written back out
+          storage.deleteVersion(name, v)
+          if (hits == 0L) { storage.releaseVersion(name, v); return None }
           throw new FeatureValidationError(
             s"deleteRowsByKeys would remove every row of '$name'; " +
               "registered tables are non-empty — use delete(name)")
+        }
         val affected = segs.filter(s => perSeg.get(s).exists(_._2 > 0L))
         val untouched = segs.filterNot(affected.contains)
         val affectedTotal = affected.map(s => perSeg(s)._1).sum
         val now0 = System.currentTimeMillis()
+        val cdf =
+          if (cdfRows >= 0) cur.versionCdf + (v -> cdfRows) else cur.versionCdf
         if (affectedTotal == hits) {
           // affected segments match WHOLLY: drop them, write nothing
           storage.commitVersion(name, v, CommitMeta(
             0L, total - hits, cur.columns, untouched,
             None, None, now0, cur.columnTypes, operation = "delete",
-            constraints = cur.constraints.toMap))
+            changeRows = cdfRows, constraints = cur.constraints.toMap))
           cur.copy(version = v, rowCount = total - hits, updatedAt = now0,
             versions = cur.versions + (v -> cur.columns),
             segments = cur.segments + (v -> untouched),
             versionTimes = cur.versionTimes + (v -> now0),
             versionOps = cur.versionOps + (v -> "delete"),
-            versionRows = cur.versionRows + (v -> (total - hits)))
+            versionRows = cur.versionRows + (v -> (total - hits)),
+            versionCdf = cdf)
         } else {
           val survivors = joinKeysNullSafe(
             storage.readSegments(name, affected, cur.columns :+ IngestKeyCol,
@@ -1575,17 +1671,6 @@ final class FeatureStore(
               s"deleteRowsByKeys on '$name': classification matched $hits " +
                 s"rows but the rewrite kept ${wr.rows} of $affectedTotal " +
                 s"(expected ${affectedTotal - hits}) — key frame must be " +
-                "deterministic")
-          val cdfRows = storage.writeChangeData(name, v,
-            joinKeysNullSafe(
-              storage.readSegments(name, affected, cur.columns, None,
-                cur.columnTypes),
-              keys, "left_semi")
-              .withColumn(FeatureStore.ChangeTypeCol, lit("delete")))
-          if (cdfRows >= 0 && cdfRows != hits)
-            throw new FeatureValidationError(
-              s"deleteRowsByKeys on '$name': $hits rows matched but the " +
-                s"recorded change set holds $cdfRows — key frame must be " +
                 "deterministic")
           val manifest = untouched :+ v
           storage.commitVersion(name, v, CommitMeta(
@@ -1600,9 +1685,7 @@ final class FeatureStore(
             versionTimes = cur.versionTimes + (v -> now0),
             versionOps = cur.versionOps + (v -> "delete"),
             versionRows = cur.versionRows + (v -> (total - hits)),
-            versionCdf =
-              if (cdfRows >= 0) cur.versionCdf + (v -> cdfRows)
-              else cur.versionCdf,
+            versionCdf = cdf,
             segRows = cur.segRows ++ segRowsOf(v, wr),
             segColStats = cur.segColStats ++ segColStatsOf(v, wr))
         }
@@ -1621,9 +1704,12 @@ final class FeatureStore(
     * schema (use [[register]] for schema changes). Falls back to a
     * plain [[register]] when the table doesn't exist yet.
     *
-    * Copy-on-write, O(affected segments + delta) writes: a discovery
-    * scan over just the KEY COLUMNS (column-pruned) finds segments
-    * holding matched keys; their surviving rows plus the whole delta
+    * Copy-on-write, O(affected segments + delta) writes, in three
+    * Spark executions: one aggregate over the delta gives its size and
+    * (entity, ts) bounds, which prune stats-disjoint segments; the
+    * change-set write ([[writeChangeSet]]) reads the surviving
+    * candidates once and finds, on the same scan, the segments holding
+    * matched keys; their surviving rows plus the whole delta then
     * become the new version's single segment, and untouched segments
     * are re-referenced verbatim. Duplicate keys WITHIN the delta all
     * insert — the store allows duplicate (entity, ts) observations,
@@ -1654,8 +1740,9 @@ final class FeatureStore(
     * with matched rows deleted but not yet re-inserted and a time-travel
     * history showing a state no statement produced — Delta's MERGE is
     * likewise one commit. Cost is identical to the upsert alone: the
-    * drop keys ride the same discovery scan, copy-on-write rewrite and
-    * recorded change set (dropped rows appear as `delete` images).
+    * drop keys join the delta's keys in the same bounds aggregate,
+    * change-set pass and copy-on-write rewrite (dropped rows appear as
+    * `delete` images in the recorded change set).
     * `df` must be non-empty — a pure key-set delete is
     * [[deleteRowsByKeys]].
     */
@@ -1674,7 +1761,9 @@ final class FeatureStore(
       mergeSchema: Boolean = false,
       dropKeys: Option[DataFrame] = None): FeatureTableInfo =
     this.synchronized {
-      Validation.validateDataFrame(df, name)
+      // emptiness is probed by the bounds aggregate below; the
+      // table-creating fallbacks validate it themselves
+      Validation.validateDataFrame(df, name, allowEmpty = true)
       dropKeys.foreach { dk =>
         val missing = Seq(EntityIdColumn, TimestampColumn)
           .filterNot(dk.columns.contains)
@@ -1711,56 +1800,42 @@ final class FeatureStore(
         val evolved = evolveColumns("registerUpsert", name, cur, df, mergeSchema)
         val newTypes = cur.columnTypes ++ typesOf(df)
         val prepared = prepare(df.select(evolved.map(col): _*))
-        // ONE tiny agg job: delta size + its key-domain bounds (the
-        // count the idempotence cross-check needs anyway, plus what
-        // key-range skipping needs — no extra pass over the delta)
-        val boundsRow = prepared.agg(
-          count(lit(1)),
-          min(col(EntityIdColumn)), max(col(EntityIdColumn)),
-          min(col(TimestampColumn)), max(col(TimestampColumn)),
-          count(when(col(EntityIdColumn).isNull, 1)),
-          count(when(col(TimestampColumn).isNull, 1))).head()
-        val deltaCount = boundsRow.getLong(0)
-        val dropped = dropKeys.map { dk =>
-          if (deltaCount == 0L)
-            throw new FeatureValidationError(
-              s"registerRewrite('$name') got an empty delta; a pure " +
-                "key-set delete is deleteRowsByKeys")
+        // the key frame: the delta's keys plus any drop keys, flagged
+        // so ONE aggregate gives both the delta size (the emptiness
+        // probe and the determinism cross-check's count) and the
+        // key-domain bounds that key-range skipping needs. Duplicate
+        // keys are harmless: every join below is a semi or anti join.
+        val deltaFlag = "_graft_delta"
+        val deltaKeys = prepared.select(
+          col(EntityIdColumn), col(TimestampColumn), lit(true).as(deltaFlag))
+        val keys = dropKeys.fold(deltaKeys)(dk => deltaKeys.unionByName(
           dk.select(col(EntityIdColumn),
-            col(TimestampColumn).cast(TimestampType).as(TimestampColumn))
-            .distinct()
-        }
-        val keys = dropped.fold(
-          prepared.select(col(EntityIdColumn), col(TimestampColumn)).distinct())(
-          d => prepared.select(col(EntityIdColumn), col(TimestampColumn))
-            .unionByName(d).distinct())
-        // with drop keys the skip bounds must span delta AND drops —
-        // one extra tiny agg on the (small) key frame, only on that path
-        val kb = dropped.fold(boundsRow)(_ => keys.agg(
-          count(lit(1)),
-          min(col(EntityIdColumn)), max(col(EntityIdColumn)),
-          min(col(TimestampColumn)), max(col(TimestampColumn)),
-          count(when(col(EntityIdColumn).isNull, 1)),
-          count(when(col(TimestampColumn).isNull, 1))).head())
+            col(TimestampColumn).cast(TimestampType).as(TimestampColumn),
+            lit(false).as(deltaFlag))))
+        val kb = keys.agg(keyBoundAggs.head,
+          keyBoundAggs.tail :+ count(when(col(deltaFlag), 1)): _*).head()
+        val deltaCount = kb.getLong(keyBoundAggs.size)
+        if (deltaCount == 0L)
+          throw new FeatureValidationError(s"$name must not be empty")
         val segs = cur.segmentsOf(cur.version)
-        // key-range skipping: a segment disjoint from the delta's
+        // key-range skipping: a segment disjoint from the keys'
         // (entity, ts) bounds on EITHER dimension holds no matched key
         // — with time-sliced appends a CDC delta of recent keys
-        // classifies against recent segments only, O(delta) not O(table)
-        val resolvedBounds = (for {
-          loE <- Option(kb.get(1)); hiE <- Option(kb.get(2))
-          loT <- Option(kb.get(3)); hiT <- Option(kb.get(4))
-        } yield scala.util.Try(resolveCondition(name, cur,
-          keyRangeCondition(loE, hiE, loT, hiT,
-            kb.getLong(5) > 0L, kb.getLong(6) > 0L)))
-          .toOption.flatten)
-          .flatten
-        val (scanSegs, skipped) = pruneSegments(cur, segs, resolvedBounds)
-        val perSeg = (if (scanSegs.isEmpty) Map.empty[Int, (Long, Long)]
-          else classifySegments(name, cur, scanSegs,
-            Seq(EntityIdColumn, TimestampColumn))(df =>
-            (joinKeysHit(df, keys), col("_graft_hit")))) ++
-          skipped.map(s => s -> (cur.segRows(s), 0L))
+        // scans recent segments only, O(delta) not O(table)
+        val (scanSegs, skipped) =
+          pruneSegments(cur, segs, keyRangeOf(name, cur, kb))
+        // record the change set (Delta _change_data): delete images =
+        // replaced rows, insert images = the delta, identical-content
+        // pairs cancelled (an upsert re-writing the same bytes is NOT a
+        // change); its write classifies the candidate segments
+        val deltaRows = prepared.drop(IngestKeyCol)
+        val (scanned, cdfRows) =
+          if (scanSegs.isEmpty)
+            (Map.empty[Int, (Long, Long)], storage.writeChangeData(name, v,
+              deltaRows.withColumn(FeatureStore.ChangeTypeCol, lit("insert"))))
+          else writeChangeSet(name, cur, v, scanSegs, evolved, newTypes, keys)(
+            netChanges(_, deltaRows, evolved))
+        val perSeg = scanned ++ skipped.map(s => s -> (cur.segRows(s), 0L))
         val affected = segs.filter(s => perSeg.get(s).exists(_._2 > 0L))
         val untouched = segs.filterNot(affected.contains)
         val untouchedRows = untouched.map(s => perSeg.get(s).fold(0L)(_._1)).sum
@@ -1773,8 +1848,8 @@ final class FeatureStore(
         val (guarded, checksOk) = constraintGuard(cur.constraints, newSeg)
         val wr = writeKeepingLayout(cur, name, v, guarded)
         verifyOrScrap(name, v)(checksOk)
-        // determinism cross-check (the delta is evaluated by several
-        // independent jobs — discovery, write, change set): the
+        // determinism cross-check (the delta is evaluated by three
+        // independent executions — bounds, change set, rewrite): the
         // written segment must hold exactly the affected survivors
         // plus the delta, or a nondeterministic delta just lost rows
         val replaced = perSeg.values.map(_._2).sum
@@ -1784,24 +1859,6 @@ final class FeatureStore(
             s"registerUpsert delta for '$name' is nondeterministic: wrote " +
               s"${wr.rows} rows, expected ${(affectedTotal - replaced) + deltaCount} " +
               s"($affectedTotal affected - $replaced replaced + $deltaCount delta)")
-        // record the change set (Delta _change_data): delete images =
-        // replaced rows, insert images = the delta — with
-        // identical-content pairs cancelled (an upsert re-writing the
-        // same bytes is NOT a change), computed over touched rows only
-        val deltaRows = prepared.drop(IngestKeyCol)
-        val changeSet =
-          if (affected.isEmpty)
-            deltaRows.withColumn(FeatureStore.ChangeTypeCol, lit("insert"))
-          else {
-            val replacedRows = joinKeysNullSafe(
-              storage.readSegments(name, affected, evolved, None, newTypes),
-              keys, "left_semi")
-            replacedRows.exceptAll(deltaRows)
-              .withColumn(FeatureStore.ChangeTypeCol, lit("delete"))
-              .unionByName(deltaRows.exceptAll(replacedRows)
-                .withColumn(FeatureStore.ChangeTypeCol, lit("insert")))
-          }
-        val cdfRows = storage.writeChangeData(name, v, changeSet)
         val now0 = System.currentTimeMillis()
         val manifest = untouched :+ v
         storage.commitVersion(name, v, CommitMeta(
@@ -2825,11 +2882,33 @@ final class FeatureStore(
       rows: DataFrame, keys: DataFrame, joinType: String): DataFrame =
     KeyJoins.onKeys(rows, keys, Seq(EntityIdColumn, TimestampColumn), joinType)
 
-  /** [[joinKeysNullSafe]] shaped for the segment-classification pass:
-    * left join with a `_graft_hit` marker column (1 on matched rows).
+  /** One aggregate over a key frame: [0] its row count, [1..4] the
+    * entity and timestamp min/max, [5..6] each key column's null count
+    * — what [[keyRangeOf]] needs.
     */
-  private def joinKeysHit(rows: DataFrame, keys: DataFrame): DataFrame =
-    KeyJoins.onKeysHit(rows, keys, Seq(EntityIdColumn, TimestampColumn))
+  private def keyBoundAggs: Seq[Column] = Seq(
+    count(lit(1)),
+    min(col(EntityIdColumn)), max(col(EntityIdColumn)),
+    min(col(TimestampColumn)), max(col(TimestampColumn)),
+    count(when(col(EntityIdColumn).isNull, 1)),
+    count(when(col(TimestampColumn).isNull, 1)))
+
+  /** The resolved key-range skip condition for a [[keyBoundAggs]] row;
+    * None (prune nothing) when a key column is all-null or the range
+    * does not resolve against the table.
+    */
+  private def keyRangeOf(
+      name: String,
+      meta: TableMeta,
+      kb: org.apache.spark.sql.Row): Option[org.apache.spark.sql.catalyst.expressions.Expression] =
+    (for {
+      loE <- Option(kb.get(1)); hiE <- Option(kb.get(2))
+      loT <- Option(kb.get(3)); hiT <- Option(kb.get(4))
+    } yield scala.util.Try(resolveCondition(name, meta,
+      keyRangeCondition(loE, hiE, loT, hiT,
+        kb.getLong(5) > 0L, kb.getLong(6) > 0L)))
+      .toOption.flatten)
+      .flatten
 
   /** Key-range segment-skip condition for a key frame with bounds
     * `(loE, hiE, loT, hiT)` (nulls skipped by min/max): each dimension

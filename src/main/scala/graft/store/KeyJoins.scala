@@ -20,9 +20,11 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object KeyJoins {
 
-  /** Join `rows` against a distinct key frame on `keyCols`, null-safe.
-    * For `left_semi` / `left_anti` the output is `rows`' columns; other
-    * join types carry the renamed `_graft_k_<col>` key columns along.
+  /** Join `rows` against a key frame on `keyCols`, null-safe.
+    * For `left_semi` / `left_anti` the output is `rows`' columns and
+    * duplicate keys change nothing, so callers need not dedup the key
+    * frame; other join types carry the renamed `_graft_k_<col>` key
+    * columns along and repeat a row per matching key.
     */
   def onKeys(
       rows: DataFrame,
@@ -34,20 +36,5 @@ private[graft] object KeyJoins {
       renamed,
       keyCols.map(k => rows(k) <=> col(s"_graft_k_$k")).reduce(_ && _),
       joinType)
-  }
-
-  /** [[onKeys]] shaped for match classification: LEFT join with a
-    * `_graft_hit` marker column (1 on matched rows, null otherwise).
-    */
-  def onKeysHit(
-      rows: DataFrame,
-      keys: DataFrame,
-      keyCols: Seq[String]): DataFrame = {
-    val renamed = keys.select(
-      keyCols.map(k => col(k).as(s"_graft_k_$k")) :+ lit(1).as("_graft_hit"): _*)
-    rows.join(
-      renamed,
-      keyCols.map(k => rows(k) <=> col(s"_graft_k_$k")).reduce(_ && _),
-      "left")
   }
 }

@@ -4,6 +4,7 @@ import java.net.URI
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DateType, MapType, StructField, StructType}
 
 /** The STORAGE SEAM of the feature store: version-addressed table data
   * behind a deliberately narrow contract, so the physical format is a
@@ -324,9 +325,18 @@ final class Storage(
         Some(d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
       case _ => None // null: empty or all-null segment — no skipping stats
     }
-    WriteResult(
+    val wr = WriteResult(
       obs.get("rows").asInstanceOf[Long], millis("min_ts"), millis("max_ts"),
       ColumnStats.fromMetrics(statFields, obs.get))
+    // the schema a read infers is known right here: the data columns,
+    // all nullable, then the DATE partition column (the zero-row
+    // segment's typed part file carries it last, too). A segment whose
+    // timestamps are all null has only the default partition, which
+    // infers as a STRING — left to inference rather than guessed here.
+    if (wr.rows == 0L || wr.minTsMillis.isDefined)
+      Storage.schemaMemo.put(path, StructType(
+        Storage.asRead(df.schema).fields :+ StructField(DateCol, DateType)))
+    wr
   }
 
   /** Read one version snapshot with the original column order restored
@@ -390,13 +400,14 @@ final class Storage(
     df.observe(obs, count(lit(1)).as("rows"))
       .write.mode("overwrite")
       .parquet(changeDataPath(name, version))
+    Storage.schemaMemo.put(changeDataPath(name, version), Storage.asRead(df.schema))
     obs.get("rows").asInstanceOf[Long]
   }
 
   override def readChangeData(name: String, version: Int): Option[DataFrame] = {
-    val p = new Path(changeDataPath(name, version))
-    if (fs(p).exists(p))
-      Some(Storage.readParquetMemo(spark, p.toString))
+    val p = changeDataPath(name, version)
+    if (fs(new Path(p)).exists(new Path(p)))
+      Some(Storage.readParquetMemo(spark, p))
     else None
   }
 
@@ -477,12 +488,14 @@ final class Storage(
 
 object Storage {
 
-  /** Inferred-parquet-schema memo, keyed by directory path. A
-    * COMMITTED version (or change-data) directory is IMMUTABLE —
-    * versions are claimed monotonically, mutations always mint a new
-    * directory — so its footer schema is a constant of the path: infer
-    * once per JVM, then pass the known schema and every later read of
-    * the same lineage skips the footer-inference job entirely. Each
+  /** Parquet-schema memo, keyed by directory path. A COMMITTED
+    * version (or change-data) directory is IMMUTABLE — versions are
+    * claimed monotonically, mutations always mint a new directory — so
+    * its footer schema is a constant of the path. A segment or change
+    * set write seeds its entry; a path this JVM did not write is
+    * inferred once on first read. Either way
+    * every later read passes the known schema and skips the
+    * footer-inference job entirely. Each
     * `spark.read.parquet` call otherwise dispatches one such job
     * (~20-40 ms of pure driver latency); a maintained-IVM read that
     * touches the seed snapshot, two change sets and a three-segment
@@ -498,7 +511,7 @@ object Storage {
     * reader contract (call `refresh()` after external commits).
     */
   private val schemaMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
+    .empty[String, StructType]
 
   private[store] def readParquetMemo(
       spark: SparkSession, path: String): DataFrame =
@@ -509,6 +522,26 @@ object Storage {
         schemaMemo.put(path, df.schema)
         df
     }
+
+  /** The memoized schema of `path`, if any (seeded or inferred). */
+  private[graft] def memoizedSchema(path: String): Option[StructType] =
+    schemaMemo.get(path)
+
+  /** A written schema as a file read returns it: every field, element
+    * and map value nullable, at every depth.
+    */
+  private def asRead(t: StructType): StructType =
+    StructType(t.fields.map(f => f.copy(dataType = nullableType(f.dataType),
+      nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => asRead(s)
+    case a: ArrayType  => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType    =>
+      MapType(nullableType(m.keyType), nullableType(m.valueType),
+        valueContainsNull = true)
+    case other => other
+  }
 
   /** Drop memoized schemas at `path` and below. Exact-or-child match:
     * "t/v=1" must not sweep "t/v=10".

@@ -925,4 +925,111 @@ class MutationSpec extends AnyFunSuite with SparkTestBase {
       .toMap
     assert(byEntity == Map("u1" -> 1.0, "u9" -> 20.0, "u3" -> 30.0))
   }
+
+  // ------------------------------------------- change-set pass checks
+
+  private def rootedStore(prefix: String): (FeatureStore, String) = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    (new FeatureStore(spark, root), root)
+  }
+
+  private def exists(path: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+
+  test("a segment's seeded schema equals the schema a read infers") {
+    val s = spark
+    import s.implicits._
+    val (store, root) = rootedStore("graft_seeded_schema")
+    // every column type the store persists, one row with nulls
+    val wide = spark.sql("""
+      SELECT * FROM VALUES
+        (1L, TIMESTAMP'2024-01-05 00:00:00', 7, 1.5D,
+         CAST(1.25 AS DECIMAL(10,2)), 'x', true, X'0102', DATE'2024-01-05',
+         TIMESTAMP_NTZ'2024-01-05 01:02:03', array(1, 2),
+         named_struct('a', 1, 'b', 'y')),
+        (2L, TIMESTAMP'2024-02-07 00:00:00', NULL, NULL, NULL, NULL, NULL,
+         NULL, NULL, NULL, NULL, NULL)
+      AS w(entity_id, timestamp, i, d, dec, s, b, bin, dt, ntz, arr, st)""")
+    store.register("t", wide)                                  // v1
+    store.registerUpsert("t", wide.filter(col("entity_id") === 2L)
+      .withColumn("i", lit(9)))                                // v2 + change set
+    store.deleteRowsByKeys("t",
+      Seq((1L, ts("2024-01-05"))).toDF("entity_id", "timestamp")) // v3 + change set
+    store.registerEmpty("e", wide.limit(0))                    // zero-row v1
+    store.register("n", Seq((1L, Option.empty[java.sql.Timestamp], 1.0))
+      .toDF("entity_id", "timestamp", "v"))                    // all-null ts
+    val seeded = Seq(
+      s"$root/t/v=1", s"$root/t/v=2", s"$root/t/_cdf/v=2",
+      s"$root/t/_cdf/v=3", s"$root/e/v=1")
+    seeded.foreach { p =>
+      val memo = graft.store.Storage.memoizedSchema(p)
+      assert(memo.isDefined, s"$p was not seeded at write")
+      graft.store.Storage.invalidateSchemas(p)
+      val inferred = spark.read.parquet(p).schema
+      assert(memo.get == inferred,
+        s"$p seeded ${memo.get.treeString} but infers ${inferred.treeString}")
+    }
+    // the default partition of an all-null-timestamp segment infers as a
+    // string: that segment is left to inference, never guessed
+    assert(graft.store.Storage.memoizedSchema(s"$root/n/v=1").isEmpty)
+    assert(store.getVersion("n", 1).count() == 1)
+  }
+
+  test("a segment whose files disagree with the catalog fails the upsert loudly") {
+    val s = spark
+    import s.implicits._
+    val (store, root) = rootedStore("graft_segrows_mismatch")
+    store.register("t", sampleFeatures.filter(col("timestamp") < lit(ts("2024-02-01"))))
+    store.registerAppend("t", Seq(
+      ("user_1", ts("2024-02-01"), 3.0, 300L),
+      ("user_2", ts("2024-02-20"), 4.0, 400L))
+      .toDF("entity_id", "timestamp", "feature_a", "feature_b"))
+    // swap segment 2's part files for a copy holding one of its two rows
+    val seg = s"$root/t/v=2"
+    val swap = s"$root/swap"
+    spark.read.parquet(seg).limit(1).write.partitionBy("_ts_date").parquet(swap)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(seg))
+    assert(new java.io.File(swap).renameTo(new java.io.File(seg)))
+    val err = intercept[graft.store.FeatureStorageError](
+      store.registerUpsert("t", Seq(("user_1", ts("2024-02-10"), 5.0, 500L))
+        .toDF("entity_id", "timestamp", "feature_a", "feature_b")))
+    assert(err.getMessage.contains("segment 2 of table 't' holds 1 rows"), err.getMessage)
+    assert(err.getMessage.contains("catalog records 2"), err.getMessage)
+    assert(store.getTableHistory("t").map(_.version) == Seq(1, 2))
+    assert(!exists(s"$root/t/v=3") && !exists(s"$root/t/_cdf/v=3"))
+  }
+
+  test("no-match and every-row deleteRowsByKeys leave no change data and no version") {
+    val s = spark
+    import s.implicits._
+    val (store, root) = rootedStore("graft_delete_keys_leftover")
+    store.register("t", sampleFeatures.filter(col("timestamp") < lit(ts("2024-02-01"))))
+    store.registerAppend("t", sampleFeatures.filter(col("timestamp") >= lit(ts("2024-02-01"))))
+    // inside segment 1's key range, but no such row: scanned, unmatched
+    val absent = Seq(("user_1", ts("2024-01-02"))).toDF("entity_id", "timestamp")
+    assert(store.deleteRowsByKeys("t", absent).isEmpty)
+    assert(!exists(s"$root/t/_cdf/v=3"))
+    val all = sampleFeatures.select("entity_id", "timestamp")
+    intercept[FeatureValidationError](store.deleteRowsByKeys("t", all))
+    assert(!exists(s"$root/t/_cdf/v=3"))
+    assert(store.getTableHistory("t").map(_.version) == Seq(1, 2))
+  }
+
+  test("change feed: a whole-segment deleteRowsByKeys records the dropped rows") {
+    val (store, root) = rootedStore("graft_delete_keys_drop")
+    val jan = sampleFeatures.filter(col("timestamp") < lit(ts("2024-02-01")))
+    val feb = sampleFeatures.filter(col("timestamp") >= lit(ts("2024-02-01")))
+    store.register("t", jan)
+    store.registerAppend("t", feb)
+    val info = store.deleteRowsByKeys("t", feb.select("entity_id", "timestamp"))
+    assert(info.map(_.version).contains(3))
+    // the manifest just drops segment 2; its rows are the change set
+    assert(store.getVersion("t", 3).count() == jan.count())
+    assert(exists(s"$root/t/_cdf/v=3"), "the dropped rows must be recorded")
+    val ch = store.getChanges("t", 2, 3)
+    assert(ch.filter(col("_change_type") =!= "delete").isEmpty)
+    val cols = feb.columns.map(col).toSeq
+    assert(ch.select(cols: _*).exceptAll(feb).isEmpty &&
+      feb.exceptAll(ch.select(cols: _*)).isEmpty)
+  }
 }

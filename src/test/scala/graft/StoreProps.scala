@@ -660,4 +660,86 @@ object StoreProps extends Properties("FeatureStore") {
       }
       true
     }
+
+  // ------------------------------------------- change sets vs oracle
+
+  /** Values whose equality is subtle: NaN equals itself and -0.0
+    * equals 0.0 under SQL grouping, so a change set must cancel them
+    * exactly as EXCEPT ALL does.
+    */
+  private val csVals = Vector(1.0, Double.NaN, -0.0, 0.0, 2.0)
+
+  private sealed trait COp
+  // fresh rows (key index, value index) plus `same` current rows verbatim
+  private case class CUpsert(rows: Seq[(Int, Int)], same: Int) extends COp
+  private case class CRewrite(rows: Seq[(Int, Int)], same: Int, drops: Seq[Int])
+      extends COp
+
+  private val genCRows: Gen[Seq[(Int, Int)]] = Gen.choose(1, 3).flatMap(n =>
+    Gen.listOfN(n, Gen.zip(
+      Gen.choose(0, nkKeys.size - 1), Gen.choose(0, csVals.size - 1))))
+  private val genCOp: Gen[COp] = Gen.oneOf(
+    Gen.zip(genCRows, Gen.choose(0, 2)).map { case (r, n) => CUpsert(r, n) },
+    Gen.zip(genCRows, Gen.choose(0, 2), genNKeys).map {
+      case (r, n, d) => CRewrite(r, n, d)
+    })
+  private val genCOps: Gen[(Seq[(Int, Int)], Seq[(Int, Int)], List[COp])] = for {
+    base <- genCRows
+    appended <- genCRows
+    n <- Gen.choose(1, 3)
+    ops <- Gen.listOfN(n, genCOp)
+  } yield (base ++ base.take(1), appended, ops) // base carries a duplicate row
+
+  /** The recorded change set of every upsert and rewrite equals an
+    * oracle computed here from the two snapshots: `prev EXCEPT ALL cur`
+    * as deletes and `cur EXCEPT ALL prev` as inserts. Tables span two
+    * segments with duplicate rows, null key components, NaN and -0.0;
+    * deltas may re-write identical current rows, which must cancel.
+    */
+  property("upsert and rewrite change sets equal the EXCEPT ALL snapshot oracle") =
+    forAll(genCOps) { case (base, appended, ops) =>
+      import org.apache.spark.sql.functions.{col, lit}
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_store_props_cs").toString
+      val store = new FeatureStore(spark, root, maxVersions = 20)
+      def rows(rs: Seq[(Int, Int)]) = rs.map { case (k, x) =>
+        val (e, t) = nkKeys(k); (e, t, csVals(x))
+      }
+      val cols = Seq("entity_id", "timestamp", "val").map(col)
+      def snapshot(v: Int) = store.getVersion("t", v).select(cols: _*)
+      // multiset under SQL equality, which EXCEPT ALL itself uses:
+      // NaN equals NaN, and -0.0 (+ 0.0 is 0.0) equals 0.0
+      def bag(df: DataFrame): Seq[String] =
+        df.collect().map(_.toSeq.map {
+          case d: Double => String.valueOf(d + 0.0)
+          case v         => String.valueOf(v)
+        }.mkString("|")).toSeq.sorted
+      store.register("t", toNDF(rows(base)))
+      var current = store.registerAppend("t", toNDF(rows(appended))).version
+      ops.foreach { op =>
+        val same = (n: Int) => snapshot(current).collect()
+          .sortBy(_.toSeq.map(String.valueOf).mkString("|")).take(n)
+          .map(r => (Option(r.getString(0)), Option(r.getTimestamp(1)), r.getDouble(2)))
+          .toSeq
+        val info = op match {
+          case CUpsert(rs, n) =>
+            store.registerUpsert("t", toNDF(rows(rs) ++ same(n)))
+          case CRewrite(rs, n, drops) =>
+            store.registerRewrite("t", toNDF(rows(rs) ++ same(n)),
+              toNDF(drops.map { k => val (e, t) = nkKeys(k); (e, t, 0.0) })
+                .select(col("entity_id"), col("timestamp")))
+        }
+        val (prev, cur) = (snapshot(current), snapshot(info.version))
+        val want = bag(
+          prev.exceptAll(cur).withColumn("_change_type", lit("delete"))
+            .unionByName(cur.exceptAll(prev).withColumn("_change_type", lit("insert"))))
+        val got = bag(store.getChanges("t", current, info.version)
+          .select(cols :+ col("_change_type"): _*))
+        if (got != want)
+          throw new AssertionError(
+            s"change set of $op: got $got expected $want")
+        current = info.version
+      }
+      true
+    }
 }
