@@ -479,8 +479,8 @@ object NorthStar {
     // total-variation drift score — exact integer numerator, single
     // final division (cross-engine bit-identical)
     // multi-table feature view: latest purchase state AND latest click
-    // state as-of each spine timestamp, spine rows null-extended — two
-    // chained left as-of joins, one entity shuffle each
+    // state as-of each spine timestamp, spine rows null-extended — one
+    // two-table left as-of join, one entity shuffle for both tables
     "feature_view_multi" -> ((s, dir) => {
       val ev = SparkEntry.eventsForNorthStar(s, dir)
       val spine = ev
@@ -497,8 +497,6 @@ object NorthStar {
         col("user_id").as("entity_id"),
         col("ts").as("timestamp"),
         col("event_id"))
-      val step1 = PointInTime.asOfJoinLeft(
-        spine, purchases, "purchase_", tieBreakCols = Seq("event_id"))
       val epoch = lit(graft.store.FeatureStore
         .normalizeTimestamp("1970-01-01 00:00:00"))
       // the DRIVER's value compare cannot represent SQL NULL vs NaN
@@ -506,7 +504,9 @@ object NorthStar {
       // coalesces to sentinels; the null-extension semantics themselves
       // are pinned by PointInTimeSpec/FeatureStoreSpec
       PointInTime
-        .asOfJoinLeft(step1, clicks, "click_", tieBreakCols = Seq("event_id"))
+        .asOfJoinLeftAll(spine, Seq(
+          PointInTime.ViewTable(purchases, "purchase_", Seq("event_id")),
+          PointInTime.ViewTable(clicks, "click_", Seq("event_id"))))
         .select(
           col("entity_id"),
           col("timestamp"),

@@ -16,8 +16,8 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // 100+ distinct query plans overflow the default 100-entry
-      // compiled-class cache (see Bench.scala) — sized up here too so
-      // the correctness dump doesn't pay recompiles
+      // compiled-class cache — sized up so the correctness dump doesn't
+      // pay recompiles
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")

@@ -311,11 +311,13 @@ object Similarity extends Serializable {
     * caller invoking a kernel directly must fail LOUDLY here — one
     * bounded classification aggregate — instead of OOMing the driver
     * silently. The re-measure costs one count/max pass, noise next to
-    * the O(n²) scoring behind it.
+    * the O(n²) scoring behind it; it bypasses the memo, so a corpus
+    * rewritten in place without [[graft.Tables.invalidate]] is judged
+    * on its current size.
     */
   private def assertBroadcastEnvelope(
       emb: DataFrame, vecCol: String, kernel: String, router: String): Unit = {
-    val (n, d) = corpusStats(emb, vecCol)
+    val (n, d) = measureCorpus(emb, vecCol)
     if (!fitsBudget(emb, n, d))
       throw new graft.store.FeatureValidationError(
         s"$kernel collects the corpus to the driver, and $n vectors x " +
@@ -368,12 +370,14 @@ object Similarity extends Serializable {
     }
   }
   private def corpusStats(emb: DataFrame, vecCol: String): (Long, Int) =
-    memoizedOnPlan(emb, s"stats:$vecCol") {
-      val row = emb
-        .agg(count(lit(1)).as("n"), coalesce(max(size(col(vecCol))), lit(0)).as("d"))
-        .head()
-      (row.getLong(0), row.getInt(1))
-    }
+    memoizedOnPlan(emb, s"stats:$vecCol")(measureCorpus(emb, vecCol))
+
+  private def measureCorpus(emb: DataFrame, vecCol: String): (Long, Int) = {
+    val row = emb
+      .agg(count(lit(1)).as("n"), coalesce(max(size(col(vecCol))), lit(0)).as("d"))
+      .head()
+    (row.getLong(0), row.getInt(1))
+  }
 
   private def fitsBudget(emb: DataFrame, n: Long, d: Int): Boolean = {
     val budget = emb.sparkSession.conf

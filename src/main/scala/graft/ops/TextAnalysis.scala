@@ -617,22 +617,7 @@ object TextAnalysis {
     val evalGrams = evalSet
       .select(explode(wordNgrams(col(textCol), n)).as("_gram"))
       .distinct()
-    // Adaptive filter sizing from PLAN STATS (driver-side, no job): the
-    // eval set cannot hold more distinct n-grams than it has tokens,
-    // and its byte size bounds its token count (≥ 4 bytes per token
-    // with separator, conservatively). Sizing down keeps the default
-    // ~19 bits/gram FP budget while shrinking every partial-aggregate
-    // buffer, the merged filter, and the plan literal the probe embeds
-    // (8 MB at the 100 TB default — measured dominating this operator's
-    // build at bench scale, where the eval set is a few hundred KB).
-    // Undersizing is correctness-neutral by construction: false
-    // positives only, removed by the exact verify join; callers' caps
-    // are never EXCEEDED, only reduced when the stats prove it safe.
-    val statBytes = bridge.optimizedPlan(evalSet).stats.sizeInBytes
-    val expAdaptive =
-      if (statBytes > 0 && statBytes < BigInt(Long.MaxValue) / 2)
-        math.min(expectedGrams, math.max(4096L, (statBytes / 4).toLong))
-      else expectedGrams
+    val expAdaptive = bloomItems(evalSet, expectedGrams)
     val bitsAdaptive = math.min(
       numBits,
       math.max(
@@ -659,6 +644,28 @@ object TextAnalysis {
       .withColumn("n_hit_grams", coalesce(col("_n_hit"), lit(0L)))
       .withColumn("keep", col("n_hit_grams") === 0L)
       .drop("_n_hit")
+  }
+
+  /** Item count [[decontaminateBloom]] sizes its filter for, from PLAN
+    * STATS (driver-side, no job): the eval set cannot hold more distinct
+    * n-grams than it has tokens, and a token costs at least a byte of
+    * the stored size. For a file source that size is the compressed
+    * bytes on disk, which can be several times smaller than the text,
+    * so no tighter per-token divisor is safe. Sizing down keeps the
+    * default ~19 bits/gram FP budget while shrinking every
+    * partial-aggregate buffer, the merged filter, and the plan literal
+    * the probe embeds (8 MB at the 100 TB default — measured dominating
+    * this operator's build at bench scale, where the eval set is a few
+    * hundred KB). Undersizing is correctness-neutral by construction:
+    * false positives only, removed by the exact verify join; the
+    * caller's cap is never EXCEEDED, only reduced.
+    */
+  private[graft] def bloomItems(evalSet: DataFrame, expectedGrams: Long): Long = {
+    val statBytes =
+      org.apache.spark.sql.graftbridge.bridge.optimizedPlan(evalSet).stats.sizeInBytes
+    if (statBytes > 0 && statBytes < BigInt(Long.MaxValue) / 2)
+      math.min(expectedGrams, math.max(4096L, statBytes.toLong))
+    else expectedGrams
   }
 
   /** Exact-substring duplicate spans — the "deduplicating training data"

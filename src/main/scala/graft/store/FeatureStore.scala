@@ -2278,19 +2278,17 @@ final class FeatureStore(
     * the spine in order, feature columns prefixed `<table>_`. Every
     * spine row survives (entities with no history in some table get
     * nulls there — the trainer decides the imputation, not the store).
-    * Cost is one entity-keyed shuffle per table.
+    * All tables go through one [[PointInTime.asOfJoinLeftAll]]: one
+    * entity-keyed shuffle and one sort for the whole view, since every
+    * stored table has the same timestamp type (tables whose entity
+    * types differ each start a new pass).
     */
   def getFeatureView(spine: DataFrame, names: Seq[String]): DataFrame = {
     if (names.isEmpty)
       throw new FeatureValidationError("getFeatureView needs at least one table")
-    names.foldLeft(spine) { (acc, name) =>
-      val meta = resolveMeta(name)
-      PointInTime.asOfJoinLeft(
-        acc,
-        currentData(meta),
-        prefix = s"${name}_",
-        tieBreakCols = Seq(IngestKeyCol))
-    }
+    val tables = names.map(name => PointInTime.ViewTable(
+      currentData(resolveMeta(name)), s"${name}_", Seq(IngestKeyCol)))
+    PointInTime.asOfJoinLeftAll(spine, tables)
   }
 
   /** Windowed aggregation features over the stored table: for each

@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   *     (reference: store.py:261-334, an O(|spine|·|table|) nested loop
   *     there — replaced here by a single-sort merge formulated as a
   *     union + running `last(..., ignoreNulls)` window).
-  *   - [[asOfJoinLeft]] — the same plan with left semantics: every spine
-  *     row survives, null-extended where no feature row matches (the
-  *     feature-view link).
+  *   - [[asOfJoinLeftAll]] — the same plan with left semantics over n
+  *     tables at once: every spine row survives, null-extended where a
+  *     table has no matching row (the feature view); [[asOfJoinLeft]] is
+  *     its one-table call.
   *
   * Scale notes (100 TB design):
   *   - `pitSnapshot` / `latestPerEntity` use `max_by(struct(row), ord)` —
@@ -31,9 +32,11 @@ import org.apache.spark.sql.functions._
   *     ROWS-frame window: one shuffle + one sort, O((n+m) log(n+m))
   *     per entity, with NO pairwise blowup — unlike the naive
   *     equi-join + `ts <= t` filter plan whose intermediate size is the
-  *     number of (spine row, earlier feature row) pairs. A hot entity
-  *     still lands in one window task; no skew route exists, because no
-  *     measured workload has an entity hot enough to need one.
+  *     number of (spine row, earlier feature row) pairs.
+  *     `asOfJoinLeftAll` puts all n tables of a view into that one
+  *     union, so an n-table view is still one shuffle + one sort. A hot
+  *     entity still lands in one window task; no skew route exists,
+  *     because no measured workload has an entity hot enough to need one.
   *   - Every kernel takes explicit tie-break columns: the reference's
   *     winner among duplicate (entity, ts) rows is unspecified
   *     (pandas idxmax of an unstable sort), so a deterministic total
@@ -215,17 +218,21 @@ object PointInTime {
     project(matched, columns, entityCol, tsCol)
   }
 
+  /** One feature table of a left as-of view ([[asOfJoinLeftAll]]): its
+    * rows, the prefix its columns come back under, and the tie-break
+    * columns that order its own duplicate (entity, ts) rows.
+    */
+  final case class ViewTable(
+      table: DataFrame,
+      prefix: String,
+      tieBreakCols: Seq[String] = Nil)
+
   /** LEFT as-of join for feature views: every spine row survives
     * (null-extended where the entity has no history at or before t),
-    * the spine's own columns — including any features appended by a
-    * previous view join — pass through untouched, and the matched
-    * feature row's columns come back `prefix`ed. Chain one call per
-    * feature table to assemble a multi-table training view
-    * ([[FeatureStore.getFeatureView]]); each link is the same
-    * one-shuffle union + running-`last` plan as [[asOfJoin]], so an
-    * n-table view costs n entity-keyed shuffles and no pairwise blowup.
-    * Internal (underscore) table columns are ordering keys only and do
-    * not appear in the output.
+    * the spine's own columns pass through untouched, and the matched
+    * feature row's columns come back `prefix`ed. The one-table call of
+    * [[asOfJoinLeftAll]]. Internal (underscore) table columns are
+    * ordering keys only and do not appear in the output.
     */
   def asOfJoinLeft(
       spine: DataFrame,
@@ -233,54 +240,104 @@ object PointInTime {
       prefix: String,
       entityCol: String = EntityIdColumn,
       tsCol: String = TimestampColumn,
-      tieBreakCols: Seq[String] = Nil): DataFrame = {
+      tieBreakCols: Seq[String] = Nil): DataFrame =
+    asOfJoinLeftAll(spine, Seq(ViewTable(table, prefix, tieBreakCols)),
+      entityCol, tsCol)
+
+  /** n-table LEFT as-of join — the multi-table training view
+    * ([[FeatureStore.getFeatureView]]). The result equals chaining one
+    * [[asOfJoinLeft]] per table in order: spine columns first, then
+    * each table's non-internal columns (entity excluded) under its
+    * prefix, spine rows never dropped nor merged.
+    *
+    * Plan shape: the spine and every table go into one tagged union in
+    * which table i carries its row as payload `_p<i>` (null on every
+    * other row). One entity-keyed shuffle and one sort by (ts, side,
+    * then each table's tie-break columns read from its payload) feed one
+    * running `last(_p<i>, ignoreNulls)` per table over the same window:
+    * a table's rows order among themselves by that table's own
+    * tie-break (the earlier tables' keys are all null on them), feature
+    * rows sort before spine probes at equal ts (inclusive cutoff), and
+    * rows of different tables never compete because each running `last`
+    * sees only its own table's payload. So an n-table view costs one
+    * shuffle, not n. Consecutive tables whose entity and ts types differ
+    * cannot share the union (the chained form casts the spine to each
+    * table's key types in turn); each maximal run of equal key types is
+    * one such pass over the previous run's output.
+    */
+  def asOfJoinLeftAll(
+      spine: DataFrame,
+      tables: Seq[ViewTable],
+      entityCol: String = EntityIdColumn,
+      tsCol: String = TimestampColumn): DataFrame = {
     Validation.validateSpine(spine, entityCol, tsCol)
-    val featOut = dropInternal(table.columns.toSeq).filterNot(_ == entityCol)
+    def keyTypes(v: ViewTable) =
+      (v.table.schema(entityCol).dataType, v.table.schema(tsCol).dataType)
+    val runs = tables.foldLeft(List.empty[List[ViewTable]]) {
+      case ((run @ (last :: _)) :: done, v) if keyTypes(last) == keyTypes(v) =>
+        (v :: run) :: done
+      case (done, v) => List(v) :: done
+    }.reverse.map(_.reverse)
+    runs.foldLeft(spine)((acc, run) => asOfJoinLeftRun(acc, run, entityCol, tsCol))
+  }
+
+  /** One union + one window pass of [[asOfJoinLeftAll]] over tables
+    * that share their entity and ts types.
+    */
+  private def asOfJoinLeftRun(
+      spine: DataFrame,
+      run: Seq[ViewTable],
+      entityCol: String,
+      tsCol: String): DataFrame = {
     val spineExtra =
       spine.columns.toSeq.filterNot(c => c == entityCol || c == tsCol)
-
-    val fPayload = struct(table.columns.toSeq.map(col): _*)
-    val fPayloadType = table.select(fPayload.as("_p")).schema.head.dataType
     val sPayload =
       if (spineExtra.isEmpty) struct(lit(0)) else struct(spineExtra.map(col): _*)
     val sPayloadType = spine.select(sPayload.as("_sp")).schema.head.dataType
-    val ord =
-      if (tieBreakCols.isEmpty) struct(lit(0))
-      else struct(tieBreakCols.map(col): _*)
-    val ordType = table.select(ord.as("_o")).schema.head.dataType
-    val entityType = table.schema(entityCol).dataType
-    val tsType = table.schema(tsCol).dataType
+    val entityType = run.head.table.schema(entityCol).dataType
+    val tsType = run.head.table.schema(tsCol).dataType
 
-    val featSide = table
-      .filter(col(tsCol).isNotNull) // no as-of position — see taggedUnion
-      .select(
-        col(entityCol).as("_e"),
-        col(tsCol).as("_t"),
-        lit(0).as("_side"),
-        fPayload.as("_p"),
-        lit(null).cast(sPayloadType).as("_sp"),
-        ord.as("_o"))
+    // table i's rows carry its whole row as payload `_p<i>`, null on
+    // every other row; its tie-break columns are sort keys read from it
+    val payloadTypes = run.map(v =>
+      v.table.select(struct(v.table.columns.toSeq.map(col): _*)).schema.head.dataType)
+    def payloads(own: Option[Int]): Seq[Column] = run.indices.map { i =>
+      (if (own.contains(i)) struct(run(i).table.columns.toSeq.map(col): _*)
+       else lit(null).cast(payloadTypes(i))).as(s"_p$i")
+    }
+
+    val featSides = run.zipWithIndex.map { case (v, i) =>
+      v.table
+        .filter(col(tsCol).isNotNull) // no as-of position — see taggedUnion
+        .select(
+          Seq(col(entityCol).as("_e"), col(tsCol).as("_t"), lit(0).as("_side"),
+            lit(null).cast(sPayloadType).as("_sp")) ++ payloads(Some(i)): _*)
+    }
     val spineSide = spine.select(
-      col(entityCol).cast(entityType).as("_e"),
-      col(tsCol).cast(tsType).as("_t"),
-      lit(1).as("_side"),
-      lit(null).cast(fPayloadType).as("_p"),
-      sPayload.as("_sp"),
-      lit(null).cast(ordType).as("_o"))
+      Seq(col(entityCol).cast(entityType).as("_e"),
+        col(tsCol).cast(tsType).as("_t"), lit(1).as("_side"),
+        sPayload.as("_sp")) ++ payloads(None): _*)
 
     val w = Window
       .partitionBy(col("_e"))
-      .orderBy(col("_t").asc, col("_side").asc, col("_o").asc)
+      .orderBy(Seq(col("_t").asc, col("_side").asc) ++
+        run.zipWithIndex.flatMap { case (v, i) =>
+          v.tieBreakCols.map(c => col(s"_p$i").getField(c).asc) }: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    featSide.unionByName(spineSide)
-      .withColumn("_match", last(col("_p"), ignoreNulls = true).over(w))
+    val matches = run.indices.map(i =>
+      last(col(s"_p$i"), ignoreNulls = true).over(w).as(s"_m$i"))
+    val featOut = run.zipWithIndex.flatMap { case (v, i) =>
+      dropInternal(v.table.columns.toSeq).filterNot(_ == entityCol)
+        .map(c => col(s"_m$i").getField(c).as(v.prefix + c))
+    }
+    (featSides :+ spineSide).reduce(_ unionByName _)
+      .select(col("*") +: matches: _*)
       .filter(col("_side") === 1)
       .select(
         col("_e").as(entityCol) +:
           col("_t").as(tsCol) +:
-          (spineExtra.map(c => col("_sp").getField(c).as(c)) ++
-            featOut.map(c => col("_match").getField(c).as(prefix + c))): _*)
+          (spineExtra.map(c => col("_sp").getField(c).as(c)) ++ featOut): _*)
   }
 
   /** Front half of [[asOfJoin]]: validate, then union feature rows

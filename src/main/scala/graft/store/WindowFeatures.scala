@@ -18,9 +18,13 @@ import org.apache.spark.sql.types._
   * event stream and evaluates every aggregate with a RANGE-frame window
   * over epoch-micros: ONE shuffle + one sort of (events + probes), no
   * pairwise intermediate, all aggregates computed in the same window
-  * pass. It is the one window-aggregate kernel: a single hot entity
-  * still lands in one task, and no skew route exists, because no
-  * measured workload has an entity hot enough to need one.
+  * pass. `rows`, `count` and integral `sum` are prefix differences over
+  * growing frames, linear in the rows; `min`, `max`, `distinct` and
+  * floating or decimal `sum` read a sliding frame that Spark
+  * re-aggregates whenever its lower edge moves, O(rows × rows in the
+  * window) on a busy entity. It is the one window-aggregate kernel: a
+  * single hot entity still lands in one task, and no skew route exists,
+  * because no measured workload has an entity hot enough to need one.
   */
 object WindowFeatures {
 
@@ -70,6 +74,13 @@ object WindowFeatures {
     * overlap). Every spine row is emitted (left semantics): zero
     * in-window rows → `rows`/`count` = 0, `sum`/`min`/`max` = null.
     * Duplicate spine rows emit duplicate outputs.
+    *
+    * `rows`, `count` and `sum` over byte/short/int/long inputs are
+    * computed as prefix(t) − prefix(t − w) from running totals (sums in
+    * decimal(38,0), so a long history cannot overflow; a window sum that
+    * does not fit a long fails under ANSI); `min`, `max`, `distinct` and
+    * floating or decimal `sum` aggregate a bounded frame. The rule is
+    * fixed by the function and the input type.
     *
     * Determinism note (oracle-facing callers): `sum` over floating
     * point is order-dependent across engines — aggregate integer units
@@ -125,45 +136,70 @@ object WindowFeatures {
         lit(1).as("_side") +:
         valueCols.map(c => lit(null).cast(table.schema(c).dataType).as(s"_v_$c")): _*)
 
-    // RANGE frame (value-based): peers at the probe's exact ordering
-    // value are all included regardless of union order — the inclusive
-    // upper bound needs no side tag in the sort, unlike the as-of ROWS
-    // frame. Aggregates sharing a window length share one WindowSpec;
-    // distinct lengths become sibling Window operators over the SAME
-    // partitioning and sort, so Catalyst plans one shuffle + one sort
-    // total and each extra horizon costs only a frame scan.
+    // Every frame is a RANGE frame over `_us` (value-based: peers at the
+    // probe's exact ordering value are all included regardless of union
+    // order, so the inclusive upper bound needs no side tag in the
+    // sort), and every one shares the partitioning and the order, so
+    // Catalyst plans one shuffle + one sort for all aggregates and
+    // horizons.
+    //
+    // rows, count and integral sum are invertible: their window value is
+    // prefix(t) - prefix(t - w) (Leis et al., VLDB 2015), read from two
+    // growing frames — UNBOUNDED PRECEDING to CURRENT ROW, and to w
+    // PRECEDING — which Spark advances row by row. Sums accumulate in
+    // decimal(38,0), so no entity's history can overflow; the difference
+    // goes back to a long, which fails under ANSI only when the window
+    // sum itself does not fit. min, max, distinct and floating or
+    // decimal sums are not invertible and read a bounded sliding frame,
+    // which Spark re-aggregates whenever its lower edge moves.
     val sameUnits: Long => Long = tsType match {
       case _: NumericType => identity
       case _ => _ * 1000000L
     }
-    def frameFor(seconds: Option[Long]): org.apache.spark.sql.expressions.WindowSpec =
-      Window
-        .partitionBy(col("_e"))
-        .orderBy(col("_us"))
-        .rangeBetween(-(seconds.map(sameUnits).getOrElse(width) - 1L), 0L)
+    val byTime = Window.partitionBy(col("_e")).orderBy(col("_us"))
+    val upToNow = byTime.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    def span(seconds: Option[Long]): Long = seconds.map(sameUnits).getOrElse(width)
+    def frameFor(seconds: Option[Long]) = byTime.rangeBetween(-(span(seconds) - 1L), 0L)
+    // a sum over an empty frame is null, so the lower prefix defaults to 0
+    def inWindow(prefix: Column, seconds: Option[Long]): Column =
+      prefix.over(upToNow) - coalesce(
+        prefix.over(byTime.rangeBetween(Window.unboundedPreceding, -span(seconds))), lit(0))
     def featOnly(c: Column): Column = when(col("_side") === 0, c)
+    def integral(in: String): Boolean = table.schema(in).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
     val aggCols = aggs.map { a =>
-      val w = frameFor(a.windowSeconds)
+      val v = featOnly(col(s"_v_${a.input}"))
+      val h = a.windowSeconds
       a match {
-        case WindowAgg(out, "rows", _, _) => count(featOnly(lit(1))).over(w).as(out)
-        case WindowAgg(out, "count", in, _) => count(featOnly(col(s"_v_$in"))).over(w).as(out)
-        case WindowAgg(out, "sum", in, _) => sum(featOnly(col(s"_v_$in"))).over(w).as(out)
-        case WindowAgg(out, "min", in, _) => min(featOnly(col(s"_v_$in"))).over(w).as(out)
-        case WindowAgg(out, "max", in, _) => max(featOnly(col(s"_v_$in"))).over(w).as(out)
+        case WindowAgg(out, "rows", _, _) => inWindow(count(featOnly(lit(1))), h).as(out)
+        case WindowAgg(out, "count", _, _) => inWindow(count(v), h).as(out)
+        case WindowAgg(out, "sum", in, _) if integral(in) =>
+          when(inWindow(count(v), h) > 0,
+            inWindow(sum(v.cast(DecimalType(38, 0))), h).cast(LongType)).as(out)
+        case WindowAgg(out, "sum", _, _) => sum(v).over(frameFor(h)).as(out)
+        case WindowAgg(out, "min", _, _) => min(v).over(frameFor(h)).as(out)
+        case WindowAgg(out, "max", _, _) => max(v).over(frameFor(h)).as(out)
         // distinct cardinality inside the frame: collect_set ignores the
         // null-tagged spine rows, size() reads the buffer — the window
         // form of count(DISTINCT) Spark doesn't accept directly. State
         // per frame is the distinct-value set; for very-high-cardinality
         // inputs prefer an HLL sketch column upstream.
-        case WindowAgg(out, "distinct", in, _) =>
-          size(collect_set(featOnly(col(s"_v_$in"))).over(w)).cast("long").as(out)
+        case WindowAgg(out, "distinct", _, _) =>
+          size(collect_set(v).over(frameFor(h))).cast("long").as(out)
         case WindowAgg(_, fn, _, _) =>
           throw new FeatureValidationError(s"unsupported window aggregate '$fn'")
       }
     }
 
+    // the window's own exchange, placed explicitly: Spark computes a
+    // window function's inputs (the decimal casts above) in a projection
+    // below the Window, so this keeps them after the shuffle instead of
+    // shipping a 16-byte decimal per row through it
     featSide.unionByName(spineSide)
       .withColumn("_us", ordOf(col("_t")))
+      .repartition(col("_e"))
       .select(col("_e") +: col("_t") +: col("_side") +: aggCols: _*)
       .filter(col("_side") === 1)
       .select(col("_e").as(entityCol) +: col("_t").as(tsCol) +: aggs.map(a => col(a.out)): _*)

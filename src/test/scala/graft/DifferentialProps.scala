@@ -1361,9 +1361,9 @@ object DifferentialProps extends Properties("Differential") {
     }
 
   // ---------------------------------------------------------------
-  // Family 15: multi-table feature view (getFeatureView — a fold of
-  // LEFT as-of joins, feature columns table-prefixed, every spine row
-  // surviving). Kernel arm: asOfJoinLeft composed directly over
+  // Family 15: multi-table feature view (getFeatureView — one n-table
+  // LEFT as-of join, feature columns table-prefixed, every spine row
+  // surviving). Kernel arm: asOfJoinLeftAll called directly over
   // dense duplicate-(entity,ts) pools (tie-break totality inside the
   // left variant, which family 3 never reaches); store arm: the full
   // wiring through register → currentData → prefix projection, with
@@ -1391,10 +1391,9 @@ object DifferentialProps extends Properties("Differential") {
           store.register("fb", featDF(rb))
           store.getFeatureView(sp, Seq("fa", "fb"))
         } else
-          Seq("fa" -> featDF(ra), "fb" -> featDF(rb)).foldLeft(sp) {
-            case (acc, (n, tb)) => PointInTime.asOfJoinLeft(
-              acc, tb, prefix = s"${n}_", tieBreakCols = Seq("event_id"))
-          }
+          PointInTime.asOfJoinLeftAll(sp, Seq(
+            PointInTime.ViewTable(featDF(ra), "fa_", Seq("event_id")),
+            PointInTime.ViewTable(featDF(rb), "fb_", Seq("event_id"))))
       val out = engine.orderBy(
         col("entity_id"), col("timestamp").asc_nulls_first,
         col("fa_event_id").asc_nulls_first,

@@ -247,6 +247,31 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("decontaminateBloom sizes for every distinct eval n-gram of a compressed parquet set") {
+    val s = spark
+    import s.implicits._
+    // one-letter tokens from a 26-letter alphabet: the text compresses
+    // well on disk, yet nearly every trigram position is a new trigram
+    val rng = new scala.util.Random(17)
+    val texts = (0 until 300).map(_ => Seq.fill(100)(('a' + rng.nextInt(26)).toChar).mkString(" "))
+    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_size").toString + "/eval"
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .coalesce(1).write.parquet(dir)
+    val eval = spark.read.parquet(dir)
+    val distinct = texts.flatMap(_.split(" ").sliding(3).map(_.mkString(" "))).distinct.size
+    val items = TextAnalysis.bloomItems(eval, expectedGrams = 3500000L)
+    assert(items >= distinct, s"filter sized for $items items, eval set has $distinct trigrams")
+    val corpus = Seq(
+      (1L, texts(3).take(41)), // a slice of an eval text: contaminated
+      (2L, "x y z q x y z q"),
+      (3L, texts(7) + " " + texts(9))).toDF("doc_id", "text")
+    val exact = TextAnalysis.decontaminate(corpus, eval, 3)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val bloom = TextAnalysis.decontaminateBloom(corpus, eval, 3)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    assert(bloom == exact)
+  }
+
   test("duplicateSpans reports cross-document repeated windows only") {
     val s = spark
     import s.implicits._
@@ -563,6 +588,36 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       }
       assert(e2.getMessage.contains("broadcastBudgetBytes"))
     } finally spark.conf.unset(key)
+  }
+
+  test("the collect kernels' envelope guard re-measures a corpus rewritten in place") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_envelope").toString + "/emb"
+    def write(n: Long): Unit =
+      (0L until n).map(i => (i, Array(1.0f, i.toFloat)))
+        .toDF("vec_id", "embedding")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    val key = "spark.graft.similarity.broadcastBudgetBytes"
+    // a 2-dim vector costs 80 budget bytes: ten fit, a hundred do not
+    spark.conf.set(key, "800")
+    try {
+      write(10L)
+      Similarity.invalidateCorpusStats()
+      assert(Similarity.fitsBroadcastEnvelope(spark.read.parquet(dir)))
+      // grown at the same path, with no Tables.invalidate: the memo
+      // still holds the ten-vector size
+      write(100L)
+      assert(Similarity.fitsBroadcastEnvelope(spark.read.parquet(dir)))
+      val e = intercept[graft.store.FeatureValidationError] {
+        Similarity.bruteForceTopKFor(spark.read.parquet(dir), None, k = 2).collect()
+      }
+      assert(e.getMessage.contains("100 vectors"))
+    } finally {
+      spark.conf.unset(key)
+      Similarity.invalidateCorpusStats()
+    }
   }
 
   test("pqTopK guards its driver-built lookup tables") {

@@ -205,4 +205,34 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     assert(shuffles <= 1,
       s"expected the single final-aggregation exchange, saw $shuffles")
   }
+
+  test("a 3-table feature view and a mixed window-aggregate call each plan one shuffle and one sort") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_train_shape").toString
+    val store = new graft.store.FeatureStore(spark, root)
+    val rows = (0L until 60L).map(i =>
+      (s"u${i % 7}", ts(f"2024-01-${1 + i % 28}%02d"), i, i * 0.5, s"c${i % 3}"))
+    for (name <- Seq("fa", "fb", "fc"))
+      store.register(name, rows.toDF("entity_id", "timestamp", "amount", "score", "kind"))
+    val spine = (0 until 20).map(i => (s"u${i % 9}", ts(f"2024-01-${1 + i}%02d")))
+      .toDF("entity_id", "timestamp")
+    import graft.store.WindowFeatures.WindowAgg
+    val calls = Seq(
+      "getFeatureView" -> store.getFeatureView(spine, Seq("fa", "fb", "fc")),
+      "getWindowFeatures" -> store.getWindowFeatures("fa", spine, 3L * 86400, Seq(
+        WindowAgg("n", "rows"),
+        WindowAgg("amt", "sum", "amount"),
+        WindowAgg("amt7", "sum", "amount", Some(7L * 86400)),
+        WindowAgg("sc", "sum", "score"),
+        WindowAgg("lo", "min", "amount", Some(7L * 86400)),
+        WindowAgg("kinds", "distinct", "kind"))))
+    for ((what, df) <- calls) {
+      val ns = executedNodes(df)
+      val shuffles = ns.count(_.isInstanceOf[ShuffleExchangeExec])
+      val sorts = ns.count(_.isInstanceOf[org.apache.spark.sql.execution.SortExec])
+      assert(shuffles == 1, s"$what planned $shuffles shuffles")
+      assert(sorts == 1, s"$what planned $sorts sorts")
+    }
+  }
 }

@@ -8,6 +8,7 @@ import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
 import graft.store.PointInTime
+import graft.store.PointInTime.ViewTable
 
 /** Model-based ScalaCheck properties for the temporal kernels
   * (SURVEY.md §5 items a-c, strengthened): for random feature tables and
@@ -146,5 +147,62 @@ object PointInTimeProps extends Properties("PointInTime") {
       }
       .sorted
     got == want // every spine row present exactly once, matched or null
+  }
+
+  // n-table view: each table has its own tie-break column `k` (unique
+  // within the table, unrelated to insertion order), rows may carry a
+  // null timestamp, and (entity, day) pairs repeat within and across
+  // tables because the domains are small
+  private case class FR(e: Int, day: Option[Int], v: Long, k: Long)
+
+  private def genTable(salt: Long): Gen[List[FR]] = for {
+    n <- Gen.choose(0, 30)
+    rows <- Gen.listOfN(n, for {
+      e <- Gen.choose(1, 4)
+      day <- Gen.frequency(9 -> Gen.choose(1, 25).map(Option(_)), 1 -> Gen.const(None))
+      v <- Gen.choose(0L, 99L)
+    } yield FR(e, day, v, 0L))
+  } yield rows.zipWithIndex.map { case (r, i) => r.copy(k = (i * 7919L + salt) % 1009L) }
+
+  private val genViewSpine: Gen[List[(Int, Option[Int], Long)]] = for {
+    rows <- Gen.nonEmptyListOf(for {
+      e <- Gen.choose(1, 5) // 5 is in no table
+      day <- Gen.frequency(9 -> Gen.choose(1, 28).map(Option(_)), 1 -> Gen.const(None))
+      tag <- Gen.choose(0L, 3L)
+    } yield (e, day, tag))
+  } yield rows :+ rows.head // a duplicate spine row, always
+
+  property("n-table view equals per-spine-row model") = forAll(
+    genTable(0L), genTable(311L), genTable(577L), genViewSpine) { (ra, rb, rc, spine) =>
+    val s = spark
+    import s.implicits._
+    def tsOf(d: Option[Int]) = d.map(ts).orNull
+    // a and b key on int entities, c on long ones: two runs
+    val a = ra.map(r => (r.e, tsOf(r.day), r.v, r.k)).toDF("entity_id", "timestamp", "v", "seq")
+    val b = rb.map(r => (r.e, tsOf(r.day), s"w${r.v}", r.k)).toDF("entity_id", "timestamp", "w", "k")
+    val c = rc.map(r => (r.e.toLong, tsOf(r.day), r.v, r.k)).toDF("entity_id", "timestamp", "x", "seq")
+    val spineDf = spine.map { case (e, d, tag) => (e.toLong, tsOf(d), tag) }
+      .toDF("entity_id", "timestamp", "tag")
+    val views = Seq(ViewTable(a, "a_", Seq("seq")), ViewTable(b, "b_", Seq("k")),
+      ViewTable(c, "c_", Seq("seq")))
+    val got = PointInTime.asOfJoinLeftAll(spineDf, views)
+    val chained = views.foldLeft(spineDf)((acc, v) =>
+      PointInTime.asOfJoinLeft(acc, v.table, v.prefix, tieBreakCols = v.tieBreakCols))
+    def rowsOf(df: DataFrame) = df.collect().toList
+      .map(_.toSeq.map(v => Option(v).map(_.toString))).sortBy(_.toString)
+    def best(rows: List[FR], e: Int, d: Option[Int]) = d.flatMap(dd =>
+      rows.filter(r => r.e == e && r.day.exists(_ <= dd)).maxByOption(r => (r.day, r.k)))
+    val want = spine.map { case (e, d, tag) =>
+      val (ma, mb, mc) = (best(ra, e, d), best(rb, e, d), best(rc, e, d))
+      Seq(Some(e), d.map(ts), Some(tag),
+        ma.map(m => ts(m.day.get)), ma.map(_.v), ma.map(_.k),
+        mb.map(m => ts(m.day.get)), mb.map(m => s"w${m.v}"), mb.map(_.k),
+        mc.map(m => ts(m.day.get)), mc.map(_.v), mc.map(_.k))
+        .map(_.map(_.toString))
+    }.sortBy(_.toString)
+    val gotRows = rowsOf(got)
+    (gotRows == want) &&
+      (got.schema.map(f => (f.name, f.dataType)) == chained.schema.map(f => (f.name, f.dataType))) &&
+      (gotRows == rowsOf(chained))
   }
 }

@@ -24,8 +24,9 @@ object WindowFeaturesProps extends Properties("WindowFeatures") {
 
   private case class R(e: String, day: Int, v: Long, seq: Long)
 
+  // day 1 is 2024-01-01; edge probes run past the end of January
   private def ts(day: Int): Timestamp =
-    Timestamp.valueOf(f"2024-01-$day%02d 00:00:00")
+    Timestamp.valueOf(java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusDays(day - 1L))
 
   private val genRows: Gen[List[R]] = for {
     n <- Gen.choose(1, 40)
@@ -48,41 +49,65 @@ object WindowFeaturesProps extends Properties("WindowFeatures") {
       .toDF("entity_id", "timestamp", "v", "seq")
   }
 
+  // window-aggregate rows: a long value and an int value, each
+  // sometimes null, and a timestamp that is sometimes null
+  private case class W(e: String, day: Option[Int], v: Option[Long], i: Option[Int])
+
+  private val genWRows: Gen[List[W]] = Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, for {
+    e <- Gen.oneOf("a", "b", "c", "d")
+    day <- Gen.frequency(9 -> Gen.choose(1, 25).map(Option(_)), 1 -> Gen.const(None))
+    v <- Gen.frequency(4 -> Gen.choose(0L, 99L).map(Option(_)), 1 -> Gen.const(None))
+    i <- Gen.frequency(4 -> Gen.choose(-50, 50).map(Option(_)), 1 -> Gen.const(None))
+  } yield W(e, day, v, i)))
+
   property("windowAggJoin equals per-spine-row model") = forAll(
-    genRows, genSpine, Gen.choose(1, 10)) { (rows, spineRaw, wDays) =>
-    val spine = if (spineRaw.isEmpty) List(("a", 1)) else spineRaw
+    genWRows, genSpine, Gen.choose(1, 10)) { (rows, spineRaw, wDays) =>
+    // probes at every feature row's own day and exactly w and 2 days
+    // later (its row sits on the excluded lower edge there), plus a
+    // null-ts probe, a null-entity probe and a duplicate
+    val edges = rows.take(3).flatMap(r => r.day.toList.flatMap(d =>
+      Seq(d, d + wDays, d + 2).map(x => (Option(r.e), Option(x)))))
+    val spine = spineRaw.map { case (e, d) => (Option(e), Option(d)) } ++ edges ++
+      Seq((Some("a"), None), (None, Some(9)), (Some("b"), Some(12)), (Some("b"), Some(12)))
     val s = spark
     import s.implicits._
-    val spineDf = spine.map { case (e, d) => (e, ts(d)) }
+    val spineDf = spine.map { case (e, d) => (e, d.map(ts).orNull) }
       .toDF("entity_id", "timestamp")
+    val table = rows.map(r => (r.e, r.day.map(ts).orNull, r.v, r.i, r.v.map(_.toDouble)))
+      .toDF("entity_id", "timestamp", "v", "vi", "vd")
+    val two = Some(2L * 86400L)
     val got = WindowFeatures
-      .windowAggJoin(spineDf, toDF(rows), wDays * 86400L, Seq(
+      .windowAggJoin(spineDf, table, wDays * 86400L, Seq(
         WindowAgg("n", "rows"),
+        WindowAgg("cv", "count", "v"),
         WindowAgg("sv", "sum", "v"),
+        WindowAgg("si", "sum", "vi"),
+        WindowAgg("sd", "sum", "vd"),
         WindowAgg("mn", "min", "v"),
-        WindowAgg("mx", "max", "v"),
-        // per-agg horizon override: a second, 2-day window in the same pass
-        WindowAgg("n2", "rows", windowSeconds = Some(2L * 86400L)),
-        WindowAgg("sv2", "sum", "v", Some(2L * 86400L))))
-      .collect()
-      .map(r => (r.getString(0), r.getTimestamp(1).toString, r.getLong(2),
-        Option(r.get(3)).map(_.asInstanceOf[Long]),
-        Option(r.get(4)).map(_.asInstanceOf[Long]),
-        Option(r.get(5)).map(_.asInstanceOf[Long]),
-        r.getLong(6),
-        Option(r.get(7)).map(_.asInstanceOf[Long])))
-      .toList.sorted
+        WindowAgg("nd", "distinct", "vi"),
+        // per-agg horizon overrides: a second, 2-day window in the same pass
+        WindowAgg("n2", "rows", windowSeconds = two),
+        WindowAgg("ci2", "count", "vi", two),
+        WindowAgg("sv2", "sum", "v", two),
+        WindowAgg("si2", "sum", "vi", two),
+        WindowAgg("mx2", "max", "vi", two)))
+      .collect().toList
+      .map(_.toSeq.map(x => Option(x).map(_.toString))).sortBy(_.toString)
     val want = spine.map { case (e, d) =>
       // upper bound inclusive, lower bound exclusive: (d - w, d]
-      val in = rows.filter(r => r.e == e && r.day > d - wDays && r.day <= d)
-      val in2 = rows.filter(r => r.e == e && r.day > d - 2 && r.day <= d)
-      (e, ts(d).toString, in.size.toLong,
-        if (in.isEmpty) None else Some(in.map(_.v).sum),
-        if (in.isEmpty) None else Some(in.map(_.v).min),
-        if (in.isEmpty) None else Some(in.map(_.v).max),
-        in2.size.toLong,
-        if (in2.isEmpty) None else Some(in2.map(_.v).sum))
-    }.sorted
+      def in(w: Int) = (for (ee <- e; dd <- d) yield rows.filter(r =>
+        r.e == ee && r.day.exists(x => x > dd - w && x <= dd))).getOrElse(Nil)
+      def sumOf[T](xs: List[T])(implicit n: Numeric[T]) =
+        if (xs.isEmpty) None else Some(xs.sum)
+      val (iw, i2) = (in(wDays), in(2))
+      Seq(e, d.map(ts), Some(iw.size.toLong), Some(iw.flatMap(_.v).size.toLong),
+        sumOf(iw.flatMap(_.v)), sumOf(iw.flatMap(_.i).map(_.toLong)),
+        sumOf(iw.flatMap(_.v).map(_.toDouble)), iw.flatMap(_.v).minOption,
+        Some(iw.flatMap(_.i).distinct.size.toLong),
+        Some(i2.size.toLong), Some(i2.flatMap(_.i).size.toLong),
+        sumOf(i2.flatMap(_.v)), sumOf(i2.flatMap(_.i).map(_.toLong)),
+        i2.flatMap(_.i).maxOption).map(_.map(_.toString))
+    }.sortBy(_.toString)
     got == want
   }
 

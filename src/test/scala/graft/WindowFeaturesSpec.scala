@@ -151,4 +151,33 @@ class WindowFeaturesSpec extends AnyFunSuite with SparkTestBase {
       .windowAggJoin(spine, feat, 3L, aggs).head().getAs[Long]("sv")
     assert(exact == 11L, s"exact=$exact") // window [base-1, base+2]
   }
+
+  test("window sums are exact when an entity's history sum passes Long.MaxValue") {
+    val s = spark
+    import s.implicits._
+    val big = Long.MaxValue - 10L
+    val feat = Seq(("e1", 1L, big), ("e1", 100L, big), ("e1", 200L, 5L), ("e1", 205L, -3L))
+      .toDF("entity_id", "timestamp", "v")
+    val spine = Seq(("e1", 1L), ("e1", 100L), ("e1", 205L)).toDF("entity_id", "timestamp")
+    // every 10-unit window holds at most one big value; the running
+    // total passes Long.MaxValue at ts 100
+    val out = WindowFeatures
+      .windowAggJoin(spine, feat, 10L, Seq(WindowAgg("sv", "sum", "v")))
+      .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
+    assert(out == Map(1L -> big, 100L -> big, 205L -> 2L))
+  }
+
+  test("a window sum past Long.MaxValue fails the call") {
+    val s = spark
+    import s.implicits._
+    val feat = Seq(("e1", 1L, Long.MaxValue), ("e1", 2L, 1L)).toDF("entity_id", "timestamp", "v")
+    val spine = Seq(("e1", 2L)).toDF("entity_id", "timestamp")
+    val e = intercept[Exception] {
+      WindowFeatures
+        .windowAggJoin(spine, feat, 10L, Seq(WindowAgg("sv", "sum", "v")))
+        .collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+  }
 }
