@@ -2204,21 +2204,126 @@ final class FeatureStore(
   /** PIT snapshot read (reference: store.py:218-259): latest row per
     * requested entity at or before `timestamp`. Unknown entities yield no
     * rows (not an error); unknown table raises FeatureTableNotFoundError.
+    *
+    * Segments are pruned by time and by the requested entities. When
+    * the catalog row counts of what is left are at most
+    * [[FeatureStore.LocalReadMaxRows]], the rows are read on the driver
+    * and the result is an eager snapshot taken at call time, which
+    * collects with no Spark job; above it the result is a lazy frame
+    * over the pruned segments, as for every other read.
     */
   def get(
       name: String,
       entityIds: Seq[Any],
       timestamp: Any,
       columns: Option[Seq[String]] = None): DataFrame = {
+    val p = pointRead(name, entityIds, timestamp, columns)
+    (if (p.small) latestOnDriver(p, columns, k = 1) else None)
+      .getOrElse(latestOnSpark(p, columns))
+  }
+
+  /** [[get]] through its Spark kernel, whatever the read's size. */
+  private[graft] def getOnSpark(
+      name: String,
+      entityIds: Seq[Any],
+      timestamp: Any,
+      columns: Option[Seq[String]] = None): DataFrame =
+    latestOnSpark(pointRead(name, entityIds, timestamp, columns), columns)
+
+  /** [[get]] through its driver kernel, whatever the read's size. */
+  private[graft] def getOnDriver(
+      name: String,
+      entityIds: Seq[Any],
+      timestamp: Any,
+      columns: Option[Seq[String]] = None): DataFrame =
+    latestOnDriver(pointRead(name, entityIds, timestamp, columns), columns, k = 1)
+      .getOrElse(throw new UnsupportedOperationException(
+        s"no driver-side read for table '$name'"))
+
+  private def pointRead(
+      name: String,
+      entityIds: Seq[Any],
+      timestamp: Any,
+      columns: Option[Seq[String]]): FeatureStore.PointRead = {
     val meta = resolveMeta(name)
     val asOf = FeatureStore.normalizeTimestamp(timestamp)
+    columns.foreach(cs => Validation.validateColumns(
+      cs, PointInTime.dropInternal(meta.columns), name))
+    val filter = resolveCondition(name, meta,
+      col(TimestampColumn) <= lit(asOf) && col(EntityIdColumn).isin(entityIds: _*))
+    val (kept, _) = pruneSegments(meta, meta.segmentsOf(meta.version), filter,
+      needRows = false)
+    FeatureStore.PointRead(meta, asOf, entityIds, filter, kept)
+  }
+
+  /** The Spark kernels of [[get]] and [[getRecent]]: lazy frames over
+    * the candidate segments.
+    */
+  private def latestOnSpark(p: FeatureStore.PointRead, columns: Option[Seq[String]]): DataFrame =
     PointInTime.pitSnapshot(
-      currentData(meta, Some(asOf)),
-      lit(asOf),
-      entityIds = Some(entityIds),
+      currentData(p.meta, p.schemaSegments, Some(p.asOf)),
+      lit(p.asOf),
+      entityIds = Some(p.entityIds),
       columns = columns,
       tieBreakCols = Seq(IngestKeyCol),
-      tableName = name)
+      tableName = p.meta.name)
+
+  private def recentOnSpark(p: FeatureStore.PointRead, k: Int): DataFrame = {
+    val eligible = currentData(p.meta, p.schemaSegments, Some(p.asOf))
+      .filter(col(TimestampColumn) <= lit(p.asOf))
+      .filter(col(EntityIdColumn).isin(p.entityIds: _*))
+    PointInTime
+      .latestKPerEntity(eligible, k, tieBreakCols = Seq(IngestKeyCol))
+      .select((p.meta.columns :+ "recency_rank").map(col): _*)
+  }
+
+  /** The driver kernel of [[get]] (`k = 1`, output `columns` as
+    * [[PointInTime.pitSnapshot]] projects them) and of [[getRecent]]
+    * (`k` given, every column plus `recency_rank`): the candidate
+    * segments' files read with Spark's parquet reader on the driver,
+    * filtered by the same resolved predicate, reduced by
+    * [[PointInTime.latestKLocal]], and returned as a local relation
+    * with the Spark kernel's schema. None when the storage has no
+    * driver-side reader or cannot type a column without Spark.
+    */
+  private def latestOnDriver(
+      p: FeatureStore.PointRead,
+      columns: Option[Seq[String]],
+      k: Int,
+      ranked: Boolean = false): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, JoinedRow, UnsafeProjection}
+    import org.apache.spark.sql.graftbridge.bridge
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val out = columns.fold(PointInTime.dropInternal(p.meta.columns))(
+      cs => Seq(EntityIdColumn, TimestampColumn) ++ cs)
+    val readCols = (Seq(EntityIdColumn, TimestampColumn, IngestKeyCol) ++ out).distinct
+    for {
+      filter <- p.filter
+      schema <- storage.localReadSchema(
+        p.meta.name, p.schemaSegments, readCols, p.meta.columnTypes)
+    } yield {
+      val predicate = bridge.optimizedCondition(spark, filter)
+      val rows = PointInTime.latestKLocal(schema, predicate, k,
+        tieBreakCols = Seq(IngestKeyCol))(
+        storage.scanSegmentsLocal(p.meta.name, p.segments, schema, Some(p.asOf),
+          bridge.pushableFilters(predicate)))
+      // every read column is nullable in the Spark kernel's output;
+      // recency_rank (row_number) is not
+      val fields = out.map(c => StructField(c, schema(c).dataType)) ++
+        Option.when(ranked)(StructField("recency_rank", IntegerType, nullable = false))
+      val rank = schema.length
+      val project = UnsafeProjection.create(
+        out.map { c =>
+          val i = schema.fieldIndex(c)
+          BoundReference(i, schema(i).dataType, nullable = true)
+        } ++ Option.when(ranked)(BoundReference(rank, IntegerType, nullable = false)))
+      val data = rows.map { case (r, n) =>
+        project(new JoinedRow(r, org.apache.spark.sql.catalyst.InternalRow(n))).copy()
+      }
+      bridge.ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        StructType(fields).map(f => AttributeReference(f.name, f.dataType, f.nullable)()),
+        data))
+    }
   }
 
   /** Filtered read of the current version with COLUMN-STATS DATA
@@ -2312,21 +2417,37 @@ final class FeatureStore(
   /** The k most recent rows per requested entity at or before
     * `timestamp`, each tagged with its 1-based `recency_rank` — the
     * "last N interactions" read ([[PointInTime.latestKPerEntity]]
-    * under the store's PIT cutoff and deterministic tie-break).
+    * under the store's PIT cutoff and deterministic tie-break). Chooses
+    * its kernel as [[get]] does: small reads are eager snapshots.
     */
   def getRecent(
       name: String,
       entityIds: Seq[Any],
       timestamp: Any,
       k: Int): DataFrame = {
-    val meta = resolveMeta(name)
-    val asOf = FeatureStore.normalizeTimestamp(timestamp)
-    val eligible = currentData(meta, Some(asOf))
-      .filter(col(TimestampColumn) <= lit(asOf))
-      .filter(col(EntityIdColumn).isin(entityIds: _*))
-    PointInTime
-      .latestKPerEntity(eligible, k, tieBreakCols = Seq(IngestKeyCol))
-      .select((meta.columns :+ "recency_rank").map(col): _*)
+    val p = recentRead(name, entityIds, timestamp, k)
+    (if (p.small) latestOnDriver(p, None, k, ranked = true) else None)
+      .getOrElse(recentOnSpark(p, k))
+  }
+
+  /** [[getRecent]] through its Spark kernel, whatever the read's size. */
+  private[graft] def getRecentOnSpark(
+      name: String, entityIds: Seq[Any], timestamp: Any, k: Int): DataFrame =
+    recentOnSpark(recentRead(name, entityIds, timestamp, k), k)
+
+  /** [[getRecent]] through its driver kernel, whatever the read's size. */
+  private[graft] def getRecentOnDriver(
+      name: String, entityIds: Seq[Any], timestamp: Any, k: Int): DataFrame =
+    latestOnDriver(recentRead(name, entityIds, timestamp, k), None, k, ranked = true)
+      .getOrElse(throw new UnsupportedOperationException(
+        s"no driver-side read for table '$name'"))
+
+  private def recentRead(
+      name: String, entityIds: Seq[Any], timestamp: Any, k: Int): FeatureStore.PointRead = {
+    val p = pointRead(name, entityIds, timestamp, None)
+    if (k < 1)
+      throw new FeatureValidationError(s"k must be >= 1, got $k")
+    p
   }
 
   /** Gap-based sessions over the stored table — see
@@ -2844,32 +2965,23 @@ final class FeatureStore(
 
   // ---------------------------------------------------------------- private
 
-  /** Current-version DataFrame including the internal tie-break column.
-    * A known as-of cutoff enables TWO pruning levels before any task
-    * runs: whole SEGMENTS whose recorded minimum timestamp is after the
-    * cutoff are dropped from the manifest here (catalog-side data
-    * skipping over [[TableMeta.segStats]] — the version-dimension
-    * analog of the reference author's partition-pruning wish,
-    * reference README.md:167), and the surviving segments' scans
-    * partition-prune on the derived period column ([[Storage.read]]).
-    * Rows a skipped segment could contribute all have ts > cutoff,
-    * which every caller filters out downstream — skipping is purely an
-    * IO saving, never a semantic change. Segments without stats
-    * (pre-stats catalogs, all-null ranges) are never skipped; when
-    * every segment skips, one is kept so the (empty) result still
-    * carries the schema.
+  /** Current-version DataFrame including the internal tie-break column,
+    * over `segments` (default: the whole manifest). A known as-of
+    * cutoff partition-prunes each segment's scan on the derived period
+    * column ([[Storage.read]]); the point reads pass the segments their
+    * filter leaves after catalog-side data skipping
+    * ([[TableMeta.segColStats]], [[pruneSegments]]) — the
+    * version-dimension analog of the reference author's
+    * partition-pruning wish (reference README.md:167). Skipping is
+    * purely an IO saving, never a semantic change.
     */
   private def currentData(
       meta: TableMeta,
-      asOf: Option[Timestamp] = None): DataFrame = {
-    val segs = meta.segmentsOf(meta.version)
-    val kept = asOf.fold(segs) { t =>
-      val k = segs.filter(s => meta.segStats.get(s).forall(_._1 <= t.getTime))
-      if (k.isEmpty) segs.take(1) else k
-    }
-    storage.readSegments(meta.name, kept, meta.columns :+ IngestKeyCol, asOf,
-      meta.columnTypes)
-  }
+      segments: Seq[Int] = Nil,
+      asOf: Option[Timestamp] = None): DataFrame =
+    storage.readSegments(meta.name,
+      if (segments.isEmpty) meta.segmentsOf(meta.version) else segments,
+      meta.columns :+ IngestKeyCol, asOf, meta.columnTypes)
 
   /** Null-safe key-addressed join on (entity_id, timestamp) — the
     * documented key-addressed contract ("every current row whose key
@@ -2993,6 +3105,49 @@ final class FeatureStore(
 }
 
 object FeatureStore {
+
+  /** The largest point read, in catalog rows of the candidate segments,
+    * that [[FeatureStore.get]] and [[FeatureStore.getRecent]] answer on
+    * the driver. The Spark read's cost barely moves with size at these
+    * scales; the driver read grows with the rows it decodes. Measured on
+    * a shared 4-core host (local[4], 2026-10-19), tables of two segments
+    * of (long entity, timestamp, two longs) over 5,000 entities, medians
+    * of the `get` and `getRecent` calls after four warm-up rounds (24
+    * calls per point in the first case, 16 in the second):
+    *   - 5 random entities: driver 57, 56, 77, 135, 212 ms against
+    *     Spark 273, 210, 220, 275, 386 ms at 20 k, 100 k, 300 k, 1 M and
+    *     2 M rows;
+    *   - 100 entities spread over the whole key range, so parquet
+    *     statistics skip little: driver 76, 110, 162, 186, 333 ms against
+    *     Spark 283, 243, 260, 233, 278 ms at 100 k, 300 k, 600 k, 1 M
+    *     and 2 M rows.
+    * The bound sits below the second case's crossover (about 1.5 M).
+    */
+  private[graft] val LocalReadMaxRows: Long = 1000000L
+
+  /** What both point-read kernels start from: the table, the cutoff,
+    * the resolved filter `timestamp <= asOf AND entity_id IN (ids)`,
+    * and the segments that filter may match under their recorded stats.
+    */
+  private final case class PointRead(
+      meta: TableMeta,
+      asOf: Timestamp,
+      entityIds: Seq[Any],
+      filter: Option[org.apache.spark.sql.catalyst.expressions.Expression],
+      segments: Seq[Int]) {
+    /** Every candidate segment has a recorded row count, and together
+      * they hold at most [[LocalReadMaxRows]] rows.
+      */
+    def small: Boolean =
+      segments.forall(meta.segRows.contains) &&
+        segments.map(meta.segRows).sum <= LocalReadMaxRows
+    /** Where the result's schema comes from: the candidates, or, when
+      * every segment is pruned, the first one (its rows all fail the
+      * filter).
+      */
+    def schemaSegments: Seq[Int] =
+      if (segments.nonEmpty) segments else meta.segmentsOf(meta.version).take(1)
+  }
 
   /** Change-feed metadata columns ([[FeatureStore.getChanges]]). */
   val ChangeTypeCol = "_change_type"

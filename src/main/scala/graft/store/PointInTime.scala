@@ -1,8 +1,11 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The temporal kernels of the engine, as pure `DataFrame => DataFrame`
   * transformations (no catalog state). There is one kernel per
@@ -82,6 +85,61 @@ object PointInTime {
       .orderBy((tsCol +: tieBreakCols).map(col(_).desc): _*)
     df.withColumn("recency_rank", row_number().over(w))
       .filter(col("recency_rank") <= k)
+  }
+
+  /** The driver-side twin of [[pitSnapshot]]'s argmax (k = 1) and of
+    * [[latestKPerEntity]], for reads small enough to answer without a
+    * Spark job: per entity, the k greatest rows of `scan` in
+    * (ts, tieBreak...) order that satisfy `predicate`, each with its
+    * 1-based rank. `predicate` is the resolved filter the Spark kernel
+    * applies, evaluated by Spark's interpreted `Predicate`; entities
+    * compare as grouping and window partitioning compare them, with NaN
+    * and -0.0 normalized. `scan` hands each row in the layout of
+    * `schema` and may reuse it; a kept row is copied.
+    */
+  private[store] def latestKLocal(
+      schema: StructType,
+      predicate: Expression,
+      k: Int,
+      entityCol: String = EntityIdColumn,
+      tsCol: String = TimestampColumn,
+      tieBreakCols: Seq[String] = Nil)(
+      scan: (InternalRow => Unit) => Unit): Seq[(InternalRow, Int)] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import scala.collection.mutable
+    def ref(c: String): BoundReference = {
+      val i = schema.fieldIndex(c)
+      BoundReference(i, schema(i).dataType, nullable = true)
+    }
+    val keep = Predicate.createInterpreted(
+      predicate.transform { case a: AttributeReference => ref(a.name) })
+    keep.initialize(0)
+    val key = UnsafeProjection.create(
+      Seq(org.apache.spark.sql.graftbridge.bridge.normalizeFloats(ref(entityCol))))
+    val own = UnsafeProjection.create(schema)
+    val newestFirst = new InterpretedOrdering(
+      (tsCol +: tieBreakCols).map(c => SortOrder(ref(c), Descending)))
+    // per entity, its k newest rows so far, newest first
+    val best = mutable.HashMap.empty[UnsafeRow, mutable.ArrayBuffer[UnsafeRow]]
+    scan { row =>
+      if (keep.eval(row)) {
+        val e = key(row)
+        val rows = best.getOrElse(e, {
+          val fresh = mutable.ArrayBuffer.empty[UnsafeRow]
+          best.update(e.copy(), fresh)
+          fresh
+        })
+        val at = rows.indexWhere(newestFirst.compare(row, _) < 0) match {
+          case -1 => rows.length
+          case i => i
+        }
+        if (at < k) {
+          rows.insert(at, own(row).copy())
+          if (rows.length > k) rows.remove(k)
+        }
+      }
+    }
+    best.valuesIterator.flatMap(_.iterator.zipWithIndex.map { case (r, i) => (r, i + 1) }).toSeq
   }
 
   /** PIT snapshot read: time filter → entity filter → latest-per-entity →
@@ -430,7 +488,7 @@ object PointInTime {
   /** Engine-internal columns (e.g. the deterministic tie-break id added
     * at registration) never appear in query output.
     */
-  private def dropInternal(cols: Seq[String]): Seq[String] =
+  private[store] def dropInternal(cols: Seq[String]): Seq[String] =
     cols.filterNot(_.startsWith("_"))
 
   /** When an explicit projection was requested, restrict the feature

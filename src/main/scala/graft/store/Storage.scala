@@ -1,9 +1,11 @@
 package graft.store
 
 import java.net.URI
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{ArrayType, DataType, DateType, MapType, StructField, StructType}
 
 /** The STORAGE SEAM of the feature store: version-addressed table data
@@ -120,6 +122,29 @@ trait VersionStorage {
   def readSegments(name: String, segments: Seq[Int], columns: Seq[String],
       asOf: Option[java.sql.Timestamp] = None,
       columnTypes: Map[String, String] = Map.empty): DataFrame
+  /** The schema [[readSegments]] gives the same arguments, found
+    * without a file listing (and without a Spark job once the segments'
+    * schemas are memoized); None when this storage has no driver-side
+    * reader ([[scanSegmentsLocal]]), when a column is
+    * missing with no recorded type, or when the segments disagree on a
+    * column's type. The caller then reads through [[readSegments]],
+    * which raises or widens as Spark does.
+    */
+  def localReadSchema(name: String, segments: Seq[Int], columns: Seq[String],
+      columnTypes: Map[String, String]): Option[StructType] = None
+  /** Read the rows of `segments` on the driver, with no Spark job, and
+    * hand each to `f` in the layout of `schema` (from
+    * [[localReadSchema]]). A column a segment predates reads as null.
+    * Rows are reused between calls: `f` copies what it keeps. With an
+    * as-of cutoff, partitions after it are skipped as [[readSegments]]
+    * skips them, and `filters` skip parquet row groups; both are hints,
+    * so `f` still sees rows its own predicate rejects.
+    */
+  def scanSegmentsLocal(name: String, segments: Seq[Int], schema: StructType,
+      asOf: Option[java.sql.Timestamp],
+      filters: Seq[Filter])(f: InternalRow => Unit): Unit =
+    throw new UnsupportedOperationException(
+      s"${getClass.getSimpleName} has no driver-side segment reader")
   def deleteVersion(name: String, version: Int): Unit
   def deleteTable(name: String): Unit
   /** Move a table's entire physical lineage (segments, change data,
@@ -390,6 +415,96 @@ final class Storage(
       padded.select(columns.map(col): _*)
     }.reduce(_.unionByName(_))
 
+  /** Per column: the type every segment that stores it agrees on, or
+    * the recorded type where none does (the typed-null padding of
+    * [[readSegments]]). Memoized segment schemas are nullable at every
+    * depth, so this is also the type `unionByName` would merge.
+    */
+  override def localReadSchema(
+      name: String,
+      segments: Seq[Int],
+      columns: Seq[String],
+      columnTypes: Map[String, String]): Option[StructType] = {
+    val stored = segments.map(s => Storage.schemaOf(spark, versionPath(name, s)))
+    val fields = columns.map { c =>
+      stored.flatMap(_.find(_.name == c)).map(_.dataType).distinct match {
+        case Seq(t) => Some(StructField(c, t))
+        case Seq()  => columnTypes.get(c).map(t => StructField(c, DataType.fromDDL(t)))
+        case _      => None
+      }
+    }
+    Option.when(fields.forall(_.isDefined))(StructType(fields.flatten))
+  }
+
+  /** Spark's own parquet reader, run on the driver over each data file:
+    * INT96, datetime rebase modes, decimals, nested types and columns a
+    * file lacks convert exactly as in a Spark scan. At most one reader
+    * is built per call; files are found with `listStatus` (a `listFiles` walk
+    * loads permissions, one forked `stat` per file without native
+    * Hadoop).
+    */
+  override def scanSegmentsLocal(
+      name: String,
+      segments: Seq[Int],
+      schema: StructType,
+      asOf: Option[java.sql.Timestamp],
+      filters: Seq[Filter])(f: InternalRow => Unit): Unit = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    // built on the first file: a read every file of which is pruned
+    // broadcasts no configuration
+    lazy val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(spark, schema, new StructType(), schema,
+        filters, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+    // a partition holds rows whose period is its value, and the period
+    // never exceeds the local date of its timestamp: keep the partitions
+    // `period(ts) <= period(asOf)` keeps, as [[readSegments]] does
+    val lastDay = asOf.map(t => java.time.LocalDateTime.ofInstant(t.toInstant,
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+        spark.conf.get("spark.sql.session.timeZone"))).toLocalDate)
+    def keep(partition: String): Boolean = lastDay.forall { d =>
+      // the default partition holds null timestamps, which no cutoff keeps
+      partition != "__HIVE_DEFAULT_PARTITION__" &&
+        scala.util.Try(java.time.LocalDate.parse(partition)).toOption.forall(!_.isAfter(d))
+    }
+    segments.foreach { s =>
+      dataFiles(new Path(versionPath(name, s)), keep).foreach { st =>
+        val rows = read(PartitionedFile(InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromFileStatus(st), 0L, st.getLen,
+          Array.empty[String], st.getModificationTime, st.getLen))
+        try rows.foreach(f)
+        finally rows match {
+          case c: java.io.Closeable => c.close()
+          case _ => ()
+        }
+      }
+    }
+  }
+
+  /** The visible data files of one segment directory: its `_ts_date=`
+    * partitions that `keepPartition` admits, plus any part file at the
+    * top (a zero-row segment's typed file). Hidden and `_`-prefixed
+    * names are skipped, as Spark's file index skips them.
+    */
+  private def dataFiles(
+      dir: Path, keepPartition: String => Boolean): Seq[FileStatus] = {
+    val f = fs(dir)
+    def visibleFile(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    val prefix = s"$DateCol="
+    f.listStatus(dir).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory)
+        if (n.startsWith(prefix) && keepPartition(n.drop(prefix.length)))
+          f.listStatus(st.getPath).toSeq.filter(visibleFile)
+        else Nil
+      else if (visibleFile(st)) Seq(st)
+      else Nil
+    }
+  }
+
   /** One plain (unpartitioned) parquet write — change sets are small
     * relative to their mutation; an Observation rides the write for
     * the row count, as in [[write]].
@@ -522,6 +637,12 @@ object Storage {
         schemaMemo.put(path, df.schema)
         df
     }
+
+  /** The schema a read of `path` resolves: memoized, else inferred
+    * once (a footer-inference job) and memoized.
+    */
+  private[store] def schemaOf(spark: SparkSession, path: String): StructType =
+    schemaMemo.getOrElse(path, readParquetMemo(spark, path).schema)
 
   /** The memoized schema of `path`, if any (seeded or inferred). */
   private[graft] def memoizedSchema(path: String): Option[StructType] =

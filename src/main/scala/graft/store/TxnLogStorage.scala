@@ -329,6 +329,24 @@ final class TxnLogStorage(
     inner.readSegments(name, segments, columns, asOf, columnTypes)
   }
 
+  override def localReadSchema(
+      name: String,
+      segments: Seq[Int],
+      columns: Seq[String],
+      columnTypes: Map[String, String]): Option[org.apache.spark.sql.types.StructType] =
+    inner.localReadSchema(name, segments, columns, columnTypes)
+
+  override def scanSegmentsLocal(
+      name: String,
+      segments: Seq[Int],
+      schema: org.apache.spark.sql.types.StructType,
+      asOf: Option[java.sql.Timestamp],
+      filters: Seq[org.apache.spark.sql.sources.Filter])(
+      f: org.apache.spark.sql.catalyst.InternalRow => Unit): Unit = {
+    segments.foreach(requireCommitted(name, _))
+    inner.scanSegmentsLocal(name, segments, schema, asOf, filters)(f)
+  }
+
   /** Vacuum-time reclamation: data dir AND its log entry go together
     * (Delta's VACUUM + log cleanup, in one step, under the retire
     * ledger's grace window).

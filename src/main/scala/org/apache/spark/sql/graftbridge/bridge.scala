@@ -96,6 +96,40 @@ object bridge {
   def executedPlan(df: DataFrame): org.apache.spark.sql.execution.SparkPlan =
     df.asInstanceOf[ClassicDataset[_]].queryExecution.executedPlan
 
+  /** `condition` (resolved) in the form a Spark plan evaluates it:
+    * literals folded, then `IN` lists deduplicated and turned into `=`
+    * or `INSET` by list size, under this session's settings.
+    */
+  def optimizedCondition(spark: SparkSession, condition: Expression): Expression = {
+    import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, OptimizeIn}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(
+        spark.asInstanceOf[ClassicSparkSession].sessionState.conf) {
+      val plan = Filter(condition, LocalRelation(condition.references.toSeq))
+      OptimizeIn(ConstantFolding(plan)) match {
+        case Filter(c, _) => c
+        case other => throw new IllegalStateException(s"unexpected plan $other")
+      }
+    }
+  }
+
+  /** The conjuncts of `condition` a file source can take as row-group
+    * skipping hints, translated as a Spark scan translates them.
+    */
+  def pushableFilters(condition: Expression): Seq[org.apache.spark.sql.sources.Filter] =
+    condition match {
+      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
+        pushableFilters(l) ++ pushableFilters(r)
+      case c => org.apache.spark.sql.execution.datasources.DataSourceStrategy
+        .translateFilter(c, supportNestedPredicatePushdown = true).toSeq
+    }
+
+  /** `e` with NaN and -0.0 made canonical at every depth — the form
+    * grouping and window partitioning compare keys in.
+    */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** DSv2 `Predicate` → V1 `Filter`, when expressible (Spark's own
     * conversion; `None` = not translatable, caller must reject).
     */

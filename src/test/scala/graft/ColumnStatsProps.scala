@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.store.FeatureStore
 
@@ -95,7 +95,7 @@ object ColumnStatsProps extends Properties("StatsPruning") with SparkTestBase {
   } yield (s1, s2, s3, preds)
 
   property("scanWhere(pred) rows == full filter rows, always") =
-    forAll(genCase) { case (s1, s2, s3, preds) =>
+    forAllNoShrink(genCase) { case (s1, s2, s3, preds) =>
       val root = java.nio.file.Files
         .createTempDirectory("graft_stats_props").toString
       val store = new FeatureStore(spark, root)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.store.{FeatureStore, FeatureValidationError, PointInTime, WindowFeatures}
 
@@ -106,7 +106,7 @@ object DifferentialProps extends Properties("Differential") {
     */
   private def differential[A](g: Gen[A])(f: A => Either[String, Unit]): Prop =
     if (!Duck.available) Prop.passed
-    else forAll(g) { a =>
+    else forAllNoShrink(g) { a =>
       val r = f(a)
       Prop.propBoolean(r.isRight) :| r.left.getOrElse("")
     }

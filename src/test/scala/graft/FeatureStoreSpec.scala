@@ -208,12 +208,35 @@ class FeatureStoreSpec extends AnyFunSuite with SparkTestBase {
       ("u", ts("2024-01-10"), 2.0),
       ("u", ts("2024-02-20"), 3.0)).toDF("entity_id", "timestamp", "val")
     store.register("t", multiDay)
-    val df = store.get("t", Seq("u"), ts("2024-01-15"))
+    val df = store.getOnSpark("t", Seq("u"), ts("2024-01-15"))
     // the derived _ts_date predicate must reach the scan as a partition
     // filter, so the Feb file is never read
     val scan = df.queryExecution.executedPlan.toString
     assert(scan.contains("_ts_date"), s"no partition filter in plan:\n$scan")
     assert(df.collect().head.getAs[Double]("val") == 2.0)
+  }
+
+  test("a small PIT read on the driver never opens a partition after its cutoff") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_driver_prune").toString
+    val store = new FeatureStore(spark, root)
+    store.register("t", Seq(
+      ("u", ts("2024-01-01"), 1.0),
+      ("u", ts("2024-01-10"), 2.0),
+      ("u", ts("2024-02-20"), 3.0)).toDF("entity_id", "timestamp", "val"))
+    // the February partition's data files become unreadable
+    val feb = java.nio.file.Paths.get(root, "t", "v=1", "_ts_date=2024-02-01")
+    val files = java.nio.file.Files.list(feb).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    files.foreach(f => java.nio.file.Files.write(f, "not parquet".getBytes))
+    assert(store.get("t", Seq("u"), ts("2024-01-15"))
+      .collect().map(_.getAs[Double]("val")).toSeq == Seq(2.0))
+    assert(store.getRecent("t", Seq("u"), ts("2024-01-31"), 5)
+      .collect().map(_.getAs[Double]("val")).toSeq == Seq(2.0, 1.0))
+    // a cutoff in February must open the damaged files, and fail there
+    intercept[Exception](store.get("t", Seq("u"), ts("2024-02-25")).collect())
   }
 
   test("delete removes table, returns false for missing") {

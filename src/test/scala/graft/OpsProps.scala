@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.ops.{Dedup, Sampling, Similarity}
 
@@ -33,7 +33,7 @@ object OpsProps extends Properties("Ops") {
   }
 
   property("temperatureSample nests: hotter (smaller 1/T) samples are subsets") =
-    forAll(genStrata, Gen.choose(0, 1000), Gen.choose(0, 1000)) { (rows, a, b) =>
+    forAllNoShrink(genStrata, Gen.choose(0, 1000), Gen.choose(0, 1000)) { (rows, a, b) =>
       val (lo, hi) = (math.min(a, b), math.max(a, b))
       val df = toDF(rows)
       def ids(invT: Int) = Sampling.temperatureSample(df, invT)
@@ -49,7 +49,7 @@ object OpsProps extends Properties("Ops") {
   } yield ws.zipWithIndex.map { case (w, i) => (i.toLong, w) }
 
   property("systematicSample emits exactly k picks over any weights") =
-    forAll(genWeighted, Gen.choose(1L, 50L)) { (rows, k) =>
+    forAllNoShrink(genWeighted, Gen.choose(1L, 50L)) { (rows, k) =>
       val s = spark
       import s.implicits._
       val df = rows.toDF("doc_id", "w")
@@ -65,7 +65,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("weightedSample keeps every heavy row and never a zero-weight row") =
-    forAll(genWeighted, Gen.choose(1L, 50L)) { (rows, k) =>
+    forAllNoShrink(genWeighted, Gen.choose(1L, 50L)) { (rows, k) =>
       val s = spark
       import s.implicits._
       val df = rows.toDF("doc_id", "w")
@@ -82,7 +82,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("crossDupSpans equals the O(n²) diagonal-run model") =
-    forAll(
+    forAllNoShrink(
       Gen.choose(2, 6).flatMap(n => Gen.listOfN(n,
         Gen.choose(4, 14).flatMap(len =>
           Gen.listOfN(len, Gen.oneOf("a", "b", "c", "d"))))),
@@ -125,7 +125,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("bm25TopK equals the nested-loop integer model") =
-    forAll(
+    forAllNoShrink(
       Gen.choose(2, 8).flatMap(n => Gen.listOfN(n,
         Gen.choose(2, 12).flatMap(len =>
           Gen.listOfN(len, Gen.oneOf("x", "y", "z", "q", "r"))))),
@@ -167,7 +167,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("mmrRerank equals the local greedy model") =
-    forAll(
+    forAllNoShrink(
       Gen.choose(3, 10).flatMap(n => Gen.listOfN(n,
         Gen.listOfN(4, Gen.choose(-5, 5).map(_.toFloat / 4f)))),
       Gen.choose(1, 3), Gen.oneOf(0, 300, 700, 1000)) { (vecsRaw, k, lamPm) =>
@@ -220,7 +220,7 @@ object OpsProps extends Properties("Ops") {
   } yield docs.zipWithIndex.map { case (toks, i) => (i.toLong, toks) }
 
   property("incrementalNearDupPairs agrees with the all-pairs exact op on its output") =
-    forAll(genCorpus) { docs =>
+    forAllNoShrink(genCorpus) { docs =>
       val s = spark
       import s.implicits._
       val df = docs.map { case (id, toks) => (id, toks.mkString(" ")) }
@@ -240,7 +240,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("ngramJaccardPairs physical strategies agree (size-carry vs coarse one-shuffle)") =
-    forAll(genCorpus) { docs =>
+    forAllNoShrink(genCorpus) { docs =>
       val s = spark
       import s.implicits._
       val df = docs.map { case (id, toks) => (id, toks.mkString(" ")) }
@@ -282,7 +282,7 @@ object OpsProps extends Properties("Ops") {
   }
 
   property("cosineNearDupPairsLsh agrees with the exact broadcast kernel (values AND cosine bits)") =
-    forAll(genVecClusters) { rows =>
+    forAllNoShrink(genVecClusters) { rows =>
       val df = toVecDF(rows)
       def pairs(res: DataFrame) = res.collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -293,7 +293,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("allPairsTopKIvf with total probe coverage equals the exact all-pairs top-k") =
-    forAll(genVecClusters, Gen.choose(1, 5)) { (rows, k) =>
+    forAllNoShrink(genVecClusters, Gen.choose(1, 5)) { (rows, k) =>
       val df = toVecDF(rows)
       def rowsOf(res: DataFrame) = res.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
@@ -305,7 +305,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("frameSample windows DECODED audio exactly as the reference model") =
-    forAll(
+    forAllNoShrink(
       Gen.resize(30, Gen.listOf(Gen.chooseNum(Short.MinValue, Short.MaxValue))),
       Gen.choose(1, 5), Gen.choose(1, 5)) { (samplesL, frameLen, stride) =>
       val s = spark
@@ -330,7 +330,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("embeddingDriftSummary equals the sequential BigInt model bit-for-bit") =
-    forAll(
+    forAllNoShrink(
       Gen.choose(2, 5).flatMap(d =>
         Gen.choose(2, 24).flatMap(n =>
           Gen.listOfN(n, Gen.listOfN(d, Gen.choose(-1000, 1000).map(_ / 500.0f)))))) { vecs =>
@@ -374,7 +374,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("knnLabelNoiseAuto under a forced tiny budget equals the exact audit") =
-    forAll(genVecClusters) { rows =>
+    forAllNoShrink(genVecClusters) { rows =>
       val df = toVecDF(rows)
       def rowsOf(res: DataFrame) = res.collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
@@ -406,7 +406,7 @@ object OpsProps extends Properties("Ops") {
   }
 
   property("rrfFuse is a permutation-stable, symmetric function of the two rankings") =
-    forAll(genRankedPair, Gen.choose(1, 8),
+    forAllNoShrink(genRankedPair, Gen.choose(1, 8),
       Gen.choose(Long.MinValue, Long.MaxValue)) { case ((a, b), k, seed) =>
       val s = spark
       import s.implicits._
@@ -430,7 +430,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("annTopKProjected with candidates >= corpus equals exact brute force") =
-    forAll(
+    forAllNoShrink(
       Gen.choose(4, 14).flatMap(n => Gen.listOfN(n,
         Gen.listOfN(4, Gen.choose(-8, 8).map(_.toFloat / 4f)))),
       Gen.choose(1, 3)) { (vecsRaw, k) =>
@@ -463,7 +463,7 @@ object OpsProps extends Properties("Ops") {
     }
 
   property("mmrRerankPool over an IVF pool selects only from the pool") =
-    forAll(
+    forAllNoShrink(
       Gen.choose(5, 12).flatMap(n => Gen.listOfN(n,
         Gen.listOfN(4, Gen.choose(-5, 5).map(_.toFloat / 4f)))),
       Gen.choose(1, 4), Gen.oneOf(0, 500, 1000)) { (vecsRaw, k, lamPm) =>

@@ -78,7 +78,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       .createTempDirectory("graft_prune_spec").toString
     val store = new graft.store.FeatureStore(spark, root)
     store.register("t", sampleFeatures) // spans 2024-01 and 2024-02
-    val df = store.get("t", Seq("user_1", "user_2"), ts("2024-01-20"))
+    val df = store.getOnSpark("t", Seq("user_1", "user_2"), ts("2024-01-20"))
     val scans = executedNodes(df).collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.store.PointInTime
 import graft.store.PointInTime.ViewTable
@@ -49,7 +49,7 @@ object PointInTimeProps extends Properties("PointInTime") {
   private def latestModel(rows: List[R]): Map[String, R] =
     rows.groupBy(_.e).map { case (e, rs) => e -> rs.maxBy(r => (r.day, r.seq)) }
 
-  property("pitSnapshot equals reference model") = forAll(
+  property("pitSnapshot equals reference model") = forAllNoShrink(
     genRows,
     Gen.choose(1, 25),
     Gen.someOf("a", "b", "c", "d", "ghost")) { (rows, cutoff, idsRaw) =>
@@ -68,7 +68,7 @@ object PointInTimeProps extends Properties("PointInTime") {
     got == want
   }
 
-  property("pitSnapshotForEntities (semi-join path) equals model") = forAll(
+  property("pitSnapshotForEntities (semi-join path) equals model") = forAllNoShrink(
     genRows,
     Gen.choose(1, 25),
     Gen.someOf("a", "b", "c", "d", "ghost")) { (rows, cutoff, idsRaw) =>
@@ -96,7 +96,7 @@ object PointInTimeProps extends Properties("PointInTime") {
       day <- Gen.choose(1, 25)
     } yield (e, day))
 
-  property("asOfJoin equals per-spine-row model (incl. duplicates)") = forAll(
+  property("asOfJoin equals per-spine-row model (incl. duplicates)") = forAllNoShrink(
     genRows, genSpine) { (rows, spine) =>
     val s = spark
     import s.implicits._
@@ -123,7 +123,7 @@ object PointInTimeProps extends Properties("PointInTime") {
     (got == want) && got.length <= effSpine.length
   }
 
-  property("asOfJoinLeft equals null-extending per-spine-row model") = forAll(
+  property("asOfJoinLeft equals null-extending per-spine-row model") = forAllNoShrink(
     genRows, genSpine) { (rows, spine) =>
     val s = spark
     import s.implicits._
@@ -172,7 +172,7 @@ object PointInTimeProps extends Properties("PointInTime") {
     } yield (e, day, tag))
   } yield rows :+ rows.head // a duplicate spine row, always
 
-  property("n-table view equals per-spine-row model") = forAll(
+  property("n-table view equals per-spine-row model") = forAllNoShrink(
     genTable(0L), genTable(311L), genTable(577L), genViewSpine) { (ra, rb, rc, spine) =>
     val s = spark
     import s.implicits._

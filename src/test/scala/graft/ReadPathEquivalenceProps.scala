@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.Prop.{forAllNoShrink, propBoolean}
 
 import graft.store.FeatureStore
 
@@ -115,7 +115,7 @@ object ReadPathEquivalenceProps extends Properties("ReadPathEquivalence") {
   // ------------------------------------------------------- properties
 
   property("V1 relation ≡ V2 catalog scan ≡ Scala API, current version") =
-    forAll(predGen(2), projGen) { (pred, proj) =>
+    forAllNoShrink(predGen(2), projGen) { (pred, proj) =>
       val truth = canon(new FeatureStore(spark, root)
         .getVersion("t", 3).filter(pred).selectExpr(proj: _*))
       val v1 = canon(v1Read(None).filter(pred).selectExpr(proj: _*))
@@ -125,7 +125,7 @@ object ReadPathEquivalenceProps extends Properties("ReadPathEquivalence") {
     }
 
   property("V1 versionAsOf ≡ V2 VERSION AS OF, filtered + projected") =
-    forAll(predGen(1), projGen, Gen.choose(1, 3)) { (pred, proj, ver) =>
+    forAllNoShrink(predGen(1), projGen, Gen.choose(1, 3)) { (pred, proj, ver) =>
       val truth = canon(new FeatureStore(spark, root)
         .getVersion("t", ver).filter(pred).selectExpr(proj: _*))
       val v1 = canon(v1Read(Some(ver)).filter(pred).selectExpr(proj: _*))

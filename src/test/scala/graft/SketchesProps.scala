@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.functions.Hashing
 import graft.ops.{Dedup, Similarity, Sketches, TextAnalysis}
@@ -48,7 +48,7 @@ object SketchesProps extends Properties("Sketches") {
       if (sgn > 0) 1L << i else 0L
     }.sum
 
-  property("simhashPairs (pigeonhole) equals all-pairs model") = forAll(
+  property("simhashPairs (pigeonhole) equals all-pairs model") = forAllNoShrink(
     genDocs, Gen.choose(0, 6)) { (docs, maxHamming) =>
     val got = Dedup.simhashPairs(toDF(docs), maxHamming)
       .collect()
@@ -63,7 +63,7 @@ object SketchesProps extends Properties("Sketches") {
     got == want
   }
 
-  property("hllDistinct registers equal the sequential model") = forAll(genDocs) { docs =>
+  property("hllDistinct registers equal the sequential model") = forAllNoShrink(genDocs) { docs =>
     val s = spark
     import s.implicits._
     val rows = docs.flatMap { case (id, toks) => toks.map(t => (s"g${id % 2}", t)) }
@@ -90,7 +90,7 @@ object SketchesProps extends Properties("Sketches") {
     got == want
   }
 
-  property("chunkTokens equals sliding-window model") = forAll(
+  property("chunkTokens equals sliding-window model") = forAllNoShrink(
     genDocs, Gen.choose(1, 6), Gen.choose(1, 6)) { (docs, chunk, stride) =>
     val got = TextAnalysis.chunkTokens(toDF(docs), chunk, stride)
       .collect()
@@ -112,7 +112,7 @@ object SketchesProps extends Properties("Sketches") {
       n, Gen.listOfN(d, Gen.oneOf(0.5f, 1.5f, -2.25f, 0.1f, -0.0039f, 7.75f)))
   } yield vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
 
-  property("all-queries top-k equals the window-form model, bit-exact") = forAll(
+  property("all-queries top-k equals the window-form model, bit-exact") = forAllNoShrink(
     genVecs, Gen.choose(1, 4)) { (vecs, k) =>
     val s = spark
     import s.implicits._

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.Prop.{forAllNoShrink, propBoolean}
 
 import graft.store.{FeatureStore, FeatureValidationError}
 
@@ -211,7 +211,7 @@ object SqlDmlProps extends Properties("SqlDmlMerge") {
   }
 
   property("UPDATE / DELETE ≡ row-addressed model") =
-    forAll(targetGen, stmtGen) { (target, st) =>
+    forAllNoShrink(targetGen, stmtGen) { (target, st) =>
       val s = spark
       import s.implicits._
       val root = java.nio.file.Files
@@ -252,7 +252,7 @@ object SqlDmlProps extends Properties("SqlDmlMerge") {
     }
 
   property("MERGE ≡ row-addressed SQL-standard model") =
-    forAll(targetGen, sourceGen, actionsGen) { (target, source, a) =>
+    forAllNoShrink(targetGen, sourceGen, actionsGen) { (target, source, a) =>
       val s = spark
       import s.implicits._
       val root = java.nio.file.Files

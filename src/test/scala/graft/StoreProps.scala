@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.store.{FeatureStore, FeatureTableNotFoundError}
 
@@ -194,7 +194,7 @@ object StoreProps extends Properties("FeatureStore") {
     */
   private def lifecycleProp(
       factory: (org.apache.spark.sql.SparkSession, String, String) => graft.store.VersionStorage) =
-    forAll(genOps) { ops =>
+    forAllNoShrink(genOps) { ops =>
       val root = java.nio.file.Files
         .createTempDirectory("graft_store_props").toString
       val maxVersions = 3
@@ -436,7 +436,7 @@ object StoreProps extends Properties("FeatureStore") {
     * delete race, not part of the arbitration contract.
     */
   property("two alternating stores on one txn-log root keep every retained version exact") =
-    forAll(genOpsNoBatch) { ops =>
+    forAllNoShrink(genOpsNoBatch) { ops =>
       val root = java.nio.file.Files
         .createTempDirectory("graft_store_props_mw").toString
       val maxVersions = 3
@@ -589,7 +589,7 @@ object StoreProps extends Properties("FeatureStore") {
     * component across segments.
     */
   property("null-keyed upsert/append/delete match the null-safe multiset model") =
-    forAll(genNOps) { case (init, ops) =>
+    forAllNoShrink(genNOps) { case (init, ops) =>
       val root = java.nio.file.Files
         .createTempDirectory("graft_store_props_nk").toString
       val store = new FeatureStore(spark, root, maxVersions = 20)
@@ -697,7 +697,7 @@ object StoreProps extends Properties("FeatureStore") {
     * deltas may re-write identical current rows, which must cancel.
     */
   property("upsert and rewrite change sets equal the EXCEPT ALL snapshot oracle") =
-    forAll(genCOps) { case (base, appended, ops) =>
+    forAllNoShrink(genCOps) { case (base, appended, ops) =>
       import org.apache.spark.sql.functions.{col, lit}
       val root = java.nio.file.Files
         .createTempDirectory("graft_store_props_cs").toString

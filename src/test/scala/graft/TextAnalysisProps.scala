@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.functions.Hashing
 import graft.ops.{Dedup, Similarity, TextAnalysis}
@@ -34,7 +34,7 @@ object TextAnalysisProps extends Properties("TextAnalysis") {
       .toDF("doc_id", "text")
   }
 
-  property("bigramRepetition equals sliding-window model") = forAll(genDocs) { docs =>
+  property("bigramRepetition equals sliding-window model") = forAllNoShrink(genDocs) { docs =>
     val got = TextAnalysis
       .bigramRepetition(toDF(docs))
       .collect()
@@ -55,7 +55,7 @@ object TextAnalysisProps extends Properties("TextAnalysis") {
     got == want
   }
 
-  property("tfIdfTopTerm equals sequential tf/df model") = forAll(genDocs) { docs =>
+  property("tfIdfTopTerm equals sequential tf/df model") = forAllNoShrink(genDocs) { docs =>
     val got = TextAnalysis
       .tfIdfTopTerm(toDF(docs))
       .collect()
@@ -81,7 +81,7 @@ object TextAnalysisProps extends Properties("TextAnalysis") {
   }
 
   property("decontaminateBloom equals exact decontaminate on random splits") =
-    forAll(genDocs, Gen.choose(2, 4)) { (docs, n) =>
+    forAllNoShrink(genDocs, Gen.choose(2, 4)) { (docs, n) =>
       // random corpus/eval split: small vocab ("a","b","c","dd","e1")
       // makes cross-doc n-gram overlap dense; odd splits also produce
       // EMPTY eval sets and eval docs shorter than any n-gram — the
@@ -102,7 +102,7 @@ object TextAnalysisProps extends Properties("TextAnalysis") {
       }
     }
 
-  property("duplicateSpans equals sequential window-hash model") = forAll(genDocs) { docs =>
+  property("duplicateSpans equals sequential window-hash model") = forAllNoShrink(genDocs) { docs =>
     val width = 3; val stride = 2
     // model: hash every width-token window at stride positions, count
     // docs and occurrences per hash, keep hashes in >= 2 distinct docs
@@ -123,7 +123,7 @@ object TextAnalysisProps extends Properties("TextAnalysis") {
     got == model
   }
 
-  property("bpeTopPairs equals sequential pair-count model") = forAll(genDocs) { docs =>
+  property("bpeTopPairs equals sequential pair-count model") = forAllNoShrink(genDocs) { docs =>
     val counts = scala.collection.mutable.Map.empty[String, Long]
     docs.foreach { case (_, toks) =>
       toks.foreach { t =>
@@ -148,7 +148,7 @@ object TextAnalysisProps extends Properties("TextAnalysis") {
       b <- Gen.choose(0L, 15L).suchThat(_ != a)
     } yield (math.min(a, b), math.max(a, b)))
 
-  property("connectedComponents equals union-find model (both paths)") = forAll(
+  property("connectedComponents equals union-find model (both paths)") = forAllNoShrink(
     genPairs, Gen.oneOf(0L, Long.MaxValue)) { (pairs, threshold) =>
     // threshold 0 forces the distributed iterative path, MaxValue the
     // driver union-find path — both must match the model
@@ -184,7 +184,7 @@ object TextAnalysisProps extends Properties("TextAnalysis") {
         Gen.listOfN(d, Gen.oneOf(0.0f, 1.5f, -2.25f, 0.1f, -0.0039f, 7.75f))))
   } yield vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
 
-  property("quantizeInt8 equals per-element model") = forAll(genVecs) { vecs =>
+  property("quantizeInt8 equals per-element model") = forAllNoShrink(genVecs) { vecs =>
     val s = spark
     import s.implicits._
     val got = Similarity

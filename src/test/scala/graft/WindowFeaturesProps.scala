@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.store.{PointInTime, WindowFeatures}
 import graft.store.WindowFeatures.WindowAgg
@@ -60,7 +60,7 @@ object WindowFeaturesProps extends Properties("WindowFeatures") {
     i <- Gen.frequency(4 -> Gen.choose(-50, 50).map(Option(_)), 1 -> Gen.const(None))
   } yield W(e, day, v, i)))
 
-  property("windowAggJoin equals per-spine-row model") = forAll(
+  property("windowAggJoin equals per-spine-row model") = forAllNoShrink(
     genWRows, genSpine, Gen.choose(1, 10)) { (rows, spineRaw, wDays) =>
     // probes at every feature row's own day and exactly w and 2 days
     // later (its row sits on the excluded lower edge there), plus a
@@ -111,7 +111,7 @@ object WindowFeaturesProps extends Properties("WindowFeatures") {
     got == want
   }
 
-  property("sessionize equals sequential-walk model") = forAll(
+  property("sessionize equals sequential-walk model") = forAllNoShrink(
     genRows, Gen.choose(1, 6)) { (rows, gapDays) =>
     val got = WindowFeatures
       .sessionize(toDF(rows), gapDays * 86400L, tieBreakCols = Seq("seq"))
@@ -136,7 +136,7 @@ object WindowFeaturesProps extends Properties("WindowFeatures") {
     got == want
   }
 
-  property("latestKPerEntity equals rank model") = forAll(
+  property("latestKPerEntity equals rank model") = forAllNoShrink(
     genRows, Gen.choose(1, 5)) { (rows, k) =>
     val got = PointInTime
       .latestKPerEntity(toDF(rows), k, tieBreakCols = Seq("seq"))
