@@ -4,8 +4,10 @@ import java.sql.Timestamp
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.graftbridge.bridge
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType, TimestampType}
 
 import scala.collection.immutable.SortedMap
 
@@ -51,12 +53,16 @@ final class FeatureStore(
       s"max_versions must be >= 1, got $maxVersions")
 
   import Validation.{EntityIdColumn, TimestampColumn}
+  import FeatureStore.{SingleTaskWriteMaxRows, localRowBound, recordedRows, within}
 
   private val root =
     Option(storageRoot).getOrElse(Storage.defaultRoot())
   private val storage: VersionStorage =
     storageFactory(spark, root, partitionGranularity)
   private val catalog = new Catalog
+  /** [[typedEmptyFrame]]'s probes: table -> (columns, types, frame). */
+  private val probes = scala.collection.concurrent.TrieMap
+    .empty[String, (Seq[String], Seq[String], DataFrame)]
   // Reopen an existing store: the catalog file under the root (written
   // on every mutation) restores tables, versions and schemas. Over an
   // arbitrating storage the transaction log is the version authority —
@@ -133,7 +139,8 @@ final class FeatureStore(
       val prepared = prepare(df)
       val (guarded, checksOk) =
         constraintGuard(cur.fold(Map.empty[String, String])(_.constraints), prepared)
-      val wr = storage.write(name, v, guarded, EntityIdColumn, TimestampColumn)
+      val wr = writeSegment(name, v, guarded,
+        within(localRowBound(df), SingleTaskWriteMaxRows))
       verifyOrScrap(name, v)(checksOk)
       val now = System.currentTimeMillis()
       storage.commitVersion(name, v, CommitMeta(
@@ -237,16 +244,27 @@ final class FeatureStore(
 
   /** An empty frame with exactly the table's current schema, built
     * from the catalog's type record — no storage touched; None when
-    * the record is incomplete (legacy catalogs).
+    * the record is incomplete (legacy catalogs). Built once per table
+    * and kept while its columns and their types stay the same: every
+    * `get`, `getRecent` and key-range pruning resolves its filter
+    * against it.
     */
   private def typedEmptyFrame(meta: TableMeta): Option[DataFrame] =
-    Option.when(meta.columns.forall(meta.columnTypes.contains))(
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(meta.columns.map(c =>
-          org.apache.spark.sql.types.StructField(c,
-            org.apache.spark.sql.types.DataType.fromDDL(
-              meta.columnTypes(c)))))))
+    Option.when(meta.columns.forall(meta.columnTypes.contains)) {
+      val types = meta.columns.map(meta.columnTypes)
+      probes.get(meta.name) match {
+        case Some((cols, ts, probe)) if cols == meta.columns && ts == types => probe
+        case _ =>
+          val probe = spark.createDataFrame(
+            new java.util.ArrayList[org.apache.spark.sql.Row](),
+            org.apache.spark.sql.types.StructType(meta.columns.zip(types).map {
+              case (c, t) => org.apache.spark.sql.types.StructField(c,
+                org.apache.spark.sql.types.DataType.fromDDL(t))
+            }))
+          probes.put(meta.name, (meta.columns, types, probe))
+          probe
+      }
+    }
 
   /** Resolve `condition` against a probe with the table's schema (no
     * job runs, no storage touched) and return the analyzed predicate —
@@ -660,7 +678,8 @@ final class FeatureStore(
       cur: TableMeta,
       name: String,
       v: Int,
-      df: DataFrame): WriteResult = {
+      df: DataFrame,
+      small: Boolean): WriteResult = {
     val clustered = cur.clusterSpec.flatMap { spec =>
       val cols = spec.drop(spec.indexOf(':') + 1)
         .split(",").toSeq.filter(_.nonEmpty)
@@ -682,9 +701,18 @@ final class FeatureStore(
           case _: Exception =>
             storage.write(name, v, df, EntityIdColumn, TimestampColumn)
         }
-      case None => storage.write(name, v, df, EntityIdColumn, TimestampColumn)
+      case None => writeSegment(name, v, df, small)
     }
   }
+
+  /** Write segment `v`: by one task when the caller knows `df` is
+    * `small` — at most [[FeatureStore.SingleTaskWriteMaxRows]] rows, or
+    * rows the driver holds within [[FeatureStore.LocalRowsMaxBytes]] —
+    * else with the period shuffle ([[VersionStorage.writeSmall]]).
+    */
+  private def writeSegment(name: String, v: Int, df: DataFrame, small: Boolean): WriteResult =
+    if (small) storage.writeSmall(name, v, df, EntityIdColumn, TimestampColumn)
+    else storage.write(name, v, df, EntityIdColumn, TimestampColumn)
 
   /** Run the constraint verifier for a just-written version; on
     * violation the written data is scrapped eagerly (the claim itself
@@ -850,7 +878,8 @@ final class FeatureStore(
       throw new IllegalArgumentException(s"maxSegments must be >= 1, got $maxSegments")
     if (catalog.get(name).isEmpty && !storage.arbitrates)
       return registerWith(name, df, watermark)
-    Validation.validateDataFrame(df, name)
+    // emptiness is counted on the write itself, below
+    Validation.validateDataFrame(df, name, allowEmpty = true)
     val (curOpt, v) = claimVersion(name)
     val cur = curOpt.getOrElse {
       // arbitrated claim resolved to table creation after all: hand the
@@ -865,14 +894,34 @@ final class FeatureStore(
       val chained = cur.segmentsOf(cur.version) :+ v
       val now0 = System.currentTimeMillis()
       val newTypes = cur.columnTypes ++ typesOf(df)
+      // the delta's rows, counted on the write: an empty delta mints no
+      // version, and no job runs only to find that out
+      val deltaObs = org.apache.spark.sql.Observation(
+        s"graft_append_${java.util.UUID.randomUUID()}")
+      val delta = df.select(evolved.map(col): _*)
+        .observe(deltaObs, count(lit(1)).as("rows"))
+      val deltaRows = localRowBound(df)
+      def requireRows(): Unit =
+        if (deltaObs.get("rows").asInstanceOf[Long] == 0L) {
+          try storage.deleteVersion(name, v) catch { case _: Exception => () }
+          throw new FeatureValidationError(s"$name must not be empty")
+        }
       if (chained.size > maxSegments) {
-        // compact: materialize previous ∪ delta as one snapshot (the
-        // union pads pre-evolution rows with nulls when evolving)
-        val full = currentData(cur).select(cur.columns.map(col): _*)
-          .unionByName(df.select(evolved.map(col): _*), allowMissingColumns = true)
+        // compact: materialize delta ∪ previous as one snapshot (the
+        // union pads pre-evolution rows with nulls when evolving). The
+        // delta is the union's left side, so the write runs in the
+        // delta's session, where its observation is registered (a
+        // streaming micro-batch's frame belongs to a session of its own)
+        val full = delta
+          .unionByName(currentData(cur).select(cur.columns.map(col): _*),
+            allowMissingColumns = true)
           .select(evolved.map(col): _*)
         val (guarded, checksOk) = constraintGuard(cur.constraints, prepare(full))
-        val wr = storage.write(name, v, guarded, EntityIdColumn, TimestampColumn)
+        val wr = writeSegment(name, v, guarded, within(for {
+          held <- recordedRows(cur, cur.segmentsOf(cur.version))
+          added <- deltaRows
+        } yield held + added, SingleTaskWriteMaxRows))
+        requireRows()
         verifyOrScrap(name, v)(checksOk)
         storage.commitVersion(name, v, CommitMeta(
           wr.rows, wr.rows, evolved, Seq(v),
@@ -890,9 +939,9 @@ final class FeatureStore(
           segRows = cur.segRows ++ segRowsOf(v, wr),
           segColStats = cur.segColStats ++ segColStatsOf(v, wr))
       } else {
-        val (guarded, checksOk) = constraintGuard(
-          cur.constraints, prepare(df.select(evolved.map(col): _*)))
-        val wr = storage.write(name, v, guarded, EntityIdColumn, TimestampColumn)
+        val (guarded, checksOk) = constraintGuard(cur.constraints, prepare(delta))
+        val wr = writeSegment(name, v, guarded, within(deltaRows, SingleTaskWriteMaxRows))
+        requireRows()
         verifyOrScrap(name, v)(checksOk)
         storage.commitVersion(name, v, CommitMeta(
           wr.rows, cur.rowCount + wr.rows, evolved, chained,
@@ -1079,7 +1128,8 @@ final class FeatureStore(
     }
     val meta = completeClaim(name, v) {
       val full = currentData(cur).select(cur.columns.map(col): _*)
-      val wr = storage.write(name, v, prepare(full), EntityIdColumn, TimestampColumn)
+      val wr = writeSegment(name, v, prepare(full),
+        within(recordedRows(cur, cur.segmentsOf(cur.version)), SingleTaskWriteMaxRows))
       val now0 = System.currentTimeMillis()
       storage.commitVersion(name, v, CommitMeta(
         wr.rows, wr.rows, cur.columns, Seq(v),
@@ -1324,24 +1374,17 @@ final class FeatureStore(
       .toMap
   }
 
-  /** The change-set pass of a key-addressed mutation, which is also
-    * its classification: the candidate segments `segs` are read once,
-    * tagged by segment, and null-safe semi-joined with `keys`;
-    * `changeSet` shapes the matched rows into the change data of
-    * version `v`, and that write is the only execution that scans the
-    * candidates. Two `Observation`s ride it, one below the join and one
-    * above, counting rows per segment tag — per segment, (total rows,
-    * key-matched rows). A storage that records no change data gets the
-    * same plan run into a no-op sink, so the counts never depend on
-    * change-data support. Returns the counts and the recorded change
-    * row count (-1 = none recorded).
-    *
-    * Each scanned segment's observed total must equal the catalog's
-    * `segRows` record where one exists: a mismatch means the segment's
-    * files no longer hold what the catalog says, and a commit on top of
-    * them would record a wrong row count. The version (with its
-    * just-written change data) is scrapped and a [[FeatureStorageError]]
-    * names the segment and both counts.
+  /** The Spark kernel's change-set pass of a key-addressed mutation,
+    * which is also its classification: the candidate segments `segs`
+    * are read once, tagged by segment, and null-safely semi-joined with
+    * `keys`; `changeSet` shapes the matched rows into the change data
+    * of version `v`, and that write is the only execution that scans
+    * the candidates. Two `Observation`s ride it, one below the join and
+    * one above, counting rows per segment tag — per segment, (total
+    * rows, key-matched rows). A storage that records no change data
+    * gets the same plan run into a no-op sink, so the counts never
+    * depend on change-data support. Returns the counts and the recorded
+    * change row count (-1 = none recorded).
     *
     * Trade-off: this pass reads every column of each stats-surviving
     * candidate, where a key-column classification would read two. It
@@ -1353,7 +1396,6 @@ final class FeatureStore(
     */
   private def writeChangeSet(
       name: String,
-      meta: TableMeta,
       v: Int,
       segs: Seq[Int],
       readCols: Seq[String],
@@ -1381,17 +1423,104 @@ final class FeatureStore(
       s -> (totals(s"_seg_$s").asInstanceOf[Long],
         hits(s"_seg_$s").asInstanceOf[Long])
     }.toMap
-    segs.foreach { s =>
-      meta.segRows.get(s).filter(_ != counts(s)._1).foreach { recorded =>
+    (counts, cdfRows)
+  }
+
+  /** The driver kernel's pass over a key-addressed mutation's candidate
+    * segments `segs`: their rows are read once through
+    * [[VersionStorage.scanSegmentsLocal]] in the layout
+    * `readCols :+ _ingest_key`, and each is matched against `keys`
+    * (rows of entity and timestamp, the entity of type `keyType`) on
+    * float-normalized UnsafeRow keys — nulls equal, NaN and -0.0
+    * canonical, as Spark's `<=>` join compares them. Returns the
+    * layout, the per-segment (total, matched) counts, the matched rows,
+    * and the unmatched rows of every segment with a match; a segment's
+    * rows are let go once it is read without one. None when the storage
+    * has no driver-side reader or cannot type a column without Spark,
+    * when the keys' types are not the table's, or when a column does
+    * not compare by its bytes (maps, variants, collated strings): the
+    * Spark kernel then runs. None too, with the read abandoned, once
+    * the bytes held — `held` for the caller's rows, the keys, and the
+    * rows kept — pass `maxBytes`.
+    */
+  private def scanOnDriver(
+      name: String,
+      segs: Seq[Int],
+      readCols: Seq[String],
+      readTypes: Map[String, String],
+      keyType: DataType,
+      keys: Seq[InternalRow],
+      held: Long,
+      maxBytes: Long): Option[FeatureStore.DriverScan] = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+    import scala.collection.mutable
+    object TooLarge extends scala.util.control.ControlThrowable
+    storage.localReadSchema(name, segs, readCols :+ IngestKeyCol, readTypes).filter(schema =>
+      sameType(schema(EntityIdColumn).dataType, keyType) &&
+        schema(TimestampColumn).dataType == TimestampType &&
+        schema.forall(f => bridge.groupsByBytes(f.dataType))
+    ).flatMap { schema =>
+      def keyOf(e: Int, t: Int) = UnsafeProjection.create(Seq(
+        bridge.normalizeFloats(BoundReference(e, schema(EntityIdColumn).dataType, nullable = true)),
+        BoundReference(t, TimestampType, nullable = true)))
+      val wanted = { val k = keyOf(0, 1); keys.iterator.map(k(_).copy()).toSet }
+      val rowKey = keyOf(schema.fieldIndex(EntityIdColumn), schema.fieldIndex(TimestampColumn))
+      val own = UnsafeProjection.create(schema)
+      val counts = segs.map(_ -> Array(0L, 0L)).toMap
+      val matched = mutable.ArrayBuffer.empty[InternalRow]
+      // per segment: its unmatched rows and their bytes
+      val kept = mutable.HashMap.empty[Int, (mutable.ArrayBuffer[InternalRow], Array[Long])]
+      var bytes = held + wanted.iterator.map(_.getSizeInBytes.toLong).sum
+      def keep(row: UnsafeRow): UnsafeRow = {
+        bytes += row.getSizeInBytes
+        if (bytes > maxBytes) throw TooLarge
+        row
+      }
+      var last = -1
+      try {
+        if (bytes > maxBytes) throw TooLarge
+        storage.scanSegmentsLocal(name, segs, schema, None, Nil) { (s, row) =>
+          if (s != last) {
+            if (counts.get(last).exists(_(1) == 0L))
+              kept.remove(last).foreach { case (_, b) => bytes -= b(0) }
+            last = s
+          }
+          val c = counts(s)
+          c(0) += 1
+          if (wanted.contains(rowKey(row))) { c(1) += 1; matched += keep(own(row).copy()) }
+          else {
+            val (rows, b) = kept.getOrElseUpdate(s, (mutable.ArrayBuffer.empty, Array(0L)))
+            val r = keep(own(row).copy())
+            rows += r
+            b(0) += r.getSizeInBytes
+          }
+        }
+        Some(FeatureStore.DriverScan(schema,
+          counts.map { case (s, c) => s -> (c(0), c(1)) },
+          matched.toSeq,
+          kept.collect { case (s, (rows, _)) if counts(s)(1) > 0L => s -> rows.toSeq }.toMap))
+      } catch { case TooLarge => None }
+    }
+  }
+
+  /** Every scanned segment's row count must equal the catalog's
+    * `segRows` record where one exists: a mismatch means the segment's
+    * files no longer hold what the catalog says, and a commit on top of
+    * them would record a wrong row count. Version `v` (with any change
+    * data already written) is scrapped and a [[FeatureStorageError]]
+    * names the segment and both counts.
+    */
+  private def requireRecordedRows(
+      name: String, meta: TableMeta, v: Int, counts: Map[Int, (Long, Long)]): Unit =
+    counts.toSeq.sortBy(_._1).foreach { case (s, (rows, _)) =>
+      meta.segRows.get(s).filter(_ != rows).foreach { recorded =>
         try storage.deleteVersion(name, v) catch { case _: Exception => () }
         throw new FeatureStorageError(
-          s"segment $s of table '$name' holds ${counts(s)._1} rows but the " +
+          s"segment $s of table '$name' holds $rows rows but the " +
             s"catalog records $recorded — its files changed outside the " +
             "store; no version was committed")
       }
     }
-    (counts, cdfRows)
-  }
 
   /** An upsert's change set as ONE signed-count aggregate: each
     * replaced row counts +1 and each delta row -1, grouped by `cols`; a
@@ -1416,6 +1545,37 @@ final class FeatureStore(
           .as(FeatureStore.ChangeTypeCol),
         explode(array_repeat(lit(0), abs(net).cast("int"))).as("_graft_copy")): _*)
       .drop("_graft_copy")
+  }
+
+  /** [[netChanges]] on the driver, over rows whose first `n` columns
+    * (of `schema`) are the change set's: grouped on those columns
+    * float-normalized, as Spark's grouping compares and outputs them, a
+    * group whose net is not 0 gives |net| copies of its normalized
+    * values, tagged `delete` when positive and `insert` when negative.
+    */
+  private def netChangesLocal(
+      schema: StructType,
+      n: Int,
+      replaced: Seq[InternalRow],
+      delta: Seq[InternalRow]): Seq[InternalRow] = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, UnsafeProjection, UnsafeRow}
+    val refs = (0 until n).map(i => BoundReference(i, schema(i).dataType, nullable = true))
+    val key = UnsafeProjection.create(refs.map(bridge.normalizeFloats))
+    val net = scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, Long]
+    def add(rows: Seq[InternalRow], sign: Long): Unit =
+      rows.foreach { r =>
+        val k = key(r).copy()
+        net.update(k, net.getOrElse(k, 0L) + sign)
+      }
+    add(replaced, 1L)
+    add(delta, -1L)
+    val tagged = UnsafeProjection.create(
+      refs :+ BoundReference(n, org.apache.spark.sql.types.StringType, nullable = false))
+    net.toSeq.filter(_._2 != 0L).flatMap { case (k, c) =>
+      val tag = org.apache.spark.unsafe.types.UTF8String.fromString(
+        if (c > 0L) "delete" else "insert")
+      Seq.fill(math.abs(c).toInt)(tagged(new JoinedRow(k, InternalRow(tag))).copy())
+    }
   }
 
   /** Row-level DELETE with copy-on-write rewrite — Delta Lake's
@@ -1525,7 +1685,7 @@ final class FeatureStore(
             .readSegments(name, affected, cur.columns :+ IngestKeyCol, None,
               cur.columnTypes)
             .filter(not(coalesce(condition, lit(false))))
-          val wr = writeKeepingLayout(cur, name, v, survivors)
+          val wr = writeKeepingLayout(cur, name, v, survivors, small = false)
           if (wr.rows != affectedTotal - hits)
             throw new FeatureValidationError(
               s"deleteRows condition on '$name' is nondeterministic: the " +
@@ -1573,26 +1733,43 @@ final class FeatureStore(
       pruned.info
     }
 
-  /** Row-level DELETE by an explicit (entity, ts) KEY SET, fully
-    * distributed — the form `deleteRows(condition)` cannot express
-    * without materializing keys on the driver (CDC applies, GDPR
-    * key-list purges). Copy-on-write in three Spark executions: one
-    * aggregate over the key frame gives its (entity, ts) bounds, which
-    * prune stats-disjoint segments; the change-set write
-    * ([[writeChangeSet]]) semi-joins the surviving candidates with the
-    * keys, records the matched rows as `delete` images and classifies
-    * every candidate on the same scan; the affected segments' anti-join
-    * survivors then rewrite (through the recorded cluster layout) as the
-    * new version's segment, and untouched segments re-reference
-    * verbatim. A segment whose rows all match is simply dropped from the
-    * manifest. Keys absent from the table are ignored — re-applying a
-    * delete is a natural no-op, which is what makes CDC replay
-    * idempotent. Returns None when nothing matched (no version minted,
-    * the just-written change data removed); deleting every row is
-    * rejected.
+  /** Row-level DELETE by an explicit (entity, ts) KEY SET — the form
+    * `deleteRows(condition)` cannot express without materializing keys
+    * on the driver (CDC applies, GDPR key-list purges). Copy-on-write:
+    * the keys' (entity, ts) bounds prune stats-disjoint segments; the
+    * surviving candidates are classified — per segment, its rows and
+    * the rows the keys match — and the matched rows are recorded as
+    * `delete` images; the affected segments' unmatched rows then
+    * rewrite (through the recorded cluster layout) as the new version's
+    * segment, and untouched segments re-reference verbatim. A segment
+    * whose rows all match is simply dropped from the manifest. Keys
+    * absent from the table are ignored — re-applying a delete is a
+    * natural no-op, which is what makes CDC replay idempotent. Returns
+    * None when nothing matched (no version minted); deleting every row
+    * is rejected.
+    *
+    * Two kernels classify ([[classifyKeyed]]). When the candidates'
+    * catalog rows plus the keys number at most
+    * [[FeatureStore.DriverMutationMaxRows]], and the rows it holds stay
+    * within [[FeatureStore.LocalRowsMaxBytes]], the driver reads the
+    * candidates and matches the keys itself, and the change data and
+    * the rewrite are each one single-task write: two Spark jobs (one when every
+    * affected segment matches wholly, none when nothing matches), and
+    * two more for a key frame that is not a local relation (its bounds
+    * aggregate and its collection). Otherwise Spark runs one
+    * bounds aggregate (skipped for a local key frame, whose bounds the
+    * driver computes), one change-set write that also classifies
+    * ([[writeChangeSet]]), and one anti-join rewrite.
     */
   def deleteRowsByKeys(
       name: String, keyDf: DataFrame): Option[FeatureTableInfo] =
+    deleteRowsByKeysOn(FeatureStore.MutationKernel.Auto(), name, keyDf)
+
+  /** [[deleteRowsByKeys]] through the given classification kernel. */
+  private[graft] def deleteRowsByKeysOn(
+      kernel: FeatureStore.MutationKernel,
+      name: String,
+      keyDf: DataFrame): Option[FeatureTableInfo] =
     this.synchronized {
       if (storage.arbitrates) { adoptDiskMeta(name); reconcileFromLog(name) }
       catalog.getOrThrow(name)
@@ -1610,12 +1787,13 @@ final class FeatureStore(
           s"table '$name' was deleted by another writer during deleteRowsByKeys")
       }
       val meta = completeClaim(name, v) {
-        // duplicate keys are harmless: every join below is a semi or
-        // anti join, and the bounds only need count > 0
-        val keys = keyDf
-          .select(col(EntityIdColumn),
-            col(TimestampColumn).cast(TimestampType).as(TimestampColumn))
-        val boundsRow = keys.agg(keyBoundAggs.head, keyBoundAggs.tail: _*).head()
+        // duplicate keys are harmless: every match below is a semi or
+        // anti match, and the bounds only need count > 0
+        val keys = keyFrame(keyDf)
+        val keyType = keys.schema(EntityIdColumn).dataType
+        val local = localKeys(kernel, keys)
+        val boundsRow = local.fold(keys.agg(keyBoundAggs.head, keyBoundAggs.tail: _*).head())(
+          localKeyBounds(_, keyType))
         if (boundsRow.getLong(0) == 0L) {
           storage.releaseVersion(name, v)
           return None
@@ -1627,20 +1805,42 @@ final class FeatureStore(
           storage.releaseVersion(name, v)
           return None
         }
-        val (scanned, cdfRows) = writeChangeSet(
-          name, cur, v, scanSegs, cur.columns, cur.columnTypes, keys)(
-          _.withColumn(FeatureStore.ChangeTypeCol, lit("delete")))
-        val perSeg = scanned ++ skipped.map(s => s -> (cur.segRows(s), 0L))
+        val c = classifyKeyed(kernel, cur, scanSegs, boundsRow.getLong(0),
+          typedKeys(cur, keys), local, collectRows(keys)) { (ks, maxBytes) =>
+          scanOnDriver(name, scanSegs, cur.columns, cur.columnTypes, keyType, ks,
+            held = 0L, maxBytes).map { d =>
+            FeatureStore.Classified(d.counts,
+              () => storage.writeChangeData(name, v,
+                localFrame(d.schema, d.matched).drop(IngestKeyCol)
+                  .withColumn(FeatureStore.ChangeTypeCol, lit("delete")).coalesce(1)),
+              affected => localFrame(d.schema,
+                affected.flatMap(s => d.survivors.getOrElse(s, Nil))),
+              small = true)
+          }
+        } {
+          val (counts, cdfRows) = writeChangeSet(
+            name, v, scanSegs, cur.columns, cur.columnTypes, keys)(
+            _.withColumn(FeatureStore.ChangeTypeCol, lit("delete")))
+          FeatureStore.Classified(counts, () => cdfRows,
+            affected => joinKeysNullSafe(
+              storage.readSegments(name, affected, cur.columns :+ IngestKeyCol,
+                None, cur.columnTypes),
+              keys, "left_anti"),
+            small = false)
+        }
+        requireRecordedRows(name, cur, v, c.counts)
+        val perSeg = c.counts ++ skipped.map(s => s -> (cur.segRows(s), 0L))
         val total = perSeg.values.map(_._1).sum
         val hits = perSeg.values.map(_._2).sum
         if (hits == 0L || hits == total) {
-          // no version: take the change data just written back out
+          // no version: take any change data already written back out
           storage.deleteVersion(name, v)
           if (hits == 0L) { storage.releaseVersion(name, v); return None }
           throw new FeatureValidationError(
             s"deleteRowsByKeys would remove every row of '$name'; " +
               "registered tables are non-empty — use delete(name)")
         }
+        val cdfRows = c.recordChanges()
         val affected = segs.filter(s => perSeg.get(s).exists(_._2 > 0L))
         val untouched = segs.filterNot(affected.contains)
         val affectedTotal = affected.map(s => perSeg(s)._1).sum
@@ -1661,11 +1861,7 @@ final class FeatureStore(
             versionRows = cur.versionRows + (v -> (total - hits)),
             versionCdf = cdf)
         } else {
-          val survivors = joinKeysNullSafe(
-            storage.readSegments(name, affected, cur.columns :+ IngestKeyCol,
-              None, cur.columnTypes),
-            keys, "left_anti")
-          val wr = writeKeepingLayout(cur, name, v, survivors)
+          val wr = writeKeepingLayout(cur, name, v, c.rewrite(affected), c.small)
           if (wr.rows != affectedTotal - hits)
             throw new FeatureValidationError(
               s"deleteRowsByKeys on '$name': classification matched $hits " +
@@ -1696,6 +1892,64 @@ final class FeatureStore(
       Some(pruned.info)
     }
 
+  /** The key frame of a key-addressed mutation: entity and timestamp,
+    * the timestamp cast as the store stores it.
+    */
+  private def keyFrame(df: DataFrame): DataFrame =
+    df.select(col(EntityIdColumn),
+      col(TimestampColumn).cast(TimestampType).as(TimestampColumn))
+
+  /** The rows of a key-addressed mutation's input frame, held on the
+    * driver without a Spark job, when it is a local relation and the
+    * kernel may be the driver's.
+    */
+  private def localKeys(
+      kernel: FeatureStore.MutationKernel, df: DataFrame): Option[Seq[InternalRow]] =
+    if (kernel == FeatureStore.MutationKernel.OnSpark) None else localRows(df)
+
+  /** True when every frame's entity column has the table's recorded
+    * entity type. Keys of another type compare through Spark's type
+    * coercion, which only the Spark kernel applies.
+    */
+  private def typedKeys(meta: TableMeta, frames: DataFrame*): Boolean =
+    meta.columnTypes.get(EntityIdColumn).map(DataType.fromDDL).exists(t =>
+      frames.forall(f => sameType(f.schema(EntityIdColumn).dataType, t)))
+
+  private def sameType(a: DataType, b: DataType): Boolean =
+    org.apache.spark.sql.catalyst.types.DataTypeUtils.equalsIgnoreNullability(a, b)
+
+  /** Classify a key-addressed mutation's candidate segments `segs`
+    * with one kernel. The driver's (`onDriver`, given the inputs it
+    * needs and the bytes it may hold) runs when forced, or, under
+    * [[FeatureStore.MutationKernel.Auto]], when every candidate has a
+    * catalog row count and those counts plus the `keyCount` keys total
+    * at most its row bound; inputs that are not local relations
+    * (`local` empty) are then collected first. The keys must be `typed`
+    * ([[typedKeys]]). The Spark kernel (`onSpark`) runs otherwise, and
+    * wherever the driver's cannot or would hold more than the byte
+    * bound.
+    */
+  private def classifyKeyed[A](
+      kernel: FeatureStore.MutationKernel,
+      meta: TableMeta,
+      segs: Seq[Int],
+      keyCount: Long,
+      typed: Boolean,
+      local: Option[A],
+      collect: => A)(
+      onDriver: (A, Long) => Option[FeatureStore.Classified])(
+      onSpark: => FeatureStore.Classified): FeatureStore.Classified = {
+    import FeatureStore.MutationKernel._
+    val maxBytes = kernel match {
+      case _ if !typed => None
+      case OnSpark => None
+      case OnDriver => Some(Long.MaxValue)
+      case Auto(maxRows, bytes) =>
+        Option.when(within(recordedRows(meta, segs).map(_ + keyCount), maxRows))(bytes)
+    }
+    maxBytes.flatMap(onDriver(local.getOrElse(collect), _)).getOrElse(onSpark)
+  }
+
   /** MERGE-style upsert keyed by (entity_id, timestamp) — Delta's
     * `MERGE WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT` for
     * the observation model: every current row whose key appears in
@@ -1704,14 +1958,18 @@ final class FeatureStore(
     * schema (use [[register]] for schema changes). Falls back to a
     * plain [[register]] when the table doesn't exist yet.
     *
-    * Copy-on-write, O(affected segments + delta) writes, in three
-    * Spark executions: one aggregate over the delta gives its size and
-    * (entity, ts) bounds, which prune stats-disjoint segments; the
-    * change-set write ([[writeChangeSet]]) reads the surviving
-    * candidates once and finds, on the same scan, the segments holding
-    * matched keys; their surviving rows plus the whole delta then
-    * become the new version's single segment, and untouched segments
-    * are re-referenced verbatim. Duplicate keys WITHIN the delta all
+    * Copy-on-write, O(affected segments + delta) writes: the delta's
+    * (entity, ts) bounds prune stats-disjoint segments; the surviving
+    * candidates are classified, finding the segments that hold matched
+    * keys, and the change set is recorded; the affected segments'
+    * surviving rows plus the whole delta then become the new version's
+    * single segment, and untouched segments are re-referenced verbatim.
+    * Small inputs (within [[FeatureStore.DriverMutationMaxRows]] and
+    * [[FeatureStore.LocalRowsMaxBytes]]) are classified on the driver
+    * and take two Spark jobs, the change data and the segment, each
+    * written by one task; larger ones take three Spark executions, as
+    * [[deleteRowsByKeys]] describes.
+    * Duplicate keys WITHIN the delta all
     * insert — the store allows duplicate (entity, ts) observations,
     * ordered by its deterministic ingest-key tie-break. Prior
     * versions are untouched (time travel across upserts works).
@@ -1740,9 +1998,9 @@ final class FeatureStore(
     * with matched rows deleted but not yet re-inserted and a time-travel
     * history showing a state no statement produced — Delta's MERGE is
     * likewise one commit. Cost is identical to the upsert alone: the
-    * drop keys join the delta's keys in the same bounds aggregate,
-    * change-set pass and copy-on-write rewrite (dropped rows appear as
-    * `delete` images in the recorded change set).
+    * drop keys join the delta's keys in the same bounds, classification
+    * and copy-on-write rewrite (dropped rows appear as `delete` images
+    * in the recorded change set).
     * `df` must be non-empty — a pure key-set delete is
     * [[deleteRowsByKeys]].
     */
@@ -1754,14 +2012,34 @@ final class FeatureStore(
     registerUpsertWith(name, df, watermark = None, mergeSchema = mergeSchema,
       dropKeys = Some(dropKeys))
 
+  /** [[registerUpsert]] through the given classification kernel. */
+  private[graft] def registerUpsertOn(
+      kernel: FeatureStore.MutationKernel,
+      name: String,
+      df: DataFrame,
+      mergeSchema: Boolean = false): FeatureTableInfo =
+    registerUpsertWith(name, df, watermark = None, mergeSchema = mergeSchema,
+      kernel = kernel)
+
+  /** [[registerRewrite]] through the given classification kernel. */
+  private[graft] def registerRewriteOn(
+      kernel: FeatureStore.MutationKernel,
+      name: String,
+      df: DataFrame,
+      dropKeys: DataFrame,
+      mergeSchema: Boolean = false): FeatureTableInfo =
+    registerUpsertWith(name, df, watermark = None, mergeSchema = mergeSchema,
+      dropKeys = Some(dropKeys), kernel = kernel)
+
   private def registerUpsertWith(
       name: String,
       df: DataFrame,
       watermark: Option[(String, Long)],
       mergeSchema: Boolean = false,
-      dropKeys: Option[DataFrame] = None): FeatureTableInfo =
+      dropKeys: Option[DataFrame] = None,
+      kernel: FeatureStore.MutationKernel = FeatureStore.MutationKernel.Auto()): FeatureTableInfo =
     this.synchronized {
-      // emptiness is probed by the bounds aggregate below; the
+      // emptiness is probed by the key bounds below; the
       // table-creating fallbacks validate it themselves
       Validation.validateDataFrame(df, name, allowEmpty = true)
       dropKeys.foreach { dk =>
@@ -1801,19 +2079,38 @@ final class FeatureStore(
         val newTypes = cur.columnTypes ++ typesOf(df)
         val prepared = prepare(df.select(evolved.map(col): _*))
         // the key frame: the delta's keys plus any drop keys, flagged
-        // so ONE aggregate gives both the delta size (the emptiness
+        // so ONE bounds row gives both the delta size (the emptiness
         // probe and the determinism cross-check's count) and the
         // key-domain bounds that key-range skipping needs. Duplicate
-        // keys are harmless: every join below is a semi or anti join.
+        // keys are harmless: every match below is a semi or anti match.
         val deltaFlag = "_graft_delta"
         val deltaKeys = prepared.select(
           col(EntityIdColumn), col(TimestampColumn), lit(true).as(deltaFlag))
-        val keys = dropKeys.fold(deltaKeys)(dk => deltaKeys.unionByName(
-          dk.select(col(EntityIdColumn),
-            col(TimestampColumn).cast(TimestampType).as(TimestampColumn),
-            lit(false).as(deltaFlag))))
-        val kb = keys.agg(keyBoundAggs.head,
-          keyBoundAggs.tail :+ count(when(col(deltaFlag), 1)): _*).head()
+        val drops = dropKeys.map(keyFrame)
+        val keys = drops.fold(deltaKeys)(dk =>
+          deltaKeys.unionByName(dk.withColumn(deltaFlag, lit(false))))
+        val typed = typedKeys(cur, prepared +: drops.toSeq: _*)
+        val entityType = prepared.schema(EntityIdColumn).dataType
+        // the driver kernel's inputs: the delta's rows, and every key
+        // (the delta's, then the drop keys) as (entity, timestamp) rows
+        def driverInputs(d: Seq[InternalRow], dropRows: Seq[InternalRow]) = {
+          import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+          val key = UnsafeProjection.create(Seq(EntityIdColumn, TimestampColumn).map { c =>
+            val i = prepared.schema.fieldIndex(c)
+            BoundReference(i, prepared.schema(i).dataType, nullable = true)
+          })
+          (d, d.map(key(_).copy()) ++ dropRows)
+        }
+        val local =
+          if (!typed) None
+          else for {
+            d <- localKeys(kernel, prepared)
+            k <- drops.fold(Option(Seq.empty[InternalRow]))(localKeys(kernel, _))
+          } yield driverInputs(d, k)
+        val kb = local.fold(keys.agg(keyBoundAggs.head,
+          keyBoundAggs.tail :+ count(when(col(deltaFlag), 1)): _*).head()) {
+          case (d, ks) => localKeyBounds(ks, entityType, d.size.toLong)
+        }
         val deltaCount = kb.getLong(keyBoundAggs.size)
         if (deltaCount == 0L)
           throw new FeatureValidationError(s"$name must not be empty")
@@ -1827,31 +2124,62 @@ final class FeatureStore(
         // record the change set (Delta _change_data): delete images =
         // replaced rows, insert images = the delta, identical-content
         // pairs cancelled (an upsert re-writing the same bytes is NOT a
-        // change); its write classifies the candidate segments
+        // change); with no candidate, the delta's rows as inserts
         val deltaRows = prepared.drop(IngestKeyCol)
-        val (scanned, cdfRows) =
+        val c = classifyKeyed(kernel, cur, scanSegs, kb.getLong(0), typed, local,
+          driverInputs(collectRows(prepared), drops.fold(Seq.empty[InternalRow])(collectRows))) {
+          case ((d, ks), maxBytes) =>
+            scanOnDriver(name, scanSegs, evolved, newTypes, entityType, ks,
+              held = FeatureStore.unsafeBytes(prepared.schema, d), maxBytes)
+              .filter(_.schema.map(_.dataType).corresponds(prepared.schema.map(_.dataType))(sameType))
+              .map { s =>
+                val changes =
+                  if (scanSegs.isEmpty)
+                    localFrame(s.schema, d).drop(IngestKeyCol)
+                      .withColumn(FeatureStore.ChangeTypeCol, lit("insert"))
+                  else localFrame(
+                    StructType(s.schema.take(evolved.size) :+
+                      StructField(FeatureStore.ChangeTypeCol, StringType)),
+                    netChangesLocal(s.schema, evolved.size, s.matched, d))
+                FeatureStore.Classified(s.counts,
+                  () => storage.writeChangeData(name, v, changes.coalesce(1)),
+                  affected => localFrame(s.schema,
+                    affected.flatMap(a => s.survivors.getOrElse(a, Nil)) ++ d),
+                  small = true)
+              }
+        } {
           if (scanSegs.isEmpty)
-            (Map.empty[Int, (Long, Long)], storage.writeChangeData(name, v,
-              deltaRows.withColumn(FeatureStore.ChangeTypeCol, lit("insert"))))
-          else writeChangeSet(name, cur, v, scanSegs, evolved, newTypes, keys)(
-            netChanges(_, deltaRows, evolved))
-        val perSeg = scanned ++ skipped.map(s => s -> (cur.segRows(s), 0L))
+            FeatureStore.Classified(Map.empty,
+              () => storage.writeChangeData(name, v,
+                deltaRows.withColumn(FeatureStore.ChangeTypeCol, lit("insert"))),
+              _ => prepared, small = false)
+          else {
+            val (counts, cdfRows) = writeChangeSet(
+              name, v, scanSegs, evolved, newTypes, keys)(
+              netChanges(_, deltaRows, evolved))
+            FeatureStore.Classified(counts, () => cdfRows,
+              affected =>
+                if (affected.isEmpty) prepared
+                else joinKeysNullSafe(
+                  storage.readSegments(name, affected, evolved :+ IngestKeyCol,
+                    None, newTypes),
+                  keys, "left_anti").unionByName(prepared),
+              small = false)
+          }
+        }
+        requireRecordedRows(name, cur, v, c.counts)
+        val cdfRows = c.recordChanges()
+        val perSeg = c.counts ++ skipped.map(s => s -> (cur.segRows(s), 0L))
         val affected = segs.filter(s => perSeg.get(s).exists(_._2 > 0L))
         val untouched = segs.filterNot(affected.contains)
         val untouchedRows = untouched.map(s => perSeg.get(s).fold(0L)(_._1)).sum
-        val survivors = Option.when(affected.nonEmpty)(
-          joinKeysNullSafe(
-            storage.readSegments(name, affected, evolved :+ IngestKeyCol,
-              None, newTypes),
-            keys, "left_anti"))
-        val newSeg = survivors.fold(prepared)(_.unionByName(prepared))
-        val (guarded, checksOk) = constraintGuard(cur.constraints, newSeg)
-        val wr = writeKeepingLayout(cur, name, v, guarded)
+        val (guarded, checksOk) = constraintGuard(cur.constraints, c.rewrite(affected))
+        val wr = writeKeepingLayout(cur, name, v, guarded, c.small)
         verifyOrScrap(name, v)(checksOk)
-        // determinism cross-check (the delta is evaluated by three
-        // independent executions — bounds, change set, rewrite): the
-        // written segment must hold exactly the affected survivors
-        // plus the delta, or a nondeterministic delta just lost rows
+        // determinism cross-check (the delta is evaluated by more than
+        // one execution — bounds, change set, rewrite): the written
+        // segment must hold exactly the affected survivors plus the
+        // delta, or a nondeterministic delta just lost rows
         val replaced = perSeg.values.map(_._2).sum
         val affectedTotal = affected.map(s => perSeg.get(s).fold(0L)(_._1)).sum
         if (wr.rows != (affectedTotal - replaced) + deltaCount)
@@ -2304,9 +2632,9 @@ final class FeatureStore(
     } yield {
       val predicate = bridge.optimizedCondition(spark, filter)
       val rows = PointInTime.latestKLocal(schema, predicate, k,
-        tieBreakCols = Seq(IngestKeyCol))(
+        tieBreakCols = Seq(IngestKeyCol))(f =>
         storage.scanSegmentsLocal(p.meta.name, p.segments, schema, Some(p.asOf),
-          bridge.pushableFilters(predicate)))
+          bridge.pushableFilters(predicate))((_, row) => f(row)))
       // every read column is nullable in the Spark kernel's output;
       // recency_rank (row_number) is not
       val fields = out.map(c => StructField(c, schema(c).dataType)) ++
@@ -3003,6 +3331,54 @@ final class FeatureStore(
     count(when(col(EntityIdColumn).isNull, 1)),
     count(when(col(TimestampColumn).isNull, 1)))
 
+  /** [[keyBoundAggs]]' row computed on the driver from key rows
+    * (entity of type `entityType`, timestamp), followed by `extra`:
+    * min and max as Spark's `min` and `max` order values, nulls
+    * skipped.
+    */
+  private def localKeyBounds(
+      keys: Seq[InternalRow], entityType: DataType, extra: Long*): org.apache.spark.sql.Row = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
+    def range(i: Int, t: DataType): Seq[Any] = {
+      val present = keys.filterNot(_.isNullAt(i))
+      if (present.isEmpty) Seq(null, null)
+      else {
+        val ord = new InterpretedOrdering(Seq(SortOrder(BoundReference(i, t, nullable = true), Ascending)))
+        val toScala = CatalystTypeConverters.createToScalaConverter(t)
+        Seq(present.min(ord), present.max(ord)).map(r => toScala(r.get(i, t)))
+      }
+    }
+    org.apache.spark.sql.Row.fromSeq(Seq(keys.size.toLong) ++
+      range(0, entityType) ++ range(1, TimestampType) ++
+      Seq(keys.count(_.isNullAt(0)).toLong, keys.count(_.isNullAt(1)).toLong) ++ extra)
+  }
+
+  /** The rows of `df` when its plan is a local relation within
+    * [[FeatureStore.localRowBound]]'s bounds under projections, filters
+    * and limits, which the optimizer folds into one local relation: no
+    * Spark job runs. None for any other plan.
+    */
+  private def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    localRowBound(df).flatMap(_ =>
+      bridge.optimizedPlan(df) match {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(l.data)
+        case _ => None
+      })
+
+  /** The rows of `df` on the driver: [[localRows]], else one collect. */
+  private def collectRows(df: DataFrame): Seq[InternalRow] =
+    localRows(df).getOrElse(bridge.collectInternal(df))
+
+  /** A local relation of `rows` in the layout of `schema`, every column
+    * nullable as a file read gives it.
+    */
+  private def localFrame(schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    bridge.ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      schema.map(f =>
+        org.apache.spark.sql.catalyst.expressions.AttributeReference(f.name, f.dataType)()),
+      rows))
+
   /** The resolved key-range skip condition for a [[keyBoundAggs]] row;
     * None (prune nothing) when a key column is all-null or the range
     * does not resolve against the table.
@@ -3125,6 +3501,165 @@ object FeatureStore {
     */
   private[graft] val LocalReadMaxRows: Long = 1000000L
 
+  /** The largest key-addressed mutation, in catalog rows of its
+    * candidate segments plus its keys, that [[FeatureStore.registerUpsert]],
+    * [[FeatureStore.registerRewrite]] and [[FeatureStore.deleteRowsByKeys]]
+    * classify on the driver. Unlike a point read, the driver kernel
+    * keeps rows: every matched row, and every row of each candidate
+    * segment with a match, which it then hands back to Spark as local
+    * relations; [[LocalRowsMaxBytes]] bounds what it holds. It reads on
+    * one thread and writes from one task, so its cost grows with the
+    * candidates' rows faster than Spark's. Measured on a shared 4-core
+    * host (local[4], the benchmark's session settings, 2026-10-19):
+    * one segment of n rows over 5,000 long entities and 60 days,
+    * "narrow" rows of a timestamp, a double and a long (40 bytes as
+    * `UnsafeRow`s) and "wide" ones adding a 55-character string and 16
+    * doubles (256 bytes); a 250-row upsert replacing existing keys and
+    * a 100-key delete, medians of 3 calls after a warm-up call, driver
+    * against Spark kernel in ms:
+    *   - narrow upsert: 374/859, 412/973, 529/818, 657/716, 1079/880,
+    *     2356/1203 at 10 k, 20 k, 40 k, 60 k, 100 k, 300 k rows;
+    *     delete: 429/741, 397/747, 525/677, 618/586, 1113/767, 2562/1029;
+    *   - wide upsert: 760/1766, 535/901, 782/967, 1065/1032, 2269/1955,
+    *     4976/2433; delete: 648/1292, 525/701, 642/865, 947/925,
+    *     2307/1706, 5676/2040.
+    * Both widths cross near 55 k rows; the bound sits below. The 20 k,
+    * 40 k and 60 k points ran alone; the others partly shared the host
+    * with a compile and a test run (the wide 10 k point reads slow).
+    */
+  private[graft] val DriverMutationMaxRows: Long = 40000L
+
+  /** The most bytes, in Spark's `UnsafeRow` form, of the rows a
+    * key-addressed mutation holds on the driver (its delta, its keys
+    * and the candidate rows it keeps), and of a local relation written
+    * by one task. A local relation travels inside the task that scans
+    * it: one task carrying all of it must stay well under
+    * `spark.rpc.message.maxSize` (128 MiB by default), past which a
+    * cluster aborts the task. Time sets the bound lower than that: in
+    * the measurements of [[DriverMutationMaxRows]] and
+    * [[SingleTaskWriteMaxRows]], 256-byte rows lost to Spark from about
+    * 45 k rows written from a local relation (11 MiB) and 55 k rows
+    * classified (13 MiB), and wider rows cost the driver more per row.
+    */
+  private[graft] val LocalRowsMaxBytes: Long = 8L << 20
+
+  /** The largest input, in rows the store knows it holds (catalog
+    * `segRows`, a local relation's rows), that a segment write takes
+    * from one task with no period exchange
+    * ([[VersionStorage.writeSmall]]). One task sorts and writes what four
+    * would, so past some size the exchange's fixed cost pays for
+    * itself. Measured with the rows of [[DriverMutationMaxRows]]'
+    * probe, medians of 3-4 writes after a warm-up, single task
+    * against exchange in ms:
+    *   - read from six parquet files, as a compaction reads its
+    *     segments: narrow 304/403, 306/346, 287/338, 303/307, 627/509,
+    *     956/556, 3271/1571 at 10 k, 20 k, 30 k, 50 k, 100 k, 300 k and
+    *     1 M rows; wide 267/285, 400/419, 484/546, 597/516, 928/614,
+    *     2017/1310, 6568/3389;
+    *   - from a local relation, as an append of a local delta:
+    *     narrow 221/283, 368/447, 532/519, 588/558, 1796/1676 at 10 k,
+    *     30 k, 60 k, 100 k and 300 k rows; wide 209/302, 561/723,
+    *     869/751, 1013/996, 3669/2830.
+    * The 20 k-60 k points ran alone, the others partly alongside a
+    * test run. Files cross near 50 k narrow and 40 k wide rows, local relations
+    * near 55 k and 45 k; the bound sits below. A file-backed input has
+    * no byte bound: its task streams from the files and may spill, so
+    * much wider rows make the single task slower, not a failure.
+    */
+  private[graft] val SingleTaskWriteMaxRows: Long = 30000L
+
+  /** A known row count of at most `bound`. */
+  private def within(rows: Option[Long], bound: Long): Boolean =
+    rows.exists(_ <= bound)
+
+  /** The catalog rows of `segs`, when every one of them has a record. */
+  private def recordedRows(meta: TableMeta, segs: Seq[Int]): Option[Long] =
+    Option.when(segs.forall(meta.segRows.contains))(segs.map(meta.segRows).sum)
+
+  /** The local relation `df` is built on, when its analyzed plan is
+    * one under projections, filters and limits: known from the plan
+    * Spark analyzed when the frame was made, with no job and no
+    * optimizer pass; `df` holds at most its rows. None for any other
+    * plan.
+    */
+  private def localRelationOf(
+      df: DataFrame): Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    @scala.annotation.tailrec
+    def base(p: LogicalPlan): Option[LocalRelation] = p match {
+      case l: LocalRelation => Option.when(!l.isStreaming)(l)
+      case Project(_, c) => base(c)
+      case Filter(_, c) => base(c)
+      case GlobalLimit(_, c) => base(c)
+      case LocalLimit(_, c) => base(c)
+      case SubqueryAlias(_, c) => base(c)
+      case _ => None
+    }
+    base(bridge.analyzed(df))
+  }
+
+  /** At most how many rows `df` holds, when it is built on a local
+    * relation ([[localRelationOf]]) of at most [[LocalRowsMaxBytes]];
+    * None otherwise, and for a larger relation, which no single-task
+    * write or driver kernel takes.
+    */
+  private def localRowBound(df: DataFrame): Option[Long] =
+    localRelationOf(df).filter(l =>
+      l.data.size <= SingleTaskWriteMaxRows.max(DriverMutationMaxRows) &&
+        unsafeBytes(l.schema, l.data) <= LocalRowsMaxBytes).map(_.data.size.toLong)
+
+  /** The bytes of `rows` (of layout `schema`) in Spark's `UnsafeRow`
+    * form, which a local relation keeps the rows it was made of in, or
+    * keeps as generic rows, converted here to be measured.
+    */
+  private def unsafeBytes(schema: StructType, rows: Seq[InternalRow]): Long = {
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+    lazy val toUnsafe = UnsafeProjection.create(schema)
+    rows.iterator.map {
+      case u: UnsafeRow => u.getSizeInBytes.toLong
+      case r => toUnsafe(r).getSizeInBytes.toLong
+    }.sum
+  }
+
+  /** Which kernel classifies a key-addressed mutation. */
+  private[graft] sealed trait MutationKernel
+  private[graft] object MutationKernel {
+    /** The driver's for at most `maxRows` candidate rows plus keys and
+      * `maxBytes` held, else Spark's: the driver's read stops, and
+      * Spark's runs, once the rows the driver holds pass `maxBytes`.
+      */
+    final case class Auto(
+        maxRows: Long = DriverMutationMaxRows,
+        maxBytes: Long = LocalRowsMaxBytes) extends MutationKernel
+    case object OnSpark extends MutationKernel
+    /** The driver's whatever the size, wherever it can run. */
+    case object OnDriver extends MutationKernel
+  }
+
+  /** A key-addressed mutation's classification of its candidate
+    * segments, from either kernel: per segment, (total rows, matched
+    * rows). `recordChanges` records the version's change data, or
+    * reports what the classification already recorded, and returns its
+    * row count (-1 = none recorded); `rewrite` gives the rows of the
+    * segment that replaces the named affected segments; `small` says
+    * they are rows the driver holds, written by one task.
+    */
+  private final case class Classified(
+      counts: Map[Int, (Long, Long)],
+      recordChanges: () => Long,
+      rewrite: Seq[Int] => DataFrame,
+      small: Boolean)
+
+  /** The driver kernel's read of a mutation's candidates: their
+    * layout, per segment (total, matched), the matched rows, and the
+    * unmatched rows of each segment with a match.
+    */
+  private final case class DriverScan(
+      schema: StructType,
+      counts: Map[Int, (Long, Long)],
+      matched: Seq[InternalRow],
+      survivors: Map[Int, Seq[InternalRow]])
+
   /** What both point-read kernels start from: the table, the cutoff,
     * the resolved filter `timestamp <= asOf AND entity_id IN (ids)`,
     * and the segments that filter may match under their recorded stats.
@@ -3138,9 +3673,7 @@ object FeatureStore {
     /** Every candidate segment has a recorded row count, and together
       * they hold at most [[LocalReadMaxRows]] rows.
       */
-    def small: Boolean =
-      segments.forall(meta.segRows.contains) &&
-        segments.map(meta.segRows).sum <= LocalReadMaxRows
+    def small: Boolean = within(recordedRows(meta, segments), LocalReadMaxRows)
     /** Where the result's schema comes from: the candidates, or, when
       * every segment is pruned, the first one (its rows all fail the
       * filter).

@@ -107,6 +107,15 @@ trait VersionStorage {
       entityCol: String, tsCol: String,
       cluster: Seq[org.apache.spark.sql.Column]): WriteResult =
     write(name, version, df, entityCol, tsCol)
+  /** [[write]] of an input the caller knows, from counts it already
+    * holds, to be small (at most [[FeatureStore.SingleTaskWriteMaxRows]]
+    * rows, or rows held on the driver within
+    * [[FeatureStore.LocalRowsMaxBytes]]): the same layout, written
+    * without a shuffle. Default: [[write]].
+    */
+  def writeSmall(name: String, version: Int, df: DataFrame,
+      entityCol: String, tsCol: String): WriteResult =
+    write(name, version, df, entityCol, tsCol)
   /** Read one version segment, original column order, optional as-of
     * pruning bound.
     */
@@ -133,8 +142,9 @@ trait VersionStorage {
   def localReadSchema(name: String, segments: Seq[Int], columns: Seq[String],
       columnTypes: Map[String, String]): Option[StructType] = None
   /** Read the rows of `segments` on the driver, with no Spark job, and
-    * hand each to `f` in the layout of `schema` (from
-    * [[localReadSchema]]). A column a segment predates reads as null.
+    * hand each to `f`, with its segment, in the layout of `schema` (from
+    * [[localReadSchema]]). Segments are read one after another, in the
+    * given order. A column a segment predates reads as null.
     * Rows are reused between calls: `f` copies what it keeps. With an
     * as-of cutoff, partitions after it are skipped as [[readSegments]]
     * skips them, and `filters` skip parquet row groups; both are hints,
@@ -142,7 +152,7 @@ trait VersionStorage {
     */
   def scanSegmentsLocal(name: String, segments: Seq[Int], schema: StructType,
       asOf: Option[java.sql.Timestamp],
-      filters: Seq[Filter])(f: InternalRow => Unit): Unit =
+      filters: Seq[Filter])(f: (Int, InternalRow) => Unit): Unit =
     throw new UnsupportedOperationException(
       s"${getClass.getSimpleName} has no driver-side segment reader")
   def deleteVersion(name: String, version: Int): Unit
@@ -241,9 +251,15 @@ trait VersionStorage {
   *     not the entity: every task then holds few periods, so the file
   *     count stays ≈ #periods. (Keying by entity looks natural but makes
   *     every task write a file into every period directory —
-  *     tasks × periods tiny files.)
+  *     tasks × periods tiny files.) An input the caller knows is small
+  *     ([[writeSmall]]) is written by one task with no shuffle: one
+  *     file per period as well.
   *   - within each file, rows sorted by (entity, timestamp) → parquet
   *     row-group min/max stats make per-entity probes skip row groups.
+  *     After the period shuffle the order survives the partitioned
+  *     write's own sort by period because the write's `Observation`
+  *     sits between the two sorts (without it the optimizer may drop
+  *     the inner sort); `IncrementalStoreSpec` guards the layout.
   */
 final class Storage(
     spark: SparkSession,
@@ -286,6 +302,22 @@ final class Storage(
     writeWith(name, version, df, entityCol, tsCol)(
       _.repartition(col(DateCol))
         .sortWithinPartitions(col(entityCol), col(tsCol)))
+
+  /** [[write]] from a single task: no exchange, one file per period,
+    * rows sorted by (entity, timestamp) within each file. The one task
+    * holds every period, so the sort leads with the period — the order
+    * the partitioned write needs, which no later sort then undoes. For
+    * inputs of at most [[FeatureStore.SingleTaskWriteMaxRows]] rows,
+    * where the shuffle's fixed cost exceeds the work it spreads.
+    */
+  override def writeSmall(
+      name: String,
+      version: Int,
+      df: DataFrame,
+      entityCol: String,
+      tsCol: String): WriteResult =
+    writeWith(name, version, df, entityCol, tsCol)(
+      _.coalesce(1).sortWithinPartitions(col(DateCol), col(entityCol), col(tsCol)))
 
   /** Clustered layout ([[VersionStorage.writeClustered]]): range-
     * partition and sort by (period, cluster...) so each task holds a
@@ -448,7 +480,7 @@ final class Storage(
       segments: Seq[Int],
       schema: StructType,
       asOf: Option[java.sql.Timestamp],
-      filters: Seq[Filter])(f: InternalRow => Unit): Unit = {
+      filters: Seq[Filter])(f: (Int, InternalRow) => Unit): Unit = {
     import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
     // built on the first file: a read every file of which is pruned
     // broadcasts no configuration
@@ -472,7 +504,7 @@ final class Storage(
         val rows = read(PartitionedFile(InternalRow.empty,
           org.apache.spark.paths.SparkPath.fromFileStatus(st), 0L, st.getLen,
           Array.empty[String], st.getModificationTime, st.getLen))
-        try rows.foreach(f)
+        try rows.foreach(f(s, _))
         finally rows match {
           case c: java.io.Closeable => c.close()
           case _ => ()

@@ -173,6 +173,14 @@ final class TxnLogStorage(
       tsCol: String): WriteResult =
     inner.write(name, version, df, entityCol, tsCol)
 
+  override def writeSmall(
+      name: String,
+      version: Int,
+      df: DataFrame,
+      entityCol: String,
+      tsCol: String): WriteResult =
+    inner.writeSmall(name, version, df, entityCol, tsCol)
+
   override def writeClustered(
       name: String,
       version: Int,
@@ -342,7 +350,7 @@ final class TxnLogStorage(
       schema: org.apache.spark.sql.types.StructType,
       asOf: Option[java.sql.Timestamp],
       filters: Seq[org.apache.spark.sql.sources.Filter])(
-      f: org.apache.spark.sql.catalyst.InternalRow => Unit): Unit = {
+      f: (Int, org.apache.spark.sql.catalyst.InternalRow) => Unit): Unit = {
     segments.foreach(requireCommitted(name, _))
     inner.scanSegmentsLocal(name, segments, schema, asOf, filters)(f)
   }

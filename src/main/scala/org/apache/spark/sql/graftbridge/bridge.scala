@@ -130,6 +130,26 @@ object bridge {
   def normalizeFloats(e: Expression): Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
+  /** True when values of type `t`, float-normalized, group and join as
+    * their UnsafeRow bytes compare: no map or variant anywhere inside
+    * and no string collation other than binary.
+    */
+  def groupsByBytes(t: org.apache.spark.sql.types.DataType): Boolean =
+    org.apache.spark.sql.catalyst.util.UnsafeRowUtils.isBinaryStable(t) &&
+      !t.existsRecursively {
+        case _: org.apache.spark.sql.types.MapType | _: org.apache.spark.sql.types.VariantType => true
+        case _ => false
+      }
+
+  /** The rows of `df` in Spark's internal form, collected in one SQL
+    * execution as `collect()` would run it.
+    */
+  def collectInternal(df: DataFrame): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[ClassicDataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect().toSeq)
+  }
+
   /** DSv2 `Predicate` → V1 `Filter`, when expressible (Spark's own
     * conversion; `None` = not translatable, caller must reject).
     */

@@ -296,4 +296,25 @@ class ColumnStatsSpec extends AnyFunSuite with SparkTestBase {
     assert(segsOf(byVal) == Set(1, 2, 3))
     assert(byVal.count() == 4)
   }
+
+  test("a filter naming an unknown column raises, on every call") {
+    val s = spark
+    import s.implicits._
+    val store = new FeatureStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_unknown_col").toString)
+    store.register("t", Seq(("e1", ts("2024-01-01"), 1.0)).toDF("entity_id", "timestamp", "v"))
+    // the second call resolves against the table's kept probe
+    (1 to 2).foreach { _ =>
+      intercept[org.apache.spark.sql.AnalysisException](
+        store.scanWhere("t", org.apache.spark.sql.functions.col("nope") > 1))
+      intercept[org.apache.spark.sql.AnalysisException](
+        store.deleteRows("t", org.apache.spark.sql.functions.col("nope") > 1))
+      assert(store.get("t", Seq("e1"), ts("2024-02-01")).count() == 1)
+    }
+    // a new column gets a new probe: it resolves once the table has it
+    store.registerAppend("t",
+      Seq(("e2", ts("2024-01-02"), 2.0, 5)).toDF("entity_id", "timestamp", "v", "nope"),
+      mergeSchema = true)
+    assert(store.scanWhere("t", org.apache.spark.sql.functions.col("nope") > 1).count() == 1)
+  }
 }

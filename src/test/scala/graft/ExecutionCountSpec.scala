@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Profiling
 import graft.store.FeatureStore
+import graft.store.FeatureStore.MutationKernel.{Auto, OnSpark}
 
 /** How many Spark SQL executions a call starts, counted by a listener.
   * On inputs this small each execution is mostly fixed driver and stage
@@ -56,6 +57,114 @@ class ExecutionCountSpec extends AnyFunSuite with SparkTestBase {
     Counts(execs.get(), bareJobs.get(), jobs.get())
   }
 
+  test("small commits run one or two Spark jobs; a delta over the bound takes Spark") {
+    val s = spark
+    import s.implicits._
+    val store = new FeatureStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_small_commits").toString)
+    def key(i: Int, month: Int) = (s"e${i % 7}", ts(f"2024-$month%02d-${i % 27 + 1}%02d"))
+    def rows(from: Int, n: Int, month: Int) = (from until from + n)
+      .map { i => val (e, t) = key(i, month); (e, t, i.toDouble) }
+      .toDF("entity_id", "timestamp", "v")
+    def keys(ks: (String, java.sql.Timestamp)*) = ks.toDF("entity_id", "timestamp")
+    store.register("t", rows(0, 40, 1))
+    def jobs(body: => Unit): Int = counted(body).jobs
+    assert(jobs(store.registerAppend("t", rows(40, 30, 2), maxSegments = 10)) == 1,
+      "append")
+    assert(jobs(store.compact("t")) == 1, "compact")
+    store.registerAppend("t", rows(70, 30, 3), maxSegments = 10)
+    assert(jobs(store.registerAppend("t", rows(100, 30, 4), maxSegments = 2)) == 1,
+      "auto-compacting append")
+    assert(store.currentSegmentStats("t").map(_.size).contains(1))
+    store.registerAppend("t", rows(130, 30, 5), maxSegments = 10)
+    // replaces two rows of the May segment and inserts one
+    val delta = Seq((key(131, 5), -1.0), (key(140, 5), -2.0), (("e9", ts("2024-05-03")), -3.0))
+      .map { case ((e, t), v) => (e, t, v) }.toDF("entity_id", "timestamp", "v")
+    assert(jobs(store.registerUpsert("t", delta)) == 2, "upsert")
+    assert(jobs(store.registerRewrite("t", delta.limit(1), keys(key(135, 5)))) == 2,
+      "rewrite")
+    assert(jobs(store.deleteRowsByKeys("t", keys(key(141, 5)))) == 2, "delete")
+    // a segment whose rows the keys match wholly is dropped unwritten
+    store.registerAppend("t", rows(160, 2, 6), maxSegments = 10)
+    val whole = keys(key(160, 6), key(161, 6))
+    assert(jobs(store.deleteRowsByKeys("t", whole)) == 1, "wholly matched delete")
+    assert(jobs(store.deleteRowsByKeys("t", whole)) == 0, "no-match delete")
+    assert(store.getTableInfo("t").rowCount == 160 + 1 - 1 - 1)
+
+    // a delta one row over the bound: the Spark kernel, whose bounds
+    // aggregate, change set and rewrite each run at least one job
+    val large = spark.range(FeatureStore.DriverMutationMaxRows + 1).select(
+      concat(lit("n"), col("id").cast("string")).as("entity_id"),
+      lit(ts("2024-07-01")).as("timestamp"), col("id").cast("double").as("v"))
+    val before = store.getTableInfo("t").rowCount
+    assert(jobs(store.registerUpsert("t", large)) > 3, "a delta over the bound")
+    assert(store.getTableInfo("t").rowCount == before + FeatureStore.DriverMutationMaxRows + 1)
+  }
+
+  test("wide rows past the byte bound take the Spark kernel; local deltas past it the exchange") {
+    val s = spark
+    import s.implicits._
+    val store = new FeatureStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_byte_bound").toString)
+    // 200 rows of about 1 KiB each, all in one January segment
+    val pad = "x" * 1000
+    def wide(from: Int, n: Int, tag: String) = (from until from + n)
+      .map(i => (s"e$i", ts(f"2024-01-${i % 28 + 1}%02d"), tag + pad)).toDF("entity_id", "timestamp", "s")
+    store.register("t", wide(0, 200, "a"))
+    def upsert(kernel: FeatureStore.MutationKernel, i: Int, tag: String) = counted(
+      store.registerUpsertOn(kernel, "t", wide(i, 1, tag))).jobs
+    // within both bounds: the driver kernel's two jobs
+    assert(upsert(Auto(maxRows = 1000, maxBytes = 1L << 20), 3, "b") == 2)
+    // within the row bound but not the byte bound: the driver's read
+    // stops part way and the Spark kernel runs, to the same result
+    assert(upsert(Auto(maxRows = 1000, maxBytes = 100L << 10), 5, "c") > 2)
+    val deleted = counted(store.deleteRowsByKeysOn(Auto(maxRows = 1000, maxBytes = 100L << 10),
+      "t", Seq(("e7", ts("2024-01-08"))).toDF("entity_id", "timestamp"))).jobs
+    assert(deleted > 2)
+    val got = store.get("t", Seq("e3", "e5", "e7", "e9"), ts("2024-02-01")).collect()
+      .map(r => r.getString(0) -> r.getString(2).take(1)).toMap
+    assert(got == Map("e3" -> "b", "e5" -> "c", "e9" -> "a"))
+    assert(store.getTableInfo("t").rowCount == 199)
+
+    // a local delta of few rows and more than LocalRowsMaxBytes bytes:
+    // the exchanged write (its two jobs), not the single task
+    val big = "y" * (1 << 20)
+    val rows = (FeatureStore.LocalRowsMaxBytes >> 20).toInt + 1
+    val heavy = (0 until rows).map(i => (s"h$i", ts("2024-02-01"), big))
+      .toDF("entity_id", "timestamp", "s")
+    assert(counted(store.registerAppend("t", heavy, maxSegments = 10)).jobs == 2)
+    assert(store.getTableInfo("t").rowCount == 199 + rows)
+  }
+
+  test("the driver kernel takes NaN, -0.0 and null keys, nested doubles and evolved segments") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val store = new FeatureStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_driver_kernel_shapes").toString)
+    def schema(extra: Boolean) = StructType(Seq(
+      StructField("entity_id", DoubleType), StructField("timestamp", TimestampType),
+      StructField("arr", ArrayType(DoubleType))) ++
+      (if (extra) Seq(StructField("extra", IntegerType)) else Nil))
+    def frame(extra: Boolean, rows: Row*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema(extra))
+    store.register("t", frame(false,
+      Row(Double.NaN, ts("2024-01-01"), Seq(-0.0, Double.NaN)),
+      Row(-0.0, ts("2024-01-02"), null),
+      Row(null, null, Seq(1.0))))
+    store.registerAppend("t", frame(true, Row(1.5, ts("2024-02-01"), Seq(0.0), 7)),
+      mergeSchema = true)
+    val delta = frame(true,
+      Row(Double.NaN, ts("2024-01-01"), Seq(0.0, Double.NaN), 1), // replaces the NaN row
+      Row(0.0, ts("2024-01-02"), Seq(2.0), null),               // replaces the -0.0 row
+      Row(null, null, Seq(1.0), null))                          // replaces the null-key row
+    assert(counted(store.registerUpsert("t", delta)).jobs == 2)
+    assert(store.getTableInfo("t").rowCount == 4)
+    val keys = spark.createDataFrame(java.util.Arrays.asList(Row(null, null)),
+      StructType(schema(false).fields.take(2)))
+    assert(counted(store.deleteRowsByKeys("t", keys)).jobs == 2)
+    assert(store.getTableInfo("t").rowCount == 3)
+  }
+
   test("key-addressed mutations run in three SQL executions; read-backs infer no schema") {
     val s = spark
     import s.implicits._
@@ -69,7 +178,9 @@ class ExecutionCountSpec extends AnyFunSuite with SparkTestBase {
       ("user_1", ts("2024-02-01"), 30.0, 3000L), // replaces a Feb row
       ("user_3", ts("2024-02-05"), 5.0, 500L))   // inserts
       .toDF("entity_id", "timestamp", "feature_a", "feature_b")
-    val upsertExecs = counted(store.registerUpsert("t", delta)).execs
+    // forced: on inputs this small the public call takes the driver
+    // kernel (pinned in jobs above), and this bound is the Spark kernel's
+    val upsertExecs = counted(store.registerUpsertOn(OnSpark, "t", delta)).execs
     assert(upsertExecs <= 3, s"registerUpsert ran $upsertExecs SQL executions")
     val bareAfterUpsert = counted(
       store.get("t", Seq("user_1", "user_3"), ts("2024-03-01")).collect()).bareJobs
@@ -77,7 +188,7 @@ class ExecutionCountSpec extends AnyFunSuite with SparkTestBase {
       s"a get after an upsert ran $bareAfterUpsert jobs outside SQL executions")
 
     val keys = Seq(("user_3", ts("2024-02-05"))).toDF("entity_id", "timestamp")
-    val deleteExecs = counted(store.deleteRowsByKeys("t", keys)).execs
+    val deleteExecs = counted(store.deleteRowsByKeysOn(OnSpark, "t", keys)).execs
     assert(deleteExecs <= 3, s"deleteRowsByKeys ran $deleteExecs SQL executions")
     val bareAfterDelete = counted(
       store.get("t", Seq("user_1"), ts("2024-03-01")).collect()).bareJobs

@@ -107,6 +107,70 @@ class IncrementalStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(store.compact("t").version == 3)
   }
 
+  test("an empty append fails as before and leaves no version directory") {
+    val root = freshRoot()
+    val store = new FeatureStore(spark, root)
+    store.register("t", rows(1 to 3, day = 1))
+    val empty = rows(1 to 3, day = 2).limit(0)
+    // the plain append, then one that would compact (maxSegments = 1)
+    Seq(16, 1).foreach { maxSegments =>
+      val e = intercept[FeatureValidationError](
+        store.registerAppend("t", empty, maxSegments = maxSegments))
+      assert(e.getMessage == "t must not be empty")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "t", "v=2")))
+      assert(store.getTableInfo("t").version == 1)
+    }
+    // a non-local empty delta takes the same path
+    intercept[FeatureValidationError](store.registerAppend("t",
+      spark.range(0).selectExpr("'u' AS entity_id",
+        "TIMESTAMP'2024-01-02 00:00:00' AS timestamp", "1.0D AS value")))
+    assert(store.registerAppend("t", rows(4 to 5, day = 2)).version == 2)
+    assert(store.getTableInfo("t").rowCount == 5)
+  }
+
+  test("segment files stay sorted by (entity, timestamp) within each period's one file") {
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    val root = freshRoot()
+    val store = new FeatureStore(spark, root)
+    // 1,000 rows over 50 entities and three months, in hash order
+    val source = spark.range(1000).select(
+      pmod(hash(col("id")), lit(50)).cast("long").as("entity_id"),
+      (lit(ts("2024-01-01").getTime / 1000L) + pmod(hash(col("id"), lit(7)), lit(90 * 86400)))
+        .cast("timestamp").as("timestamp"),
+      col("id").cast("double").as("value"))
+    val local = spark.createDataFrame(source.collect().toSeq.asJava, source.schema)
+    def checkSorted(v: Int, what: String): Unit = {
+      val periods = java.nio.file.Files.list(java.nio.file.Paths.get(root, "t", s"v=$v"))
+        .iterator().asScala.filter(_.getFileName.toString.startsWith("_ts_date=")).toSeq
+      assert(periods.nonEmpty, what)
+      periods.foreach { dir =>
+        val files = java.nio.file.Files.list(dir).iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+        assert(files.size == 1, s"$what: ${files.size} files in $dir")
+        val keys = spark.read.parquet(files.head.toString)
+          .select("entity_id", "timestamp").collect()
+          .map(r => (r.getLong(0), r.getTimestamp(1).getTime))
+        val inversions = keys.sliding(2).count {
+          case Array((e1, t1), (e2, t2)) => e1 > e2 || (e1 == e2 && t1 > t2)
+          case _ => false
+        }
+        assert(inversions == 0, s"$what: $inversions order inversions in $dir")
+      }
+    }
+    store.register("t", source) // not local: the period exchange
+    checkSorted(1, "exchanged write")
+    store.register("t", local) // local: one task
+    checkSorted(2, "single-task write")
+    // a copy-on-write rewrite of the one segment, by either kernel
+    val delta = local.limit(30).withColumn("value", col("value") + 0.5)
+    store.registerUpsert("t", delta)
+    checkSorted(3, "driver-classified rewrite")
+    store.registerUpsertOn(FeatureStore.MutationKernel.OnSpark, "t", delta)
+    checkSorted(4, "Spark-classified rewrite")
+    assert(store.getTableInfo("t").rowCount == 1000)
+  }
+
   test("registerAppend rejects schema drift") {
     val s = spark
     import s.implicits._
