@@ -100,8 +100,7 @@ object SparkEntry {
     * exact oracle.
     */
   /** One bootstrap for every fingerprint-keyed demo store, shared by
-    * the three variants below (prefix + storage factory + init body are
-    * the only differences). The root is keyed by (prefix, source dir,
+    * the variants below (prefix + init body are the only differences). The root is keyed by (prefix, source dir,
     * row count, id checksum): one aggregation job computes the
     * fingerprint — the checksum means a regenerated source with the
     * same row count still maps to a fresh directory — and the per-dir
@@ -114,8 +113,6 @@ object SparkEntry {
       s: SparkSession,
       dir: String,
       prefix: String,
-      storageFactory: (SparkSession, String, String) => graft.store.VersionStorage =
-        new graft.store.Storage(_, _, _),
       // completeness check for an already-initialized root: MUTATED
       // stores (row deletes / upserts) end with rowCount != source rows
       // by design, so they verify "the final version exists" instead of
@@ -137,8 +134,7 @@ object SparkEntry {
         s"${sys.props("java.io.tmpdir")}/${prefix}_${san}_${rows}_$idSum"
       graft.store.FeatureStore.vacuumSiblingRoots(root, s"${prefix}_${san}_",
         minAgeMillis = 15L * 60 * 1000)
-      val store = new graft.store.FeatureStore(s, root,
-        storageFactory = storageFactory)
+      val store = new graft.store.FeatureStore(s, root)
       val fresh = !store.tableNames.contains("events") ||
         (if (minVersion > 1) store.getTableInfo("events").version < minVersion
          else store.getTableInfo("events").rowCount != rows)
@@ -153,22 +149,21 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def demoStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(demoStores, s, dir, "graft_store_rt_v2") {
+    fingerprintStore(demoStores, s, dir, "graft_store_rt_v3") {
       (store, feats) => store.register("events", feats); ()
     }
 
-  /** [[demoStore]] built on the TRANSACTION-LOG storage adapter
-    * ([[graft.store.TxnLogStorage]]): same events table, same reads,
-    * but every version resolves through a commit marker (Delta-shaped
-    * versionAsOf). Its roundtrip query shares the PIT oracle — the
-    * storage format must be value-invisible through the seam.
+  /** [[demoStore]]'s build under a root of its own, whose versions
+    * resolve through commit markers of the transaction log
+    * ([[graft.store.TxnLogStorage]]), as every store's do. Its
+    * roundtrip query shares the PIT oracle — the log must be
+    * value-invisible through the seam.
     */
   private val txnStores =
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def txnStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(txnStores, s, dir, "graft_store_txn_v1",
-      storageFactory = new graft.store.TxnLogStorage(_, _, _)) {
+    fingerprintStore(txnStores, s, dir, "graft_store_txn_v1") {
       (store, feats) => store.register("events", feats); ()
     }
 
@@ -185,7 +180,7 @@ object SparkEntry {
   private def appendStore(s: SparkSession, dir: String): graft.store.FeatureStore =
     // prefix v2: rebuilt once so the catalog carries the column-level
     // segment stats scanWhere's skipping path needs
-    fingerprintStore(appendStores, s, dir, "graft_store_app_v2") { (store, feats) =>
+    fingerprintStore(appendStores, s, dir, "graft_store_app_v3") { (store, feats) =>
       store.delete("events")
       val cutoff = lit(utcTs("2024-01-10 00:00:00"))
       store.register("events", feats.filter(col("timestamp") < cutoff))
@@ -205,7 +200,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def evolveStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(evolveStores, s, dir, "graft_store_evo_v1") { (store, feats) =>
+    fingerprintStore(evolveStores, s, dir, "graft_store_evo_v2") { (store, feats) =>
       store.delete("events")
       val cutoff = lit(utcTs("2024-01-10 00:00:00"))
       store.register("events",
@@ -232,14 +227,12 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def multiWriterStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(mwStores, s, dir, "graft_store_mw_v1",
-      storageFactory = new graft.store.TxnLogStorage(_, _, _)) { (a, feats) =>
+    fingerprintStore(mwStores, s, dir, "graft_store_mw_v1") { (a, feats) =>
       a.delete("events")
       val c1 = lit(utcTs("2024-01-08 00:00:00"))
       val c2 = lit(utcTs("2024-01-16 00:00:00"))
       a.register("events", feats.filter(col("timestamp") < c1))
-      val b = new graft.store.FeatureStore(s, a.rootPath,
-        storageFactory = new graft.store.TxnLogStorage(_, _, _))
+      val b = new graft.store.FeatureStore(s, a.rootPath)
       b.registerAppend("events",
         feats.filter(col("timestamp") >= c1 && col("timestamp") < c2))
       a.registerAppend("events", feats.filter(col("timestamp") >= c2))
@@ -274,7 +267,7 @@ object SparkEntry {
         (fp.getLong(0), fp.getLong(1))
       })
       val san = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val prefix = "graft_store_expect_v1"
+      val prefix = "graft_store_expect_v2"
       val root =
         s"${sys.props("java.io.tmpdir")}/${prefix}_${san}_${rows}_$idSum"
       graft.store.FeatureStore.vacuumSiblingRoots(root, s"${prefix}_${san}_",
@@ -318,7 +311,7 @@ object SparkEntry {
         (fp.getLong(0), fp.getLong(1))
       })
       val san = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val prefix = "graft_store_sexpect_v1"
+      val prefix = "graft_store_sexpect_v2"
       val root =
         s"${sys.props("java.io.tmpdir")}/${prefix}_${san}_${rows}_$idSum"
       graft.store.FeatureStore.vacuumSiblingRoots(root, s"${prefix}_${san}_",
@@ -364,7 +357,7 @@ object SparkEntry {
     })
 
   private def deleteStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(delStores, s, dir, "graft_store_del_v2", minVersion = 3) {
+    fingerprintStore(delStores, s, dir, "graft_store_del_v3", minVersion = 3) {
       (store, feats) =>
         store.delete("events")
         val cutoff = lit(utcTs("2024-01-10 00:00:00"))
@@ -387,7 +380,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def restoreStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(resStores, s, dir, "graft_store_res_v2", minVersion = 3) {
+    fingerprintStore(resStores, s, dir, "graft_store_res_v3", minVersion = 3) {
       (store, feats) =>
         store.delete("events")
         store.register("events", feats)
@@ -411,7 +404,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def cdcReplicaStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(cdcStores, s, dir, "graft_store_cdcr_v1", minVersion = 2) {
+    fingerprintStore(cdcStores, s, dir, "graft_store_cdcr_v2", minVersion = 2) {
       (replica, feats) =>
         replica.delete("events")
         val srcRoot = replica.rootPath + "_src"
@@ -456,7 +449,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def sqlInsertStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(sqlInsStores, s, dir, "graft_store_sqlins_v1", minVersion = 2) {
+    fingerprintStore(sqlInsStores, s, dir, "graft_store_sqlins_v2", minVersion = 2) {
       (store, feats) =>
         store.delete("events")
         val cutoff = lit(utcTs("2024-01-10 00:00:00"))
@@ -485,7 +478,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def streamServeStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(ssStores, s, dir, "graft_store_ss_v1") { (store, feats) =>
+    fingerprintStore(ssStores, s, dir, "graft_store_ss_v2") { (store, feats) =>
       store.delete("events")
       val ck = store.rootPath + "_ck"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
@@ -628,7 +621,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def servingStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(servingStores, s, dir, "graft_store_serving_v1",
+    fingerprintStore(servingStores, s, dir, "graft_store_serving_v2",
       minVersion = 3) { (store, feats) =>
       store.delete("events")
       store.register("events", feats)
@@ -671,7 +664,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def sqlDeleteStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(sqlDelStores, s, dir, "graft_store_sqldel_v1", minVersion = 3) {
+    fingerprintStore(sqlDelStores, s, dir, "graft_store_sqldel_v2", minVersion = 3) {
       (store, feats) =>
         store.delete("events")
         val cutoff = lit(utcTs("2024-01-10 00:00:00"))
@@ -694,7 +687,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def sqlUpdateStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(sqlUpdStores, s, dir, "graft_store_squpd_v1", minVersion = 2) {
+    fingerprintStore(sqlUpdStores, s, dir, "graft_store_squpd_v2", minVersion = 2) {
       (store, feats) =>
         store.delete("events")
         store.register("events", feats)
@@ -717,7 +710,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def sqlRekeyStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(sqlRekStores, s, dir, "graft_store_sqlrek_v1", minVersion = 2) {
+    fingerprintStore(sqlRekStores, s, dir, "graft_store_sqlrek_v2", minVersion = 2) {
       (store, feats) =>
         store.delete("events")
         store.register("events", feats)
@@ -744,7 +737,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def sqlMergeStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(sqlMrgStores, s, dir, "graft_store_sqlmrg_v1", minVersion = 2) {
+    fingerprintStore(sqlMrgStores, s, dir, "graft_store_sqlmrg_v2", minVersion = 2) {
       (store, feats) =>
         store.delete("events")
         store.register("events", feats)
@@ -785,7 +778,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def sqlRenameStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(sqlRenStores, s, dir, "graft_store_sqlren_v1", minVersion = 2) {
+    fingerprintStore(sqlRenStores, s, dir, "graft_store_sqlren_v2", minVersion = 2) {
       (store, feats) =>
         store.delete("events")
         store.delete("events_src")
@@ -808,7 +801,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def sqlConstraintStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(sqlConStores, s, dir, "graft_store_sqlcon_v1", minVersion = 2) {
+    fingerprintStore(sqlConStores, s, dir, "graft_store_sqlcon_v2", minVersion = 2) {
       (store, feats) =>
         store.delete("events")
         val cutoff = lit(utcTs("2024-01-10 00:00:00"))
@@ -832,7 +825,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def stringKeyStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(strStores, s, dir, "graft_store_str_v1") {
+    fingerprintStore(strStores, s, dir, "graft_store_str_v2") {
       (store, feats) =>
         store.register("events",
           feats.withColumn("entity_id",
@@ -849,7 +842,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def optimizeStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(optStores, s, dir, "graft_store_opt_v1", minVersion = 2) {
+    fingerprintStore(optStores, s, dir, "graft_store_opt_v2", minVersion = 2) {
       (store, feats) =>
         store.delete("events")
         store.register("events", feats)
@@ -868,7 +861,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.store.FeatureStore]()
 
   private def upsertStore(s: SparkSession, dir: String): graft.store.FeatureStore =
-    fingerprintStore(upsStores, s, dir, "graft_store_ups_v2", minVersion = 2) {
+    fingerprintStore(upsStores, s, dir, "graft_store_ups_v3", minVersion = 2) {
       (store, feats) =>
         store.delete("events")
         store.register("events", feats)

@@ -68,8 +68,8 @@ final case class TableMeta(
     // generation that ever fed the table (bounded by restart count).
     batchWatermarks: SortedMap[String, Long] = SortedMap.empty,
     // PRUNE HIGH-WATER: every version <= prunedThrough has left the
-    // retention window. This is what lets multi-writer reconciliation
-    // ([[FeatureStore]] over an arbitrating [[VersionStorage]]) tell a
+    // retention window. This is what lets reconciliation from the
+    // transaction log ([[FeatureStore]] over [[TxnLogStorage]]) tell a
     // RACE GAP (a version another writer committed that this catalog
     // entry never saw — reconcile it in from its commit record) from a
     // PRUNED version (deliberately dropped — never resurrect it).
@@ -205,20 +205,20 @@ final class Catalog {
   * lines load with `prunedThrough = 0` and absent `R` lines as
   * no-stats — both are the safe directions.
   *
+  * The catalog is a CACHE of the transaction log ([[TxnLogStorage]]):
+  * version numbers are decided by the log's reservations and commit
+  * markers, and a version whose catalog save never landed is folded
+  * back in from its marker. The catalog also keeps facts no marker
+  * carries, such as the prune high-water and constraint edits made
+  * without a commit.
+  *
   * Multi-writer stance: [[save]] touches ONLY the files of the tables
   * it is handed (tables this session never touched keep their files
-  * untouched, tables in `removed` lose theirs), so two
-  * single-writer-per-table sessions sharing a root never share a file
-  * — the former whole-file load-merge-rewrite window, which could lose
-  * a concurrent session's update to a DIFFERENT table, is gone
-  * structurally. Concurrent writers
-  * of the SAME table: over the default [[Storage]] they are detected by
-  * [[FeatureStore.register]]'s version check and rejected
-  * (single-writer contract, per the reference's zero-infrastructure
-  * stance); over an ARBITRATING storage ([[TxnLogStorage]]) they are
-  * serialized properly by the transaction log's reserve/commit
-  * protocol, with same-table saves racing last-writer-wins and the log
-  * reconciling any version a lost save dropped. The one multi-writer
+  * untouched, tables in `removed` lose theirs), so sessions writing
+  * different tables of one root never share a file. Concurrent writers
+  * of the SAME table are serialized by the log's reserve/commit
+  * protocol; their catalog saves race last-writer-wins, and the log
+  * reconciles any version a lost save dropped. The one multi-writer
   * operation NOT arbitrated is whole-table DELETE racing a concurrent
   * register: deletion does not go through the log, so a writer holding
   * a pre-delete snapshot can commit one more version and resurrect the
@@ -258,9 +258,8 @@ object CatalogPersistence extends CatalogIO {
     * single `_catalog.tsv` was rewritten whole per mutation, O(tables
     * × retained versions), and its load-merge-rewrite window could
     * lose a concurrent session's update to a DIFFERENT table; disjoint
-    * tables now never share a file. Same-table concurrency is
-    * unchanged (last-writer-wins over [[Storage]], serialized by the
-    * log over an arbitrating storage).
+    * tables now never share a file. Same-table writers are serialized
+    * by the transaction log.
     */
   def catalogDir(root: String): Path = Paths.get(root, "_catalog")
 
@@ -308,7 +307,15 @@ object CatalogPersistence extends CatalogIO {
     ()
   }
 
-  private def writeAtomic(path: Path, lines: Seq[String]): Unit = {
+  /** Replace `path` with `content` atomically: a unique temp file beside
+    * it (`.<name>.tmp-<uuid>`), synced, then renamed over it. The catalog
+    * files and the transaction log's markers and checkpoints are all
+    * written this way. `beforeMove` runs between the synced write and
+    * the rename (the log's last ownership re-check); when it or the
+    * rename throws, the temp file is removed and `path` is untouched.
+    */
+  private[store] def writeAtomic(
+      path: Path, content: String, beforeMove: () => Unit = () => ()): Unit = {
     // unique tmp name: concurrent saves must not interleave on one file
     val tmp = path.resolveSibling(
       s".${path.getFileName}.tmp-${java.util.UUID.randomUUID()}")
@@ -317,14 +324,19 @@ object CatalogPersistence extends CatalogIO {
     // renamed file empty or truncated (rename ordering is not
     // guaranteed against data writes on most filesystems)
     Files.writeString(
-      tmp, lines.mkString("\n"),
+      tmp, content,
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.TRUNCATE_EXISTING,
       java.nio.file.StandardOpenOption.WRITE,
       java.nio.file.StandardOpenOption.SYNC)
-    Files.move(
-      tmp, path,
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    try {
+      beforeMove()
+      Files.move(
+        tmp, path,
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case e: Throwable => Files.deleteIfExists(tmp); throw e
+    }
     // fsync the directory so the rename itself survives power loss
     fsyncDir(path.getParent)
   }
@@ -346,7 +358,7 @@ object CatalogPersistence extends CatalogIO {
   private def readLines(path: Path): Seq[String] =
     Files.readString(path).split("\n").toSeq.filter(_.nonEmpty)
 
-  private def renderMeta(m: TableMeta): Seq[String] = {
+  private def renderMeta(m: TableMeta): String = {
     {
       val head =
         s"T\t${enc(m.name)}\t${m.version}\t${m.rowCount}\t${m.registeredAt}\t${m.updatedAt}\t${m.prunedThrough}"
@@ -391,8 +403,9 @@ object CatalogPersistence extends CatalogIO {
       }
       val cluster = m.clusterSpec.toSeq.map(sp =>
         s"Z\t${enc(m.name)}\t${enc(sp)}")
-      (head +: versions) ++ manifests ++ watermark ++ stats ++ times ++
-        types ++ ops ++ vrows ++ cdf ++ srows ++ cstats ++ checks ++ cluster
+      ((head +: versions) ++ manifests ++ watermark ++ stats ++ times ++
+        types ++ ops ++ vrows ++ cdf ++ srows ++ cstats ++ checks ++ cluster)
+        .mkString("\n")
     }
   }
 

@@ -32,20 +32,20 @@ final class FeatureStore(
     storageRoot: String = null,
     val maxVersions: Int = 10,
     partitionGranularity: String = "month",
-    // the storage seam: swap the zero-dependency parquet layout for a
-    // transactional table format by supplying a different
-    // [[VersionStorage]] for the resolved (session, root, granularity)
+    // the storage seam: the [[VersionStorage]] every commit goes
+    // through, for the resolved (session, root, granularity). The
+    // transaction log ([[TxnLogStorage]]) is the version authority;
+    // the parameter exists so a decorator can wrap it
     storageFactory: (SparkSession, String, String) => VersionStorage =
-      new Storage(_, _, _),
+      new TxnLogStorage(_, _, _),
     // the catalog persistence seam (see [[CatalogIO]]): every durable
-    // catalog read/write goes through here — ONE save per mutation is
-    // the crash-atomicity contract (a version and its streaming
-    // high-water commit together or not at all)
+    // catalog read/write goes through here. The catalog is a cache of
+    // the log: a commit whose save never lands is reconciled from its
+    // marker, stream watermark included
     catalogIO: CatalogIO = CatalogPersistence,
     // how long a register waits out another writer's in-flight
-    // reservation (arbitrating storage only) before failing with
-    // FeatureConcurrencyError. Crashed reservations are swept by
-    // vacuum, after which the lineage resumes.
+    // reservation before failing with FeatureConcurrencyError. Crashed
+    // reservations are swept by vacuum, after which the lineage resumes.
     arbitrationWaitMillis: Long = 30000L) {
 
   if (maxVersions < 1)
@@ -63,13 +63,13 @@ final class FeatureStore(
   /** [[typedEmptyFrame]]'s probes: table -> (columns, types, frame). */
   private val probes = scala.collection.concurrent.TrieMap
     .empty[String, (Seq[String], Seq[String], DataFrame)]
-  // Reopen an existing store: the catalog file under the root (written
-  // on every mutation) restores tables, versions and schemas. Over an
-  // arbitrating storage the transaction log is the version authority —
-  // fold in any version committed by a writer whose catalog save this
-  // file never saw (crashed after commit, or raced by a later save).
+  // Reopen an existing store: the catalog cache under the root restores
+  // tables, versions and schemas; the transaction log, the version
+  // authority, then folds in any version committed by a writer whose
+  // catalog save this cache never saw (crashed after commit, or raced
+  // by a later save). Every retained version must have its marker.
   catalogIO.load(root).foreach(catalog.put)
-  if (storage.arbitrates) catalog.names.foreach(reconcileFromLog)
+  catalog.names.foreach { n => reconcileFromLog(n); requireLogged(n) }
 
   /** Internal deterministic tie-break column; never surfaced in output. */
   private val IngestKeyCol = "_ingest_key"
@@ -96,7 +96,7 @@ final class FeatureStore(
     registerWith(name, df, watermark = None)
 
   /** [[register]] with an optional streaming high-water to stamp into
-    * the SAME catalog commit as the new version — crash-atomicity for
+    * the new version's commit marker — crash-atomicity for
     * [[registerBatch]]: there is no window where a version exists
     * without its batch watermark (which would make a recovery replay
     * mint a duplicate).
@@ -147,7 +147,8 @@ final class FeatureStore(
         wr.rows, wr.rows, df.columns.toSeq, Seq(v),
         wr.minTsMillis, wr.maxTsMillis, now, typesOf(df),
         operation = "register", colStats = wr.colStats,
-        constraints = cur.fold(Map.empty[String, String])(_.constraints.toMap)))
+        constraints = cur.fold(Map.empty[String, String])(_.constraints.toMap),
+        watermark = watermark))
       cur match {
         case None =>
           TableMeta(name, v, wr.rows, now, now, SortedMap(v -> df.columns.toSeq),
@@ -304,7 +305,7 @@ final class FeatureStore(
 
   /** Run a claimed version's write+commit, releasing the reservation on
     * failure so a failed write doesn't wedge the lineage until a vacuum
-    * sweep (no-op release for non-arbitrating storage).
+    * sweep.
     */
   private def completeClaim[A](name: String, v: Int)(body: => A): A =
     try body
@@ -314,34 +315,22 @@ final class FeatureStore(
         throw e
     }
 
-  /** Produce (current meta, claimed next version) for a register.
-    *
-    * Non-arbitrating storage keeps the shipped single-writer contract:
-    * fail fast when the shared catalog shows a foreign writer advanced
-    * the table.
-    *
-    * Arbitrating storage ([[VersionStorage.arbitrates]]) runs the
-    * optimistic-concurrency loop of the Delta commit protocol instead:
-    * adopt the freshest on-disk catalog entry, fold in versions
-    * committed in the transaction log that no catalog save recorded
-    * ([[reconcileFromLog]]), then try to RESERVE the next number
-    * atomically. Losing the race (another writer claimed it first)
-    * re-reads and retries; an in-flight foreign reservation is awaited
-    * up to `arbitrationWaitMillis`, after which the register fails with
-    * the vacuum hint (a crashed writer's reservation is swept by
-    * vacuum under the grace window).
+  /** Produce (current meta, claimed next version) for a register: the
+    * optimistic-concurrency loop of the Delta commit protocol. Adopt
+    * the freshest state ([[refreshTable]]: the on-disk catalog entry,
+    * then versions committed in the transaction log that no catalog
+    * save recorded), then try to RESERVE the next number atomically.
+    * Losing the race (another writer claimed it first) re-reads and
+    * retries; an in-flight foreign reservation is awaited up to
+    * `arbitrationWaitMillis`, after which the register fails with the
+    * vacuum hint (a crashed writer's reservation is swept by vacuum
+    * under the grace window).
     */
   private def claimVersion(name: String): (Option[TableMeta], Int) = {
-    if (!storage.arbitrates) {
-      detectForeignWriter(name)
-      val cur = catalog.get(name)
-      return (cur, cur.map(_.version + 1).getOrElse(1))
-    }
     val deadline = System.currentTimeMillis() + arbitrationWaitMillis
     var backoff = 2L
     while (true) {
-      adoptDiskMeta(name)
-      reconcileFromLog(name)
+      refreshTable(name)
       catalog.get(name) match {
         case None =>
           // reconcileFromLog already synthesized any creation whose
@@ -392,16 +381,24 @@ final class FeatureStore(
   /** Catalog lookup for READ paths. A hit keeps session-snapshot
     * semantics (this session's view is pinned until it writes or
     * reopens — the same contract as before multi-writer support). A
-    * MISS over an arbitrating storage adopts the shared state first, so
-    * a table another session registered is readable here without a
-    * reopen; version-level misses get the same retry in
-    * [[getVersion]].
+    * MISS adopts the shared state first, so a table another session
+    * registered is readable here without a reopen; version-level misses
+    * get the same retry in [[getVersion]].
     */
   private def resolveMeta(name: String): TableMeta =
     catalog.get(name).getOrElse {
-      if (storage.arbitrates) { adoptDiskMeta(name); reconcileFromLog(name) }
+      refreshTable(name)
       catalog.getOrThrow(name)
     }
+
+  /** Adopt every commit to `name` this session has not seen: the
+    * on-disk catalog entry, then the transaction log's markers past it.
+    * Every write runs this before acting on the table's state.
+    */
+  private def refreshTable(name: String): Unit = {
+    adoptDiskMeta(name)
+    reconcileFromLog(name)
+  }
 
   /** Adopt the freshest on-disk catalog entry for `name` (another
     * writer's save), merging rather than replacing so neither side's
@@ -417,7 +414,7 @@ final class FeatureStore(
 
   /** Re-read the durable catalog and adopt every table/version other
     * PROCESSES committed to this root — the REFRESH TABLE surface.
-    * Writers on arbitrating storage do this implicitly per claim, and
+    * Writers do this implicitly per claim, and
     * the graft streaming source reopens per poll; an explicit refresh
     * is for a long-lived reader session that wants to see foreign
     * commits without writing. Local state merges (never regresses) and
@@ -471,7 +468,7 @@ final class FeatureStore(
         Storage.invalidateSchemas(s"$root/$n")
         catalog.remove(n)
       }
-    if (storage.arbitrates) catalog.names.foreach(reconcileFromLog)
+    catalog.names.foreach(reconcileFromLog)
   }
 
   /** Latest whole-table retirement time for `name`, if any (a `delete`
@@ -554,7 +551,11 @@ final class FeatureStore(
             // writer's addConstraint may have never reached a catalog
             // save) — union with local, biased toward enforcement
             constraints = m.constraints ++
-              addable.toSeq.sortBy(_._1).flatMap(_._2.constraints))
+              addable.toSeq.sortBy(_._1).flatMap(_._2.constraints),
+            // a stream high-water whose catalog save never landed: the
+            // replay of that batch must still be skipped
+            batchWatermarks = FeatureStore.maxWatermarks(
+              m.batchWatermarks.toSeq ++ addable.values.flatMap(_.watermark)))
           if (top > m.version)
             merged = merged.copy(
               version = top,
@@ -605,8 +606,25 @@ final class FeatureStore(
             // CHECK constraints / cluster spec as of the newest commit
             // — both survive a catalog rebuilt purely from markers
             constraints = SortedMap(records(top).constraints.toSeq: _*),
-            clusterSpec = records(top).clusterSpec))
+            clusterSpec = records(top).clusterSpec,
+            batchWatermarks =
+              FeatureStore.maxWatermarks(records.values.flatMap(_.watermark).toSeq)))
         }
+    }
+
+  /** Fail the open of a root whose catalog retains a version of `name`
+    * that has no commit marker: such a version was written without the
+    * transaction log, and every read of it would fail.
+    */
+  private def requireLogged(name: String): Unit =
+    catalog.get(name).foreach { m =>
+      val missing = m.versions.keySet -- storage.committedVersions(name)
+      if (missing.nonEmpty)
+        throw new FeatureStorageError(
+          s"table '$name' at $root retains versions " +
+            s"${missing.toSeq.sorted.mkString(", ")} with no commit marker in " +
+            s"its transaction log ($root/$name/_txn): the root was written " +
+            "without the log; rebuild it by registering its tables again")
     }
 
   /** Decorate a to-be-written DataFrame with a SECOND observation
@@ -876,20 +894,18 @@ final class FeatureStore(
       mergeSchema: Boolean = false): FeatureTableInfo = this.synchronized {
     if (maxSegments < 1)
       throw new IllegalArgumentException(s"maxSegments must be >= 1, got $maxSegments")
-    if (catalog.get(name).isEmpty && !storage.arbitrates)
-      return registerWith(name, df, watermark)
     // emptiness is counted on the write itself, below
     Validation.validateDataFrame(df, name, allowEmpty = true)
     val (curOpt, v) = claimVersion(name)
     val cur = curOpt.getOrElse {
-      // arbitrated claim resolved to table creation after all: hand the
-      // claim back and take the full-snapshot creation path
+      // the claim resolved to table creation: hand it back and take the
+      // full-snapshot creation path
       storage.releaseVersion(name, v)
       return registerWith(name, df, watermark)
     }
     val meta = completeClaim(name, v) {
-      // re-validate against the CLAIMED state: an arbitrating claim may
-      // have absorbed another writer's schema-drift register
+      // re-validate against the CLAIMED state: the claim may have
+      // absorbed another writer's schema-drift register
       val evolved = evolveColumns("registerAppend", name, cur, df, mergeSchema)
       val chained = cur.segmentsOf(cur.version) :+ v
       val now0 = System.currentTimeMillis()
@@ -927,7 +943,7 @@ final class FeatureStore(
           wr.rows, wr.rows, evolved, Seq(v),
           wr.minTsMillis, wr.maxTsMillis, now0, newTypes,
           operation = "append", colStats = wr.colStats,
-          constraints = cur.constraints.toMap))
+          constraints = cur.constraints.toMap, watermark = watermark))
         cur.copy(version = v, rowCount = wr.rows, updatedAt = now0,
           versions = cur.versions + (v -> evolved),
           segments = cur.segments + (v -> Seq(v)),
@@ -947,7 +963,7 @@ final class FeatureStore(
           wr.rows, cur.rowCount + wr.rows, evolved, chained,
           wr.minTsMillis, wr.maxTsMillis, now0, newTypes,
           operation = "append", colStats = wr.colStats,
-          constraints = cur.constraints.toMap))
+          constraints = cur.constraints.toMap, watermark = watermark))
         cur.copy(version = v, rowCount = cur.rowCount + wr.rows, updatedAt = now0,
           versions = cur.versions + (v -> evolved),
           segments = cur.segments + (v -> chained),
@@ -989,10 +1005,10 @@ final class FeatureStore(
     * a streamId across checkpoint generations, and the store throws
     * [[FeatureConcurrencyError]] instead of silently dropping data.
     *
-    * The watermark commits in the SAME catalog save as the version it
-    * marks ([[registerWith]]) — a crash can lose both (replay
-    * re-registers, correct) but never the watermark alone (which would
-    * replay into a duplicate version).
+    * The watermark commits in the commit marker of the version it
+    * marks ([[registerWith]]), and the catalog save after it is a cache —
+    * a crash can lose both (replay re-registers, correct) but never the
+    * watermark alone (which would replay into a duplicate version).
     *
     * Returns `Some(info)` when a version was registered, `None` on a
     * skipped replay.
@@ -1107,12 +1123,12 @@ final class FeatureStore(
     * a single snapshot.
     */
   def compact(name: String): FeatureTableInfo = this.synchronized {
-    // compact is a WRITE: over an arbitrating storage it must act on
-    // the freshest multi-writer state, and it materializes its snapshot
-    // from the CLAIMED predecessor — materializing from a pre-claim
-    // read could republish a stale version's content as the newest,
-    // silently dropping a racing writer's register
-    if (storage.arbitrates) { adoptDiskMeta(name); reconcileFromLog(name) }
+    // compact is a WRITE: it must act on the freshest multi-writer
+    // state, and it materializes its snapshot from the CLAIMED
+    // predecessor — materializing from a pre-claim read could republish
+    // a stale version's content as the newest, silently dropping a
+    // racing writer's register
+    refreshTable(name)
     val meta0 = catalog.getOrThrow(name)
     if (meta0.segmentsOf(meta0.version).size <= 1) return meta0.info
     val (curOpt, v) = claimVersion(name)
@@ -1180,7 +1196,7 @@ final class FeatureStore(
     if (clusterBy.isEmpty)
       throw new FeatureValidationError(
         "optimizeTable needs at least one cluster column")
-    if (storage.arbitrates) { adoptDiskMeta(name); reconcileFromLog(name) }
+    refreshTable(name)
     catalog.getOrThrow(name)
     val (curOpt, v) = claimVersion(name)
     val cur = curOpt.getOrElse {
@@ -1547,6 +1563,15 @@ final class FeatureStore(
       .drop("_graft_copy")
   }
 
+  /** `df` with its floats and doubles, at any depth, as [[netChanges]]'
+    * grouping outputs them: -0.0 as 0.0, every NaN the same NaN. Map
+    * columns, which no grouping takes, pass as they are.
+    */
+  private def floatsNormalized(df: DataFrame): DataFrame =
+    df.select(bridge.analyzed(df).output.map(a =>
+      if (bridge.containsMap(a.dataType)) bridge.column(a)
+      else bridge.column(bridge.normalizeFloats(a)).as(a.name)): _*)
+
   /** [[netChanges]] on the driver, over rows whose first `n` columns
     * (of `schema`) are the change set's: grouped on those columns
     * float-normalized, as Spark's grouping compares and outputs them, a
@@ -1608,7 +1633,7 @@ final class FeatureStore(
     */
   def deleteRows(name: String, condition: Column): FeatureTableInfo =
     this.synchronized {
-      if (storage.arbitrates) { adoptDiskMeta(name); reconcileFromLog(name) }
+      refreshTable(name)
       catalog.getOrThrow(name)
       val (curOpt, v) = claimVersion(name)
       val cur = curOpt.getOrElse {
@@ -1771,7 +1796,7 @@ final class FeatureStore(
       name: String,
       keyDf: DataFrame): Option[FeatureTableInfo] =
     this.synchronized {
-      if (storage.arbitrates) { adoptDiskMeta(name); reconcileFromLog(name) }
+      refreshTable(name)
       catalog.getOrThrow(name)
       val missingCols = Seq(EntityIdColumn, TimestampColumn)
         .filterNot(keyDf.columns.contains)
@@ -2051,20 +2076,12 @@ final class FeatureStore(
               s"($EntityIdColumn, $TimestampColumn); missing: " +
               missing.mkString(", "))
       }
-      // a rewrite (dropKeys present) addresses EXISTING rows — on a
-      // table that doesn't exist it must fail like any other lookup,
-      // not silently degrade to a plain register that ignores the drops
-      def requireExistsForRewrite(): Unit =
-        dropKeys.foreach(_ => catalog.getOrThrow(name))
-      if (catalog.get(name).isEmpty && !storage.arbitrates) {
-        requireExistsForRewrite()
-        return registerWith(name, df, watermark)
-      }
       val (curOpt, v) = claimVersion(name)
       val cur = curOpt.getOrElse {
         storage.releaseVersion(name, v)
-        // the arbitrated log says the table is absent — the local
-        // catalog may be stale, so don't consult it here
+        // a rewrite (dropKeys present) addresses EXISTING rows — on a
+        // table that doesn't exist it must fail like any other lookup,
+        // not silently degrade to a plain register that ignores the drops
         dropKeys.foreach(_ => throw new FeatureTableNotFoundError(
           s"registerRewrite('$name'): table not found (a rewrite " +
             "addresses existing rows; register the table first)"))
@@ -2124,7 +2141,9 @@ final class FeatureStore(
         // record the change set (Delta _change_data): delete images =
         // replaced rows, insert images = the delta, identical-content
         // pairs cancelled (an upsert re-writing the same bytes is NOT a
-        // change); with no candidate, the delta's rows as inserts
+        // change); with no candidate, the delta's rows as inserts. Both
+        // record floats as the netting groups them (-0.0 as 0.0, one
+        // NaN), whichever segments the keys' bounds overlap
         val deltaRows = prepared.drop(IngestKeyCol)
         val c = classifyKeyed(kernel, cur, scanSegs, kb.getLong(0), typed, local,
           driverInputs(collectRows(prepared), drops.fold(Seq.empty[InternalRow])(collectRows))) {
@@ -2133,14 +2152,10 @@ final class FeatureStore(
               held = FeatureStore.unsafeBytes(prepared.schema, d), maxBytes)
               .filter(_.schema.map(_.dataType).corresponds(prepared.schema.map(_.dataType))(sameType))
               .map { s =>
-                val changes =
-                  if (scanSegs.isEmpty)
-                    localFrame(s.schema, d).drop(IngestKeyCol)
-                      .withColumn(FeatureStore.ChangeTypeCol, lit("insert"))
-                  else localFrame(
-                    StructType(s.schema.take(evolved.size) :+
-                      StructField(FeatureStore.ChangeTypeCol, StringType)),
-                    netChangesLocal(s.schema, evolved.size, s.matched, d))
+                val changes = localFrame(
+                  StructType(s.schema.take(evolved.size) :+
+                    StructField(FeatureStore.ChangeTypeCol, StringType)),
+                  netChangesLocal(s.schema, evolved.size, s.matched, d))
                 FeatureStore.Classified(s.counts,
                   () => storage.writeChangeData(name, v, changes.coalesce(1)),
                   affected => localFrame(s.schema,
@@ -2151,7 +2166,8 @@ final class FeatureStore(
           if (scanSegs.isEmpty)
             FeatureStore.Classified(Map.empty,
               () => storage.writeChangeData(name, v,
-                deltaRows.withColumn(FeatureStore.ChangeTypeCol, lit("insert"))),
+                floatsNormalized(deltaRows)
+                  .withColumn(FeatureStore.ChangeTypeCol, lit("insert"))),
               _ => prepared, small = false)
           else {
             val (counts, cdfRows) = writeChangeSet(
@@ -2193,7 +2209,8 @@ final class FeatureStore(
           wr.rows, untouchedRows + wr.rows, evolved, manifest,
           wr.minTsMillis, wr.maxTsMillis, now0, newTypes,
           operation = "upsert", changeRows = cdfRows,
-          colStats = wr.colStats, constraints = cur.constraints.toMap))
+          colStats = wr.colStats, constraints = cur.constraints.toMap,
+          watermark = watermark))
         cur.copy(version = v, rowCount = untouchedRows + wr.rows,
           updatedAt = now0,
           columnTypes = newTypes,
@@ -2220,7 +2237,7 @@ final class FeatureStore(
     * streaming MERGE shape (each micro-batch of a change stream
     * replaces matched keys and inserts new ones, exactly once). A
     * crash-recovery replay of the last batch is detected and skipped,
-    * and the batch watermark commits in the SAME catalog save as the
+    * and the batch watermark commits in the commit marker of the
     * version it marks, so no crash window can replay a batch into a
     * duplicate upsert.
     */
@@ -2473,7 +2490,7 @@ final class FeatureStore(
     */
   def restoreVersion(name: String, version: Int): FeatureTableInfo =
     this.synchronized {
-      if (storage.arbitrates) { adoptDiskMeta(name); reconcileFromLog(name) }
+      refreshTable(name)
       val meta0 = catalog.getOrThrow(name)
       if (!meta0.versions.contains(version))
         throw new FeatureTableNotFoundError(
@@ -2487,8 +2504,8 @@ final class FeatureStore(
           s"table '$name' was deleted by another writer during restore")
       }
       val meta = completeClaim(name, v) {
-        // re-check against the CLAIMED state: an arbitrated claim may
-        // have absorbed other writers' versions, including a prune of
+        // re-check against the CLAIMED state: the claim may have
+        // absorbed other writers' versions, including a prune of
         // the restore source
         val cols = cur.versions.getOrElse(version,
           throw new FeatureTableNotFoundError(
@@ -2514,20 +2531,6 @@ final class FeatureStore(
       catalogIO.save(root, Seq(pruned))
       pruned.info
     }
-
-  /** Optimistic concurrency check: if the shared on-disk catalog knows a
-    * newer version of `name` than this session does, another writer owns
-    * the table now — fail fast instead of silently forking history.
-    */
-  private def detectForeignWriter(name: String): Unit = {
-    val diskVersion = catalogIO.load(root)
-      .find(_.name == name).map(_.version).getOrElse(0)
-    val ours = catalog.get(name).map(_.version).getOrElse(0)
-    if (diskVersion > ours)
-      throw new FeatureConcurrencyError(
-        s"Table '$name' was advanced to version $diskVersion by another writer " +
-          s"(this session knows $ours); reopen the store to continue")
-  }
 
   /** PIT snapshot read (reference: store.py:218-259): latest row per
     * requested entity at or before `timestamp`. Unknown entities yield no
@@ -2819,9 +2822,9 @@ final class FeatureStore(
     // this version after ours pinned its snapshot — same retry as the
     // table-level miss, only on the would-fail path
     val meta =
-      if (meta0.versions.contains(version) || !storage.arbitrates) meta0
+      if (meta0.versions.contains(version)) meta0
       else {
-        adoptDiskMeta(name); reconcileFromLog(name)
+        refreshTable(name)
         catalog.getOrThrow(name)
       }
     val cols = meta.versions.getOrElse(
@@ -3021,21 +3024,16 @@ final class FeatureStore(
       tableDirs.foreach { t =>
         live.get(t) match {
           case Some(liveSegs) =>
-            // over an arbitrating storage, a version COMMITTED in the
-            // transaction log above the prune high-water is durable even
-            // if no catalog save recorded it yet (its writer crashed
-            // after the commit point) — protect it and its manifest,
-            // exactly as an unread Delta commit survives VACUUM
-            val committedLive: Set[Int] =
-              if (!storage.arbitrates) Set.empty
-              else {
-                val pt = metasByName(t).map(_.prunedThrough)
-                  .maxOption.getOrElse(0)
-                storage.committedMeta(t).collect {
-                  case (v, cm) if v > pt && !liveSegs.contains(v) =>
-                    cm.segments.toSet + v
-                }.flatten.toSet
-              }
+            // a version COMMITTED in the transaction log above the prune
+            // high-water is durable even if no catalog save recorded it
+            // yet (its writer crashed after the commit point) — protect
+            // it and its manifest, exactly as an unread Delta commit
+            // survives VACUUM
+            val pt = metasByName(t).map(_.prunedThrough).maxOption.getOrElse(0)
+            val committedLive = storage.committedMeta(t).collect {
+              case (v, cm) if v > pt && !liveSegs.contains(v) =>
+                cm.segments.toSet + v
+            }.flatten.toSet
             storage.listVersionDirs(t)
               .filterNot(liveSegs ++ committedLive)
               .filterNot(v => ledgered((t, Some(v))))
@@ -3045,20 +3043,18 @@ final class FeatureStore(
             // than any whole-table retirement are durable even though
             // no catalog knows the table yet (the marker is the commit
             // point; reconciliation will surface it) — never strand them
-            val durable = storage.arbitrates && {
-              val retiredAt = ledger
-                .filter(e => e.name == t && e.version.isEmpty)
-                .map(_.retiredAt).maxOption
-              storage.committedMeta(t).exists { case (_, cm) =>
-                cm.columns.nonEmpty && cm.committedAt > 0 &&
-                  retiredAt.forall(cm.committedAt > _)
-              }
+            val retiredAt = ledger
+              .filter(e => e.name == t && e.version.isEmpty)
+              .map(_.retiredAt).maxOption
+            val durable = storage.committedMeta(t).exists { case (_, cm) =>
+              cm.columns.nonEmpty && cm.committedAt > 0 &&
+                retiredAt.forall(cm.committedAt > _)
             }
             if (!durable && !ledgered((t, None)))
               stranded += RetiredPath(t, None, now)
         }
-        // crashed-writer arbitration leftovers (reservations that never
-        // committed, orphaned marker tmps) age out under the same grace
+        // crashed-writer leftovers in the log (reservations, orphaned
+        // marker tmps) age out under the same grace
         storage.sweepUncommitted(t, graceMillis)
       }
       val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -3137,7 +3133,7 @@ final class FeatureStore(
       name: String,
       constraintName: String,
       conditionSql: String): FeatureTableInfo = this.synchronized {
-    if (storage.arbitrates) { adoptDiskMeta(name); reconcileFromLog(name) }
+    refreshTable(name)
     val meta = catalog.getOrThrow(name)
     if (constraintName.trim.isEmpty)
       throw new FeatureValidationError("Constraint name must be non-empty")
@@ -3234,17 +3230,17 @@ final class FeatureStore(
     * (store.py:393-396). [[vacuum]] reclaims the files after the grace
     * window.
     *
-    * Multi-writer caveat (arbitrating storage): deletion is NOT a
-    * logged commit, so a concurrent register racing the delete from
-    * another session can land one more version and resurrect the table
+    * Multi-writer caveat: deletion is NOT a logged commit, so a
+    * concurrent register racing the delete from another session can
+    * land one more version and resurrect the table
     * — the one unarbitrated cross-writer operation (see the stance doc
     * on [[CatalogPersistence]]). Coordinate deletes out of band, or
     * re-check `tableNames` after quiescing writers.
     */
   def delete(name: String): Boolean = this.synchronized {
-    // over an arbitrating storage another writer may have created the
-    // table after this session opened — adopt before deciding existence
-    if (storage.arbitrates) adoptDiskMeta(name)
+    // another writer may have created the table after this session
+    // opened — adopt before deciding existence
+    adoptDiskMeta(name)
     catalog.remove(name) match {
       case Some(_) =>
         RetireLedger.record(
@@ -3274,7 +3270,7 @@ final class FeatureStore(
       throw new FeatureValidationError(
         s"invalid table name '$to' (must be non-empty, not start with " +
           "'_', and contain no '/')")
-    if (storage.arbitrates) { adoptDiskMeta(from); adoptDiskMeta(to) }
+    adoptDiskMeta(from); adoptDiskMeta(to)
     val meta = catalog.getOrThrow(from)
     if (catalog.get(to).isDefined)
       throw new FeatureValidationError(
@@ -3707,7 +3703,6 @@ object FeatureStore {
   private[store] def mergeMetas(a: TableMeta, b: TableMeta): TableMeta = {
     val hi = if (a.version >= b.version) a else b
     val pruned = math.max(a.prunedThrough, b.prunedThrough)
-    val wmKeys = a.batchWatermarks.keySet ++ b.batchWatermarks.keySet
     hi.copy(
       registeredAt = math.min(a.registeredAt, b.registeredAt),
       updatedAt = math.max(a.updatedAt, b.updatedAt),
@@ -3726,12 +3721,8 @@ object FeatureStore {
         .orElse(a.clusterSpec).orElse(b.clusterSpec),
       versionTimes = (a.versionTimes ++ b.versionTimes)
         .filter { case (v, _) => v > pruned },
-      batchWatermarks = scala.collection.immutable.SortedMap(
-        wmKeys.toSeq.map { k =>
-          k -> math.max(
-            a.batchWatermarks.getOrElse(k, Long.MinValue),
-            b.batchWatermarks.getOrElse(k, Long.MinValue))
-        }: _*),
+      batchWatermarks =
+        maxWatermarks(a.batchWatermarks.toSeq ++ b.batchWatermarks.toSeq),
       prunedThrough = pruned,
       columnTypes = a.columnTypes ++ b.columnTypes ++ hi.columnTypes,
       versionOps = (a.versionOps ++ b.versionOps ++ hi.versionOps)
@@ -3741,6 +3732,10 @@ object FeatureStore {
       versionCdf = (a.versionCdf ++ b.versionCdf ++ hi.versionCdf)
         .filter { case (v, _) => v > pruned })
   }
+
+  /** Per stream, the highest batch id among `marks`. */
+  private[store] def maxWatermarks(marks: Seq[(String, Long)]): SortedMap[String, Long] =
+    SortedMap(marks.groupMapReduce(_._1)(_._2)(math.max).toSeq: _*)
 
   /** Default grace between logical retirement and physical deletion
     * (30 minutes): long enough to outlive any interactive query over a

@@ -8,28 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{ArrayType, DataType, DateType, MapType, StructField, StructType}
 
-/** The STORAGE SEAM of the feature store: version-addressed table data
-  * behind a deliberately narrow contract, so the physical format is a
-  * deployment choice. The shipped implementation ([[Storage]]) is
-  * zero-dependency versioned parquet with manifest-chained segments; a
-  * transactional table format drops in behind the same seam
-  * (SURVEY.md §1.3 names the scale mapping):
-  *
-  *   - Delta Lake: [[write]] → transactional append/overwrite + commit;
-  *     version numbers → Delta versions (time travel), [[readSegments]]
-  *     → `VERSION AS OF` reads, [[deleteTable]] → DROP + VACUUM, and
-  *     [[FeatureStore.vacuum]] → Delta VACUUM.
-  *   - Iceberg: versions → snapshots, the segment manifests → Iceberg's
-  *     own manifest lists, vacuum → expire_snapshots /
-  *     remove_orphan_files.
-  *
-  * What those formats ADD over the default — multi-table transactions
-  * and snapshot-isolated readers during concurrent delete — comes from
-  * their commit protocols; the default deliberately scopes to
-  * single-writer-per-table (atomic catalog rename + foreign-writer
-  * detection, [[CatalogPersistence]]) per the reference's
-  * zero-infrastructure stance.
-  */
 /** Result of one segment write: the row count plus the segment's
   * timestamp range (epoch millis, None for an empty/all-null segment).
   * The range is observed by the write job itself — zero extra passes —
@@ -87,8 +65,35 @@ final case class CommitMeta(
     // clustering spec as of this commit ([[TableMeta.clusterSpec]]) —
     // set by optimize commits so marker-only reconciliation keeps
     // incremental optimize working
-    clusterSpec: Option[String] = None)
+    clusterSpec: Option[String] = None,
+    // the stream high-water (stream id, batch id) this commit stamps
+    // ([[FeatureStore.registerBatch]]): a version reconciled from its
+    // marker keeps it, so a replay of that batch is still skipped
+    watermark: Option[(String, Long)] = None)
 
+/** The STORAGE SEAM of the feature store: version-addressed table data
+  * behind one commit protocol. A writer reserves a version number
+  * ([[reserveVersion]]), writes its data under it, and publishes a
+  * commit record ([[commitVersion]]) — the commit point; reads resolve
+  * only committed versions, and the store's catalog is a cache that
+  * [[committedMeta]] can always rebuild. [[TxnLogStorage]] is the
+  * implementation (a per-table log over the [[Storage]] data layout);
+  * a transactional table format maps onto the same calls
+  * (SURVEY.md §1.3 names the scale mapping):
+  *
+  *   - Delta Lake: [[write]] → transactional append/overwrite + commit;
+  *     version numbers → Delta versions (time travel), [[readSegments]]
+  *     → `VERSION AS OF` reads, [[deleteTable]] → DROP + VACUUM, and
+  *     [[FeatureStore.vacuum]] → Delta VACUUM.
+  *   - Iceberg: versions → snapshots, the segment manifests → Iceberg's
+  *     own manifest lists, vacuum → expire_snapshots /
+  *     remove_orphan_files.
+  *
+  * What those formats ADD — multi-table transactions and
+  * snapshot-isolated readers during concurrent delete — comes from
+  * their own protocols; the log here serializes writers one table at a
+  * time.
+  */
 trait VersionStorage {
   /** Write one version snapshot/segment; returns the row count and the
     * segment's observed timestamp range.
@@ -183,63 +188,52 @@ trait VersionStorage {
   def listTableDirs(): Seq[String]
 
   // ------------------------------------------------- version authority
-  // Optional multi-writer arbitration. The default implementations keep
-  // the shipped single-writer-per-table contract: the CATALOG is the
-  // sole version authority, reservation always succeeds, and commit
-  // metadata lives nowhere but the catalog. A transactional adapter
-  // ([[TxnLogStorage]]) overrides all of them to make its log the
-  // authority, which is what lets two stores on one root interleave
-  // registers safely.
+  // The commit protocol every store runs: reserve → write → commit.
 
-  /** True when this storage arbitrates version numbers itself; the
-    * store then retries lost races instead of failing fast on a
-    * foreign writer.
-    */
-  def arbitrates: Boolean = false
   /** Atomically claim `version` of `name` for exclusive write; false
     * means another writer holds or committed it (caller re-reads and
     * retries with the next number).
     */
-  def reserveVersion(name: String, version: Int): Boolean = true
-  /** Highest version visibly claimed in the storage's own authority
-    * (committed or reserved in flight); None when the catalog is the
-    * only authority.
-    */
-  def maxClaimedVersion(name: String): Option[Int] = None
+  def reserveVersion(name: String, version: Int): Boolean
+  /** Highest version visibly claimed (committed or reserved in flight). */
+  def maxClaimedVersion(name: String): Option[Int]
   /** Release a reservation THIS writer holds without committing (the
     * claim's write or validation failed) so the number doesn't stay
     * wedged until a vacuum sweep; foreign reservations are left alone.
     */
-  def releaseVersion(name: String, version: Int): Unit = ()
-  /** Publish the commit record for a written version (the storage-side
-    * commit point). No-op for catalog-authoritative storage.
+  def releaseVersion(name: String, version: Int): Unit
+  /** Publish the commit record for a written version — the commit
+    * point.
     */
-  def commitVersion(name: String, version: Int, meta: CommitMeta): Unit = ()
+  def commitVersion(name: String, version: Int, meta: CommitMeta): Unit
+  /** Committed versions of `name`, ascending. */
+  def committedVersions(name: String): Seq[Int]
   /** Commit records of committed versions, for catalog reconciliation
-    * after racing writers; versions matching `skip` are not even parsed
-    * (the retry loop passes the already-absorbed set, so contention
-    * costs O(new markers), not O(history), per iteration). Empty for
-    * catalog-authoritative storage.
+    * after racing writers or a lost catalog save; versions matching
+    * `skip` are not even parsed (the retry loop passes the
+    * already-absorbed set, so contention costs O(new markers), not
+    * O(history), per iteration).
     */
   def committedMeta(
-      name: String, skip: Int => Boolean = _ => false): Map[Int, CommitMeta] =
-    Map.empty
-  /** Drop any version-authority state of a RETIRED lineage so a
+      name: String, skip: Int => Boolean = _ => false): Map[Int, CommitMeta]
+  /** Drop the version-authority state of a RETIRED lineage so a
     * delete + re-register can restart numbering at 1 (the explicit
     * re-register-only overwrite branch; called by the store only when
     * the table is absent from every catalog and ledgered as retired).
     */
-  def resetVersionAuthority(name: String): Unit = ()
-  /** Reclaim arbitration leftovers of crashed writers (reservations
-    * never committed, orphaned temp markers) older than the given age.
-    * Run by [[FeatureStore.vacuum]] under its grace window.
+  def resetVersionAuthority(name: String): Unit
+  /** Reclaim leftovers of crashed writers (reservations, orphaned temp
+    * markers) older than the given age. Run by [[FeatureStore.vacuum]]
+    * under its grace window.
     */
-  def sweepUncommitted(name: String, olderThanMillis: Long): Unit = ()
+  def sweepUncommitted(name: String, olderThanMillis: Long): Unit
 }
 
 /** Versioned parquet storage: one directory per table version,
   * `<root>/<table>/v=<n>/` — the durable analog of the reference's
   * in-memory `history: Dict[int, DataFrame]` (store.py:51-69, 204).
+  * This is the data layout only: which versions exist is decided by
+  * the commit log that wraps it ([[TxnLogStorage]]).
   *
   * Write layout is chosen for the 100 TB read paths, implementing what the
   * reference's author lists as future work (reference README.md:167,
@@ -264,7 +258,7 @@ trait VersionStorage {
 final class Storage(
     spark: SparkSession,
     root: String,
-    granularity: String = "month") extends VersionStorage {
+    granularity: String = "month") {
 
   private val DateCol = "_ts_date"
 
@@ -310,7 +304,7 @@ final class Storage(
     * inputs of at most [[FeatureStore.SingleTaskWriteMaxRows]] rows,
     * where the shuffle's fixed cost exceeds the work it spreads.
     */
-  override def writeSmall(
+  def writeSmall(
       name: String,
       version: Int,
       df: DataFrame,
@@ -325,7 +319,7 @@ final class Storage(
     * and within a period directory every file covers a tight cluster-
     * key interval (parquet min/max skipping does the rest at scan).
     */
-  override def writeClustered(
+  def writeClustered(
       name: String,
       version: Int,
       df: DataFrame,
@@ -452,7 +446,7 @@ final class Storage(
     * [[readSegments]]). Memoized segment schemas are nullable at every
     * depth, so this is also the type `unionByName` would merge.
     */
-  override def localReadSchema(
+  def localReadSchema(
       name: String,
       segments: Seq[Int],
       columns: Seq[String],
@@ -475,7 +469,7 @@ final class Storage(
     * loads permissions, one forked `stat` per file without native
     * Hadoop).
     */
-  override def scanSegmentsLocal(
+  def scanSegmentsLocal(
       name: String,
       segments: Seq[Int],
       schema: StructType,
@@ -541,7 +535,7 @@ final class Storage(
     * relative to their mutation; an Observation rides the write for
     * the row count, as in [[write]].
     */
-  override def writeChangeData(name: String, version: Int, df: DataFrame): Long = {
+  def writeChangeData(name: String, version: Int, df: DataFrame): Long = {
     val obs = org.apache.spark.sql.Observation(
       s"graft_cdf_${name}_v$version")
     df.observe(obs, count(lit(1)).as("rows"))
@@ -551,7 +545,7 @@ final class Storage(
     obs.get("rows").asInstanceOf[Long]
   }
 
-  override def readChangeData(name: String, version: Int): Option[DataFrame] = {
+  def readChangeData(name: String, version: Int): Option[DataFrame] = {
     val p = changeDataPath(name, version)
     if (fs(new Path(p)).exists(new Path(p)))
       Some(Storage.readParquetMemo(spark, p))
@@ -574,7 +568,7 @@ final class Storage(
     * segment, `_cdf`, a colocated `_txn` log) moves as a metadata
     * operation, zero bytes of data copied regardless of table size.
     */
-  override def renameTable(from: String, to: String): Unit = {
+  def renameTable(from: String, to: String): Unit = {
     val src = new Path(tablePath(from))
     val dst = new Path(tablePath(to))
     val f = fs(src)

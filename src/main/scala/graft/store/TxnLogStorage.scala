@@ -3,30 +3,32 @@ package graft.store
 import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Transaction-log [[VersionStorage]] — the Delta-shaped adapter the
-  * storage seam was built for (seam doc above [[VersionStorage]];
-  * SURVEY.md §1.3 names the mapping). Same physical data layout as
-  * [[Storage]] (period-partitioned, entity-sorted parquet under
-  * `<name>/v=<k>/`), plus a per-table COMMIT LOG under `<name>/_txn/`
-  * that is the table's VERSION AUTHORITY:
+/** The store's [[VersionStorage]]: the Delta-shaped commit log every
+  * [[FeatureStore]] commits through (seam doc above [[VersionStorage]];
+  * SURVEY.md §1.3 names the mapping). The data layout is [[Storage]]'s
+  * (period-partitioned, entity-sorted parquet under `<name>/v=<k>/`);
+  * a per-table COMMIT LOG under `<name>/_txn/` is the table's only
+  * VERSION AUTHORITY, and the store's catalog is a cache of it:
   *
   *   - MULTI-WRITER ARBITRATION is optimistic concurrency on the next
   *     version number, exactly the Delta commit-protocol shape: a
-  *     writer claims version v by ATOMIC CREATE-EXCLUSIVE of
-  *     `_txn/<v>.reserve` (first creator wins; `O_EXCL` on local
-  *     filesystems, `create(overwrite = false)` on HDFS-like stores).
-  *     A loser re-reads the log and retries at the next number
-  *     ([[FeatureStore]] drives the retry loop), so two stores on one
-  *     root can interleave registers with every version written by
-  *     exactly one writer. Object stores without an atomic
-  *     create-exclusive (plain S3) need a stronger LogStore, as Delta
-  *     itself does — documented, not hidden.
+  *     writer claims version v by ATOMIC CREATE-EXCLUSIVE (`O_EXCL`)
+  *     of `_txn/<v>.reserve` (first creator wins). A loser re-reads
+  *     the log and retries at the next number ([[FeatureStore]] drives
+  *     the retry loop), so two stores on one root can interleave
+  *     registers with every version written by exactly one writer. The
+  *     log is local files written through `java.nio`, as the catalog
+  *     is; a store on an object store without an atomic create-exclusive
+  *     (plain S3) would need a stronger LogStore, as Delta itself does.
   *   - [[write]] puts data files on disk under the claimed version;
-  *     [[commitVersion]] then publishes `_txn/<v>.commit` via tmp +
-  *     atomic rename — the commit point. The marker carries the full
+  *     [[commitVersion]] then publishes `_txn/<v>.commit` via synced
+  *     tmp + atomic rename — the commit point. The marker carries the full
   *     commit record ([[CommitMeta]]: rows, cumulative rows, columns,
   *     segment manifest, timestamp range), so a concurrent store can
   *     RECONCILE versions it never saw the catalog save for. Commit
@@ -78,48 +80,44 @@ final class TxnLogStorage(
     */
   private val writerToken = java.util.UUID.randomUUID().toString
 
-  private def logDir(name: String): Path =
-    new Path(s"$root/$name/_txn")
+  // the log is local files written through java.nio, as the catalog,
+  // the read leases and the retire ledger are: no checksum sidecars,
+  // and no forked `chmod` per create
+  private def logDir(name: String): Path = Paths.get(root, name, "_txn")
   private def commitFile(name: String, version: Int): Path =
-    new Path(logDir(name), f"$version%010d.commit")
+    logDir(name).resolve(f"$version%010d.commit")
   private def reserveFile(name: String, version: Int): Path =
-    new Path(logDir(name), f"$version%010d.reserve")
+    logDir(name).resolve(f"$version%010d.reserve")
   private def checkpointFile(name: String, version: Int): Path =
-    new Path(logDir(name), f"$version%010d.checkpoint")
+    logDir(name).resolve(f"$version%010d.checkpoint")
 
-  private def fs(p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** File names in the table's log directory; empty when it has none. */
+  private def logNames(name: String): Seq[String] =
+    try {
+      val listing = Files.list(logDir(name))
+      try listing.iterator().asScala.map(_.getFileName.toString).toSeq
+      finally listing.close()
+    } catch { case _: java.nio.file.NoSuchFileException => Seq.empty }
 
-  override def arbitrates: Boolean = true
+  /** Versions of the log files named `*<suffix>`. */
+  private def versionsOf(names: Seq[String], suffix: String): Seq[Int] =
+    names.collect { case n if n.endsWith(suffix) => n.stripSuffix(suffix).toIntOption }.flatten
 
-  /** Atomic create-exclusive of the reservation — the arbitration
-    * point. Local filesystems get true `O_EXCL` atomicity via NIO;
-    * HDFS-like stores get `create(overwrite = false)`, which is atomic
-    * on HDFS. Returns false when the version is already claimed.
+  private def readLog(p: Path): Option[String] =
+    try Some(Files.readString(p)) catch { case _: java.io.IOException => None }
+
+  /** Atomic create-exclusive of the reservation (`O_EXCL`) — the
+    * arbitration point. Returns false when the version is already
+    * claimed.
     */
   override def reserveVersion(name: String, version: Int): Boolean = {
-    val target = reserveFile(name, version)
-    val f = fs(target)
-    f.mkdirs(target.getParent)
-    if (f.getScheme == "file") {
-      val local = java.nio.file.Paths.get(target.toUri.getPath)
-      try {
-        java.nio.file.Files.write(
-          local, writerToken.getBytes(UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else {
-      try {
-        val out = f.create(target, false)
-        try out.write(writerToken.getBytes(UTF_8)) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.io.IOException if f.exists(target) => false
-      }
+    Files.createDirectories(logDir(name))
+    try {
+      Files.write(reserveFile(name, version), writerToken.getBytes(UTF_8),
+        StandardOpenOption.CREATE_NEW)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => false
     }
   }
 
@@ -128,17 +126,8 @@ final class TxnLogStorage(
     * token) and never appended, so a short read can only under-match —
     * the safe direction (treat as not owned).
     */
-  private def ownsReservation(name: String, version: Int): Boolean = {
-    val r = reserveFile(name, version)
-    val f = fs(r)
-    try {
-      val in = f.open(r)
-      val buf = new Array[Byte](64)
-      val n = in.read(buf)
-      in.close()
-      n > 0 && new String(buf, 0, n, UTF_8) == writerToken
-    } catch { case _: java.io.IOException => false }
-  }
+  private def ownsReservation(name: String, version: Int): Boolean =
+    readLog(reserveFile(name, version)).contains(writerToken)
 
   /** Drop this writer's own reservation (claim whose write/validation
     * failed); verified by token so a vacuum-reclaimed-and-re-claimed
@@ -146,23 +135,13 @@ final class TxnLogStorage(
     */
   override def releaseVersion(name: String, version: Int): Unit =
     if (ownsReservation(name, version)) {
-      val r = reserveFile(name, version)
-      fs(r).delete(r, false)
+      Files.deleteIfExists(reserveFile(name, version))
       ()
     }
 
   override def maxClaimedVersion(name: String): Option[Int] = {
-    val d = logDir(name)
-    val f = fs(d)
-    if (!f.exists(d)) None
-    else f.listStatus(d).toSeq
-      .map(_.getPath.getName)
-      .collect {
-        case s if s.endsWith(".commit")  => s.stripSuffix(".commit").toIntOption
-        case s if s.endsWith(".reserve") => s.stripSuffix(".reserve").toIntOption
-      }
-      .flatten
-      .maxOption
+    val names = logNames(name)
+    (versionsOf(names, ".commit") ++ versionsOf(names, ".reserve")).maxOption
   }
 
   def write(
@@ -197,46 +176,31 @@ final class TxnLogStorage(
     * silently clobbering the other writer's version.
     */
   override def commitVersion(name: String, version: Int, meta: CommitMeta): Unit = {
-    val reserve = reserveFile(name, version)
-    val rf = fs(reserve)
     if (!ownsReservation(name, version))
       throw new FeatureConcurrencyError(
         s"commit of '$name' version $version lost its reservation " +
           "(vacuum reclaimed it as crashed, or another writer re-claimed " +
           "the number); re-read the log and retry at the next version")
     val target = commitFile(name, version)
-    val f = fs(target)
-    val tmp = new Path(
-      target.getParent, s".${target.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(TxnLogStorage.render(meta).getBytes(UTF_8))
-    finally out.close()
-    // the reservation serializes writers of this version; an existing
-    // marker under a HELD reservation can only be a retired lineage's
-    // (see resetVersionAuthority) or this writer's own retry. But the
-    // entry check above is stale by now (the render+write took time,
-    // and a vacuum could have reclaimed a presumed-crashed writer):
-    // re-verify ownership IMMEDIATELY before removing, so a marker
-    // another writer published after reclaiming the number is never
-    // clobbered — fail loudly instead
-    if (f.exists(target)) {
-      if (!ownsReservation(name, version))
+    CatalogPersistence.writeAtomic(target, TxnLogStorage.render(meta), () =>
+      // the reservation serializes writers of this version; an existing
+      // marker under a HELD reservation can only be a retired lineage's
+      // (see resetVersionAuthority) or this writer's own retry. But the
+      // entry check above is stale by now (the render+write took time,
+      // and a vacuum could have reclaimed a presumed-crashed writer):
+      // re-verify ownership IMMEDIATELY before replacing, so a marker
+      // another writer published after reclaiming the number is never
+      // clobbered — fail loudly instead
+      if (Files.exists(target) && !ownsReservation(name, version))
         throw new FeatureConcurrencyError(
           s"commit of '$name' version $version found a foreign marker " +
             "and no longer holds its reservation (vacuum reclaimed it " +
             "as crashed and another writer committed); re-read the log " +
-            "and retry at the next version")
-      f.delete(target, false)
-    }
-    if (!f.rename(tmp, target)) {
-      f.delete(tmp, false)
-      throw new FeatureConcurrencyError(
-        s"commit of '$name' version $version failed to publish its marker")
-    }
+            "and retry at the next version"))
     // reservation is transient: claim → write → commit → release. Its
     // absence is what lets a delete + re-register (or a later lineage)
     // reuse the number after vacuum clears the log.
-    rf.delete(reserve, false)
+    Files.deleteIfExists(reserveFile(name, version))
     // fold the log into a checkpoint every Nth commit — strictly
     // best-effort: the marker above IS the commit point, and a reader
     // without this checkpoint just opens more tail markers
@@ -264,38 +228,19 @@ final class TxnLogStorage(
     val body = records.toSeq.sortBy(_._1).map { case (v, cm) =>
       s"version=$v\t" + TxnLogStorage.render(cm).trim.replace("\n", "\t")
     }.mkString("\n") + "\n"
-    val target = checkpointFile(name, version)
-    val f = fs(target)
-    val tmp = new Path(
-      target.getParent, s".${target.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(UTF_8)) finally out.close()
-    if (f.exists(target)) f.delete(target, false)
-    if (!f.rename(tmp, target)) { f.delete(tmp, false); return }
+    CatalogPersistence.writeAtomic(checkpointFile(name, version), body)
     // retire superseded checkpoints (best effort — extras are harmless,
     // readers take the newest)
-    f.listStatus(logDir(name)).toSeq
-      .map(_.getPath)
-      .filter { p =>
-        p.getName.endsWith(".checkpoint") &&
-          p.getName.stripSuffix(".checkpoint").toIntOption.exists(_ < version)
-      }
-      .foreach(p => { f.delete(p, false); () })
+    versionsOf(logNames(name), ".checkpoint").filter(_ < version)
+      .foreach(v => Files.deleteIfExists(checkpointFile(name, v)))
   }
 
   /** Latest checkpoint's records, keyed by version; empty when none. */
-  private def readCheckpoint(
-      statuses: Seq[org.apache.hadoop.fs.FileStatus]): Map[Int, CommitMeta] = {
-    val latest = statuses.map(_.getPath)
-      .filter(_.getName.endsWith(".checkpoint"))
-      .flatMap(p => p.getName.stripSuffix(".checkpoint").toIntOption.map(_ -> p))
-      .sortBy(_._1).lastOption
-    latest.fold(Map.empty[Int, CommitMeta]) { case (_, p) =>
-      try {
-        val in = fs(p).open(p)
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, true)
-        new String(buf.toByteArray, UTF_8).split("\n").toSeq
+  private def readCheckpoint(name: String, names: Seq[String]): Map[Int, CommitMeta] =
+    versionsOf(names, ".checkpoint").maxOption
+      .flatMap(v => readLog(checkpointFile(name, v)))
+      .fold(Map.empty[Int, CommitMeta]) { body =>
+        body.split("\n").toSeq
           .filter(_.nonEmpty)
           .flatMap { line =>
             val v = line.split("\t", 2)(0) match {
@@ -306,17 +251,13 @@ final class TxnLogStorage(
             v.flatMap(ver => TxnLogStorage.parse(line).map(ver -> _))
           }
           .toMap
-      } catch { case _: java.io.IOException => Map.empty }
-    }
-  }
+      }
 
-  private def requireCommitted(name: String, version: Int): Unit = {
-    val c = commitFile(name, version)
-    if (!fs(c).exists(c))
+  private def requireCommitted(name: String, version: Int): Unit =
+    if (!Files.exists(commitFile(name, version)))
       throw new FeatureTableNotFoundError(
         s"Version $version of table '$name' has no commit in the " +
           "transaction log (never committed, or vacuumed past retention)")
-  }
 
   def read(
       name: String,
@@ -361,21 +302,14 @@ final class TxnLogStorage(
     */
   def deleteVersion(name: String, version: Int): Unit = {
     inner.deleteVersion(name, version)
-    val c = commitFile(name, version)
-    val f = fs(c)
-    if (f.exists(c)) { f.delete(c, false); () }
-    val r = reserveFile(name, version)
-    if (f.exists(r)) { f.delete(r, false); () }
+    Files.deleteIfExists(commitFile(name, version))
+    Files.deleteIfExists(reserveFile(name, version))
     // also reclaim tmp markers a crashed commit of THIS version left
     // behind (create succeeded, rename never ran) — otherwise they
     // accumulate until deleteTable
-    val d = logDir(name)
-    if (f.exists(d)) {
-      val tmpPrefix = s".${c.getName}.tmp-"
-      f.listStatus(d).toSeq
-        .filter(_.getPath.getName.startsWith(tmpPrefix))
-        .foreach(s => { f.delete(s.getPath, false); () })
-    }
+    val tmpPrefix = s".${commitFile(name, version).getFileName}.tmp-"
+    logNames(name).filter(_.startsWith(tmpPrefix))
+      .foreach(n => Files.deleteIfExists(logDir(name).resolve(n)))
   }
 
   def deleteTable(name: String): Unit = inner.deleteTable(name)
@@ -402,23 +336,13 @@ final class TxnLogStorage(
 
   def listTableDirs(): Seq[String] = inner.listTableDirs()
 
-  /** Committed versions present in the log — the `DESCRIBE HISTORY`
-    * surface (exposed for tests and operators; the store's catalog
-    * remains the authority on which versions are retained).
+  /** Committed versions present in the log, ascending — the `DESCRIBE
+    * HISTORY` surface. Every version the store's catalog retains has
+    * one: the marker is the commit point, and the catalog is a cache
+    * of the log.
     */
-  def committedVersions(name: String): Seq[Int] = {
-    val d = logDir(name)
-    val f = fs(d)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq
-      .map(_.getPath.getName)
-      .collect {
-        case s if s.endsWith(".commit") =>
-          s.stripSuffix(".commit").toIntOption
-      }
-      .flatten
-      .sorted
-  }
+  override def committedVersions(name: String): Seq[Int] =
+    versionsOf(logNames(name), ".commit").sorted
 
   /** Full commit records, version → metadata; `skip`ped versions are
     * filtered by FILENAME before any file is opened. Markers in the
@@ -428,35 +352,20 @@ final class TxnLogStorage(
     */
   override def committedMeta(
       name: String, skip: Int => Boolean = _ => false): Map[Int, CommitMeta] = {
-    val d = logDir(name)
-    val f = fs(d)
-    if (!f.exists(d)) return Map.empty
-    val statuses = f.listStatus(d).toSeq
     // one directory listing + the latest checkpoint + only the markers
     // the checkpoint doesn't cover: O(interval) opens, not O(commits).
     // Only versions whose marker is STILL LISTED are returned — a
     // checkpoint may cover versions vacuumed since it was written, and
     // those must not resurrect.
-    val fromCheckpoint = readCheckpoint(statuses)
-    statuses
-      .map(_.getPath)
-      .flatMap { p =>
-        val n = p.getName
-        if (!n.endsWith(".commit")) None
-        else n.stripSuffix(".commit").toIntOption
-          .filterNot(skip)
-          .flatMap { v =>
-            fromCheckpoint.get(v).map(v -> _).orElse {
-              try {
-                val in = f.open(p)
-                val buf = new java.io.ByteArrayOutputStream()
-                org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, true)
-                TxnLogStorage.parse(new String(buf.toByteArray, UTF_8)).map(v -> _)
-              } catch { case _: java.io.IOException => None }
-            }
-          }
-      }
-      .toMap
+    val names = logNames(name)
+    val commits = versionsOf(names, ".commit").filterNot(skip)
+    if (commits.isEmpty) return Map.empty
+    val fromCheckpoint = readCheckpoint(name, names)
+    commits.flatMap { v =>
+      fromCheckpoint.get(v)
+        .orElse(readLog(commitFile(name, v)).flatMap(TxnLogStorage.parse))
+        .map(v -> _)
+    }.toMap
   }
 
   /** Delete the whole per-table log — the re-register-only branch: a
@@ -466,14 +375,15 @@ final class TxnLogStorage(
     * construction; scans read parquet directly).
     */
   override def resetVersionAuthority(name: String): Unit = {
-    val d = logDir(name)
-    val f = fs(d)
-    if (f.exists(d)) { f.delete(d, true); () }
+    logNames(name).foreach(n => Files.deleteIfExists(logDir(name).resolve(n)))
+    Files.deleteIfExists(logDir(name))
+    ()
   }
 
-  /** Reclaim crashed-writer leftovers: reservations with no commit and
-    * orphaned tmp markers older than the threshold. Age-gated on file
-    * mtime so an in-flight writer's fresh claim is never touched —
+  /** Reclaim crashed-writer leftovers: reservations and orphaned tmp
+    * markers older than the threshold (a reservation whose marker
+    * landed belongs to a writer that died before removing it). Age-gated
+    * on file mtime so an in-flight writer's fresh claim is never touched —
     * UNDER A NONZERO THRESHOLD. `olderThanMillis = 0` (vacuum's
     * single-phase mode) sweeps every reservation including a concurrent
     * writer's in-flight one; that writer's commit then FAILS STOP (the
@@ -482,23 +392,15 @@ final class TxnLogStorage(
     * maintenance or tests, never alongside live writers.
     */
   override def sweepUncommitted(name: String, olderThanMillis: Long): Unit = {
-    val d = logDir(name)
-    val f = fs(d)
-    if (!f.exists(d)) return
     val cutoff = System.currentTimeMillis() - olderThanMillis
-    val statuses = f.listStatus(d).toSeq
-    val committed = statuses.map(_.getPath.getName)
-      .filter(_.endsWith(".commit"))
-      .flatMap(_.stripSuffix(".commit").toIntOption)
-      .toSet
-    statuses.foreach { s =>
-      val n = s.getPath.getName
-      val stale = s.getModificationTime <= cutoff
-      val deadReserve = n.endsWith(".reserve") && stale &&
-        !n.stripSuffix(".reserve").toIntOption.exists(committed)
-      val orphanTmp = n.startsWith(".") && n.contains(".tmp-") && stale
-      if (deadReserve || orphanTmp) { f.delete(s.getPath, false); () }
-    }
+    logNames(name)
+      .filter(n => n.endsWith(".reserve") || (n.startsWith(".") && n.contains(".tmp-")))
+      .map(logDir(name).resolve(_))
+      .foreach { p =>
+        try {
+          if (Files.getLastModifiedTime(p).toMillis <= cutoff) Files.deleteIfExists(p)
+        } catch { case _: java.nio.file.NoSuchFileException => () }
+      }
   }
 }
 
@@ -523,7 +425,8 @@ object TxnLogStorage {
       s"colStats=${ColumnStats.renderMap(m.colStats)}",
       s"checks=${m.constraints.toSeq.sorted
         .map { case (k, sql) => s"${enc(k)}:${enc(sql)}" }.mkString(",")}",
-      s"cluster=${m.clusterSpec.fold("")(enc)}")
+      s"cluster=${m.clusterSpec.fold("")(enc)}",
+      s"watermark=${m.watermark.fold("") { case (sid, b) => s"${enc(sid)}:$b" }}")
     lines.mkString("\n") + "\n"
   }
 
@@ -568,7 +471,11 @@ object TxnLogStorage {
             dec(p.substring(0, i)) -> dec(p.substring(i + 1))
           })
           .toMap,
-        clusterSpec = kv.get("cluster").filter(_.nonEmpty).map(dec))
+        clusterSpec = kv.get("cluster").filter(_.nonEmpty).map(dec),
+        watermark = kv.get("watermark").filter(_.contains(":")).flatMap { p =>
+          val i = p.lastIndexOf(':')
+          p.substring(i + 1).toLongOption.map(dec(p.substring(0, i)) -> _)
+        })
     }
   }
 }

@@ -141,6 +141,12 @@ object bridge {
         case _ => false
       }
 
+  /** True when `t` holds a map at any depth: no grouping or join takes
+    * it, and [[normalizeFloats]] refuses it.
+    */
+  def containsMap(t: org.apache.spark.sql.types.DataType): Boolean =
+    t.existsRecursively(_.isInstanceOf[org.apache.spark.sql.types.MapType])
+
   /** The rows of `df` in Spark's internal form, collected in one SQL
     * execution as `collect()` would run it.
     */

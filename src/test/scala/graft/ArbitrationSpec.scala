@@ -162,6 +162,27 @@ class ArbitrationSpec extends AnyFunSuite with SparkTestBase {
       .map(_.getAs[Double]("val")).toSeq == Seq(2.0))
   }
 
+  test("a batch whose catalog save never landed keeps its watermark in the log") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_arb_watermark_spec").toString
+    val io = new DroppingCatalogIO
+    val a = newStore(root, catalogIO = io)
+    assert(a.registerBatch("t", singleRow(1.0), batchId = 0, streamId = "s").isDefined)
+    io.drop = true
+    // the marker lands with the batch's watermark; the catalog save doesn't
+    assert(a.registerBatch("t", singleRow(2.0), batchId = 1, streamId = "s").isDefined)
+    io.drop = false
+
+    val reopened = newStore(root)
+    assert(reopened.getTableInfo("t").version == 2)
+    val rows = reopened.getTableInfo("t").rowCount
+    // the crash-recovery replay of batch 1 must be skipped, not registered twice
+    assert(reopened.registerBatch("t", singleRow(2.0), batchId = 1, streamId = "s").isEmpty)
+    assert(reopened.getTableInfo("t").version == 2)
+    assert(reopened.getTableInfo("t").rowCount == rows)
+    assert(newStore(root).getTableInfo("t").version == 2)
+  }
+
   test("a table CREATION whose catalog save never landed is synthesized from the log") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_arb_creation_spec").toString

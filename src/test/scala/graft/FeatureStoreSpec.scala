@@ -519,23 +519,8 @@ class FeatureStoreSpec extends AnyFunSuite with SparkTestBase {
     // can see it.
     @volatile var raced = false
     val factory: (org.apache.spark.sql.SparkSession, String, String) => graft.store.VersionStorage =
-      (s, r, g) => new graft.store.VersionStorage {
-        private val inner = new graft.store.Storage(s, r, g)
-        def write(name: String, version: Int, df: org.apache.spark.sql.DataFrame,
-            entityCol: String, tsCol: String): graft.store.WriteResult =
-          inner.write(name, version, df, entityCol, tsCol)
-        def read(name: String, version: Int, columns: Seq[String],
-            asOf: Option[java.sql.Timestamp]): org.apache.spark.sql.DataFrame =
-          inner.read(name, version, columns, asOf)
-        def readSegments(name: String, segments: Seq[Int], columns: Seq[String],
-            asOf: Option[java.sql.Timestamp],
-            columnTypes: Map[String, String]): org.apache.spark.sql.DataFrame =
-          inner.readSegments(name, segments, columns, asOf, columnTypes)
-        def deleteVersion(name: String, version: Int): Unit =
-          inner.deleteVersion(name, version)
-        def deleteTable(name: String): Unit = inner.deleteTable(name)
-        def listVersionDirs(name: String): Seq[Int] = inner.listVersionDirs(name)
-        def listTableDirs(): Seq[String] = {
+      (s, r, g) => new LogDecorator(s, r, g) {
+        override def listTableDirs(): Seq[String] = {
           val dirs = inner.listTableDirs()
           if (!raced && dirs.contains("t")) {
             raced = true
@@ -607,29 +592,23 @@ class FeatureStoreSpec extends AnyFunSuite with SparkTestBase {
     val writes = new java.util.concurrent.atomic.AtomicInteger
     val reads = new java.util.concurrent.atomic.AtomicInteger
     val store = new FeatureStore(spark, root, storageFactory = (s, r, g) =>
-      new graft.store.VersionStorage {
-        private val inner = new graft.store.Storage(s, r, g)
-        def write(name: String, version: Int, df: org.apache.spark.sql.DataFrame,
+      new LogDecorator(s, r, g) {
+        override def write(name: String, version: Int, df: org.apache.spark.sql.DataFrame,
             entityCol: String, tsCol: String): graft.store.WriteResult = {
           writes.incrementAndGet()
           inner.write(name, version, df, entityCol, tsCol)
         }
-        def read(name: String, version: Int, columns: Seq[String],
+        override def read(name: String, version: Int, columns: Seq[String],
             asOf: Option[java.sql.Timestamp]): org.apache.spark.sql.DataFrame = {
           reads.incrementAndGet()
           inner.read(name, version, columns, asOf)
         }
-        def readSegments(name: String, segments: Seq[Int], columns: Seq[String],
+        override def readSegments(name: String, segments: Seq[Int], columns: Seq[String],
             asOf: Option[java.sql.Timestamp],
             columnTypes: Map[String, String]): org.apache.spark.sql.DataFrame = {
           reads.incrementAndGet()
           inner.readSegments(name, segments, columns, asOf, columnTypes)
         }
-        def deleteVersion(name: String, version: Int): Unit =
-          inner.deleteVersion(name, version)
-        def deleteTable(name: String): Unit = inner.deleteTable(name)
-        def listVersionDirs(name: String): Seq[Int] = inner.listVersionDirs(name)
-        def listTableDirs(): Seq[String] = inner.listTableDirs()
       })
     store.register("t", singleRow(1.0))
     assert(writes.get() == 1)
@@ -683,25 +662,13 @@ class FeatureStoreSpec extends AnyFunSuite with SparkTestBase {
     // decorator observes exactly what survives
     val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
     val store = new FeatureStore(spark, root, storageFactory = (sp, r, g) =>
-      new graft.store.VersionStorage {
-        private val inner = new graft.store.Storage(sp, r, g)
-        def write(name: String, version: Int, df: org.apache.spark.sql.DataFrame,
-            entityCol: String, tsCol: String): graft.store.WriteResult =
-          inner.write(name, version, df, entityCol, tsCol)
-        def read(name: String, version: Int, columns: Seq[String],
-            asOf: Option[java.sql.Timestamp]): org.apache.spark.sql.DataFrame =
-          inner.read(name, version, columns, asOf)
-        def readSegments(name: String, segments: Seq[Int], columns: Seq[String],
+      new LogDecorator(sp, r, g) {
+        override def readSegments(name: String, segments: Seq[Int], columns: Seq[String],
             asOf: Option[java.sql.Timestamp],
             columnTypes: Map[String, String]): org.apache.spark.sql.DataFrame = {
           seen += segments
           inner.readSegments(name, segments, columns, asOf, columnTypes)
         }
-        def deleteVersion(name: String, version: Int): Unit =
-          inner.deleteVersion(name, version)
-        def deleteTable(name: String): Unit = inner.deleteTable(name)
-        def listVersionDirs(name: String): Seq[Int] = inner.listVersionDirs(name)
-        def listTableDirs(): Seq[String] = inner.listTableDirs()
       })
     def month(m: Int, v: Double) =
       Seq(("e1", ts(f"2024-$m%02d-10"), v)).toDF("entity_id", "timestamp", "val")

@@ -230,17 +230,22 @@ class IncrementalStoreSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("concurrent writers of the SAME table are detected, and reopening recovers") {
+  test("concurrent writers of the SAME table are serialized by the log") {
     val root = freshRoot()
     val a = new FeatureStore(spark, root)
     val b = new FeatureStore(spark, root) // opened before a's write
     a.register("t", rows(1 to 3, day = 1))
-    intercept[FeatureConcurrencyError](b.register("t", rows(4 to 6, day = 2)))
-    intercept[FeatureConcurrencyError](b.registerAppend("t", rows(4 to 6, day = 2)))
-    // a fresh session sees version 1 and may continue the lineage
+    // b never saw v1: its claim reconciles v1 from the log, and its
+    // register lands as v2 instead of forking or failing
+    assert(b.register("t", rows(4 to 6, day = 2)).version == 2)
+    // a, still holding v1, must chain its append on b's v2
+    assert(a.registerAppend("t", rows(7 to 9, day = 3)).version == 3)
     val c = new FeatureStore(spark, root)
-    c.registerAppend("t", rows(4 to 6, day = 2))
-    assert(c.getTableInfo("t").version == 2)
-    assert(c.getVersion("t", 2).count() == 6)
+    assert(c.getTableInfo("t").version == 3)
+    assert(collected(c.getVersion("t", 1)) == collected(rows(1 to 3, day = 1)))
+    assert(collected(c.getVersion("t", 2)) == collected(rows(4 to 6, day = 2)))
+    assert(collected(c.getVersion("t", 3)) ==
+      collected(rows(4 to 6, day = 2)) ++ collected(rows(7 to 9, day = 3)))
+    assert(collected(b.getVersion("t", 1)) == collected(rows(1 to 3, day = 1)))
   }
 }

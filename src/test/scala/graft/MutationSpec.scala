@@ -282,6 +282,30 @@ class MutationSpec extends AnyFunSuite with SparkTestBase {
     assert(byType("delete").map(_.getAs[Double]("feature_a")).toSeq == Seq(2.0))
   }
 
+  test("change feed: an upserted -0.0 reads alike with or without an overlapping segment") {
+    val s = spark
+    import s.implicits._
+    // the inserted row's sign bits in the change feed, for each kernel,
+    // with the delta's key bounds overlapping the one segment or not
+    def insertedBits(kernel: FeatureStore.MutationKernel, overlap: Boolean): Seq[Long] = {
+      val store = freshStore()
+      store.register("t", Seq(("user_1", ts("2024-01-01"), 1.0))
+        .toDF("entity_id", "timestamp", "val"))
+      val delta =
+        (if (overlap) Seq(("user_1", ts("2024-01-01"), 5.0)) else Nil) :+
+          (("user_9", ts(if (overlap) "2024-01-02" else "2025-06-01"), -0.0))
+      store.registerUpsertOn(kernel, "t", delta.toDF("entity_id", "timestamp", "val"))
+      store.getChanges("t", 1, 2).collect().toSeq
+        .filter(r => r.getAs[String]("entity_id") == "user_9")
+        .map(r => java.lang.Double.doubleToRawLongBits(r.getAs[Double]("val")))
+    }
+    for {
+      kernel <- Seq(FeatureStore.MutationKernel.OnSpark, FeatureStore.MutationKernel.OnDriver)
+      overlap <- Seq(true, false)
+    } assert(insertedBits(kernel, overlap) == Seq(0L),
+      s"$kernel, overlap = $overlap: the insert must read as 0.0, as the netting records it")
+  }
+
   test("change feed: compact step contributes nothing") {
     val (store, jan, feb) = twoSegmentStore()
     store.compact("t")

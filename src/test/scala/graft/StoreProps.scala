@@ -188,18 +188,16 @@ object StoreProps extends Properties("FeatureStore") {
       (base.filterNot(r => touched((r._1, r._2))) ++ delta)), info.version)
   }
 
-  /** The model check, parameterized over the storage seam: every
-    * [[graft.store.VersionStorage]] implementation must satisfy the
-    * identical lifecycle contract.
+  /** The model check over the store's one commit protocol (the
+    * transaction log): random lifecycles keep every retained version
+    * exact, across reopens, vacuums and deletes.
     */
-  private def lifecycleProp(
-      factory: (org.apache.spark.sql.SparkSession, String, String) => graft.store.VersionStorage) =
+  private def lifecycleProp =
     forAllNoShrink(genOps) { ops =>
       val root = java.nio.file.Files
         .createTempDirectory("graft_store_props").toString
       val maxVersions = 3
-      def open() = new FeatureStore(
-        spark, root, maxVersions = maxVersions, storageFactory = factory)
+      def open() = new FeatureStore(spark, root, maxVersions = maxVersions)
       var store = open()
       // model: version -> expected full contents
       var model = Map.empty[Int, Set[(String, Timestamp, Double)]]
@@ -397,10 +395,7 @@ object StoreProps extends Properties("FeatureStore") {
     }
 
   property("random register/append/compact/vacuum/reopen/delete keeps every retained version exact") =
-    lifecycleProp(new graft.store.Storage(_, _, _))
-
-  property("transaction-log storage satisfies the identical lifecycle contract") =
-    lifecycleProp(new graft.store.TxnLogStorage(_, _, _))
+    lifecycleProp
 
   // ------------------------------------------------ multi-writer model
 

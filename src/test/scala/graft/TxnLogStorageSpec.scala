@@ -4,9 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.{FeatureStore, FeatureTableNotFoundError, TxnLogStorage}
 
-/** The transaction-log storage's commit-protocol semantics — what the
-  * log ADDS over the default layout (the shared lifecycle contract is
-  * model-checked in StoreProps against both implementations).
+/** The transaction-log storage's commit-protocol semantics (the store's
+  * lifecycle contract over it is model-checked in StoreProps).
   */
 class TxnLogStorageSpec extends AnyFunSuite with SparkTestBase {
 
@@ -23,6 +22,10 @@ class TxnLogStorageSpec extends AnyFunSuite with SparkTestBase {
     val txn = new TxnLogStorage(spark, root)
     assert(txn.committedVersions("t") == Seq(1, 2))
     assert(store.getVersion("t", 2).count() == 2)
+    // the log is plain local files: no checksum sidecars
+    val logFiles = java.nio.file.Files.list(java.nio.file.Paths.get(root, "t", "_txn"))
+      .toArray.toSeq.map(_.toString)
+    assert(!logFiles.exists(_.endsWith(".crc")), logFiles)
 
     // simulate a crash BETWEEN data write and commit: a version dir
     // with no marker. versionAsOf-shaped reads refuse it...
@@ -95,6 +98,20 @@ class TxnLogStorageSpec extends AnyFunSuite with SparkTestBase {
     store.register("t", singleRow(9.0))
     assert(store.getVersion("t", 1).collect()
       .map(_.getAs[Double]("val")).toSeq == Seq(9.0))
+  }
+
+  test("a retained version with no commit marker fails the open, naming the log") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_txn_unlogged_spec").toString
+    val store = newStore(root)
+    store.register("t", singleRow(1.0))
+    store.registerAppend("t", singleRow(2.0))
+    // a root written without the log: the catalog retains v2, no marker does
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(root, "t", "_txn", "0000000002.commit"))
+    val e = intercept[graft.store.FeatureStorageError](newStore(root))
+    assert(e.getMessage.contains(s"$root/t/_txn") && e.getMessage.contains("2"),
+      e.getMessage)
   }
 
   test("log checkpoints: covered markers are never opened, tail still is") {
