@@ -234,6 +234,13 @@ final class Catalog {
 trait CatalogIO {
   def save(root: String, metas: Seq[TableMeta], removed: Seq[String] = Seq.empty): Unit
   def load(root: String): Seq[TableMeta]
+  /** `name`'s entry of [[load]], read without the other tables'. */
+  def loadTable(root: String, name: String): Option[TableMeta] =
+    load(root).find(_.name == name)
+  /** Remove what crashed saves left behind, once older than
+    * `olderThanMillis` ([[FeatureStore.vacuum]]'s grace).
+    */
+  def sweepTemp(root: String, olderThanMillis: Long): Unit = ()
 }
 
 object CatalogIO {
@@ -409,6 +416,49 @@ object CatalogPersistence extends CatalogIO {
     }
   }
 
+  /** One table's file, plus its legacy whole-root entry if the root
+    * has not been migrated, chosen as [[load]] chooses.
+    */
+  override def loadTable(root: String, name: String): Option[TableMeta] =
+    newest(readMetas(tableFile(root, name)).filter(_.name == name) ++
+      readMetas(legacyCatalogFile(root)).filter(_.name == name)).headOption
+
+  /** The temp files of saves that crashed between write and rename
+    * (`.<name>.tmp-<uuid>` in `_catalog/`), once older than
+    * `olderThanMillis`: younger ones may belong to a save in flight.
+    */
+  override def sweepTemp(root: String, olderThanMillis: Long): Unit = {
+    val dir = catalogDir(root)
+    if (Files.isDirectory(dir)) {
+      import scala.jdk.CollectionConverters._
+      val cutoff = System.currentTimeMillis() - olderThanMillis
+      val files = Files.list(dir)
+      try files.iterator().asScala.toSeq
+        .filter { p => val n = p.getFileName.toString; n.startsWith(".") && n.contains(".tmp-") }
+        .foreach { p =>
+          try {
+            if (Files.getLastModifiedTime(p).toMillis <= cutoff) Files.deleteIfExists(p)
+          } catch { case _: java.nio.file.NoSuchFileException => () }
+        }
+      finally files.close()
+    }
+  }
+
+  /** The tables of one catalog file; none when it is absent (or was
+    * removed by a racing drop or migration after it was listed).
+    */
+  private def readMetas(f: Path): Seq[TableMeta] =
+    try parseLines(readLines(f))
+    catch { case _: java.nio.file.NoSuchFileException => Seq.empty }
+
+  /** When BOTH forms carry a table (mixed-version rollout: an old
+    * binary still writing _catalog.tsv beside migrated sessions), the
+    * NEWER copy wins by (version, updatedAt); the copy listed first
+    * (per-table) wins ties — maxBy keeps the first maximum.
+    */
+  private def newest(metas: Seq[TableMeta]): Seq[TableMeta] =
+    metas.groupBy(_.name).values.map(_.maxBy(m => (m.version, m.updatedAt))).toSeq.sortBy(_.name)
+
   /** Per-table files, plus legacy whole-root entries for tables not
     * yet migrated (per-table wins on overlap).
     */
@@ -425,29 +475,11 @@ object CatalogPersistence extends CatalogIO {
         try files.iterator().asScala
           .filter(_.getFileName.toString.endsWith(".tsv"))
           .toSeq
-          .flatMap { f =>
-            try parseLines(readLines(f))
-            catch { case _: java.nio.file.NoSuchFileException => Seq.empty }
-          }
+          .flatMap(readMetas)
         finally files.close()
       }
-    val legacy = legacyCatalogFile(root)
-    val fromLegacy =
-      if (!Files.exists(legacy)) Seq.empty[TableMeta]
-      else {
-        // racing a concurrent migrator's delete: gone = migrated
-        try parseLines(readLines(legacy))
-        catch { case _: java.nio.file.NoSuchFileException => Seq.empty }
-      }
-    // when BOTH forms carry a table (mixed-version rollout: an old
-    // binary still writing _catalog.tsv beside migrated sessions), the
-    // NEWER copy wins by (version, updatedAt); per-table wins ties
-    // (fromDir listed first — maxBy keeps the first maximum)
-    (fromDir ++ fromLegacy)
-      .groupBy(_.name).values
-      .map(_.maxBy(m => (m.version, m.updatedAt)))
-      .toSeq
-      .sortBy(_.name)
+    // racing a concurrent migrator's delete: gone = migrated
+    newest(fromDir ++ readMetas(legacyCatalogFile(root)))
   }
 
   private def parseLines(lines: Seq[String]): Seq[TableMeta] = {

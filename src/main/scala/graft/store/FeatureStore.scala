@@ -53,7 +53,7 @@ final class FeatureStore(
       s"max_versions must be >= 1, got $maxVersions")
 
   import Validation.{EntityIdColumn, TimestampColumn}
-  import FeatureStore.{SingleTaskWriteMaxRows, localRowBound, recordedRows, within}
+  import FeatureStore.{DriverWriteMaxRows, LocalRowsMaxBytes, localRowBound, recordedRows, within}
 
   private val root =
     Option(storageRoot).getOrElse(Storage.defaultRoot())
@@ -140,7 +140,7 @@ final class FeatureStore(
       val (guarded, checksOk) =
         constraintGuard(cur.fold(Map.empty[String, String])(_.constraints), prepared)
       val wr = writeSegment(name, v, guarded,
-        within(localRowBound(df), SingleTaskWriteMaxRows))
+        within(localRowBound(df), DriverWriteMaxRows))
       verifyOrScrap(name, v)(checksOk)
       val now = System.currentTimeMillis()
       storage.commitVersion(name, v, CommitMeta(
@@ -405,7 +405,7 @@ final class FeatureStore(
     * versions, stats or stream watermarks are lost.
     */
   private def adoptDiskMeta(name: String): Unit =
-    catalogIO.load(root).find(_.name == name).foreach { d =>
+    catalogIO.loadTable(root, name).foreach { d =>
       catalog.get(name) match {
         case None    => catalog.put(d)
         case Some(o) => catalog.put(FeatureStore.mergeMetas(o, d))
@@ -723,14 +723,46 @@ final class FeatureStore(
     }
   }
 
-  /** Write segment `v`: by one task when the caller knows `df` is
-    * `small` — at most [[FeatureStore.SingleTaskWriteMaxRows]] rows, or
-    * rows the driver holds within [[FeatureStore.LocalRowsMaxBytes]] —
-    * else with the period shuffle ([[VersionStorage.writeSmall]]).
+  /** Write segment `v`: on the driver when the caller knows `df` is
+    * `small` — rows the driver holds, at most
+    * [[FeatureStore.DriverWriteMaxRows]] of them within
+    * [[FeatureStore.LocalRowsMaxBytes]] ([[VersionStorage.writeSmall]]) —
+    * else with the period shuffle.
     */
   private def writeSegment(name: String, v: Int, df: DataFrame, small: Boolean): WriteResult =
     if (small) storage.writeSmall(name, v, df, EntityIdColumn, TimestampColumn)
     else storage.write(name, v, df, EntityIdColumn, TimestampColumn)
+
+  /** The current rows of `meta` as a local relation, read on the
+    * driver through [[VersionStorage.scanSegmentsLocal]] for a write
+    * that rewrites them all (a compaction), when the catalog records
+    * at most [[FeatureStore.DriverWriteMaxRows]] less the `extra` rows
+    * the write adds. None when it records more or cannot say, when the
+    * storage has no driver-side reader, and when the rows pass
+    * [[FeatureStore.LocalRowsMaxBytes]], where the read stops: the
+    * caller then reads them with Spark and writes with the exchange.
+    */
+  private def heldData(meta: TableMeta, extra: Long): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    object TooLarge extends scala.util.control.ControlThrowable
+    val segs = meta.segmentsOf(meta.version)
+    if (!within(recordedRows(meta, segs).map(_ + extra), DriverWriteMaxRows)) None
+    else storage.localReadSchema(meta.name, segs, meta.columns, meta.columnTypes)
+      .flatMap { schema =>
+        val own = UnsafeProjection.create(schema)
+        val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+        var bytes = 0L
+        try {
+          storage.scanSegmentsLocal(meta.name, segs, schema, None, Nil) { (_, row) =>
+            val r = own(row).copy()
+            bytes += r.getSizeInBytes
+            if (bytes > LocalRowsMaxBytes) throw TooLarge
+            rows += r
+          }
+          Some(localFrame(schema, rows.toSeq))
+        } catch { case TooLarge => None }
+      }
+  }
 
   /** Run the constraint verifier for a just-written version; on
     * violation the written data is scrapped eagerly (the claim itself
@@ -928,15 +960,13 @@ final class FeatureStore(
         // delta is the union's left side, so the write runs in the
         // delta's session, where its observation is registered (a
         // streaming micro-batch's frame belongs to a session of its own)
+        val held = deltaRows.flatMap(heldData(cur, _))
         val full = delta
-          .unionByName(currentData(cur).select(cur.columns.map(col): _*),
+          .unionByName(held.getOrElse(currentData(cur)).select(cur.columns.map(col): _*),
             allowMissingColumns = true)
           .select(evolved.map(col): _*)
         val (guarded, checksOk) = constraintGuard(cur.constraints, prepare(full))
-        val wr = writeSegment(name, v, guarded, within(for {
-          held <- recordedRows(cur, cur.segmentsOf(cur.version))
-          added <- deltaRows
-        } yield held + added, SingleTaskWriteMaxRows))
+        val wr = writeSegment(name, v, guarded, small = held.isDefined)
         requireRows()
         verifyOrScrap(name, v)(checksOk)
         storage.commitVersion(name, v, CommitMeta(
@@ -956,7 +986,7 @@ final class FeatureStore(
           segColStats = cur.segColStats ++ segColStatsOf(v, wr))
       } else {
         val (guarded, checksOk) = constraintGuard(cur.constraints, prepare(delta))
-        val wr = writeSegment(name, v, guarded, within(deltaRows, SingleTaskWriteMaxRows))
+        val wr = writeSegment(name, v, guarded, within(deltaRows, DriverWriteMaxRows))
         requireRows()
         verifyOrScrap(name, v)(checksOk)
         storage.commitVersion(name, v, CommitMeta(
@@ -1143,9 +1173,9 @@ final class FeatureStore(
       return cur.info
     }
     val meta = completeClaim(name, v) {
-      val full = currentData(cur).select(cur.columns.map(col): _*)
-      val wr = writeSegment(name, v, prepare(full),
-        within(recordedRows(cur, cur.segmentsOf(cur.version)), SingleTaskWriteMaxRows))
+      val held = heldData(cur, 0L)
+      val full = held.getOrElse(currentData(cur)).select(cur.columns.map(col): _*)
+      val wr = writeSegment(name, v, prepare(full), small = held.isDefined)
       val now0 = System.currentTimeMillis()
       storage.commitVersion(name, v, CommitMeta(
         wr.rows, wr.rows, cur.columns, Seq(v),
@@ -1778,10 +1808,9 @@ final class FeatureStore(
     * [[FeatureStore.DriverMutationMaxRows]], and the rows it holds stay
     * within [[FeatureStore.LocalRowsMaxBytes]], the driver reads the
     * candidates and matches the keys itself, and the change data and
-    * the rewrite are each one single-task write: two Spark jobs (one when every
-    * affected segment matches wholly, none when nothing matches), and
-    * two more for a key frame that is not a local relation (its bounds
-    * aggregate and its collection). Otherwise Spark runs one
+    * the rewrite are each a driver write: no Spark job, and two for a
+    * key frame that is not a local relation (its bounds aggregate and
+    * its collection). Otherwise Spark runs one
     * bounds aggregate (skipped for a local key frame, whose bounds the
     * driver computes), one change-set write that also classifies
     * ([[writeChangeSet]]), and one anti-join rewrite.
@@ -1837,7 +1866,7 @@ final class FeatureStore(
             FeatureStore.Classified(d.counts,
               () => storage.writeChangeData(name, v,
                 localFrame(d.schema, d.matched).drop(IngestKeyCol)
-                  .withColumn(FeatureStore.ChangeTypeCol, lit("delete")).coalesce(1)),
+                  .withColumn(FeatureStore.ChangeTypeCol, lit("delete")), small = true),
               affected => localFrame(d.schema,
                 affected.flatMap(s => d.survivors.getOrElse(s, Nil))),
               small = true)
@@ -1991,8 +2020,8 @@ final class FeatureStore(
     * single segment, and untouched segments are re-referenced verbatim.
     * Small inputs (within [[FeatureStore.DriverMutationMaxRows]] and
     * [[FeatureStore.LocalRowsMaxBytes]]) are classified on the driver
-    * and take two Spark jobs, the change data and the segment, each
-    * written by one task; larger ones take three Spark executions, as
+    * and write their change data and segment on the driver, with no
+    * Spark job; larger ones take three Spark executions, as
     * [[deleteRowsByKeys]] describes.
     * Duplicate keys WITHIN the delta all
     * insert — the store allows duplicate (entity, ts) observations,
@@ -2157,7 +2186,7 @@ final class FeatureStore(
                     StructField(FeatureStore.ChangeTypeCol, StringType)),
                   netChangesLocal(s.schema, evolved.size, s.matched, d))
                 FeatureStore.Classified(s.counts,
-                  () => storage.writeChangeData(name, v, changes.coalesce(1)),
+                  () => storage.writeChangeData(name, v, changes, small = true),
                   affected => localFrame(s.schema,
                     affected.flatMap(a => s.survivors.getOrElse(a, Nil)) ++ d),
                   small = true)
@@ -3057,6 +3086,8 @@ final class FeatureStore(
         // marker tmps) age out under the same grace
         storage.sweepUncommitted(t, graceMillis)
       }
+      // and so do the temp files of crashed catalog saves
+      catalogIO.sweepTemp(root, graceMillis)
       val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
       // TOCTOU guard: the pass-start lease snapshot above decides the
       // cheap keep path, but a lease acquired AFTER the snapshot (or a
@@ -3504,8 +3535,9 @@ object FeatureStore {
     * keeps rows: every matched row, and every row of each candidate
     * segment with a match, which it then hands back to Spark as local
     * relations; [[LocalRowsMaxBytes]] bounds what it holds. It reads on
-    * one thread and writes from one task, so its cost grows with the
-    * candidates' rows faster than Spark's. Measured on a shared 4-core
+    * one thread, so its cost grows with the candidates' rows faster
+    * than Spark's. Measured, when it still wrote from one Spark task,
+    * on a shared 4-core
     * host (local[4], the benchmark's session settings, 2026-10-19):
     * one segment of n rows over 5,000 long entities and 60 days,
     * "narrow" rows of a timestamp, a double and a long (40 bytes as
@@ -3525,44 +3557,43 @@ object FeatureStore {
     */
   private[graft] val DriverMutationMaxRows: Long = 40000L
 
-  /** The most bytes, in Spark's `UnsafeRow` form, of the rows a
-    * key-addressed mutation holds on the driver (its delta, its keys
-    * and the candidate rows it keeps), and of a local relation written
-    * by one task. A local relation travels inside the task that scans
-    * it: one task carrying all of it must stay well under
-    * `spark.rpc.message.maxSize` (128 MiB by default), past which a
-    * cluster aborts the task. Time sets the bound lower than that: in
-    * the measurements of [[DriverMutationMaxRows]] and
-    * [[SingleTaskWriteMaxRows]], 256-byte rows lost to Spark from about
-    * 45 k rows written from a local relation (11 MiB) and 55 k rows
-    * classified (13 MiB), and wider rows cost the driver more per row.
+  /** The most bytes, in Spark's `UnsafeRow` form, of the rows the
+    * driver holds for one commit: a key-addressed mutation's delta, keys
+    * and the candidate rows it keeps, a local relation it writes
+    * ([[DriverWriteMaxRows]]), and the segments a small compaction reads
+    * to rewrite. A driver read past it stops and the Spark path runs,
+    * so wide rows never pile up in driver memory; a local relation over
+    * it is written by Spark, whose tasks must each stay well under
+    * `spark.rpc.message.maxSize` (128 MiB by default). Time sets the
+    * bound lower than memory does: in the measurements of
+    * [[DriverMutationMaxRows]], 256-byte rows lost to Spark from about
+    * 55 k rows classified (13 MiB), and wider rows cost the driver more
+    * per row.
     */
   private[graft] val LocalRowsMaxBytes: Long = 8L << 20
 
   /** The largest input, in rows the store knows it holds (catalog
-    * `segRows`, a local relation's rows), that a segment write takes
-    * from one task with no period exchange
-    * ([[VersionStorage.writeSmall]]). One task sorts and writes what four
-    * would, so past some size the exchange's fixed cost pays for
-    * itself. Measured with the rows of [[DriverMutationMaxRows]]'
-    * probe, medians of 3-4 writes after a warm-up, single task
-    * against exchange in ms:
+    * `segRows`, a local relation's rows), that a segment write takes on
+    * the driver ([[VersionStorage.writeSmall]]): evaluated, sorted and
+    * encoded on one thread, against the period exchange's four tasks
+    * and fixed cost of two Spark jobs. Measured on a shared 4-core host
+    * (local[4], the benchmark's session settings, 2026-10-20) with the
+    * rows of [[DriverMutationMaxRows]]' probe, medians of 5 writes after
+    * two warm-ups, driver write against exchanged write in ms:
+    *   - from a local relation, as an append of a local delta: narrow
+    *     35/236, 57/232, 95/291, 178/458, 253/737 at 1 k, 10 k, 30 k,
+    *     60 k and 100 k rows; wide 56/194, 109/292, 376/672, 657/1175,
+    *     944/1803;
     *   - read from six parquet files, as a compaction reads its
-    *     segments: narrow 304/403, 306/346, 287/338, 303/307, 627/509,
-    *     956/556, 3271/1571 at 10 k, 20 k, 30 k, 50 k, 100 k, 300 k and
-    *     1 M rows; wide 267/285, 400/419, 484/546, 597/516, 928/614,
-    *     2017/1310, 6568/3389;
-    *   - from a local relation, as an append of a local delta:
-    *     narrow 221/283, 368/447, 532/519, 588/558, 1796/1676 at 10 k,
-    *     30 k, 60 k, 100 k and 300 k rows; wide 209/302, 561/723,
-    *     869/751, 1013/996, 3669/2830.
-    * The 20 k-60 k points ran alone, the others partly alongside a
-    * test run. Files cross near 50 k narrow and 40 k wide rows, local relations
-    * near 55 k and 45 k; the bound sits below. A file-backed input has
-    * no byte bound: its task streams from the files and may spill, so
-    * much wider rows make the single task slower, not a failure.
+    *     segments (on the driver through
+    *     [[VersionStorage.scanSegmentsLocal]], against a Spark read):
+    *     narrow 77/502, 112/406, 163/388, 232/379, 329/451; wide
+    *     103/363, 187/398, 446/520, 747/698, 939/751.
+    * Only file-backed wide rows cross, between 30 k and 60 k rows; the
+    * bound sits below. Wide rows pass [[LocalRowsMaxBytes]] near 33 k
+    * rows, where the driver's read stops and the exchange runs.
     */
-  private[graft] val SingleTaskWriteMaxRows: Long = 30000L
+  private[graft] val DriverWriteMaxRows: Long = 30000L
 
   /** A known row count of at most `bound`. */
   private def within(rows: Option[Long], bound: Long): Boolean =
@@ -3596,12 +3627,12 @@ object FeatureStore {
 
   /** At most how many rows `df` holds, when it is built on a local
     * relation ([[localRelationOf]]) of at most [[LocalRowsMaxBytes]];
-    * None otherwise, and for a larger relation, which no single-task
-    * write or driver kernel takes.
+    * None otherwise, and for a larger relation, which no driver write
+    * or driver kernel takes.
     */
   private def localRowBound(df: DataFrame): Option[Long] =
     localRelationOf(df).filter(l =>
-      l.data.size <= SingleTaskWriteMaxRows.max(DriverMutationMaxRows) &&
+      l.data.size <= DriverWriteMaxRows.max(DriverMutationMaxRows) &&
         unsafeBytes(l.schema, l.data) <= LocalRowsMaxBytes).map(_.data.size.toLong)
 
   /** The bytes of `rows` (of layout `schema`) in Spark's `UnsafeRow`
@@ -3638,7 +3669,7 @@ object FeatureStore {
     * reports what the classification already recorded, and returns its
     * row count (-1 = none recorded); `rewrite` gives the rows of the
     * segment that replaces the named affected segments; `small` says
-    * they are rows the driver holds, written by one task.
+    * they are rows the driver holds, written on the driver.
     */
   private final case class Classified(
       counts: Map[Int, (Long, Long)],

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.driverWrite
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{ArrayType, DataType, DateType, MapType, StructField, StructType}
 
@@ -112,11 +113,11 @@ trait VersionStorage {
       entityCol: String, tsCol: String,
       cluster: Seq[org.apache.spark.sql.Column]): WriteResult =
     write(name, version, df, entityCol, tsCol)
-  /** [[write]] of an input the caller knows, from counts it already
-    * holds, to be small (at most [[FeatureStore.SingleTaskWriteMaxRows]]
-    * rows, or rows held on the driver within
-    * [[FeatureStore.LocalRowsMaxBytes]]): the same layout, written
-    * without a shuffle. Default: [[write]].
+  /** [[write]] of an input the caller holds on the driver and knows,
+    * from counts it already has, to be small (at most
+    * [[FeatureStore.DriverWriteMaxRows]] rows within
+    * [[FeatureStore.LocalRowsMaxBytes]]): the same files, written
+    * without a Spark job where the storage can. Default: [[write]].
     */
   def writeSmall(name: String, version: Int, df: DataFrame,
       entityCol: String, tsCol: String): WriteResult =
@@ -175,11 +176,14 @@ trait VersionStorage {
     * `_change_type` tag) — the Delta `_change_data` discipline: a
     * mutation that rewrites segments writes its exact change set at
     * commit time (O(changes) extra write), so the change feed reads it
-    * back O(changes) instead of diffing two snapshots. Returns the row
-    * count written, or -1 when this storage does not support change
-    * data (the feed then falls back to the exact diff).
+    * back O(changes) instead of diffing two snapshots. `small`, as in
+    * [[writeSmall]], says the caller holds the rows on the driver
+    * within its bounds. Returns the row count written, or -1 when this
+    * storage does not support change data (the feed then falls back to
+    * the exact diff).
     */
-  def writeChangeData(name: String, version: Int, df: DataFrame): Long = -1L
+  def writeChangeData(name: String, version: Int, df: DataFrame,
+      small: Boolean = false): Long = -1L
   /** The recorded change rows of a version, if any were written. */
   def readChangeData(name: String, version: Int): Option[DataFrame] = None
   /** Version segments physically present (storage-side truth for vacuum). */
@@ -245,15 +249,17 @@ trait VersionStorage {
   *     not the entity: every task then holds few periods, so the file
   *     count stays ≈ #periods. (Keying by entity looks natural but makes
   *     every task write a file into every period directory —
-  *     tasks × periods tiny files.) An input the caller knows is small
-  *     ([[writeSmall]]) is written by one task with no shuffle: one
-  *     file per period as well.
+  *     tasks × periods tiny files.) An input the caller holds on the
+  *     driver and knows is small ([[writeSmall]]) is written on the
+  *     driver with no Spark job: one file per period as well.
   *   - within each file, rows sorted by (entity, timestamp) → parquet
   *     row-group min/max stats make per-entity probes skip row groups.
-  *     After the period shuffle the order survives the partitioned
-  *     write's own sort by period because the write's `Observation`
-  *     sits between the two sorts (without it the optimizer may drop
-  *     the inner sort); `IncrementalStoreSpec` guards the layout.
+  *     The sort within each task leads with the period, the order the
+  *     partitioned write needs: sorted by (entity, timestamp) alone, a
+  *     task holding several periods (AQE coalesces a small shuffle into
+  *     one task) had that order undone by the write's own sort by
+  *     period. `IncrementalStoreSpec` and `WriteKernelProps` guard the
+  *     layout.
   */
 final class Storage(
     spark: SparkSession,
@@ -295,23 +301,63 @@ final class Storage(
       tsCol: String): WriteResult =
     writeWith(name, version, df, entityCol, tsCol)(
       _.repartition(col(DateCol))
-        .sortWithinPartitions(col(entityCol), col(tsCol)))
+        .sortWithinPartitions(col(DateCol), col(entityCol), col(tsCol)))
 
-  /** [[write]] from a single task: no exchange, one file per period,
-    * rows sorted by (entity, timestamp) within each file. The one task
-    * holds every period, so the sort leads with the period — the order
-    * the partitioned write needs, which no later sort then undoes. For
-    * inputs of at most [[FeatureStore.SingleTaskWriteMaxRows]] rows,
-    * where the shuffle's fixed cost exceeds the work it spreads.
+  /** [[write]] on the driver, with no Spark job, for an input whose
+    * plan holds its rows in local relations ([[driverWrite.fold]]);
+    * any other plan takes [[write]]. The rows are evaluated, sorted by
+    * (period, entity, timestamp) and written through Spark's own write
+    * task straight into the version directory, cleared first as
+    * `mode("overwrite")` clears it: one file per period, no `_SUCCESS`
+    * file and no `_temporary` rename (the log's marker is the commit).
+    * The row count, timestamp range and column stats come from the same
+    * metric expressions as [[write]]'s, aggregated on the driver, which
+    * also fulfils the input plan's own `Observation`s.
     */
   def writeSmall(
       name: String,
       version: Int,
       df: DataFrame,
       entityCol: String,
-      tsCol: String): WriteResult =
-    writeWith(name, version, df, entityCol, tsCol)(
-      _.coalesce(1).sortWithinPartitions(col(DateCol), col(entityCol), col(tsCol)))
+      tsCol: String): WriteResult = {
+    val path = versionPath(name, version)
+    val statFields = ColumnStats.eligible(df.schema, priority = Seq(entityCol, tsCol))
+    val stats = s"graft_write_${name}_v$version"
+    val metrics = writeMetrics(tsCol, statFields)
+    val framed = df.withColumn(DateCol, period(col(tsCol)))
+    driverWrite.fold(framed.observe(stats, metrics.head, metrics.tail: _*)) match {
+      case None => write(name, version, df, entityCol, tsCol)
+      case Some(folded) =>
+        val out = folded.output
+        val Seq(date, entity, ts) = Seq(DateCol, entityCol, tsCol).map(c => out.find(_.name == c).get)
+        // no rows: one typed file of every column, as [[write]] appends
+        writeOnDriver(path, df.sparkSession, folded, if (folded.rows.isEmpty) Nil else Seq(date),
+          driverWrite.sorted(folded.rows, out, Seq(date, entity, ts)))
+        memoized(path, df, writeResult(statFields, folded.metrics(stats).getAs[Any](_)))
+    }
+  }
+
+  /** Write `rows` of `folded` under `path` on the driver, after clearing
+    * it (a reclaimed version may hold a crashed writer's files), and
+    * fulfil its `Observation`s; they leave `session` either way. Local
+    * files are created through [[NioLocalFileSystem]], in a Hadoop
+    * configuration of their own: Hadoop caches file systems by scheme,
+    * not by configuration, so that one is not cached.
+    */
+  private def writeOnDriver(
+      path: String,
+      session: SparkSession,
+      folded: driverWrite.Folded,
+      partitionColumns: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      rows: => Seq[InternalRow]): Unit =
+    try {
+      delete(path)
+      val conf = session.sessionState.newHadoopConf()
+      conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+      driverWrite.writeParquet(session, path, folded.output, partitionColumns, rows.iterator, conf)
+      folded.complete()
+    } finally folded.discard()
 
   /** Clustered layout ([[VersionStorage.writeClustered]]): range-
     * partition and sort by (period, cluster...) so each task holds a
@@ -348,13 +394,9 @@ final class Storage(
     // prunes on past the stats cap.
     val statFields =
       ColumnStats.eligible(df.schema, priority = Seq(entityCol, tsCol))
+    val metrics = writeMetrics(tsCol, statFields)
     layout(df.withColumn(DateCol, period(col(tsCol))))
-      .observe(
-        obs,
-        count(lit(1)).as("rows"),
-        Seq(
-          min(col(tsCol)).as("min_ts"),
-          max(col(tsCol)).as("max_ts")) ++ ColumnStats.metrics(statFields): _*)
+      .observe(obs, metrics.head, metrics.tail: _*)
       .write
       .mode("overwrite")
       .partitionBy(DateCol)
@@ -369,21 +411,39 @@ final class Storage(
       df.withColumn(DateCol, period(col(tsCol)))
         .limit(0)
         .write.mode("append").parquet(path)
-    def millis(key: String): Option[Long] = obs.get(key) match {
+    memoized(path, df, writeResult(statFields, obs.get))
+  }
+
+  /** What a segment write observes: its rows, its timestamp range and
+    * the column stats of `statFields`.
+    */
+  private def writeMetrics(tsCol: String, statFields: Seq[StructField]) =
+    Seq(
+      count(lit(1)).as("rows"),
+      min(col(tsCol)).as("min_ts"),
+      max(col(tsCol)).as("max_ts")) ++ ColumnStats.metrics(statFields)
+
+  private def writeResult(statFields: Seq[StructField], get: String => Any): WriteResult = {
+    def millis(key: String): Option[Long] = get(key) match {
       case t: java.sql.Timestamp    => Some(t.getTime)
       case i: java.time.Instant     => Some(i.toEpochMilli)
       case d: java.time.LocalDateTime => // TIMESTAMP_NTZ observation
         Some(d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
       case _ => None // null: empty or all-null segment — no skipping stats
     }
-    val wr = WriteResult(
-      obs.get("rows").asInstanceOf[Long], millis("min_ts"), millis("max_ts"),
-      ColumnStats.fromMetrics(statFields, obs.get))
-    // the schema a read infers is known right here: the data columns,
-    // all nullable, then the DATE partition column (the zero-row
-    // segment's typed part file carries it last, too). A segment whose
-    // timestamps are all null has only the default partition, which
-    // infers as a STRING — left to inference rather than guessed here.
+    WriteResult(
+      get("rows").asInstanceOf[Long], millis("min_ts"), millis("max_ts"),
+      ColumnStats.fromMetrics(statFields, get))
+  }
+
+  /** `wr`, after seeding the schema memo of the segment at `path`. The
+    * schema a read infers is known right here: the data columns, all
+    * nullable, then the DATE partition column (the zero-row segment's
+    * typed part file carries it last, too). A segment whose timestamps
+    * are all null has only the default partition, which infers as a
+    * STRING — left to inference rather than guessed here.
+    */
+  private def memoized(path: String, df: DataFrame, wr: WriteResult): WriteResult = {
     if (wr.rows == 0L || wr.minTsMillis.isDefined)
       Storage.schemaMemo.put(path, StructType(
         Storage.asRead(df.schema).fields :+ StructField(DateCol, DateType)))
@@ -532,17 +592,26 @@ final class Storage(
   }
 
   /** One plain (unpartitioned) parquet write — change sets are small
-    * relative to their mutation; an Observation rides the write for
-    * the row count, as in [[write]].
+    * relative to their mutation. A `small` one whose rows the plan holds
+    * ([[driverWrite.fold]]) is written on the driver as one file, as
+    * [[writeSmall]] writes; otherwise an Observation rides a Spark write
+    * for the row count, as in [[write]].
     */
-  def writeChangeData(name: String, version: Int, df: DataFrame): Long = {
-    val obs = org.apache.spark.sql.Observation(
-      s"graft_cdf_${name}_v$version")
-    df.observe(obs, count(lit(1)).as("rows"))
-      .write.mode("overwrite")
-      .parquet(changeDataPath(name, version))
-    Storage.schemaMemo.put(changeDataPath(name, version), Storage.asRead(df.schema))
-    obs.get("rows").asInstanceOf[Long]
+  def writeChangeData(name: String, version: Int, df: DataFrame, small: Boolean): Long = {
+    val path = changeDataPath(name, version)
+    val rows = (if (small) driverWrite.fold(df) else None) match {
+      case Some(folded) =>
+        writeOnDriver(path, df.sparkSession, folded, Nil, folded.rows)
+        folded.rows.size.toLong
+      case None =>
+        val obs = org.apache.spark.sql.Observation(s"graft_cdf_${name}_v$version")
+        df.observe(obs, count(lit(1)).as("rows"))
+          .write.mode("overwrite")
+          .parquet(path)
+        obs.get("rows").asInstanceOf[Long]
+    }
+    Storage.schemaMemo.put(path, Storage.asRead(df.schema))
+    rows
   }
 
   def readChangeData(name: String, version: Int): Option[DataFrame] = {

@@ -322,8 +322,9 @@ final class TxnLogStorage(
   override def renameTable(from: String, to: String): Unit =
     inner.renameTable(from, to)
 
-  override def writeChangeData(name: String, version: Int, df: DataFrame): Long =
-    inner.writeChangeData(name, version, df)
+  override def writeChangeData(name: String, version: Int, df: DataFrame,
+      small: Boolean): Long =
+    inner.writeChangeData(name, version, df, small)
 
   override def readChangeData(name: String, version: Int): Option[DataFrame] =
     inner.readChangeData(name, version)

@@ -46,6 +46,37 @@ class CatalogPersistenceSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a commit reads no other table's catalog file") {
+    val root = tmpRoot("graft_cat_reads")
+    val store = new FeatureStore(spark, root)
+    store.register("a", feats(1))
+    store.register("b", feats(1))
+    // b's file no longer parses: a commit to a that loaded it would fail
+    Files.writeString(CatalogPersistence.tableFile(root, "b"), "T\tb\tnot-a-version\n")
+    assert(store.registerAppend("a", feats(2)).version == 2)
+    assert(store.compact("a").version == 3)
+    assert(CatalogPersistence.loadTable(root, "a").map(_.version).contains(3))
+    assert(store.getTableInfo("a").rowCount == 2)
+  }
+
+  test("vacuum sweeps crashed catalog saves' temp files older than its grace") {
+    val root = tmpRoot("graft_cat_tmp")
+    val store = new FeatureStore(spark, root)
+    store.register("a", feats(1))
+    val dir = CatalogPersistence.catalogDir(root)
+    val old = dir.resolve(".a.tsv.tmp-crashed-long-ago")
+    val fresh = dir.resolve(".a.tsv.tmp-in-flight")
+    Seq(old, fresh).foreach(Files.writeString(_, "partial"))
+    Files.setLastModifiedTime(old, FileTime.fromMillis(System.currentTimeMillis() - 3600000L))
+    store.vacuum(graceMillis = 60000L)
+    assert(!Files.exists(old), "a temp file older than the grace survived vacuum")
+    assert(Files.exists(fresh), "vacuum removed a temp file within the grace")
+    store.vacuum(graceMillis = 0L)
+    assert(!Files.exists(fresh))
+    assert(Files.exists(CatalogPersistence.tableFile(root, "a")))
+    assert(new FeatureStore(spark, root).getTableInfo("a").version == 1)
+  }
+
   test("whole-table delete removes the table's file") {
     val root = tmpRoot("graft_cat_del")
     val store = new FeatureStore(spark, root)

@@ -5,6 +5,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.{CatalogIO, CatalogPersistence, CommitMeta, FeatureStore, TableMeta, WriteResult}
@@ -45,6 +49,27 @@ class CommitCrashSpec extends AnyFunSuite with SparkTestBase {
       fault.at("after the data write")
       wr
     }
+    override def writeSmall(name: String, version: Int, df: DataFrame,
+        entityCol: String, tsCol: String): WriteResult = {
+      fault.alive()
+      if (fault.armed && fault.point == DriverWriteCrash) {
+        // the driver write writes the first period's file, then the
+        // writer dies before the next: only January's rows go through it
+        inner.writeSmall(name, version, df.filter(col(tsCol) < lit(ts("2024-02-01"))),
+          entityCol, tsCol)
+        fault.at(fault.point)
+      }
+      val wr = inner.writeSmall(name, version, df, entityCol, tsCol)
+      fault.at("after the data write")
+      wr
+    }
+    override def localReadSchema(name: String, segments: Seq[Int], columns: Seq[String],
+        columnTypes: Map[String, String]): Option[StructType] =
+      inner.localReadSchema(name, segments, columns, columnTypes)
+    override def scanSegmentsLocal(name: String, segments: Seq[Int], schema: StructType,
+        asOf: Option[java.sql.Timestamp], filters: Seq[Filter])(
+        f: (Int, InternalRow) => Unit): Unit =
+      inner.scanSegmentsLocal(name, segments, schema, asOf, filters)(f)
     override def commitVersion(name: String, version: Int, meta: CommitMeta): Unit = {
       fault.alive()
       val reserve = Paths.get(root, name, "_txn", f"$version%010d.reserve")
@@ -75,6 +100,16 @@ class CommitCrashSpec extends AnyFunSuite with SparkTestBase {
     def load(root: String): Seq[TableMeta] = CatalogPersistence.load(root)
   }
 
+  private val DriverWriteCrash = "inside the driver write, after its first period file"
+
+  /** One row in January and one in February: two period files. */
+  private def twoPeriods(value: Double): DataFrame = {
+    val s = spark
+    import s.implicits._
+    Seq(("user_1", ts("2024-01-01"), value), ("user_2", ts("2024-02-01"), value + 0.5))
+      .toDF("entity_id", "timestamp", "val")
+  }
+
   private def values(df: DataFrame): Seq[Double] =
     df.collect().map(_.getAs[Double]("val")).toSeq.sorted
 
@@ -85,6 +120,7 @@ class CommitCrashSpec extends AnyFunSuite with SparkTestBase {
 
   Seq(
     "after the data write" -> false,
+    DriverWriteCrash -> false,
     "after the reservation" -> false,
     "after the marker rename" -> true,
     "before the catalog cache write" -> true).foreach { case (point, committed) =>
@@ -98,11 +134,14 @@ class CommitCrashSpec extends AnyFunSuite with SparkTestBase {
       writer.register("t", singleRow(1.0))
       writer.registerAppend("t", singleRow(2.0))
       fault.armed = true
-      intercept[Crash](writer.registerAppend("t", singleRow(3.0)))
+      intercept[Crash](writer.registerAppend("t", twoPeriods(3.0)))
       assert(fault.dead, s"the writer must have died $point")
+      if (point == DriverWriteCrash)
+        assert(Files.list(Paths.get(root, "t", "v=3")).iterator().asScala
+          .map(_.getFileName.toString).toSeq == Seq("_ts_date=2024-01-01"))
 
       val last = if (committed) 3 else 2
-      val want = if (committed) Seq(1.0, 2.0, 3.0) else Seq(1.0, 2.0)
+      val want = if (committed) Seq(1.0, 2.0, 3.0, 3.5) else Seq(1.0, 2.0)
       val reopened = new FeatureStore(spark, root)
       assert(reopened.getTableInfo("t").version == last)
       assert(reopened.getTableInfo("t").rowCount == want.size)
@@ -124,5 +163,32 @@ class CommitCrashSpec extends AnyFunSuite with SparkTestBase {
       assert(values(reopened.getVersion("t", last + 1)) == want :+ 4.0)
       assert(values(new FeatureStore(spark, root).getVersion("t", last + 1)) == want :+ 4.0)
     }
+  }
+
+  test("a reclaimed version whose directories hold a crashed writer's files reads back only its own rows") {
+    val root = Files.createTempDirectory("graft_crash_reclaim").toString
+    val store = new FeatureStore(spark, root)
+    store.register("t", twoPeriods(1.0))
+    // a crashed writer of version 2, its claim swept: stray part files in
+    // a period the next write also writes and in one it does not, and
+    // stray change data at version 3
+    def stray(dir: Path): Unit = {
+      val part = files(Paths.get(root, "t", "v=1").toString).find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.createDirectories(dir)
+      Files.copy(part, dir.resolve("part-00000-stray.c000.snappy.parquet"))
+      ()
+    }
+    stray(Paths.get(root, "t", "v=2", "_ts_date=2024-01-01"))
+    stray(Paths.get(root, "t", "v=2", "_ts_date=2023-12-01"))
+    stray(Paths.get(root, "t", "_cdf", "v=3"))
+    assert(store.registerAppend("t", singleRow(2.0)).version == 2)
+    assert(values(spark.read.parquet(Paths.get(root, "t", "v=2").toString)) == Seq(2.0))
+    assert(values(store.getVersion("t", 2)) == Seq(1.0, 1.5, 2.0))
+    val s = spark
+    import s.implicits._
+    store.registerUpsert("t", Seq(("user_2", ts("2024-02-01"), 7.0)).toDF("entity_id", "timestamp", "val"))
+    assert(values(store.getVersion("t", 3)) == Seq(1.0, 2.0, 7.0))
+    assert(store.getChanges("t", 2, 3).collect().map(r => r.getAs[Double]("val")).sorted.toSeq ==
+      Seq(1.5, 7.0))
   }
 }

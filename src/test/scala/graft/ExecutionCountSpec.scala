@@ -57,7 +57,7 @@ class ExecutionCountSpec extends AnyFunSuite with SparkTestBase {
     Counts(execs.get(), bareJobs.get(), jobs.get())
   }
 
-  test("small commits run one or two Spark jobs; a delta over the bound takes Spark") {
+  test("small commits run no Spark job; a delta over the bound takes Spark") {
     val s = spark
     import s.implicits._
     val store = new FeatureStore(spark,
@@ -69,25 +69,25 @@ class ExecutionCountSpec extends AnyFunSuite with SparkTestBase {
     def keys(ks: (String, java.sql.Timestamp)*) = ks.toDF("entity_id", "timestamp")
     store.register("t", rows(0, 40, 1))
     def jobs(body: => Unit): Int = counted(body).jobs
-    assert(jobs(store.registerAppend("t", rows(40, 30, 2), maxSegments = 10)) == 1,
+    assert(jobs(store.registerAppend("t", rows(40, 30, 2), maxSegments = 10)) == 0,
       "append")
-    assert(jobs(store.compact("t")) == 1, "compact")
+    assert(jobs(store.compact("t")) == 0, "compact")
     store.registerAppend("t", rows(70, 30, 3), maxSegments = 10)
-    assert(jobs(store.registerAppend("t", rows(100, 30, 4), maxSegments = 2)) == 1,
+    assert(jobs(store.registerAppend("t", rows(100, 30, 4), maxSegments = 2)) == 0,
       "auto-compacting append")
     assert(store.currentSegmentStats("t").map(_.size).contains(1))
     store.registerAppend("t", rows(130, 30, 5), maxSegments = 10)
     // replaces two rows of the May segment and inserts one
     val delta = Seq((key(131, 5), -1.0), (key(140, 5), -2.0), (("e9", ts("2024-05-03")), -3.0))
       .map { case ((e, t), v) => (e, t, v) }.toDF("entity_id", "timestamp", "v")
-    assert(jobs(store.registerUpsert("t", delta)) == 2, "upsert")
-    assert(jobs(store.registerRewrite("t", delta.limit(1), keys(key(135, 5)))) == 2,
+    assert(jobs(store.registerUpsert("t", delta)) == 0, "upsert")
+    assert(jobs(store.registerRewrite("t", delta.limit(1), keys(key(135, 5)))) == 0,
       "rewrite")
-    assert(jobs(store.deleteRowsByKeys("t", keys(key(141, 5)))) == 2, "delete")
+    assert(jobs(store.deleteRowsByKeys("t", keys(key(141, 5)))) == 0, "delete")
     // a segment whose rows the keys match wholly is dropped unwritten
     store.registerAppend("t", rows(160, 2, 6), maxSegments = 10)
     val whole = keys(key(160, 6), key(161, 6))
-    assert(jobs(store.deleteRowsByKeys("t", whole)) == 1, "wholly matched delete")
+    assert(jobs(store.deleteRowsByKeys("t", whole)) == 0, "wholly matched delete")
     assert(jobs(store.deleteRowsByKeys("t", whole)) == 0, "no-match delete")
     assert(store.getTableInfo("t").rowCount == 160 + 1 - 1 - 1)
 
@@ -113,8 +113,8 @@ class ExecutionCountSpec extends AnyFunSuite with SparkTestBase {
     store.register("t", wide(0, 200, "a"))
     def upsert(kernel: FeatureStore.MutationKernel, i: Int, tag: String) = counted(
       store.registerUpsertOn(kernel, "t", wide(i, 1, tag))).jobs
-    // within both bounds: the driver kernel's two jobs
-    assert(upsert(Auto(maxRows = 1000, maxBytes = 1L << 20), 3, "b") == 2)
+    // within both bounds: the driver kernel, written on the driver
+    assert(upsert(Auto(maxRows = 1000, maxBytes = 1L << 20), 3, "b") == 0)
     // within the row bound but not the byte bound: the driver's read
     // stops part way and the Spark kernel runs, to the same result
     assert(upsert(Auto(maxRows = 1000, maxBytes = 100L << 10), 5, "c") > 2)
@@ -134,6 +134,38 @@ class ExecutionCountSpec extends AnyFunSuite with SparkTestBase {
       .toDF("entity_id", "timestamp", "s")
     assert(counted(store.registerAppend("t", heavy, maxSegments = 10)).jobs == 2)
     assert(store.getTableInfo("t").rowCount == 199 + rows)
+    // a compaction of few rows and more than LocalRowsMaxBytes bytes: the
+    // driver's read of the segments stops part way, Spark reads and
+    // writes them
+    assert(counted(store.compact("t")).jobs > 0)
+    assert(store.currentSegmentStats("t").map(_.size).contains(1))
+    assert(store.getTableInfo("t").rowCount == 199 + rows)
+    assert(store.get("t", Seq("h0", "e3"), ts("2024-03-01")).collect()
+      .map(r => r.getString(0) -> r.getString(2).take(1)).toMap == Map("h0" -> "y", "e3" -> "b"))
+  }
+
+  test("small commits leave no Observation registered in the session") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.graftbridge.driverWrite
+    val store = new FeatureStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_observations").toString)
+    def rows(from: Int, n: Int) = (from until from + n)
+      .map(i => (s"e${i % 5}", ts(f"2024-01-${i % 28 + 1}%02d"), i.toDouble))
+      .toDF("entity_id", "timestamp", "v")
+    store.register("t", rows(0, 10))
+    store.addConstraint("t", "positive", "v >= 0")
+    val before = driverWrite.pendingObservations(spark)
+    (1 to 200).foreach { i =>
+      i % 4 match {
+        case 0 => store.registerUpsert("t", rows(i * 3, 2))
+        case 1 => store.compact("t")
+        case 2 => store.deleteRowsByKeys("t", rows(i * 3 - 4, 1).select("entity_id", "timestamp"))
+        case _ => store.registerAppend("t", rows(i * 3, 3), maxSegments = 3)
+      }
+    }
+    assert(driverWrite.pendingObservations(spark) == before,
+      s"${driverWrite.pendingObservations(spark) - before} Observations left registered")
   }
 
   test("the driver kernel takes NaN, -0.0 and null keys, nested doubles and evolved segments") {
@@ -157,11 +189,11 @@ class ExecutionCountSpec extends AnyFunSuite with SparkTestBase {
       Row(Double.NaN, ts("2024-01-01"), Seq(0.0, Double.NaN), 1), // replaces the NaN row
       Row(0.0, ts("2024-01-02"), Seq(2.0), null),               // replaces the -0.0 row
       Row(null, null, Seq(1.0), null))                          // replaces the null-key row
-    assert(counted(store.registerUpsert("t", delta)).jobs == 2)
+    assert(counted(store.registerUpsert("t", delta)).jobs == 0)
     assert(store.getTableInfo("t").rowCount == 4)
     val keys = spark.createDataFrame(java.util.Arrays.asList(Row(null, null)),
       StructType(schema(false).fields.take(2)))
-    assert(counted(store.deleteRowsByKeys("t", keys)).jobs == 2)
+    assert(counted(store.deleteRowsByKeys("t", keys)).jobs == 0)
     assert(store.getTableInfo("t").rowCount == 3)
   }
 

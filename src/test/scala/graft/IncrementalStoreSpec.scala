@@ -160,8 +160,8 @@ class IncrementalStoreSpec extends AnyFunSuite with SparkTestBase {
     }
     store.register("t", source) // not local: the period exchange
     checkSorted(1, "exchanged write")
-    store.register("t", local) // local: one task
-    checkSorted(2, "single-task write")
+    store.register("t", local) // local: the driver write
+    checkSorted(2, "driver write")
     // a copy-on-write rewrite of the one segment, by either kernel
     val delta = local.limit(30).withColumn("value", col("value") + 0.5)
     store.registerUpsert("t", delta)
