@@ -2,10 +2,12 @@ package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graftbridge.{bridge, driverWrite}
+import org.apache.spark.sql.types.{DataType, DateType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** The temporal kernels of the engine, as pure `DataFrame => DataFrame`
   * transformations (no catalog state). There is one kernel per
@@ -24,6 +26,12 @@ import org.apache.spark.sql.types.StructType
   *     tables at once: every spine row survives, null-extended where a
   *     table has no matching row (the feature view); [[asOfJoinLeft]] is
   *     its one-table call.
+  *
+  * The store answers small calls on the driver, with no Spark job, by
+  * twins of the same semantics: [[latestKLocal]] for point reads, and
+  * [[asOfJoinLocal]] and [[asOfJoinLeftAllLocal]], one as-of kernel
+  * ([[matchLocal]]), for training sets and views. The Spark kernels
+  * serve every larger call and are their oracles.
   *
   * Scale notes (100 TB design):
   *   - `pitSnapshot` / `latestPerEntity` use `max_by(struct(row), ord)` —
@@ -222,6 +230,12 @@ object PointInTime {
     * @param maxAgeSeconds staleness bound: a match older than t - age is
     *                      dropped (in the column's own units for a
     *                      numeric ts).
+    *
+    * [[FeatureStore.getTrainingSet]] runs this kernel for spines the
+    * driver does not hold and for tables over
+    * [[FeatureStore.LocalReadMaxRows]] rows; smaller calls run the
+    * driver twin [[asOfJoinLocal]], against which this kernel measured
+    * 3-5x slower at 100 k to 2 M table rows (figures at the bound).
     */
   def asOfJoin(
       spine: DataFrame,
@@ -232,10 +246,7 @@ object PointInTime {
       tieBreakCols: Seq[String] = Nil,
       tableName: String = "<anonymous>",
       maxAgeSeconds: Option[Long] = None): DataFrame = {
-    maxAgeSeconds.foreach(a =>
-      if (a < 0)
-        throw new FeatureValidationError(
-          s"maxAgeSeconds must be >= 0, got $a"))
+    requireAge(maxAgeSeconds)
     val (unioned, outCols) =
       taggedUnion(spine, table, columns, entityCol, tsCol, tieBreakCols,
         tableName)
@@ -250,23 +261,8 @@ object PointInTime {
     // the bound is a post-window filter on the matched row's timestamp —
     // the plan shape (one shuffle, one sort) is unchanged. Inclusive at
     // the floor; for numeric ts columns the age is in the column's units.
-    val ageOk: Column = maxAgeSeconds match {
-      case None => lit(true)
-      case Some(age) =>
-        val m = col("_match").getField(tsCol)
-        table.schema(tsCol).dataType match {
-          case _: org.apache.spark.sql.types.TimestampType |
-              _: org.apache.spark.sql.types.TimestampNTZType =>
-            m >= col("_t") - expr(s"INTERVAL $age SECOND")
-          // DateType: compare at timestamp precision (midnight under
-          // the UTC-pinned session) — the numeric fallback would
-          // subtract DAYS, a ~86400x looser staleness bound
-          case _: org.apache.spark.sql.types.DateType =>
-            m.cast("timestamp") >=
-              col("_t").cast("timestamp") - expr(s"INTERVAL $age SECOND")
-          case _ => m >= col("_t") - lit(age)
-        }
-    }
+    val ageOk = fresh(col("_match").getField(tsCol), col("_t"),
+      table.schema(tsCol).dataType, maxAgeSeconds)
 
     val matched = unioned
       .withColumn("_match", last(col("_p"), ignoreNulls = true).over(w))
@@ -275,6 +271,34 @@ object PointInTime {
 
     project(matched, columns, entityCol, tsCol)
   }
+
+  /** The staleness bound of [[asOfJoin]] on a matched row's timestamp
+    * `m` for a probe at `t` (both of type `tsType`): true with no bound,
+    * else `m >= t - maxAge`, inclusive at the floor, in the column's own
+    * units for a numeric ts.
+    */
+  private def fresh(
+      m: Column, t: Column, tsType: DataType, maxAgeSeconds: Option[Long]): Column =
+    maxAgeSeconds match {
+      case None => lit(true)
+      case Some(age) =>
+        tsType match {
+          case _: TimestampType | _: TimestampNTZType =>
+            m >= t - expr(s"INTERVAL $age SECOND")
+          // DateType: compare at timestamp precision (midnight under
+          // the UTC-pinned session) — the numeric fallback would
+          // subtract DAYS, a ~86400x looser staleness bound
+          case _: DateType =>
+            m.cast("timestamp") >= t.cast("timestamp") - expr(s"INTERVAL $age SECOND")
+          case _ => m >= t - lit(age)
+        }
+    }
+
+  private def requireAge(maxAgeSeconds: Option[Long]): Unit =
+    maxAgeSeconds.foreach(a =>
+      if (a < 0)
+        throw new FeatureValidationError(
+          s"maxAgeSeconds must be >= 0, got $a"))
 
   /** One feature table of a left as-of view ([[asOfJoinLeftAll]]): its
     * rows, the prefix its columns come back under, and the tie-break
@@ -322,6 +346,11 @@ object PointInTime {
     * cannot share the union (the chained form casts the spine to each
     * table's key types in turn); each maximal run of equal key types is
     * one such pass over the previous run's output.
+    *
+    * [[FeatureStore.getFeatureView]] chooses between this kernel and
+    * its driver twin [[asOfJoinLeftAllLocal]] as
+    * [[FeatureStore.getTrainingSet]] does, counting the rows of every
+    * table of the view.
     */
   def asOfJoinLeftAll(
       spine: DataFrame,
@@ -329,15 +358,22 @@ object PointInTime {
       entityCol: String = EntityIdColumn,
       tsCol: String = TimestampColumn): DataFrame = {
     Validation.validateSpine(spine, entityCol, tsCol)
-    def keyTypes(v: ViewTable) =
-      (v.table.schema(entityCol).dataType, v.table.schema(tsCol).dataType)
-    val runs = tables.foldLeft(List.empty[List[ViewTable]]) {
-      case ((run @ (last :: _)) :: done, v) if keyTypes(last) == keyTypes(v) =>
+    keyRuns(tables)(v => keyTypes(v.table.schema, entityCol, tsCol))
+      .foldLeft(spine)((acc, run) => asOfJoinLeftRun(acc, run, entityCol, tsCol))
+  }
+
+  private def keyTypes(schema: StructType, entityCol: String, tsCol: String) =
+    (schema(entityCol).dataType, schema(tsCol).dataType)
+
+  /** The maximal runs of consecutive tables with equal (entity, ts)
+    * types: one pass of a left as-of view each.
+    */
+  private def keyRuns[A](tables: Seq[A])(types: A => (DataType, DataType)): Seq[Seq[A]] =
+    tables.foldLeft(List.empty[List[A]]) {
+      case ((run @ (last :: _)) :: done, v) if types(last) == types(v) =>
         (v :: run) :: done
       case (done, v) => List(v) :: done
     }.reverse.map(_.reverse)
-    runs.foldLeft(spine)((acc, run) => asOfJoinLeftRun(acc, run, entityCol, tsCol))
-  }
 
   /** One union + one window pass of [[asOfJoinLeftAll]] over tables
     * that share their entity and ts types.
@@ -396,6 +432,276 @@ object PointInTime {
         col("_e").as(entityCol) +:
           col("_t").as(tsCol) +:
           (spineExtra.map(c => col("_sp").getField(c).as(c)) ++ featOut): _*)
+  }
+
+  /** One feature table of the driver kernels ([[asOfJoinLocal]],
+    * [[asOfJoinLeftAllLocal]]): every column of the table, the layout
+    * `schema` its rows are read in (its entity, ts and tie-break columns
+    * and the columns the call returns, typed as the Spark kernel reads
+    * them), `scan`, which hands each row to its callback once and may
+    * reuse it, and, as in [[ViewTable]], a view's prefix and the
+    * tie-break columns.
+    */
+  private[store] final case class LocalTable(
+      columns: Seq[String],
+      schema: StructType,
+      scan: (InternalRow => Unit) => Unit,
+      prefix: String = "",
+      tieBreakCols: Seq[String] = Nil)
+
+  /** The driver twin of [[asOfJoin]] for a spine whose plan is a local
+    * relation under projections, filters and limits: the same
+    * validation, and the same schema and rows as an eager local
+    * relation, so collecting it starts no Spark job. `table` is read
+    * once ([[matchLocal]]), holding at most one feature row per spine
+    * row. None, before `table` is read, where only Spark's kernel can
+    * answer: a plan Spark cannot evaluate row by row, a key that does
+    * not group by its bytes or does not order, a name `col` would not
+    * take as it is, or a spine key cast that fails (the Spark kernel
+    * then raises the error itself). None too, with the read abandoned,
+    * once the feature rows held pass `maxBytes`.
+    */
+  private[store] def asOfJoinLocal(
+      spine: DataFrame,
+      table: LocalTable,
+      columns: Option[Seq[String]],
+      maxAgeSeconds: Option[Long],
+      maxBytes: Long,
+      entityCol: String = EntityIdColumn,
+      tsCol: String = TimestampColumn,
+      tableName: String = "<anonymous>"): Option[DataFrame] = {
+    requireAge(maxAgeSeconds)
+    Validation.requireSpineColumns(spine, entityCol, tsCol)
+    val out = columns.fold(dropInternal(table.columns))(cs => Seq(entityCol, tsCol) ++ cs)
+    val tsType = table.schema(tsCol).dataType
+    for {
+      _ <- Option.when(localSupported(Seq(table), Nil, entityCol, tsCol))(())
+      probes <- probesLocal(spine, Seq(keyTypes(table.schema, entityCol, tsCol)), Nil,
+        entityCol, tsCol)
+      _ = columns.foreach(cs => Validation.validateColumns(
+        cs, dropInternal(table.columns), tableName, Seq(entityCol, tsCol)))
+      matched <- matchLocal(probes, Seq((0, table)), entityCol, tsCol, maxBytes)
+      result <- evaluated(spine.sparkSession,
+        Seq(StructField("_t", tsType), StructField("_m", table.schema)),
+        probes.indices.map(i => InternalRow(probes(i).get(1, tsType), matched(0)(i))))(
+        _.filter(col("_m").isNotNull && fresh(col("_m").getField(tsCol), col("_t"), tsType,
+          maxAgeSeconds))
+          .select(out.map(c => col("_m").getField(c).as(c)): _*))
+    } yield result
+  }
+
+  /** The driver twin of [[asOfJoinLeftAll]], for a spine as in
+    * [[asOfJoinLocal]] and on the same terms: the same validation, and
+    * the same schema and rows as an eager local relation. Each table is
+    * read once; the spine's keys are cast pass by pass, as the Spark
+    * kernel's passes cast them.
+    */
+  private[store] def asOfJoinLeftAllLocal(
+      spine: DataFrame,
+      tables: Seq[LocalTable],
+      maxBytes: Long,
+      entityCol: String = EntityIdColumn,
+      tsCol: String = TimestampColumn): Option[DataFrame] = {
+    Validation.requireSpineColumns(spine, entityCol, tsCol)
+    val extras = spine.columns.toSeq.filterNot(c => c == entityCol || c == tsCol)
+    val feats = tables.zipWithIndex.flatMap { case (t, i) =>
+      dropInternal(t.columns).filterNot(_ == entityCol).map(c => (i, c, t.prefix + c))
+    }
+    val runs = keyRuns(tables.zipWithIndex)(t => keyTypes(t._1.schema, entityCol, tsCol))
+    val passKeys = runs.map(r => keyTypes(r.head._1.schema, entityCol, tsCol))
+    val (entityType, tsType) = passKeys.last
+    val lastPass = 2 * (runs.size - 1)
+    val extraTypes = extras.map(c => spine.schema(c).dataType)
+    for {
+      _ <- Option.when(localSupported(tables, spine.columns.toSeq ++ feats.map(_._3),
+        entityCol, tsCol))(())
+      probes <- probesLocal(spine, passKeys, extras, entityCol, tsCol)
+      matched <- matchLocal(probes, runs.zipWithIndex.flatMap { case (run, p) =>
+        run.map { case (t, _) => (2 * p, t) } }, entityCol, tsCol, maxBytes)
+      result <- evaluated(spine.sparkSession,
+        Seq(StructField("_e", entityType), StructField("_t", tsType)) ++
+          extraTypes.zipWithIndex.map { case (t, j) => StructField(s"_x$j", t) } ++
+          tables.zipWithIndex.map { case (t, i) => StructField(s"_m$i", t.schema) },
+        probes.indices.map { i =>
+          val p = probes(i)
+          InternalRow.fromSeq(Seq(p.get(lastPass, entityType), p.get(lastPass + 1, tsType)) ++
+            extraTypes.zipWithIndex.map { case (t, j) => p.get(2 * runs.size + j, t) } ++
+            matched.map(_(i)))
+        })(_.select(Seq(col("_e").as(entityCol), col("_t").as(tsCol)) ++
+          extras.zipWithIndex.map { case (c, j) => col(s"_x$j").as(c) } ++
+          feats.map { case (i, c, name) => col(s"_m$i").getField(c).as(name) }: _*))
+    } yield result
+  }
+
+  /** True when the driver kernels take these tables and names: every
+    * table's entity groups by its float-normalized bytes as a window
+    * partition groups it, its ts and tie-break columns order, no name
+    * holds a dot or a backtick (which `col` would parse), and the
+    * `names` of the result differ even ignoring case (duplicates there
+    * are ambiguous to a later pass).
+    */
+  private def localSupported(
+      tables: Seq[LocalTable], names: Seq[String], entityCol: String, tsCol: String): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    val all = names ++ tables.flatMap(_.columns)
+    tables.forall(t =>
+      bridge.groupsByBytes(t.schema(entityCol).dataType) &&
+        (tsCol +: t.tieBreakCols).forall(c => RowOrdering.isOrderable(t.schema(c).dataType))) &&
+      !all.exists(n => n.contains('.') || n.contains('`')) &&
+      names.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.size == names.size
+  }
+
+  /** The spine's rows evaluated on the driver by Spark's expressions,
+    * as columns `_e<p>`, `_t<p>` (its entity and ts cast to pass `p`'s
+    * key types, each pass casting the previous one's keys, as chained
+    * passes do) and then its `extras` columns. Fails with the spine's
+    * own emptiness error; None when Spark would have to run the plan,
+    * or when the cast fails, in analysis or on a row.
+    */
+  private def probesLocal(
+      spine: DataFrame,
+      passKeys: Seq[(DataType, DataType)],
+      extras: Seq[String],
+      entityCol: String,
+      tsCol: String): Option[IndexedSeq[InternalRow]] = {
+    val keys = passKeys.scanLeft((col(entityCol), col(tsCol))) {
+      case ((e, t), (et, tt)) => (e.cast(et), t.cast(tt))
+    }.tail
+    val select = keys.zipWithIndex.flatMap { case ((e, t), p) =>
+      Seq(e.as(s"_e$p"), t.as(s"_t$p")) } ++ extras.map(col)
+    sparkErrorsAsNone(driverWrite.fold(spine.select(select: _*)).map(_.rows)).map { rows =>
+      if (rows.isEmpty) throw new FeatureValidationError(Validation.EmptySpine)
+      rows
+    }
+  }
+
+  /** `plan` over a local relation of `rows` (of layout `fields`, every
+    * field nullable, as a window's running `last` and a union leave
+    * them), evaluated on the driver by Spark's expressions and returned
+    * as an eager local relation. None when an expression fails on a
+    * row: the Spark kernel raises the error itself.
+    */
+  private def evaluated(
+      spark: org.apache.spark.sql.SparkSession,
+      fields: Seq[StructField],
+      rows: Seq[InternalRow])(plan: DataFrame => DataFrame): Option[DataFrame] = {
+    def relation(attrs: Seq[(String, DataType, Boolean)], data: Seq[InternalRow]) =
+      bridge.ofRows(spark, LocalRelation(
+        attrs.map { case (n, t, nullable) => AttributeReference(n, t, nullable)() }, data))
+    val input = relation(fields.map(f => (f.name, f.dataType, true)), rows)
+    sparkErrorsAsNone(driverWrite.fold(plan(input))).map(f =>
+      relation(f.output.map(a => (a.name, a.dataType, a.nullable)), f.rows))
+  }
+
+  private def sparkErrorsAsNone[A](body: => Option[A]): Option[A] =
+    try body
+    catch { case _: org.apache.spark.SparkThrowable => None }
+
+  /** The as-of match of every spine row of `probes` in each of
+    * `tables`, paired with the column of `probes` where its pass's
+    * (entity, ts) keys start: per table, per spine row, the greatest
+    * row in (ts, tieBreak...) order with the same entity and a ts at or
+    * before the spine row's, or null — what the Spark kernels' running
+    * `last` over (ts, side, tieBreak...) gives each spine row. Entities
+    * compare float-normalized, a null entity matching null entities, as
+    * window partitions group them; ts and tie-break columns compare by
+    * Spark's orderings (nulls first). Feature rows with a null ts are
+    * skipped; spine rows with a null ts match nothing.
+    *
+    * Each feature row is read once and kept only at the first spine
+    * row of its entity (in ts order, found by binary search) it can
+    * match, and only while it is the greatest seen there; a running
+    * maximum over each entity's spine rows in ts order then gives every
+    * spine row its match. So at most one row per spine row and table is
+    * held. None once the rows held pass `maxBytes`.
+    */
+  private def matchLocal(
+      probes: IndexedSeq[InternalRow],
+      tables: Seq[(Int, LocalTable)],
+      entityCol: String,
+      tsCol: String,
+      maxBytes: Long): Option[Seq[Array[InternalRow]]] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import scala.collection.mutable
+    object TooLarge extends scala.util.control.ControlThrowable
+    var held = 0L
+    def hold(delta: Long): Unit = {
+      held += delta
+      if (held > maxBytes) throw TooLarge
+    }
+    try Some(tables.map { case (at, table) =>
+      val schema = table.schema
+      def ref(c: String) = {
+        val i = schema.fieldIndex(c)
+        BoundReference(i, schema(i).dataType, nullable = true)
+      }
+      val entityType = schema(entityCol).dataType
+      val tsType = schema(tsCol).dataType
+      val tsAt = schema.fieldIndex(tsCol)
+      val tsOrder = TypeUtils.getInterpretedOrdering(tsType)
+      def compareTs(a: Any, b: Any): Int =
+        if (a == null) { if (b == null) 0 else -1 }
+        else if (b == null) 1
+        else tsOrder.compare(a, b)
+      val rowOrder = new InterpretedOrdering(
+        (tsCol +: table.tieBreakCols).map(c => SortOrder(ref(c), Ascending)))
+      val probeKey = UnsafeProjection.create(Seq(bridge.normalizeFloats(
+        BoundReference(at, entityType, nullable = true))))
+      val rowKey = UnsafeProjection.create(Seq(bridge.normalizeFloats(ref(entityCol))))
+      val own = UnsafeProjection.create(schema)
+
+      // per entity: its spine rows in ts order, their ts, and per spine
+      // row the greatest feature row first matchable there
+      final class Entity(val spine: Array[Int]) {
+        val ts: Array[Any] = spine.map(probes(_).get(at + 1, tsType))
+        val slots = new Array[UnsafeRow](spine.length)
+      }
+      val entities = mutable.HashMap.empty[UnsafeRow, mutable.ArrayBuilder.ofInt]
+      probes.indices.foreach { i =>
+        val k = probeKey(probes(i))
+        entities.get(k) match {
+          case Some(b) => b += i
+          case None => entities(k.copy()) = new mutable.ArrayBuilder.ofInt += i
+        }
+      }
+      val byEntity = entities.map { case (k, b) =>
+        k -> new Entity(b.result().sortWith((x, y) =>
+          compareTs(probes(x).get(at + 1, tsType), probes(y).get(at + 1, tsType)) < 0))
+      }
+
+      table.scan { row =>
+        if (!row.isNullAt(tsAt)) byEntity.get(rowKey(row)).foreach { e =>
+          val ts = row.get(tsAt, tsType)
+          var lo = 0
+          var hi = e.ts.length
+          while (lo < hi) {
+            val mid = (lo + hi) >>> 1
+            if (compareTs(e.ts(mid), ts) < 0) lo = mid + 1 else hi = mid
+          }
+          if (lo < e.ts.length) {
+            val cur = e.slots(lo)
+            if (cur == null || rowOrder.compare(row, cur) > 0) {
+              val kept = own(row).copy()
+              hold(kept.getSizeInBytes.toLong - (if (cur == null) 0L else cur.getSizeInBytes))
+              e.slots(lo) = kept
+            }
+          }
+        }
+      }
+
+      val matched = new Array[InternalRow](probes.size)
+      byEntity.valuesIterator.foreach { e =>
+        var best: UnsafeRow = null
+        e.spine.indices.foreach { k =>
+          val s = e.slots(k)
+          if (s != null && (best == null || rowOrder.compare(s, best) > 0)) best = s
+          matched(e.spine(k)) = best
+        }
+      }
+      matched
+    })
+    catch { case TooLarge => None }
   }
 
   /** Front half of [[asOfJoin]]: validate, then union feature rows

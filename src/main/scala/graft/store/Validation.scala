@@ -37,16 +37,33 @@ object Validation {
       df: DataFrame,
       entityCol: String,
       tsCol: String): Unit = {
+    requireSpineColumns(df, entityCol, tsCol)
+    // emptiness is a batch concept — probing it is an action, which is
+    // both illegal and meaningless on a streaming frame
+    if (!df.isStreaming &&
+      isEmpty(df.select(Seq(entityCol, tsCol).map(org.apache.spark.sql.functions.col): _*)))
+      throw new FeatureValidationError(EmptySpine)
+  }
+
+  private[store] def requireSpineColumns(
+      df: DataFrame, entityCol: String, tsCol: String): Unit = {
     val missing = Seq(entityCol, tsCol).filterNot(df.columns.contains)
     if (missing.nonEmpty)
       throw new FeatureValidationError(
         s"entity_timestamps is missing required columns: ${missing.mkString(", ")}")
-    // emptiness is a batch concept — probing it is an action, which is
-    // both illegal and meaningless on a streaming frame
-    if (!df.isStreaming &&
-      df.select(Seq(entityCol, tsCol).map(org.apache.spark.sql.functions.col): _*).isEmpty)
-      throw new FeatureValidationError("entity_timestamps must not be empty")
   }
+
+  private[store] val EmptySpine = "entity_timestamps must not be empty"
+
+  /** Whether `df` has no rows: from the rows the driver holds when its
+    * plan is a small local relation ([[FeatureStore.localRows]]), with
+    * no query; else, and where evaluating them fails, by `isEmpty`,
+    * which raises Spark's own error.
+    */
+  private def isEmpty(df: DataFrame): Boolean =
+    (try FeatureStore.localRows(df)
+     catch { case _: org.apache.spark.SparkThrowable => None })
+      .fold(df.isEmpty)(_.isEmpty)
 
   /** Requested projection must be a subset of the *feature* columns —
     * entity_id/timestamp cannot be re-requested because they are always

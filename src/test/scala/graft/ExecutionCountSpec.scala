@@ -305,4 +305,92 @@ class ExecutionCountSpec extends AnyFunSuite with SparkTestBase {
     assert(store.get("t", Seq("user_1"), ts("2024-02-01"))
       .collect().map(_.getAs[Double]("val")).toSeq == Seq(2.0))
   }
+
+  /** Three tables of the reference fixture and a local spine. */
+  private def trainingStore(prefix: String) = {
+    val store = new FeatureStore(spark, java.nio.file.Files.createTempDirectory(prefix).toString)
+    for (name <- Seq("fa", "fb", "fc")) store.register(name, sampleFeatures)
+    store
+  }
+
+  private def trainingSpine = {
+    val s = spark
+    import s.implicits._
+    Seq(("user_1", ts("2024-01-20"), 1), ("user_2", ts("2024-01-10"), 0), ("user_3", ts("2024-02-01"), 1))
+      .toDF("entity_id", "timestamp", "label")
+  }
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+
+  test("a small getTrainingSet and a small 3-table getFeatureView start no Spark job") {
+    val store = trainingStore("graft_training_small")
+    val spine = trainingSpine
+    var training, view = Set.empty[Seq[Any]]
+    val c = counted {
+      training = rowSet(store.getTrainingSet("fa", spine))
+      view = rowSet(store.getFeatureView(spine, Seq("fa", "fb", "fc")))
+    }
+    assert(c.jobs == 0, s"a small training set and view started ${c.jobs} Spark jobs")
+    assert(training == rowSet(store.getTrainingSetOnSpark("fa", spine)))
+    assert(training.map(_.take(3)) ==
+      Set(Seq("user_1", ts("2024-01-15"), 2.0), Seq("user_2", ts("2024-01-01"), 10.0)))
+    assert(view == rowSet(store.getFeatureViewOnSpark(spine, Seq("fa", "fb", "fc"))))
+    assert(view.size == 3)
+  }
+
+  test("a view whose tables exceed the read bound runs the Spark kernel, with equal rows") {
+    val store = trainingStore("graft_training_large")
+    // one table one row over the bound by itself (entities 0..999)
+    store.register("big", spark.range(FeatureStore.LocalReadMaxRows + 1).select(
+      (col("id") % 1000).cast("string").as("entity_id"),
+      (lit(ts("2024-01-01").getTime / 1000L) + col("id")).cast("timestamp").as("timestamp"),
+      col("id").as("v")))
+    val s = spark
+    import s.implicits._
+    val spine = Seq(("7", ts("2024-03-01")), ("user_1", ts("2024-03-01")), ("1000", ts("2024-03-01")))
+      .toDF("entity_id", "timestamp")
+    var got = Set.empty[Seq[Any]]
+    val c = counted { got = rowSet(store.getFeatureView(spine, Seq("fa", "big"))) }
+    assert(c.jobs > 0, "a view over the bound ran no Spark job")
+    assert(got == rowSet(store.getFeatureViewOnDriver(spine, Seq("fa", "big"))))
+    assert(got.map(r => r.head -> r.last) == Set[(Any, Any)](
+      "7" -> ((FeatureStore.LocalReadMaxRows / 1000 - 1) * 1000 + 7), "user_1" -> null, "1000" -> null))
+    // the small tables alone stay on the driver
+    assert(counted(store.getFeatureView(spine, Seq("fa", "fb")).collect()).jobs == 0)
+  }
+
+  test("a training set whose matched rows pass the byte bound runs the Spark kernel") {
+    val s = spark
+    import s.implicits._
+    val store = new FeatureStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_training_bytes").toString)
+    // every spine row matches its own 4 KiB row: the rows the driver
+    // kernel would hold pass LocalRowsMaxBytes part way through the read
+    val n = (FeatureStore.LocalRowsMaxBytes / 4096).toInt + 100
+    store.register("t", (0 until n).map(i => (s"e$i", ts("2024-01-01"), "x" * 4096))
+      .toDF("entity_id", "timestamp", "s"))
+    val spine = (0 until n).map(i => (s"e$i", ts("2024-02-01"))).toDF("entity_id", "timestamp")
+    var rows = 0L
+    val c = counted { rows = store.getTrainingSet("t", spine).count() }
+    assert(c.jobs > 0, "a training set over the byte bound ran no Spark job")
+    assert(rows == n)
+  }
+
+  test("a small view is a snapshot: taken before a vacuum, it collects after") {
+    val root = java.nio.file.Files.createTempDirectory("graft_training_vacuum").toString
+    val store = new FeatureStore(spark, root, maxVersions = 1)
+    store.register("t", singleRow(1.0))
+    val s = spark
+    import s.implicits._
+    val spine = Seq(("user_1", ts("2024-02-01"))).toDF("entity_id", "timestamp")
+    val training = store.getTrainingSet("t", spine)
+    val view = store.getFeatureView(spine, Seq("t"))
+    store.register("t", singleRow(2.0))
+    assert(store.vacuum(graceMillis = 0).exists(_.endsWith("v=1")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "t", "v=1")))
+    assert(training.collect().map(_.getAs[Double]("val")).toSeq == Seq(1.0))
+    assert(view.collect().map(_.getAs[Double]("t_val")).toSeq == Seq(1.0))
+    assert(store.getFeatureView(spine, Seq("t")).collect().map(_.getAs[Double]("t_val")).toSeq ==
+      Seq(2.0))
+  }
 }

@@ -130,6 +130,43 @@ class FeatureStoreSpec extends AnyFunSuite with SparkTestBase {
     intercept[FeatureValidationError](store.getTrainingSet("f", badSpine))
   }
 
+  test("a table deleted and re-registered at the same root reads only its new files and schema") {
+    val s = spark
+    import s.implicits._
+    val store = freshStore()
+    store.register("t", sampleFeatures)
+    store.register("u", sampleFeatures)
+    val spine = Seq(("user_1", ts("2024-03-01")), ("user_2", ts("2024-03-01")))
+      .toDF("entity_id", "timestamp")
+    def reads(): Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "get on Spark" -> store.getOnSpark("t", Seq("user_1", "user_2"), ts("2024-03-01")),
+      "get on the driver" -> store.getOnDriver("t", Seq("user_1", "user_2"), ts("2024-03-01")),
+      "getTrainingSet on Spark" -> store.getTrainingSetOnSpark("t", spine),
+      "getTrainingSet on the driver" -> store.getTrainingSetOnDriver("t", spine),
+      "getFeatureView on Spark" -> store.getFeatureViewOnSpark(spine, Seq("t", "u")),
+      "getFeatureView on the driver" -> store.getFeatureViewOnDriver(spine, Seq("t", "u")))
+    // every kernel has read the old files, so every memo of them is warm
+    reads().foreach { case (_, df) => df.collect() }
+
+    assert(store.delete("t"))
+    store.register("t", Seq(("user_1", ts("2024-01-10"), "new", 7)).toDF("entity_id", "timestamp", "label", "n"))
+    val point = Seq("entity_id", "timestamp", "label", "n")
+    val view = Seq("entity_id", "timestamp", "t_timestamp", "t_label", "t_n",
+      "u_timestamp", "u_feature_a", "u_feature_b")
+    reads().foreach { case (what, df) =>
+      val rows = df.collect().map(_.toSeq).toSet
+      if (what.startsWith("getFeatureView")) {
+        assert(df.columns.toSeq == view, what)
+        assert(rows == Set(
+          Seq("user_1", ts("2024-03-01"), ts("2024-01-10"), "new", 7, ts("2024-02-01"), 3.0, 300L),
+          Seq("user_2", ts("2024-03-01"), null, null, null, ts("2024-01-20"), 20.0, 2000L)), what)
+      } else {
+        assert(df.columns.toSeq == point, what)
+        assert(rows == Set(Seq("user_1", ts("2024-01-10"), "new", 7)), what)
+      }
+    }
+  }
+
   // --- TestVersioning (test_core.py:270-303) ---
 
   test("historical versions retrievable (test_core.py:273-291)") {

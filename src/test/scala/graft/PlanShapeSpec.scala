@@ -219,7 +219,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       .toDF("entity_id", "timestamp")
     import graft.store.WindowFeatures.WindowAgg
     val calls = Seq(
-      "getFeatureView" -> store.getFeatureView(spine, Seq("fa", "fb", "fc")),
+      // forced: a view this small is answered on the driver, with no plan
+      "getFeatureView" -> store.getFeatureViewOnSpark(spine, Seq("fa", "fb", "fc")),
       "getWindowFeatures" -> store.getWindowFeatures("fa", spine, 3L * 86400, Seq(
         WindowAgg("n", "rows"),
         WindowAgg("amt", "sum", "amount"),
